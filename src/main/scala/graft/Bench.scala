@@ -142,7 +142,7 @@ object Bench {
   }
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Sessions.defaultCpus
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_result.json")
     // median-of-5 by default: the round-8 artifact's (min, median, max)
     // fields showed a handful of medians still load-inflated at 3 rounds
@@ -153,36 +153,14 @@ object Bench {
     // A/B bisect hook (round-19): semicolon-separated extra session
     // confs, e.g. SPARK_GRAFT_BENCH_EXTRA_CONF=
     // "spark.sql.codegen.wholeStage=false" to split codegen cost from
-    // plan/shuffle cost on the same harness. Never set by the driver —
-    // round artifacts always run the production confs.
+    // plan/shuffle cost on the same harness; the confs override the
+    // Sessions defaults. Never set by the driver — round artifacts always
+    // run the production confs.
     val extraConf = sys.env.get("SPARK_GRAFT_BENCH_EXTRA_CONF")
       .map(_.split(";").toSeq.filter(_.contains("="))
         .map { kv => val i = kv.indexOf('='); (kv.take(i).trim, kv.drop(i + 1).trim) })
       .getOrElse(Seq.empty)
-    // Generated-class cache (round-19, guide §1/§4: eliminate recurring
-    // per-plan Janino compile from the hot path): the default
-    // spark.sql.codegen.cache.maxEntries=100 thrashes under a 107-query
-    // session — every round of every query re-COMPILES every codegen
-    // stage it evicted, which the r18->r19 bisect measured at up to
-    // ~2.5s/round on the GD-chain/fused-gate queries (q102 6.03 -> 3.44,
-    // q95 5.81 -> 3.82 min-of-5 with the cache sized to hold the
-    // session's stages). This is SESSION warmth, not result caching —
-    // the exact class a long-lived production driver would keep hot —
-    // and it is scale-independent (same win on a cluster driver). Env
-    // knob so the A/B hook can restore the default for bisects.
-    val codegenCache =
-      sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.codegen.cache.maxEntries", codegenCache)
-    extraConf.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.build("graft-bench", cpus, extraConf)
     // Warm the session (executor pool, codegen, parquet footer cache) so the
     // first measured query doesn't absorb ~5s of one-time init. The warmup
     // wall time is REPORTED (`warmup_sec`): it is a fixed-work probe, so a
@@ -272,7 +250,7 @@ object Bench {
     val parPerCore = sys.env
       .getOrElse("SPARK_GRAFT_BENCH_PAR_PER_CORE", DefaultParPerCore.toString)
       .toLong
-    def probePar(): Double = parallelProbe(spark, cpus.toInt, parPerCore)
+    def probePar(): Double = parallelProbe(spark, cpus, parPerCore)
     val gateWaitSec =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_GATE_WAIT", "600").toLong
     val gateRetrySec =

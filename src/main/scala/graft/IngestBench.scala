@@ -2,8 +2,6 @@ package graft
 
 import java.io.{File, PrintWriter}
 
-import org.apache.spark.sql.SparkSession
-
 import graft.jobs.BlockFollowerPipeline
 import graft.model.Model
 import graft.ops.FollowerConfig
@@ -22,14 +20,7 @@ object IngestBench {
     val trxPerBlock = 4
     val opsPerTrx = 3
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.build("graft-ingestbench")
 
     val path = File.createTempFile("ingest-blocks-", ".jsonl")
     path.deleteOnExit()

@@ -3,8 +3,6 @@ package graft
 import java.util.concurrent.ConcurrentLinkedQueue
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.ExplainMode
 
 /** Per-job audit for one declared query (guide §1/§7: find where the
   * wall time actually goes before changing anything): runs the query
@@ -19,18 +17,7 @@ object JobAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val name = args(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.build("graft-jobaudit")
     val fn = SparkEntry.queries(name)
     // warm pass: session init, codegen cache, parquet footers
     fn(spark, sfDir).write.mode("overwrite").format("noop").save()

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.llm.{CorpusPipeline, Dedup, StandingState, TextOps, VectorOps}
@@ -58,18 +58,8 @@ object ScaleBench {
   def main(args: Array[String]): Unit = {
     val factor = args.headOption.map(_.toInt).getOrElse(20)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // hold the session's generated classes (see Bench's codegenCache note)
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Sessions.defaultCpus
+    val spark = Sessions.build("graft-scalebench", cpus)
     spark.range(1000).selectExpr("sum(id)").collect()
 
     val docs = replicate(Tables.documents(spark, sfDir), "doc_id", factor)
@@ -1276,7 +1266,6 @@ object ScaleBench {
     // prove; the serial contrast is informational (an ALREADY-loaded
     // container can legitimately flag both).
     locally {
-      val nCpus = cpus.toInt
       // quiet baselines: best of 3 (min — the same basis shape the
       // bench's floor ratchet converges to)
       def serialProbe(): Double = {
@@ -1287,12 +1276,12 @@ object ScaleBench {
       }
       val perCore = Bench.DefaultParPerCore / 2 // ~0.25s/probe: the probe
       // is about RATIOS under synthetic load, not absolute floors
-      Bench.parallelProbe(spark, nCpus, perCore); serialProbe() // warm
+      Bench.parallelProbe(spark, cpus, perCore); serialProbe() // warm
       val serFloor = (1 to 3).map(_ => serialProbe()).min
       val parFloor = (1 to 3).map(_ =>
-        Bench.parallelProbe(spark, nCpus, perCore)).min
+        Bench.parallelProbe(spark, cpus, perCore)).min
       val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
-      val spinners = (1 to nCpus / 2).map { _ =>
+      val spinners = (1 to cpus / 2).map { _ =>
         val th = new Thread(() => {
           var x = 1L
           while (!stop.get()) {
@@ -1306,14 +1295,14 @@ object ScaleBench {
         try {
           Thread.sleep(300)
           ((1 to 2).map(_ => serialProbe()).min,
-            (1 to 2).map(_ => Bench.parallelProbe(spark, nCpus, perCore)).min)
+            (1 to 2).map(_ => Bench.parallelProbe(spark, cpus, perCore)).min)
         } finally {
           stop.set(true)
           spinners.foreach(_.join(1000))
         }
       val parFlags = Bench.loadedVsPar(parLoaded, parFloor)
       val serFlags = Bench.loadedVs(serLoaded, serFloor)
-      println(s"""{"op":"quiet_gate_parallel","cpus":$nCpus,"spinners":${nCpus / 2},"ser_floor":${f"$serFloor%.3f"},"ser_loaded":${f"$serLoaded%.3f"},"par_floor":${f"$parFloor%.3f"},"par_loaded":${f"$parLoaded%.3f"},"par_flags_loaded":$parFlags,"serial_gate_blind":${!serFlags},"ok":$parFlags}""")
+      println(s"""{"op":"quiet_gate_parallel","cpus":$cpus,"spinners":${cpus / 2},"ser_floor":${f"$serFloor%.3f"},"ser_loaded":${f"$serLoaded%.3f"},"par_floor":${f"$parFloor%.3f"},"par_loaded":${f"$parLoaded%.3f"},"par_flags_loaded":$parFlags,"serial_gate_blind":${!serFlags},"ok":$parFlags}""")
 
       // CLOSING-VERDICT FLIP (round-19 ask): drive Bench.closingVerdict
       // — the exact shipping arithmetic — with this container's own

@@ -5,15 +5,10 @@ import org.apache.spark.sql.functions._
 
 /** Loaders for the driver-generated testdata tables (TESTDATA.md).
   *
-  * `events.ts` has shipped in two encodings across driver generations:
-  * parquet TIMESTAMP(NANOS) — which Spark's parquet reader rejects outright
-  * ([PARQUET_TYPE_ILLEGAL]), so we read the raw nanosecond Long via
-  * `spark.sql.legacy.parquet.nanosAsLong` and truncate ns -> us ourselves —
-  * and plain TIMESTAMP(MICROS) (no UTC adjustment), which Spark surfaces as
-  * TIMESTAMP_NTZ. [[events]] sniffs the read schema and normalizes both to
-  * session-zone TimestampType microseconds; DuckDB (the correctness oracle)
-  * reads either encoding to the same wall-clock microsecond values, so both
-  * engines see identical timestamps whichever file generation is on disk.
+  * `events.ts` is parquet TIMESTAMP(MICROS) with no UTC adjustment, which
+  * Spark surfaces as TIMESTAMP_NTZ. [[events]] casts it to session-zone
+  * TimestampType; DuckDB (the correctness oracle) reads the same
+  * wall-clock microsecond values.
   */
 object Tables {
 
@@ -59,24 +54,19 @@ object Tables {
   def documentsRaw(spark: SparkSession, dir: String): DataFrame =
     table(spark, dir, "documents")
 
-  /** `ts` surfaced as session-zone TimestampType microseconds whatever the
-    * file encoding: TIMESTAMP(NANOS) reads as a raw Long (legacy
-    * nanosAsLong) and is floor-divided ns -> us (positive epoch values, so
-    * floor == trunc, matching DuckDB's read-time truncation); TIMESTAMP
+  /** `ts` surfaced as session-zone TimestampType microseconds: TIMESTAMP
     * (MICROS, no UTC adjustment) reads as TIMESTAMP_NTZ and is cast —
-    * wall-clock preserving under the UTC session zone every entry point
-    * sets. */
+    * wall-clock preserving under the UTC session zone every session sets
+    * ([[Sessions]]); Spark pushes a `ts` bound through that cast to the
+    * parquet scan. */
   def events(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val df = table(spark, dir, "events")
     df.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        df.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
       case _: org.apache.spark.sql.types.TimestampNTZType =>
         df.withColumn("ts", col("ts").cast("timestamp"))
       case _: org.apache.spark.sql.types.TimestampType => df
       // any OTHER encoding a future testdata generation introduces (e.g.
-      // TIMESTAMP(MILLIS), int32 seconds) must fail HERE at load, not
+      // TIMESTAMP(MILLIS), int64 nanos) must fail HERE at load, not
       // silently diverge from the DuckDB oracle at verdict time
       case other => throw new IllegalStateException(
         s"events.ts: unhandled parquet encoding $other — extend Tables.events")

@@ -16,7 +16,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * these run one tight JVM loop per row inside whole-stage codegen).
   *
   * All three mirror their HOF formulations exactly (the HOF forms remain in
-  * TextOps as cross-checks and extension-less fallbacks):
+  * TextOps as the specs' cross-check references):
   *
   *  - `graft_shingles(text, k)`: distinct k-token shingles in first-
   *    occurrence order == `array_distinct(transform(sequence(0, n-k),
@@ -437,8 +437,8 @@ case class IntersectSize(left: Expression, right: Expression) extends BinaryExpr
   * The size bound is SLACKENED by [[BandPairKernels.SizeBoundSlack]]:
   * `min(na,nb) >= tau * max(na,nb) * (1 - 1e-12)`. The mathematical cull
   * condition (J >= tau ⟹ min >= tau * max) is exact over rationals, but
-  * the three places that must agree — these kernels, the HOF fallback
-  * SQL, and the final exact-jaccard filter — each round differently at
+  * the three places that must agree — these kernels, the specs' HOF
+  * reference SQL, and the final exact-jaccard filter — each round differently at
   * the last ulp; the slack guarantees a pair sitting ON the boundary is
   * always DEFERRED to the exact verify rather than culled, so the
   * prefiltered pair set equals the unprefiltered one for every tau, not

@@ -154,7 +154,7 @@ object VectorKernels {
     * same (x - w)^2 left-to-right double folds, ties to the LOWER index
     * (strict `<` keeps the first minimum). Vector elements past
     * m * subDim are ignored; a vector SHORTER than m * subDim throws —
-    * silently truncating here while the HOF fallback null-pads via
+    * silently truncating here while the HOF reference null-pads via
     * zip_with would yield different codes on malformed data, so both
     * paths fail loudly instead. */
   def pqCodes(v: ArrayData, cb: Array[Double], m: Int, k: Int, subDim: Int): ArrayData = {

@@ -272,16 +272,7 @@ object PrepareMain {
 
   def main(argv: Array[String]): Unit = {
     val a = parseArgs(argv)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
-      .appName("graft-prepare")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.build("graft-prepare")
     try {
       val (n, mode) = run(spark, a)
       println(s"""{"job":"prepare","mode":"$mode","rows_out":$n,"out":"${a.out}"}""")

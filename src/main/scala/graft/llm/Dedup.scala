@@ -250,7 +250,7 @@ object Dedup {
     val corpus = standing.select("doc_id", "text")
       .unionByName(incoming.select("doc_id", "text"))
     val sets = corpus.join(candIds, Seq("doc_id"), "left_semi")
-      .select(col("doc_id"), TextOps.shingleCol(corpus, shingleSize).as("sset"))
+      .select(col("doc_id"), TextOps.shingleCol(shingleSize).as("sset"))
       .localCheckpoint(false)
     // 64-bit-hash pre-screen ([[TextOps.hashScreenPairs]]): a boilerplate-
     // skewed bucket's surviving pair frame is still large after the size
@@ -263,7 +263,7 @@ object Dedup {
     val drop = TextOps.hashScreenPairs(pairs, sets, tau)
       .join(sets.select(col("doc_id").as("doc_a"), col("sset").as("sa")), Seq("doc_a"))
       .join(sets.select(col("doc_id").as("doc_b"), col("sset").as("sb")), Seq("doc_b"))
-      .withColumn("common", TextOps.isectSize(corpus, col("sa"), col("sb")))
+      .withColumn("common", TextOps.isectSize(col("sa"), col("sb")))
       .filter(col("common").cast("double") / (col("na") + col("nb") - col("common")) >= tau)
       .select(col("doc_b").as("doc_id")).distinct()
       .localCheckpoint(false) // lazy: single consumer (see exactByHash)
@@ -300,7 +300,7 @@ object Dedup {
     val e = emb.localCheckpoint(false)
     val codebooks = Pq.trainCodebooks(e, m, nCodes, iterations, dim, trainFrac)
     val w = Window.partitionBy("__cell").orderBy("vec_id")
-    e.withColumn("__cell", Pq.codeSignature(e, codebooks, dim))
+    e.withColumn("__cell", Pq.codeSignature(codebooks))
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
       .drop("__cell", "__rn")
@@ -763,7 +763,7 @@ object Dedup {
     val assigned = VectorOps.withRanks(e, centroids)
       .withColumn("bucket", col("__ranks")(0))
       .select(col("vec_id"), col("embedding"), col("bucket"))
-    val drop = semDedupCandidates(e, assigned, maxClusterSize)
+    val drop = semDedupCandidates(assigned, maxClusterSize)
       .filter(col("cos") >= tau)
       .select(col("vec_b").as("vec_id")).distinct()
       .localCheckpoint(true)
@@ -842,12 +842,12 @@ object Dedup {
     val corpus = standing.select("vec_id", "embedding")
       .unionByName(incoming.select("vec_id", "embedding"))
     val a = corpus.select(col("vec_id").as("doc_a"), col("embedding").as("qe"))
-      .withColumn("na", expr(VectorOps.normExprFor(corpus, "qe")))
+      .withColumn("na", expr(VectorOps.normExpr("qe")))
     val b = corpus.select(col("vec_id").as("doc_b"), col("embedding").as("ne"))
-      .withColumn("nb", expr(VectorOps.normExprFor(corpus, "ne")))
+      .withColumn("nb", expr(VectorOps.normExpr("ne")))
     val drop = pairs.join(a, "doc_a").join(b, "doc_b")
       .filter(col("na") * col("nb") =!= 0 &&
-        expr(VectorOps.dotExprFor(corpus, "qe", "ne")) / (col("na") * col("nb")) >= tau)
+        expr(VectorOps.dotExpr("qe", "ne")) / (col("na") * col("nb")) >= tau)
       .select(col("doc_b").as("vec_id")).distinct()
       .localCheckpoint(true)
     incoming.join(drop, Seq("vec_id"), "left_anti")
@@ -863,7 +863,6 @@ object Dedup {
     * partitioning instead of dropping candidates so every vector can still
     * be deduped against cell-mates. */
   private[llm] def semDedupCandidates(
-      e: DataFrame,
       assigned: DataFrame,
       maxClusterSize: Int): DataFrame = {
     val hot = assigned.groupBy("bucket").agg(count(lit(1)).as("csize"))
@@ -877,15 +876,15 @@ object Dedup {
       .drop("csize")
     val a = celled
       .select(col("vec_id").as("vec_a"), col("embedding").as("qe"), col("bucket"), col("cell"))
-      .withColumn("na", expr(VectorOps.normExprFor(e, "qe")))
+      .withColumn("na", expr(VectorOps.normExpr("qe")))
     val b = celled
       .select(col("vec_id").as("vec_b"), col("embedding").as("ne"), col("bucket"), col("cell"))
-      .withColumn("nb", expr(VectorOps.normExprFor(e, "ne")))
+      .withColumn("nb", expr(VectorOps.normExpr("ne")))
     a.join(b, Seq("bucket", "cell"))
       .filter(col("vec_a") < col("vec_b"))
       .withColumn("cos", // zero-norm guard: -2 never verifies
         when(col("na") * col("nb") === 0, lit(-2.0))
-          .otherwise(expr(VectorOps.dotExprFor(e, "qe", "ne")) / (col("na") * col("nb"))))
+          .otherwise(expr(VectorOps.dotExpr("qe", "ne")) / (col("na") * col("nb"))))
       .select("vec_a", "vec_b", "cos")
   }
 
@@ -946,12 +945,12 @@ object Dedup {
     val corpus = standingVecs.select("vec_id", "embedding")
       .unionByName(incoming.select("vec_id", "embedding"))
     val a = corpus.select(col("vec_id").as("doc_a"), col("embedding").as("qe"))
-      .withColumn("na", expr(VectorOps.normExprFor(corpus, "qe")))
+      .withColumn("na", expr(VectorOps.normExpr("qe")))
     val b = corpus.select(col("vec_id").as("doc_b"), col("embedding").as("ne"))
-      .withColumn("nb", expr(VectorOps.normExprFor(corpus, "ne")))
+      .withColumn("nb", expr(VectorOps.normExpr("ne")))
     val drop = pairs.join(a, "doc_a").join(b, "doc_b")
       .filter(col("na") * col("nb") =!= 0 &&
-        expr(VectorOps.dotExprFor(corpus, "qe", "ne")) / (col("na") * col("nb")) >= tau)
+        expr(VectorOps.dotExpr("qe", "ne")) / (col("na") * col("nb")) >= tau)
       .select(col("doc_b").as("vec_id")).distinct()
       .localCheckpoint(false)
     incoming.join(drop, Seq("vec_id"), "left_anti")
@@ -970,16 +969,16 @@ object Dedup {
       nPlanes: Int = 4,
       dim: Int = 64): DataFrame = {
     val b = VectorOps.hyperplaneBuckets(emb, nPlanes, dim)
-    // norms projected once per vector BEFORE the bucket join (native kernel
-    // when registered), same discipline as the top-k paths
+    // norms projected once per vector BEFORE the bucket join (native
+    // kernel), same discipline as the top-k paths
     val a = b.select(col("vec_id").as("vec_a"), col("embedding").as("qe"), col("bucket"))
-      .withColumn("na", expr(VectorOps.normExprFor(emb, "qe")))
+      .withColumn("na", expr(VectorOps.normExpr("qe")))
     val c = b.select(col("vec_id").as("vec_b"), col("embedding").as("ne"), col("bucket"))
-      .withColumn("nb", expr(VectorOps.normExprFor(emb, "ne")))
+      .withColumn("nb", expr(VectorOps.normExpr("ne")))
     val drop = a.join(c, Seq("bucket"))
       .filter(col("vec_a") < col("vec_b"))
       .filter(col("na") * col("nb") =!= 0 &&
-        expr(VectorOps.dotExprFor(emb, "qe", "ne")) / (col("na") * col("nb")) >= tau)
+        expr(VectorOps.dotExpr("qe", "ne")) / (col("na") * col("nb")) >= tau)
       .select(col("vec_b").as("vec_id")).distinct()
       .localCheckpoint(false) // lazy: single consumer (see incremental twin)
     emb.join(drop, Seq("vec_id"), "left_anti")

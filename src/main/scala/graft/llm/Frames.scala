@@ -56,7 +56,9 @@ private[graft] object Frames {
     * per-append file count is a recurring cost, not a one-off; the write
     * job itself also drops from one parquet-writer init + commit-rename
     * per upstream partition to one per output file. Layout-only: row
-    * content is untouched. */
+    * content is untouched. With AQE off, Spark's hint resolution drops
+    * `rebalance` (nothing would coalesce it), so no shuffle is planned —
+    * FramesSpec pins that. */
   private[graft] def sizedWrite(df: DataFrame): DataFrame =
     df.hint("rebalance")
 }

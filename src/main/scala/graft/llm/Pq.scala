@@ -23,21 +23,18 @@ import org.apache.spark.sql.functions._
   * ADC within them); training at 100 TB runs on a [[Mixing]] hash sample
   * (`trainFrac`), never the full corpus.
   *
-  * Code assignment runs through the native `graft_pq_codes` kernel when
-  * [[graft.plans.GraftExtensions]] is registered (one static call per row
-  * for all m subspaces; the interpreted slice / zip_with-fold HOF tree is
-  * the bit-identical fallback, PqSpec cross-checks), the ADC dot through
-  * `graft_dot_fd`; codebooks are m x k x dim/m literals collected
-  * driver-side exactly like the IVF trainer. Deterministic: md5-hash seed
+  * Code assignment runs through the native `graft_pq_codes` kernel (one
+  * static call per row for all m subspaces; PqSpec cross-checks it
+  * against the bit-identical interpreted slice / zip_with-fold HOF tree),
+  * the ADC dot through `graft_dot_fd`, both registered by
+  * [[graft.plans.GraftExtensions]]; codebooks are m x k x dim/m literals
+  * collected driver-side exactly like the IVF trainer. Deterministic: md5-hash seed
   * picks, id tie-breaks, 1e-6 floor-rounded means.
   */
 object Pq {
 
   private def arrSql(c: Seq[Double]): String =
     c.map(v => s"${v}D").mkString("array(", ", ", ")")
-
-  private def hasFn(df: DataFrame, name: String): Boolean =
-    df.sparkSession.catalog.functionExists(name)
 
   /** L2 distance of a float-array column slice to a centroid literal, as a
     * left-to-right double fold (same cross-engine discipline as the dots). */
@@ -47,29 +44,26 @@ object Pq {
        |  CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)""".stripMargin)
 
   /** Index of the nearest codebook centroid (L2, index tie-break) — the
-    * interpreted HOF form; [[codesCol]] is the kernel-backed fast path
+    * interpreted HOF form; [[codesCol]] is the kernel the pipelines run
     * (bit-identical, PqSpec cross-checks). */
   private[llm] def nearestCodeHof(colName: String, cb: Seq[Seq[Double]]): Column =
     array_sort(array(cb.zipWithIndex.map { case (c, i) =>
       struct(l2(colName, c).as("dist"), lit(i).as("idx"))
     }: _*)).getField("idx")(0)
 
-  /** All m codes in ONE kernel call (or the m-HOF fallback). The kernel
-    * call goes through `call_function` + `typedlit` — an `expr(...)` SQL
-    * string would embed the m x k x subDim tensor as ~20 KB of nested
-    * array(...) literals, and PARSING that string cost more than the
-    * training jobs it fed (measured 5.8 s of a 7.7 s pqTopK at 16k
-    * vectors; the typedlit form builds the Literal directly). */
+  /** All m codes in ONE kernel call, through `call_function` +
+    * `typedlit` — an `expr(...)` SQL string would embed the m x k x
+    * subDim tensor as ~20 KB of nested array(...) literals, and PARSING
+    * that string cost more than the training jobs it fed (measured 5.8 s
+    * of a 7.7 s pqTopK at 16k vectors; the typedlit form builds the
+    * Literal directly). */
   private[llm] def codesCol(
-      df: DataFrame, codebooks: Seq[Seq[Seq[Double]]], subDim: Int,
-      colName: String = "embedding"): Column =
-    if (hasFn(df, "graft_pq_codes"))
-      call_function("graft_pq_codes", col(colName), typedlit(codebooks))
-    else codesColHof(codebooks, subDim, colName)
+      codebooks: Seq[Seq[Seq[Double]]], colName: String = "embedding"): Column =
+    call_function("graft_pq_codes", col(colName), typedlit(codebooks))
 
-  /** The interpreted HOF fallback for [[codesCol]] — must match the
-    * kernel: fail loudly on a present-but-short vector instead of letting
-    * zip_with null-pad into silently different codes, but pass a NULL
+  /** The interpreted HOF reference for [[codesCol]] (PqSpec) — matches the
+    * kernel: fails loudly on a present-but-short vector instead of letting
+    * zip_with null-pad into silently different codes, but passes a NULL
     * embedding through as NULL codes (the kernel's null-safe eval). */
   private[llm] def codesColHof(
       codebooks: Seq[Seq[Seq[Double]]], subDim: Int,
@@ -120,7 +114,7 @@ object Pq {
       // as the per-subspace formulation (and the q54 oracle)
       val dimAggs = pqDimAggs(subDim)
       val means = e
-        .withColumn("codes", codesCol(e, cbs, subDim))
+        .withColumn("codes", codesCol(cbs))
         .select(posexplode(col("codes")).as(Seq("j", "code")), col("embedding"))
         .groupBy("j", "code")
         .agg(dimAggs.head, dimAggs.tail: _*)
@@ -224,7 +218,7 @@ object Pq {
           array((0 until dim).map(i => col(s"m$i")): _*).as("means"))
       val dimAggs = pqDimAggs(subDim)
       val pqMeans = e
-        .withColumn("codes", codesCol(e, cbs, subDim))
+        .withColumn("codes", codesCol(cbs))
         .select(posexplode(col("codes")).as(Seq("j", "code")), col("embedding"))
         .groupBy("j", "code")
         .agg(dimAggs.head, dimAggs.tail: _*)
@@ -255,13 +249,11 @@ object Pq {
 
   /** (vec_id, embedding, ...) -> (vec_id, codes: array<int>[m], vn, ...):
     * per-row nearest-centroid codes + the true norm ADC needs. */
-  def encode(emb: DataFrame, codebooks: Seq[Seq[Seq[Double]]], dim: Int = 64): DataFrame = {
-    val subDim = dim / codebooks.size
+  def encode(emb: DataFrame, codebooks: Seq[Seq[Seq[Double]]]): DataFrame =
     emb
-      .withColumn("codes", codesCol(emb, codebooks, subDim))
-      .withColumn("vn", expr(VectorOps.normExprFor(emb, "embedding")))
+      .withColumn("codes", codesCol(codebooks))
+      .withColumn("vn", expr(VectorOps.normExpr("embedding")))
       .drop("embedding")
-  }
 
   /** COLUMNAR code layout — the on-disk shape for a 100 TB ADC scan.
     *
@@ -283,8 +275,7 @@ object Pq {
     * Layout only: [[codesFromColumnar]] restores [[encode]]'s shape with
     * BIT-IDENTICAL codes (spec-pinned), so every ranking path — and the
     * q54/q55/q56 oracles — is layout-agnostic. */
-  def encodeColumnar(
-      emb: DataFrame, codebooks: Seq[Seq[Seq[Double]]], dim: Int = 64): DataFrame = {
+  def encodeColumnar(emb: DataFrame, codebooks: Seq[Seq[Seq[Double]]]): DataFrame = {
     val m = codebooks.size
     // codes are stored SIGNED tinyint: k > 128 centroids would wrap
     // negative and break the documented bit-identical roundtrip
@@ -294,7 +285,7 @@ object Pq {
     val cols = col("vec_id") +:
       (0 until m).map(j => col("codes")(j).cast("tinyint").as(s"c$j")) :+
       col("vn").cast("float").as("vn")
-    encode(emb, codebooks, dim)
+    encode(emb, codebooks)
       .select(cols: _*)
       .sortWithinPartitions((0 until m).map(j => col(s"c$j")): _*)
   }
@@ -316,8 +307,8 @@ object Pq {
     * watermark-bounded state: codebooks are trained OFFLINE on a corpus
     * sample and applied per-row here — no state beyond one entry per
     * recent distinct cell. */
-  def codeSignature(df: DataFrame, codebooks: Seq[Seq[Seq[Double]]], dim: Int = 64): Column =
-    concat_ws(",", codesCol(df, codebooks, dim / codebooks.size).cast("array<string>"))
+  def codeSignature(codebooks: Seq[Seq[Seq[Double]]]): Column =
+    concat_ws(",", codesCol(codebooks).cast("array<string>"))
 
   /** Reconstructed (approximate) embedding from codes: per subspace, the
     * codebook centroid the code names — flatten of literal-array lookups. */
@@ -398,7 +389,7 @@ object Pq {
               subDim, iterations)
         }
       } else trainCodebooks(e, m, nCodes, iterations, dim, trainFrac)
-    pqTopKWith(e, queryIds, cbs, k, refine, dim, queryRowsHint)
+    pqTopKWith(e, queryIds, cbs, k, refine, queryRowsHint)
   }
 
   /** Residual IVF-PQ training with a SHARED seed job: coarse seeds and PQ
@@ -518,7 +509,6 @@ object Pq {
       else assigned.withColumn("__pqvec",
         zip_with(col("embedding"), element_at(coarseLit, col("bucket") + 1),
           (x, w) => (x.cast("double") - w).cast("float")))
-    val subDim = dim / m
     val codebooks = trainedOpt.map(_._2).getOrElse(trainCodebooks(
       withVec.filter(Mixing.hashKeep(col("vec_id"), lit(trainFrac)))
         .select(col("vec_id"), col("__pqvec").as("embedding")),
@@ -528,8 +518,8 @@ object Pq {
       else zip_with(element_at(coarseLit, col("bucket") + 1), reconstruct(codebooks),
         (c, r) => c + r)
     val enc = withVec
-      .withColumn("codes", codesCol(withVec, codebooks, subDim, "__pqvec"))
-      .withColumn("nn", expr(VectorOps.normExprFor(withVec, "embedding")))
+      .withColumn("codes", codesCol(codebooks, "__pqvec"))
+      .withColumn("nn", expr(VectorOps.normExpr("embedding")))
       .select(col("vec_id").as("nid"), col("codes"), col("nn"), col("bucket"))
       .withColumn("approx", recons)
       .localCheckpoint(false)
@@ -538,13 +528,9 @@ object Pq {
         .select(
           col("vec_id").as("qid"), col("embedding").as("qe"),
           explode(slice(col("__ranks"), 1, nProbe)).as("qbucket"))
-        .withColumn("qn", expr(VectorOps.normExprFor(e, "qe"))),
+        .withColumn("qn", expr(VectorOps.normExpr("qe"))),
       qSmall)
-    val adcDot =
-      if (hasFn(e, "graft_dot_fd")) expr("graft_dot_fd(qe, approx)")
-      else expr(
-        """aggregate(zip_with(qe, approx, (x, w) -> CAST(x AS DOUBLE) * w),
-          |  CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)""".stripMargin)
+    val adcDot = expr("graft_dot_fd(qe, approx)")
     val wAdc = Window.partitionBy("qid").orderBy(col("adc").desc, col("nid"))
     val shortlist = enc
       .join(q, col("bucket") === col("qbucket") && col("qid") =!= col("nid"))
@@ -568,10 +554,10 @@ object Pq {
     hintIfSmall(shortlist, slSmall)
       .join(e.select(col("vec_id").as("nid"), col("embedding").as("ne")), Seq("nid"))
       .join(qFlat, Seq("qid"))
-      .withColumn("nn", expr(VectorOps.normExprFor(e, "ne")))
+      .withColumn("nn", expr(VectorOps.normExpr("ne")))
       .withColumn("cos",
         when(col("qn") * col("nn") === 0, lit(-2.0))
-          .otherwise(expr(VectorOps.dotExprFor(e, "qe", "ne")) / (col("qn") * col("nn"))))
+          .otherwise(expr(VectorOps.dotExpr("qe", "ne")) / (col("qn") * col("nn"))))
       .withColumn("rnk", row_number().over(wX))
       .filter(col("rnk") <= k)
       .select(col("qid").as("vec_id"), col("nid").as("neighbor_id"), col("rnk"), col("cos"))
@@ -586,10 +572,9 @@ object Pq {
       codebooks: Seq[Seq[Seq[Double]]],
       k: Int,
       refine: Int = 4,
-      dim: Int = 64,
       queryRowsHint: Option[Long] = None): DataFrame = {
     val e = materialized(emb)
-    pqTopKWithCodes(e, encode(e, codebooks, dim), queryIds, codebooks, k, refine,
+    pqTopKWithCodes(e, encode(e, codebooks), queryIds, codebooks, k, refine,
       queryRowsHint)
   }
 
@@ -637,15 +622,11 @@ object Pq {
     val q = hintIfSmall(
       e.filter(queryIds(col("vec_id")))
         .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-        .withColumn("qn", expr(VectorOps.normExprFor(e, "qe"))),
+        .withColumn("qn", expr(VectorOps.normExpr("qe"))),
       qSmall)
-    // ADC: dot(query float, candidate reconstruction) / (|q| * true |n|) —
-    // the existing float x double kernel when registered, HOF otherwise
-    val adcDot =
-      if (hasFn(e, "graft_dot_fd")) expr("graft_dot_fd(qe, approx)")
-      else expr(
-        """aggregate(zip_with(qe, approx, (x, w) -> CAST(x AS DOUBLE) * w),
-          |  CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)""".stripMargin)
+    // ADC: dot(query float, candidate reconstruction) / (|q| * true |n|)
+    // through the float x double kernel
+    val adcDot = expr("graft_dot_fd(qe, approx)")
     val wAdc = Window.partitionBy("qid").orderBy(col("adc").desc, col("nid"))
     val shortlist = enc
       .join(q, col("qid") =!= col("nid"))
@@ -668,10 +649,10 @@ object Pq {
     hintIfSmall(shortlist, slSmall)
       .join(e.select(col("vec_id").as("nid"), col("embedding").as("ne")), Seq("nid"))
       .join(qFlat, Seq("qid"))
-      .withColumn("nn", expr(VectorOps.normExprFor(e, "ne")))
+      .withColumn("nn", expr(VectorOps.normExpr("ne")))
       .withColumn("cos",
         when(col("qn") * col("nn") === 0, lit(-2.0))
-          .otherwise(expr(VectorOps.dotExprFor(e, "qe", "ne")) / (col("qn") * col("nn"))))
+          .otherwise(expr(VectorOps.dotExpr("qe", "ne")) / (col("qn") * col("nn"))))
       .withColumn("rnk", row_number().over(wX))
       .filter(col("rnk") <= k)
       .select(col("qid").as("vec_id"), col("nid").as("neighbor_id"), col("rnk"), col("cos"))

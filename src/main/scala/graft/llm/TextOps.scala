@@ -6,10 +6,12 @@ import org.apache.spark.sql.functions._
 /** Shared text-pipeline building blocks over the `documents` table
   * (doc_id, text, lang, source, n_chars). Deterministic and reproducible in
   * the DuckDB oracle. The per-row kernels (shingling, minhash, repetition
-  * counters, simhash) dispatch to native codegen'd expressions
-  * ([[graft.functions.TextKernels]], registered by GraftExtensions) with
-  * bit-identical higher-order-function fallbacks kept as cross-checks —
-  * HOFs evaluate interpreted per element and measured 3-10x slower.
+  * counters, simhash) are native codegen'd expressions
+  * ([[graft.functions.TextKernels]], registered by GraftExtensions on
+  * every [[graft.Sessions]] session). The bit-identical
+  * higher-order-function forms (`hof*`, `*Hof`) are kept only as the
+  * specs' cross-check references — HOFs evaluate interpreted per element
+  * and measured 3-10x slower.
   *
   * Scale notes (100 TB posture): every transform here is per-row (no
   * shuffle) except the group-bys/joins that are explicitly keyed by shingle
@@ -22,9 +24,6 @@ object TextOps {
 
   /** Whitespace tokens of `text` as an array column. */
   def tokens(text: Column): Column = split(text, " ")
-
-  private def hasFn(df: DataFrame, name: String): Boolean =
-    df.sparkSession.catalog.functionExists(name)
 
   /** Text normalization for the FINGERPRINT path (opt-in): Unicode NFC ->
     * lowercase -> every non-letter/digit/whitespace run becomes one space
@@ -41,15 +40,11 @@ object TextOps {
     * replays it as `trim(regexp_replace(regexp_replace(lower(
     * nfc_normalize(text)), '[^\p{L}\p{N}\s]+', ' ', 'g'), '\s+', ' ',
     * 'g'))` — q58's oracle pins the equivalence on real data. NFC runs
-    * through the `graft_nfc` kernel; without the extension it degrades to
-    * identity (ASCII text is always NFC-normal, so only pre-composed vs
-    * combining accent forms would diverge). */
-  def normalizeText(df: DataFrame, text: Column): Column = {
-    val nfc = if (hasFn(df, "graft_nfc")) call_function("graft_nfc", text) else text
+    * through the `graft_nfc` kernel. */
+  def normalizeText(text: Column): Column =
     trim(regexp_replace(
-      regexp_replace(lower(nfc), "[^\\p{L}\\p{N}\\s]+", " "),
+      regexp_replace(lower(call_function("graft_nfc", text)), "[^\\p{L}\\p{N}\\s]+", " "),
       "\\s+", " "))
-  }
 
   /** Opt-in pre-fingerprint normalization STAGE: `textCol` is replaced by
     * its [[normalizeText]] form and the original survives as `raw_text`,
@@ -59,14 +54,12 @@ object TextOps {
   def normalized(docs: DataFrame, textCol: String = "text"): DataFrame =
     docs
       .withColumn("raw_text", col(textCol))
-      .withColumn(textCol, normalizeText(docs, col(textCol)))
+      .withColumn(textCol, normalizeText(col(textCol)))
 
   /** Distinct k-shingle array of `text`, first-occurrence order; empty for
-    * docs shorter than k tokens. Native kernel when registered; HOF
-    * formulation otherwise (bit-identical, spec-pinned). */
-  def shingleCol(df: DataFrame, k: Int): Column =
-    if (hasFn(df, "graft_shingles")) expr(s"graft_shingles(text, $k)")
-    else hofShingleCol(k)
+    * docs shorter than k tokens (the `graft_shingles` kernel; its HOF
+    * reference [[hofShingleCol]] is spec-pinned bit-identical). */
+  def shingleCol(k: Int): Column = expr(s"graft_shingles(text, $k)")
 
   /** SQL for the distinct k-shingle array over `split(text, ' ')`. */
   private def hofShingleSql(k: Int): String = {
@@ -75,26 +68,24 @@ object TextOps {
     s"array_distinct(transform(sequence(0, size(split(text, ' ')) - $k), i -> $joined))"
   }
 
-  /** The pure-built-ins formulation of [[shingleCol]]. */
+  /** The pure-built-ins formulation of [[shingleCol]] (spec reference). */
   def hofShingleCol(k: Int): Column =
     expr(s"CASE WHEN size(split(text, ' ')) >= $k THEN ${hofShingleSql(k)} ELSE array() END")
 
   /** |distinct(a) ∩ distinct(b)| as BIGINT — the codegen'd
-    * `graft_isect_size` kernel when registered (one hash-set probe pass,
-    * no intersection array materialized), else
-    * `size(array_intersect(a, b))`. Bit-identical for null-free string
-    * arrays (the shingle-set contract); spec-pinned. The verify joins run
-    * this once per candidate pair, which makes it THE per-pair constant
-    * at a skewed band bucket. */
-  private[llm] def isectSize(df: DataFrame, a: Column, b: Column): Column =
-    if (hasFn(df, "graft_isect_size")) call_function("graft_isect_size", a, b)
-    else size(array_intersect(a, b)).cast("long")
+    * `graft_isect_size` kernel (one hash-set probe pass, no intersection
+    * array materialized; bit-identical to `size(array_intersect(a, b))`
+    * for null-free string arrays, spec-pinned). The verify joins run this
+    * once per candidate pair, which makes it THE per-pair constant at a
+    * skewed band bucket. */
+  private[llm] def isectSize(a: Column, b: Column): Column =
+    call_function("graft_isect_size", a, b)
 
   /** (doc_id, source, sset, n) — per-doc distinct shingle set and its size,
     * computed per row (no shuffle). Docs shorter than k tokens are dropped. */
   def shingleArrays(docs: DataFrame, k: Int): DataFrame =
     docs
-      .select(col("doc_id"), col("source"), shingleCol(docs, k).as("sset"))
+      .select(col("doc_id"), col("source"), shingleCol(k).as("sset"))
       .filter(size(col("sset")) > 0)
       .withColumn("n", size(col("sset")).cast("long"))
 
@@ -152,19 +143,18 @@ object TextOps {
 
   /** Per-row minhash signatures: (doc_id, sig: array<long>[numHashes]) with
     * NO shuffle — the 100 TB shape (signature computation is embarrassingly
-    * parallel; only band keys ever reach an exchange). Native kernel when
-    * registered, HOF fallback otherwise (bit-identical, spec-pinned). */
+    * parallel; only band keys ever reach an exchange). */
   def minhashSigDF(docs: DataFrame, k: Int, numHashes: Int): DataFrame =
-    docs.select(col("doc_id"), minhashSigCol(docs, k, numHashes).as("sig"))
+    docs.select(col("doc_id"), minhashSigCol(k, numHashes).as("sig"))
       .filter(col("sig").isNotNull)
 
-  /** The per-row signature as a Column (NULL when < k tokens). */
-  def minhashSigCol(docs: DataFrame, k: Int, numHashes: Int): Column =
-    if (hasFn(docs, "graft_minhash")) expr(s"graft_minhash(text, $k, $numHashes)")
-    else hofMinhashSig(k, numHashes)
+  /** The per-row signature as a Column (NULL when < k tokens) — the
+    * `graft_minhash` kernel. */
+  def minhashSigCol(k: Int, numHashes: Int): Column =
+    expr(s"graft_minhash(text, $k, $numHashes)")
 
   /** Pure-built-ins formulation of the per-row signature (NULL when < k
-    * tokens, like the kernel). Cross-check/fallback only: the inlined
+    * tokens, like the kernel). Spec cross-check only: the inlined
     * shingle+hash subtree re-evaluates per signature index. */
   def hofMinhashSig(k: Int, numHashes: Int): Column = {
     val hsSql =
@@ -229,26 +219,10 @@ object TextOps {
   def incrementalBucketPairsSized(
       bands: DataFrame, maxBucketSize: Int, tau: Double): DataFrame = {
     // a skewed bucket emits its pairs from ONE task: the codegen'd kernel
-    // runs the O(bucket^2) emission loop natively (the HOF tree pays an
-    // interpreted lambda dispatch per candidate combination — measured
-    // dominant at a 1,129-doc boilerplate bucket); identical pair sets,
-    // spec-pinned
-    val emit =
-      if (hasFn(bands, "graft_inc_band_pairs"))
-        call_function("graft_inc_band_pairs", col("items"), lit(tau))
-      else expr(
-        // CAST(tau AS DOUBLE) + the shared slack: identical double
-        // arithmetic to the kernel's size bound (a bare `$tau` would parse
-        // as exact DECIMAL and diverge at the last ulp for taus like 0.87)
-        s"""flatten(transform(
-           |  filter(items, x -> x.inc = 1L),
-           |  x -> transform(
-           |    filter(items, a -> (a.inc = 0L OR a.doc_id < x.doc_id)
-           |                       AND least(a.n, x.n) >=
-           |                           CAST($tau AS DOUBLE) * greatest(a.n, x.n)
-           |                           * ${graft.functions.BandPairKernels.SizeBoundSlack}D),
-           |    a -> named_struct('doc_a', a.doc_id, 'doc_b', x.doc_id,
-           |                      'na', a.n, 'nb', x.n))))""".stripMargin)
+    // runs the O(bucket^2) emission loop natively (the HOF tree the specs
+    // pin it against pays an interpreted lambda dispatch per candidate
+    // combination — measured dominant at a 1,129-doc boilerplate bucket)
+    val emit = call_function("graft_inc_band_pairs", col("items"), lit(tau))
     bands.groupBy("band", "sig")
       .agg(collect_list(struct(col("doc_id"), col("inc"), col("n"))).as("items"))
       .filter(size(col("items")) >= 2 &&
@@ -265,19 +239,7 @@ object TextOps {
     * emitted, (na, nb) riding along. */
   def bucketPairsSized(bands: DataFrame, maxBucketSize: Int, tau: Double): DataFrame = {
     // kernel note: see incrementalBucketPairsSized
-    val emit =
-      if (hasFn(bands, "graft_band_pairs"))
-        call_function("graft_band_pairs", col("ids"), lit(tau))
-      else expr(
-        // same double-arithmetic discipline as the incremental twin above
-        s"""flatten(transform(ids, (a, i) ->
-           |  transform(
-           |    filter(slice(ids, i + 2, size(ids) - i - 1),
-           |           b -> least(a.n, b.n) >=
-           |                CAST($tau AS DOUBLE) * greatest(a.n, b.n)
-           |                * ${graft.functions.BandPairKernels.SizeBoundSlack}D),
-           |    b -> named_struct('doc_a', a.doc_id, 'doc_b', b.doc_id,
-           |                      'na', a.n, 'nb', b.n))))""".stripMargin)
+    val emit = call_function("graft_band_pairs", col("ids"), lit(tau))
     bands.groupBy("band", "sig")
       .agg(sort_array(collect_list(struct(col("doc_id"), col("n")))).as("ids"))
       .filter(size(col("ids")) >= 2 && size(col("ids")) <= maxBucketSize)
@@ -317,8 +279,8 @@ object TextOps {
     val nBands = numHashes / bandRows
     docs
       .select(col("doc_id"),
-        minhashSigCol(docs, k, numHashes).as("sig"),
-        size(shingleCol(docs, k)).cast("long").as("n"))
+        minhashSigCol(k, numHashes).as("sig"),
+        size(shingleCol(k)).cast("long").as("n"))
       .filter(col("sig").isNotNull)
       .select(col("doc_id"), col("n"),
         posexplode(array(bandKeyCols(nBands, bandRows): _*)).as(Seq("band", "sig")))
@@ -388,7 +350,7 @@ object TextOps {
     val candIds = pairs.select(col("doc_a").as("doc_id"))
       .union(pairs.select(col("doc_b").as("doc_id"))).distinct()
     val sets = docs.join(candIds, Seq("doc_id"), "left_semi")
-      .select(col("doc_id"), shingleCol(docs, k).as("sset"))
+      .select(col("doc_id"), shingleCol(k).as("sset"))
       .withColumn("n", size(col("sset")).cast("long"))
       .localCheckpoint(false)
     // sized pairs already carry (na, nb); the unsized path looks them up
@@ -410,7 +372,7 @@ object TextOps {
     screened
       .join(sets.select(col("doc_id").as("doc_a"), col("sset").as("sa")), Seq("doc_a"))
       .join(sets.select(col("doc_id").as("doc_b"), col("sset").as("sb")), Seq("doc_b"))
-      .withColumn("common", isectSize(docs, col("sa"), col("sb")))
+      .withColumn("common", isectSize(col("sa"), col("sb")))
       .withColumn("jaccard", col("common").cast("double") / (col("na") + col("nb") - col("common")))
       .select("doc_a", "doc_b", "common", "na", "nb", "jaccard")
   }
@@ -443,7 +405,7 @@ object TextOps {
     pairs
       .join(hsets.select(col("doc_id").as("doc_a"), col("hs").as("ha")), Seq("doc_a"))
       .join(hsets.select(col("doc_id").as("doc_b"), col("hs").as("hb")), Seq("doc_b"))
-      .withColumn("__ch", isectSize(pairs, col("ha"), col("hb")))
+      .withColumn("__ch", isectSize(col("ha"), col("hb")))
       .filter(col("__ch").cast("double") / (col("na") + col("nb") - col("__ch")) >= tau)
       .select(pairs.columns.toIndexedSeq.map(col): _*)
   }
@@ -459,7 +421,7 @@ object TextOps {
     cand
       .join(docSets.select(col("doc_id").as("doc_a"), col("sset").as("sa"), col("n").as("na")), "doc_a")
       .join(docSets.select(col("doc_id").as("doc_b"), col("sset").as("sb"), col("n").as("nb")), "doc_b")
-      .withColumn("common", isectSize(cand, col("sa"), col("sb")))
+      .withColumn("common", isectSize(col("sa"), col("sb")))
       .withColumn("jaccard", col("common").cast("double") / (col("na") + col("nb") - col("common")))
       .select("doc_a", "doc_b", "common", "na", "nb", "jaccard")
   }
@@ -468,14 +430,10 @@ object TextOps {
     * via the native codegen'd expression [[graft.functions.SimHash64]]
     * (registered as `graft_simhash64` by GraftExtensions). Per-row, no
     * shuffle, one md5 per token. [[simhashHofDF]] keeps the pure
-    * built-in-functions formulation — bit-identical, used as the
-    * cross-check in the spec and as the fallback when the extension is not
-    * registered. */
-  def simhashDF(docs: DataFrame): DataFrame = {
-    if (hasFn(docs, "graft_simhash64"))
-      docs.select(col("doc_id"), expr("graft_simhash64(text)").as("simhash"))
-    else simhashHofDF(docs)
-  }
+    * built-in-functions formulation — bit-identical, the spec's
+    * cross-check. */
+  def simhashDF(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), expr("graft_simhash64(text)").as("simhash"))
 
   /** Higher-order-function formulation of the same simhash scheme: token
     * hash = first 15 hex chars of md5; bit votes; MSB-first fold. */
@@ -529,22 +487,21 @@ object TextOps {
     * ~10x slower and is kept as the spec cross-check). Docs shorter than n
     * tokens report 0 repetition. */
   def repetitionStats(docs: DataFrame, n: Int): DataFrame =
-    if (hasFn(docs, "graft_repstats"))
-      docs
-        .select(col("doc_id"), expr(s"graft_repstats(text, $n)").as("rs"))
-        .select(
-          col("doc_id"),
-          col("rs.n_grams").as("n_grams"),
-          when(col("rs.n_grams") > 0,
-            lit(1.0) - col("rs.n_distinct").cast("double") / col("rs.n_grams"))
-            .otherwise(lit(0.0)).as("dup_frac"),
-          when(col("rs.n_grams") > 0,
-            col("rs.top_count").cast("double") / col("rs.n_grams"))
-            .otherwise(lit(0.0)).as("top_frac"),
-        )
-    else repetitionStatsHof(docs, n)
+    docs
+      .select(col("doc_id"), expr(s"graft_repstats(text, $n)").as("rs"))
+      .select(
+        col("doc_id"),
+        col("rs.n_grams").as("n_grams"),
+        when(col("rs.n_grams") > 0,
+          lit(1.0) - col("rs.n_distinct").cast("double") / col("rs.n_grams"))
+          .otherwise(lit(0.0)).as("dup_frac"),
+        when(col("rs.n_grams") > 0,
+          col("rs.top_count").cast("double") / col("rs.n_grams"))
+          .otherwise(lit(0.0)).as("top_frac"),
+      )
 
-  /** Pure-built-ins formulation of [[repetitionStats]] (bit-identical). */
+  /** Pure-built-ins formulation of [[repetitionStats]] (bit-identical;
+    * spec reference). */
   def repetitionStatsHof(docs: DataFrame, n: Int): DataFrame = {
     val joined = (0 until n).map(j => s"t[i + $j]").mkString("concat_ws(' ', ", ", ", ")")
     docs
@@ -661,11 +618,11 @@ object TextOps {
       .localCheckpoint(false)
     val trainSets = train
       .join(cand.select(col("doc_id")).distinct(), Seq("doc_id"), "left_semi")
-      .select(col("doc_id"), shingleCol(train, k).as("ts"))
+      .select(col("doc_id"), shingleCol(k).as("ts"))
       .withColumn("tn", size(col("ts")).cast("long"))
     val otherSets = other
       .join(cand.select(col("o_id").as("doc_id")).distinct(), Seq("doc_id"), "left_semi")
-      .select(col("doc_id").as("o_id"), shingleCol(other, k).as("os"))
+      .select(col("doc_id").as("o_id"), shingleCol(k).as("os"))
       .withColumn("on", size(col("os")).cast("long"))
     // sound size prefilter (J >= tau ⟹ min >= tau * max, slackened by the
     // shared SizeBoundSlack so boundary pairs always defer to the exact
@@ -676,7 +633,7 @@ object TextOps {
       .join(otherSets, Seq("o_id"))
       .filter(least(col("tn"), col("on")) >= lit(tau) * greatest(col("tn"), col("on"))
         * lit(graft.functions.BandPairKernels.SizeBoundSlack))
-      .withColumn("common", isectSize(train, col("ts"), col("os")))
+      .withColumn("common", isectSize(col("ts"), col("os")))
       .filter(col("common").cast("double")
         / (col("tn") + col("on") - col("common")) >= tau)
       .select("doc_id").distinct()
@@ -694,14 +651,11 @@ object TextOps {
     "zh" -> Seq("de5", "shi4", "le5", "zai4", "wo3"),
   )
 
-  /** Count of whitespace tokens of `text` in `words` — native hash-set
-    * kernel when registered, `size(filter(...IN...))` HOF otherwise
-    * (identical counts). */
-  def tokenCountInCol(df: DataFrame, words: Seq[String]): Column = {
+  /** Count of whitespace tokens of `text` in `words` — the native
+    * hash-set kernel `graft_token_count_in`. */
+  def tokenCountInCol(words: Seq[String]): Column = {
     val inList = words.map(w => s"'$w'").mkString(", ")
-    if (hasFn(df, "graft_token_count_in"))
-      expr(s"graft_token_count_in(text, array($inList))")
-    else expr(s"size(filter(split(text, ' '), x -> x IN ($inList)))")
+    expr(s"graft_token_count_in(text, array($inList))")
   }
 
   /** Passage-level duplication stats (the sub-document dedup pass of web
@@ -718,13 +672,10 @@ object TextOps {
     * only hashes.
     *
     * Output: (doc_id, n_passages, n_dup_passages, dup_frac). */
-  /** Chunk-hash array as a Column — native kernel when registered, the
-    * bit-identical HOF formulation otherwise (kept as cross-check). */
-  def chunkHashCol(df: DataFrame, w: Int): Column =
-    if (hasFn(df, "graft_chunk_hashes")) expr(s"graft_chunk_hashes(text, $w)")
-    else hofChunkHashes(w)
+  /** Chunk-hash array as a Column — the `graft_chunk_hashes` kernel. */
+  def chunkHashCol(w: Int): Column = expr(s"graft_chunk_hashes(text, $w)")
 
-  /** Pure-built-ins formulation of [[chunkHashCol]]. */
+  /** Pure-built-ins formulation of [[chunkHashCol]] (spec reference). */
   def hofChunkHashes(w: Int): Column = expr(
     s"""transform(sequence(0, cast(ceil(size(split(text, ' ')) / ${w}.0D) as int) - 1),
        |  i -> md5(concat_ws(' ', slice(split(text, ' '), i * $w + 1, $w))))""".stripMargin)
@@ -1325,7 +1276,7 @@ object TextOps {
     // chunks feeds the df groupBy AND the join: hash the corpus once
     val chunks = docs.select(
       col("doc_id"),
-      explode(chunkHashCol(docs, w)).as("h"))
+      explode(chunkHashCol(w)).as("h"))
       .localCheckpoint(false)
     val freq = chunks.groupBy("h").agg(countDistinct("doc_id").as("df"))
     chunks.join(freq, "h")
@@ -1467,9 +1418,8 @@ object TextOps {
   }
 
   /** Pure-built-ins top-term count (most frequent token's occurrence
-    * count) — the O(distinct * tokens) interpreted fallback for sessions
-    * without the graft extension; bit-identical to
-    * `graft_repstats(text, 1).top_count` (spec cross-checked). */
+    * count) — the O(distinct * tokens) interpreted reference the spec
+    * pins `graft_repstats(text, 1).top_count` against bit-identically. */
   private[llm] def gopherTopTermHof(toks: Column): Column =
     array_max(transform(
       array_distinct(toks),
@@ -1483,7 +1433,7 @@ object TextOps {
   private case class GopherSignals(
       nWords: Column, meanWordLen: Column, nStopDistinct: Column, topTermFrac: Column)
 
-  private def gopherSignals(docs: DataFrame): GopherSignals = {
+  private def gopherSignals: GopherSignals = {
     val stop = Seq("the", "a", "of", "and", "to", "in", "is")
     val toks = tokens(col("text"))
     val nWords = size(toks)
@@ -1492,12 +1442,9 @@ object TextOps {
     val meanLen = (length(col("text")) - (nWords - lit(1))).cast("double") / nWords
     val distinctStop = size(array_intersect(toks, typedLit(stop)))
     // top-term count through the one-pass graft_repstats kernel (n=1:
-    // unigrams) — the interpreted nested-HOF fallback is O(distinct *
-    // tokens) per row and exists only for sessions without the extension
-    // (spec cross-checks the two bit-identically)
-    val topTermN =
-      if (hasFn(docs, "graft_repstats")) expr("graft_repstats(text, 1).top_count")
-      else gopherTopTermHof(toks)
+    // unigrams); the spec cross-checks it against the interpreted
+    // nested-HOF form [[gopherTopTermHof]], O(distinct * tokens) per row
+    val topTermN = expr("graft_repstats(text, 1).top_count")
     GopherSignals(nWords, meanLen, distinctStop, topTermN.cast("double") / nWords)
   }
 
@@ -1529,7 +1476,7 @@ object TextOps {
       maxMeanWordLen: Double = 12.0,
       minDistinctStop: Int = 2,
       maxTopTermFrac: Double = 0.20): DataFrame = {
-    val s = gopherSignals(docs)
+    val s = gopherSignals
     val named = GopherSignals(
       col("n_words"), col("mean_word_len"), col("n_stop_distinct"), col("top_term_frac"))
     val rules = gopherKeepRules(named, minWords, maxWords,
@@ -1565,7 +1512,7 @@ object TextOps {
       maxMeanWordLen: Double = 12.0,
       minDistinctStop: Int = 2,
       maxTopTermFrac: Double = 0.20): DataFrame = {
-    val rules = gopherKeepRules(gopherSignals(docs), minWords, maxWords,
+    val rules = gopherKeepRules(gopherSignals, minWords, maxWords,
       minMeanWordLen, maxMeanWordLen, minDistinctStop, maxTopTermFrac)
     docs.filter(rules.reduce(_ && _))
   }
@@ -1701,7 +1648,7 @@ object TextOps {
   def langIdDF(docs: DataFrame): DataFrame = {
     val scored = langMarkers.zipWithIndex.map { case ((lang, words), idx) =>
       struct(
-        tokenCountInCol(docs, words).as("score"),
+        tokenCountInCol(words).as("score"),
         lit(-idx).as("prio"),
         lit(lang).as("lang"),
       )

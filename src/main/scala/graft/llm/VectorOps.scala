@@ -9,7 +9,10 @@ import org.apache.spark.sql.functions._
   * Dot products are computed as an explicit left-to-right fold in DOUBLE
   * (float -> double widening is exact), so the result is bit-identical to any
   * engine that sums the products sequentially — which is what the DuckDB
-  * oracle does. No UDFs: `zip_with`/`aggregate` stay inside codegen.
+  * oracle does. The folds are native codegen'd kernels (`graft_dot_f`,
+  * `graft_norm_f`, `graft_dot_fd`, `graft_centroid_ranks`, registered by
+  * GraftExtensions on every [[graft.Sessions]] session); the specs pin
+  * them against the interpreted `zip_with`/`aggregate` forms.
   *
   * Scale path: brute-force top-k is a broadcast nested-loop join (fine when
   * one side — the query set — is small); all-pairs similarity goes through
@@ -19,34 +22,17 @@ import org.apache.spark.sql.functions._
 object VectorOps {
 
   /** Left-to-right double-precision dot product of two float-array columns
-    * (as a SQL expression string over columns named `a` and `b`).
-    * The HOF fallback and the native kernel (graft_dot_f, registered by
-    * GraftExtensions) produce bit-identical doubles — exact float->double
-    * widening, strict sequential accumulation — so either path matches the
-    * DuckDB oracle; the native one skips interpreted per-element lambdas. */
-  private def hofDot(a: String, b: String): String =
-    s"aggregate(zip_with($a, $b, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
+    * (as a SQL expression string): exact float->double widening, strict
+    * sequential accumulation — the DuckDB oracle's arithmetic. */
+  private[llm] def dotExpr(a: String, b: String): String = s"graft_dot_f($a, $b)"
 
-  private def hofNorm(a: String): String =
-    s"sqrt(aggregate(transform($a, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), CAST(0.0 AS DOUBLE), (acc, v) -> acc + v))"
+  /** L2 norm of a float-array column as a SQL expression string. */
+  private[llm] def normExpr(a: String): String = s"graft_norm_f($a)"
 
-  private def nativeFns(df: DataFrame): Boolean =
-    df.sparkSession.catalog.functionExists("graft_dot_f")
-
-  private[llm] def dotExprFor(df: DataFrame, a: String, b: String): String =
-    if (nativeFns(df)) s"graft_dot_f($a, $b)" else hofDot(a, b)
-
-  private[llm] def normExprFor(df: DataFrame, a: String): String =
-    if (nativeFns(df)) s"graft_norm_f($a)" else hofNorm(a)
-
-  /** cosine(a, b) as a Column over a frame (HOF fallback path). */
-  def cosine(a: String, b: String): Column =
-    expr(hofDot(a, b)) / (expr(hofNorm(a)) * expr(hofNorm(b)))
-
-  /** L2 norm of a float-array column as a Column (native kernel when
-    * registered) — the public face of [[normExprFor]] for callers outside
-    * this package (e.g. the streaming intake's zero-norm gate). */
-  def norm(df: DataFrame, a: String): Column = expr(normExprFor(df, a))
+  /** L2 norm of a float-array column as a Column — the public face of
+    * [[normExpr]] for callers outside this package (e.g. the streaming
+    * intake's zero-norm gate). */
+  def norm(a: String): Column = expr(normExpr(a))
 
   /** Brute-force cosine top-k: for each query vector (small side, broadcast),
     * rank all candidate vectors by cosine desc with id tie-break.
@@ -56,9 +42,9 @@ object VectorOps {
   def bruteForceTopK(queries: DataFrame, candidates: DataFrame, k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val q = broadcast(queries.select(col("vec_id").as("qid"), col("embedding").as("qe"))
-      .withColumn("qn", expr(normExprFor(queries, "qe"))))
+      .withColumn("qn", expr(normExpr("qe"))))
     val c = candidates.select(col("vec_id").as("nid"), col("embedding").as("ne"))
-      .withColumn("nn", expr(normExprFor(candidates, "ne")))
+      .withColumn("nn", expr(normExpr("ne")))
     val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("nid"))
     c.join(q, col("qid") =!= col("nid"))
       // zero-norm vectors: ANSI mode THROWS on the 0-divisor (it never
@@ -70,7 +56,7 @@ object VectorOps {
       // withRanks and the native kernel (dist = 2.0).
       .withColumn("cos",
         when(col("qn") * col("nn") === 0, lit(-2.0))
-          .otherwise(expr(dotExprFor(candidates, "qe", "ne")) / (col("qn") * col("nn"))))
+          .otherwise(expr(dotExpr("qe", "ne")) / (col("qn") * col("nn"))))
       .withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= k)
       .select(col("qid").as("vec_id"), col("nid").as("neighbor_id"), col("rnk"), col("cos"))
@@ -97,13 +83,13 @@ object VectorOps {
   def cosineNearDupPairs(emb: DataFrame, sampleMod: Int, tau: Double): DataFrame = {
     val sub = emb.filter(col("vec_id") % sampleMod === 0)
     val a = sub.select(col("vec_id").as("vec_a"), col("embedding").as("qe"))
-      .withColumn("na", expr(normExprFor(sub, "qe")))
+      .withColumn("na", expr(normExpr("qe")))
     val b = sub.select(col("vec_id").as("vec_b"), col("embedding").as("ne"))
-      .withColumn("nb", expr(normExprFor(sub, "ne")))
+      .withColumn("nb", expr(normExpr("ne")))
     a.join(b, col("vec_a") < col("vec_b"))
       .withColumn("cos", // zero-norm guard: -2 never verifies (see bruteForceTopK)
         when(col("na") * col("nb") === 0, lit(-2.0))
-          .otherwise(expr(dotExprFor(sub, "qe", "ne")) / (col("na") * col("nb"))))
+          .otherwise(expr(dotExpr("qe", "ne")) / (col("na") * col("nb"))))
       .filter(col("cos") >= tau)
       .select("vec_a", "vec_b", "cos")
   }
@@ -128,16 +114,10 @@ object VectorOps {
     * bucket = bits of sign(dot(plane, v)) packed into a long. This is the
     * scale path for ANN: bucket is an equi-join/groupBy key. */
   def hyperplaneBuckets(emb: DataFrame, nPlanes: Int, dim: Int): DataFrame = {
-    // float-embedding x double-plane-literal dot: native kernel when
-    // registered (bit-identical; the HOF fold evaluates interpreted per
-    // element and this projection runs once per plane per row, on every
-    // path that consumes buckets)
-    val haveFD = emb.sparkSession.catalog.functionExists("graft_dot_fd")
-    val planeDot: Int => String = p =>
-      if (haveFD) s"graft_dot_fd(embedding, plane$p)"
-      else
-        s"""aggregate(zip_with(embedding, plane$p, (x, w) -> CAST(x AS DOUBLE) * w),
-           |          CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)""".stripMargin
+    // float-embedding x double-plane-literal dot through the native
+    // kernel: this projection runs once per plane per row, on every path
+    // that consumes buckets
+    val planeDot: Int => String = p => s"graft_dot_fd(embedding, plane$p)"
     val withPlanes = (0 until nPlanes).foldLeft(emb) { (df, p) =>
       df.withColumn(s"plane$p", typedLit(planeComponents(p, dim)))
     }
@@ -167,9 +147,9 @@ object VectorOps {
     *     recall tuned by nProbe instead of plane count. With
     *     nProbe == nCentroids this is EXACTLY brute force (spec-pinned).
     *
-    * All distances are double-precision cosine (dot via the native kernel
-    * when registered). Deterministic: seeded sample, fixed iteration count,
-    * id tie-breaks. */
+    * All distances are double-precision cosine (dot via the native
+    * kernel). Deterministic: seeded sample, fixed iteration count, id
+    * tie-breaks. */
   // Centroid ranking — the ONE definition of the metric, shared by
   // training assignment (ranks[0]), query probing (ranks[0..nProbe)), and
   // semantic-dedup cluster scoping: a fix applied here cannot diverge
@@ -178,37 +158,16 @@ object VectorOps {
   // cluster) score the MAX cosine distance 2.0 instead of NaN — NaN inside
   // the sort comparisons makes assignment and probe order undefined.
   //
-  // Native kernel when registered: ONE stable static call whose centroid
-  // matrix is a codegen reference object, so re-planning each Lloyd
-  // iteration reuses the compiled class. The struct/array_sort tree
-  // (interpreted HOF dots, re-compiled per iteration because the centroid
-  // literals are baked into the plan) is the bit-identical fallback.
+  // One native `graft_centroid_ranks` call per row: a stable static call
+  // whose centroid matrix is a codegen reference object, so re-planning
+  // each Lloyd iteration reuses the compiled class.
   private def centroidsSql(cs: Seq[Seq[Double]]): String =
     cs.map(c => c.map(v => s"${v}D").mkString("array(", ", ", ")"))
       .mkString("array(", ", ", ")")
 
-  private def scoredStructs(cs: Seq[Seq[Double]]): Seq[Column] =
-    cs.zipWithIndex.map { case (c, i) =>
-      val cNorm = math.sqrt(c.map(x => x * x).sum)
-      val dot = expr(
-        s"""aggregate(zip_with(embedding, __c$i, (x, w) -> CAST(x AS DOUBLE) * w),
-           |          CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)""".stripMargin)
-      val dist =
-        if (cNorm == 0) lit(2.0)
-        else when(col("__vn") === 0, lit(2.0))
-          .otherwise(lit(1.0) - dot / (col("__vn") * lit(cNorm)))
-      struct(dist.as("dist"), lit(i).as("idx"))
-    }
-
   /** df + `__ranks`: all centroid indices ordered by (distance, index). */
   private[llm] def withRanks(df: DataFrame, cs: Seq[Seq[Double]]): DataFrame =
-    if (df.sparkSession.catalog.functionExists("graft_centroid_ranks"))
-      df.withColumn("__ranks", expr(s"graft_centroid_ranks(embedding, ${centroidsSql(cs)})"))
-    else
-      cs.zipWithIndex.foldLeft(
-        df.withColumn("__vn", expr(normExprFor(df, "embedding")))) {
-        case (d, (c, i)) => d.withColumn(s"__c$i", typedLit(c))
-      }.withColumn("__ranks", array_sort(array(scoredStructs(cs): _*)).getField("idx"))
+    df.withColumn("__ranks", expr(s"graft_centroid_ranks(embedding, ${centroidsSql(cs)})"))
 
   /** The `n` deterministic seed vectors — the rows with the smallest
     * (md5 sampling hash, vec_id), exactly the ordering every trainer here
@@ -226,10 +185,9 @@ object VectorOps {
   /** DRIVER-SIDE replica of [[withRanks]]' rank-0 pick (nearest centroid by
     * cosine distance, index tie-break) for a single vector already widened
     * float->double. Bit-identical arithmetic by construction: the dot and
-    * norm are the same left-to-right double folds as [[scoredStructs]] /
-    * the native kernel (exact float->double widening, sequential
-    * accumulation), cNorm is the same Scala sum-of-squares, and zero norms
-    * score the max distance 2.0. Used to derive residual PQ seed vectors
+    * norm are the same left-to-right double folds as the native kernel
+    * (exact float->double widening, sequential accumulation), cNorm is the
+    * same Scala sum-of-squares, and zero norms score the max distance 2.0. Used to derive residual PQ seed vectors
     * without an extra Spark job ([[Pq.ivfPqTopK]] residual path); the spec
     * pins it against the executed assignment on real data. */
   private[llm] def nearestCentroid(v: Seq[Double], cs: Seq[Seq[Double]]): Int = {
@@ -329,16 +287,16 @@ object VectorOps {
         .select(
           col("vec_id").as("qid"), col("embedding").as("qe"),
           explode(slice(col("__ranks"), 1, nProbe)).as("qbucket"))
-        .withColumn("qn", expr(normExprFor(e, "qe"))))
+        .withColumn("qn", expr(normExpr("qe"))))
 
     val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("nid"))
     assigned
       .select(col("vec_id").as("nid"), col("embedding").as("ne"), col("bucket"))
-      .withColumn("nn", expr(normExprFor(e, "ne")))
+      .withColumn("nn", expr(normExpr("ne")))
       .join(q, col("bucket") === col("qbucket") && col("qid") =!= col("nid"))
       .withColumn("cos", // zero-norm guard: see bruteForceTopK
         when(col("qn") * col("nn") === 0, lit(-2.0))
-          .otherwise(expr(dotExprFor(e, "qe", "ne")) / (col("qn") * col("nn"))))
+          .otherwise(expr(dotExpr("qe", "ne")) / (col("qn") * col("nn"))))
       .withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= k)
       .select(col("qid").as("vec_id"), col("nid").as("neighbor_id"), col("rnk"), col("cos"))
@@ -364,7 +322,7 @@ object VectorOps {
     val q = broadcast(
       bucketed.filter(queryIds(col("vec_id")))
         .select(col("vec_id").as("qid"), col("embedding").as("qe"), col("bucket").as("qbucket"))
-        .withColumn("qn", expr(normExprFor(emb, "qe"))))
+        .withColumn("qn", expr(normExpr("qe"))))
     // hot buckets only (<= n/maxBucketSize of them by definition): broadcast
     // the census, keep ~1/ceil(cnt/cap) of each hot bucket's candidates.
     // COST: the census is a second full pass of the plane folds (bucket is
@@ -386,11 +344,11 @@ object VectorOps {
           .drop("bcnt")
       }
     cand
-      .withColumn("nn", expr(normExprFor(emb, "ne")))
+      .withColumn("nn", expr(normExpr("ne")))
       .join(q, col("bucket") === col("qbucket") && col("qid") =!= col("nid"))
       .withColumn("cos", // zero-norm guard: see bruteForceTopK
         when(col("qn") * col("nn") === 0, lit(-2.0))
-          .otherwise(expr(dotExprFor(emb, "qe", "ne")) / (col("qn") * col("nn"))))
+          .otherwise(expr(dotExpr("qe", "ne")) / (col("qn") * col("nn"))))
       .withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= k)
       .select(col("qid").as("vec_id"), col("nid").as("neighbor_id"), col("rnk"), col("cos"))

@@ -1,108 +1,12 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
-import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.types.{LongType, TimestampType}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 
-/** Catalyst optimizer rule recovering predicate pushdown through the
-  * nanosecond-timestamp workaround.
-  *
-  * `events.ts` is parquet TIMESTAMP(NANOS); Spark cannot scan it natively,
-  * so Tables.events reads the raw nanosecond long (legacy nanosAsLong) and
-  * converts with `timestamp_micros(ts div 1000)`. Comparisons against the
-  * CONVERTED column cannot reach the parquet scan — killing row-group
-  * pruning on exactly the column a time-series table prunes by.
-  *
-  * This rule finds conjunct comparisons of the shape
-  * `timestamp_micros(a div 1000) CMP timestampLiteral` and ADDS the implied
-  * raw-long bound on `a` (it never removes the original predicate, so
-  * correctness is independent of div rounding semantics):
-  *
-  *   d < V  => a <  V*1000          d <= V => a < (V+1)*1000
-  *   d > V  => a >  V*1000          d >= V => a > (V-1)*1000
-  *   d = V  => (V-1)*1000 < a < (V+1)*1000
-  *
-  * (valid for both floor and truncate division since trunc(x) is within
-  * (x-1, x+1)). The added bound is a plain long comparison on the scan
-  * column, which the parquet source pushes down. Registered through
-  * [[GraftExtensions]]: `spark.sql.extensions=graft.plans.GraftExtensions`.
-  *
-  * Scope note: this rule matches ONLY the nanos-era Long shape. The
-  * TIMESTAMP(MICROS) file generation reads as TIMESTAMP_NTZ and goes
-  * through `cast(ts as timestamp)` (Tables.events), where Spark's own
-  * optimizer pushes the bound through the cast natively under the UTC
-  * session zone — NanosPredicatePushdownSpec pins that path with a twin
-  * test, so row-group pruning is asserted for BOTH encodings without this
-  * rule growing an NTZ arm.
-  */
-object NanosPredicatePushdown extends Rule[LogicalPlan] with PredicateHelper {
-
-  private val Micros = 1000L
-  // overflow guard for (v±1)*1000 on the micros value
-  private def safe(v: Long): Boolean = math.abs(v) < Long.MaxValue / 2000L
-
-  /** timestamp_micros(a div 1000) over a raw long column. */
-  private object NsConverted {
-    def unapply(e: Expression): Option[Expression] = e match {
-      case MicrosToTimestamp(d: IntegralDivide) =>
-        (d.left, d.right) match {
-          case (a, Literal(Micros, LongType)) if a.dataType == LongType => Some(a)
-          case _ => None
-        }
-      case _ => None
-    }
-  }
-
-  private object TsLit {
-    def unapply(e: Expression): Option[Long] = e match {
-      case Literal(v: Long, TimestampType) => Some(v)
-      case _ => None
-    }
-  }
-
-  /** Implied raw-nano bound(s) for one conjunct, if it has the shape. */
-  private def impliedBounds(conjunct: Expression): Seq[Expression] = conjunct match {
-    case LessThan(NsConverted(a), TsLit(v)) if safe(v) =>
-      Seq(LessThan(a, Literal(v * 1000L, LongType)))
-    case GreaterThan(TsLit(v), NsConverted(a)) if safe(v) =>
-      Seq(LessThan(a, Literal(v * 1000L, LongType)))
-    case LessThanOrEqual(NsConverted(a), TsLit(v)) if safe(v) =>
-      Seq(LessThan(a, Literal((v + 1) * 1000L, LongType)))
-    case GreaterThanOrEqual(TsLit(v), NsConverted(a)) if safe(v) =>
-      Seq(LessThan(a, Literal((v + 1) * 1000L, LongType)))
-    case GreaterThan(NsConverted(a), TsLit(v)) if safe(v) =>
-      Seq(GreaterThan(a, Literal(v * 1000L, LongType)))
-    case LessThan(TsLit(v), NsConverted(a)) if safe(v) =>
-      Seq(GreaterThan(a, Literal(v * 1000L, LongType)))
-    case GreaterThanOrEqual(NsConverted(a), TsLit(v)) if safe(v) =>
-      Seq(GreaterThan(a, Literal((v - 1) * 1000L, LongType)))
-    case LessThanOrEqual(TsLit(v), NsConverted(a)) if safe(v) =>
-      Seq(GreaterThan(a, Literal((v - 1) * 1000L, LongType)))
-    case EqualTo(NsConverted(a), TsLit(v)) if safe(v) =>
-      Seq(GreaterThan(a, Literal((v - 1) * 1000L, LongType)),
-        LessThan(a, Literal((v + 1) * 1000L, LongType)))
-    case EqualTo(TsLit(v), NsConverted(a)) if safe(v) =>
-      Seq(GreaterThan(a, Literal((v - 1) * 1000L, LongType)),
-        LessThan(a, Literal((v + 1) * 1000L, LongType)))
-    case _ => Seq.empty
-  }
-
-  override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
-    case f @ Filter(condition, _) =>
-      val conjuncts = splitConjunctivePredicates(condition)
-      val bounds = conjuncts.flatMap(impliedBounds)
-        .filterNot(b => conjuncts.exists(_.semanticEquals(b)))
-        .distinct
-      if (bounds.isEmpty) f
-      else f.copy(condition = (conjuncts ++ bounds).reduce(And))
-  }
-}
-
-/** Session extension wiring: `--conf spark.sql.extensions=graft.plans.GraftExtensions`.
-  * Injects the pushdown rule and registers the native functions
-  * (`graft_simhash64`). */
+/** Session extension wiring: `--conf spark.sql.extensions=graft.plans.GraftExtensions`
+  * ([[graft.Sessions]] sets it on every session). Registers the native
+  * `graft_*` functions the operators call; a session without it fails
+  * those queries at analysis. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   /** Extract a literal INT argument (the kernel shape params: shingle size,
@@ -125,7 +29,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   }
 
   override def apply(extensions: SparkSessionExtensions): Unit = {
-    extensions.injectOptimizerRule(_ => NanosPredicatePushdown)
     extensions.injectFunction((
       new org.apache.spark.sql.catalyst.FunctionIdentifier("graft_shingles"),
       new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(

@@ -641,7 +641,7 @@ object LlmQueries {
             $"doc_id",
             size(split($"text", " ")).as("n_tokens"),
             length($"text").as("text_len"),
-            (TextOps.tokenCountInCol(docs, stop).cast("double")
+            (TextOps.tokenCountInCol(stop).cast("double")
               / size(split($"text", " "))).as("stop_ratio"),
             (length(regexp_replace($"text", "[^a-z]", "")).cast("double")
               / length($"text")).as("alpha_ratio"),
@@ -696,19 +696,9 @@ object LlmQueries {
       "q26_fingerprint",
       (s, dir) => {
         import s.implicits._
-        // native min-shingle-md5 kernel when registered (NULL for docs
-        // shorter than the shingle -> coalesce to the whole-doc hash,
-        // exactly the HOF form's when/otherwise); HOF otherwise
-        val winnow =
-          if (s.catalog.functionExists("graft_min_shingle_md5"))
-            coalesce(expr("graft_min_shingle_md5(text, 5)"), md5($"text"))
-          else
-            when(size(split($"text", " ")) >= 5,
-              array_min(expr(
-                """transform(sequence(0, greatest(size(split(text, ' ')) - 5, 0)),
-                  |  i -> md5(concat_ws(' ', split(text, ' ')[i], split(text, ' ')[i+1],
-                  |           split(text, ' ')[i+2], split(text, ' ')[i+3], split(text, ' ')[i+4])))""".stripMargin)))
-              .otherwise(md5($"text"))
+        // native min-shingle-md5 kernel: NULL for docs shorter than the
+        // shingle -> coalesce to the whole-doc hash
+        val winnow = coalesce(expr("graft_min_shingle_md5(text, 5)"), md5($"text"))
         Tables.documents(s, dir)
           .select(
             $"doc_id",
@@ -1481,7 +1471,7 @@ object LlmQueries {
         val docs = Tables.documentsRaw(s, dir)
         val scored = docs.select(
           $"doc_id",
-          ((TextOps.tokenCountInCol(docs, stop).cast("double")
+          ((TextOps.tokenCountInCol(stop).cast("double")
             / size(split($"text", " "))) * 0.3
             + least(lit(1.0), size(split($"text", " ")) / 100.0) * 0.7)
             .as("quality_score"))

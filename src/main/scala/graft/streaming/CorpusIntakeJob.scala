@@ -414,7 +414,7 @@ object CorpusIntakeJob {
     // Rejecting at the door keeps the "replica always collides" invariant
     // total over everything admitted.
     val b0 = withLabel.filter(
-      graft.llm.VectorOps.norm(withLabel, "embedding") =!= 0.0)
+      graft.llm.VectorOps.norm("embedding") =!= 0.0)
     val standingVecs = StandingState.readTable(spark, standingVecsPath)
     // RETRY SELF-REPAIR (see scaladoc): split replays off by id-presence,
     // complete the bucket rows of any caught in the crash window

@@ -120,7 +120,7 @@ object EventStreamJobs {
       watermark: String,
       k: Int = 3,
       numHashes: Int = 16): DataFrame = {
-    val sig = graft.llm.TextOps.minhashSigCol(docs, k, numHashes)
+    val sig = graft.llm.TextOps.minhashSigCol(k, numHashes)
     docs
       .withColumn("__sig",
         when(sig.isNotNull, concat_ws("#", sig))
@@ -199,7 +199,7 @@ object EventStreamJobs {
       }
     }
 
-    val sigCol = graft.llm.TextOps.minhashSigCol(docs, k, numHashes)
+    val sigCol = graft.llm.TextOps.minhashSigCol(k, numHashes)
     val nBands = numHashes / bandRows
     require(numHashes % bandRows == 0, "numHashes must be divisible by bandRows")
     val bandKeys = (0 until nBands).map { b =>
@@ -295,7 +295,7 @@ object EventStreamJobs {
       }
     }
 
-    val sigCol = graft.llm.TextOps.minhashSigCol(docs, k, numHashes)
+    val sigCol = graft.llm.TextOps.minhashSigCol(k, numHashes)
     val nBands = numHashes / bandRows
     val bandKeys = (0 until nBands).map { b =>
       concat_ws("#", (0 until bandRows).map(r => col("__sig")(b * bandRows + r)): _*)
@@ -329,10 +329,9 @@ object EventStreamJobs {
       vecs: DataFrame,
       tsCol: String,
       watermark: String,
-      codebooks: Seq[Seq[Seq[Double]]],
-      dim: Int = 64): DataFrame =
+      codebooks: Seq[Seq[Seq[Double]]]): DataFrame =
     vecs
-      .withColumn("__sig", graft.llm.Pq.codeSignature(vecs, codebooks, dim))
+      .withColumn("__sig", graft.llm.Pq.codeSignature(codebooks))
       .withWatermark(tsCol, watermark)
       .dropDuplicatesWithinWatermark("__sig")
       .drop("__sig")

@@ -1,5 +1,8 @@
 package graft.llm
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.RebalancePartitions
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -45,5 +48,18 @@ class FramesSpec extends SparkSpec {
       .select("doc_id").as[Long].collect().sorted.toSeq
     assert(a === b)
     assert(a.nonEmpty)
+  }
+
+  test("sizedWrite: rebalance under AQE; with AQE off the hint plans no shuffle") {
+    val df = spark.read.parquet(s"$dir/documents.parquet").select("doc_id", "source")
+    def shuffles(d: DataFrame): Int =
+      d.queryExecution.executedPlan.collect { case e: ShuffleExchangeLike => e }.size
+    assert(Frames.sizedWrite(df).queryExecution.analyzed
+      .collectFirst { case r: RebalancePartitions => r }.nonEmpty, "AQE on: hint kept")
+    val key = "spark.sql.adaptive.enabled"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try assert(shuffles(Frames.sizedWrite(df)) === shuffles(df))
+    finally spark.conf.set(key, prev)
   }
 }

@@ -39,11 +39,11 @@ class LlmOpsSpec extends SparkSpec {
   test("graft_isect_size kernel == size(array_intersect) on real shingle sets") {
     // every cross pair of 40 real docs' shingle arrays (includes empty
     // sets and heavy-overlap pairs); the kernel must be bit-identical to
-    // the built-ins fallback the extension-less path uses
+    // the built-ins form
     assert(spark.catalog.functionExists("graft_isect_size"), "kernel not registered")
     val d = Tables.documentsRaw(spark, "/root/testdata/sf0.001")
       .filter(col("doc_id") < 40)
-    val sets = d.select(col("doc_id"), TextOps.shingleCol(d, 3).as("s"))
+    val sets = d.select(col("doc_id"), TextOps.shingleCol(3).as("s"))
       .localCheckpoint(false)
     val diverged = sets.select(col("doc_id").as("ida"), col("s").as("sa"))
       .crossJoin(sets.select(col("doc_id").as("idb"), col("s").as("sb")))
@@ -70,8 +70,8 @@ class LlmOpsSpec extends SparkSpec {
     val culled = unsized -- sizedPairs
     if (culled.nonEmpty) {
       val cullDF = culled.toSeq.toDF("doc_a", "doc_b")
-      val sets = d.select(col("doc_id"), TextOps.shingleCol(d, 3).as("s"),
-        size(TextOps.shingleCol(d, 3)).cast("long").as("n"))
+      val sets = d.select(col("doc_id"), TextOps.shingleCol(3).as("s"),
+        size(TextOps.shingleCol(3)).cast("long").as("n"))
       val bad = cullDF
         .join(sets.select(col("doc_id").as("doc_a"), col("s").as("sa"), col("n").as("na")), Seq("doc_a"))
         .join(sets.select(col("doc_id").as("doc_b"), col("s").as("sb"), col("n").as("nb")), Seq("doc_b"))
@@ -194,7 +194,7 @@ class LlmOpsSpec extends SparkSpec {
   test("native text kernels are bit-identical to the HOF formulations") {
     // shingles: native vs array_distinct(transform(...)), incl. a short doc
     val edge = docs.union(Seq((7L, "a b", "s1"), (8L, "", "s2")).toDF("doc_id", "text", "source"))
-    val nat = edge.select($"doc_id", TextOps.shingleCol(edge, 3).as("s"))
+    val nat = edge.select($"doc_id", TextOps.shingleCol(3).as("s"))
       .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
     val hof = edge.select($"doc_id", TextOps.hofShingleCol(3).as("s"))
       .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
@@ -223,7 +223,7 @@ class LlmOpsSpec extends SparkSpec {
 
     // token-set counting: native hash-set kernel vs IN-filter HOF
     val stop = Seq("the", "over", "a")
-    val cntN = edge.select($"doc_id", TextOps.tokenCountInCol(edge, stop).as("n"))
+    val cntN = edge.select($"doc_id", TextOps.tokenCountInCol(stop).as("n"))
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     val cntH = edge.select($"doc_id",
         expr(s"size(filter(split(text, ' '), x -> x IN (${stop.map(w => s"'$w'").mkString(", ")})))").as("n"))
@@ -1707,7 +1707,7 @@ class LlmOpsSpec extends SparkSpec {
     assert(again === kept)
     // agrees with the streaming twin's key: survivors have distinct cells
     val cbs = Pq.trainCodebooks(corpus, 8, 16)
-    val sigs = out.select(Pq.codeSignature(out, cbs).as("s")).as[String].collect()
+    val sigs = out.select(Pq.codeSignature(cbs).as("s")).as[String].collect()
     assert(sigs.toSet.size === sigs.length, "two survivors share a PQ cell")
   }
 
@@ -1915,7 +1915,7 @@ class LlmOpsSpec extends SparkSpec {
       (6L, "  spaced   out\ttabs  "),
     ).toDF("doc_id", "text")
     val out = docs
-      .withColumn("norm", TextOps.normalizeText(docs, col("text")))
+      .withColumn("norm", TextOps.normalizeText(col("text")))
       .select("doc_id", "norm").as[(Long, String)].collect().toMap
     assert(out(1L) === "hello world")
     assert(out(2L) === "hello world")
@@ -2135,12 +2135,12 @@ class LlmOpsSpec extends SparkSpec {
     val assigned = VectorOps.withRanks(e, centroids)
       .withColumn("bucket", col("__ranks")(0))
       .select(col("vec_id"), col("embedding"), col("bucket"))
-    val allPairs = Dedup.semDedupCandidates(e, assigned, maxClusterSize = n).count()
+    val allPairs = Dedup.semDedupCandidates(assigned, maxClusterSize = n).count()
     assert(allPairs === n.toLong * (n - 1) / 2)
     // cap 50 -> 4 hash sub-cells: pairs collapse to within-cell only.
     // Hash cell sizes are uneven but the quadratic blowup is gone: even a
     // worst-realistic imbalance stays far under half of all-pairs.
-    val capped = Dedup.semDedupCandidates(e, assigned, maxClusterSize = 50).count()
+    val capped = Dedup.semDedupCandidates(assigned, maxClusterSize = 50).count()
     assert(capped < allPairs / 2, s"capped=$capped not bounded vs $allPairs")
     // dedup semantics under the cap: min id still survives; at most one
     // survivor per sub-cell (identical vectors all verify at cos=1)

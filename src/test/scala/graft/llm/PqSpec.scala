@@ -43,7 +43,7 @@ class PqSpec extends SparkSpec {
       Pq.nearestCodeHof(s"slice(embedding, ${j * 8 + 1}, 8)", cb)
     }: _*)
     val diverged = emb
-      .withColumn("kc", Pq.codesCol(emb, cbs, 8))
+      .withColumn("kc", Pq.codesCol(cbs))
       .withColumn("hc", hof)
       .filter(col("kc") =!= col("hc"))
     assert(diverged.isEmpty, "kernel and HOF codes diverged")
@@ -90,7 +90,7 @@ class PqSpec extends SparkSpec {
       (2L, None: Option[Seq[Float]]),
     ).toDF("vec_id", "embedding")
     val both = df
-      .withColumn("kc", Pq.codesCol(df, cbs, 2))
+      .withColumn("kc", Pq.codesCol(cbs))
       .withColumn("hc", Pq.codesColHof(cbs, 2))
       .orderBy("vec_id")
       .select("kc", "hc").collect()

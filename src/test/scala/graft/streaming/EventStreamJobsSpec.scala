@@ -337,7 +337,7 @@ class EventStreamJobsSpec extends SparkSpec {
     val v0tweak = v0.updated(0, v0.head + 1e-4f)
     val sigs = emb.filter(org.apache.spark.sql.functions.col("vec_id").isin(0L, 1L))
       .select(org.apache.spark.sql.functions.col("vec_id"),
-        graft.llm.Pq.codeSignature(emb, cbs).as("sig"))
+        graft.llm.Pq.codeSignature(cbs).as("sig"))
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assume(sigs(0L) != sigs(1L), "corpus vectors 0/1 quantized identically — pick others")
     val in = MemoryStream[StreamVec]
@@ -358,7 +358,7 @@ class EventStreamJobsSpec extends SparkSpec {
         .collect().map(_.getLong(0)).toSet
       // 103 admitted only if the perturbation crossed a cell wall — check
       val tweakSig = Seq((104L, v0tweak)).toDF("vec_id", "embedding")
-        .select(graft.llm.Pq.codeSignature(emb, cbs)).collect()(0).getString(0)
+        .select(graft.llm.Pq.codeSignature(cbs)).collect()(0).getString(0)
       if (tweakSig == sigs(0L)) assert(ids === Set(100L, 101L))
       else assert(ids === Set(100L, 101L, 103L))
     } finally q.stop()
