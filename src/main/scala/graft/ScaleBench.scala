@@ -319,7 +319,7 @@ object ScaleBench {
     // 8 of the 64 buckets (+1 for the fresh chain): rewrite IO must
     // track the touched components, never the 1M-vertex table.
     val partDir = java.nio.file.Files.createTempDirectory("scale_clusters_part_").toString
-    StandingState.writeClustersPartitioned(ccLabels, partDir, nParts = 64)
+    StandingState.writeClusters(ccLabels, partDir, nParts = 64)
     def partFiles(): Map[String, Set[(String, Long)]] = {
       import scala.jdk.CollectionConverters._
       java.nio.file.Files.walk(java.nio.file.Paths.get(partDir, "clusters"))
@@ -942,13 +942,11 @@ object ScaleBench {
       println(s"""{"op":"quality_lr","docs":$nDocs,"steps":3,"train_sec":${f"$tTrain%.2f"},"score_sec":${f"$tScore%.2f"},"scored_all":${nScored == nDocs}}""")
     }
 
-    // KEYED retention vs legacy rebuild at replicated scale: expire ~1%
-    // of a persisted corpus under both artifact regimes. The keyed pass
-    // is anti-join subtraction (columnar IO only, snapshot-delta, lease
-    // held just for delta+swap windows); the legacy pass re-featurizes
-    // every retained doc under the lease. A concurrent probe thread
-    // repeatedly acquires the state lease and records its worst wait —
-    // the ingest-visible blocking the keyed path is built to shrink.
+    // KEYED retention at replicated scale: expire ~1% of a persisted
+    // corpus. The pass is anti-join subtraction (columnar IO only,
+    // snapshot-delta, lease held just for delta+swap windows). A
+    // concurrent probe thread repeatedly acquires the state lease and
+    // records its worst wait — the ingest-visible blocking of the pass.
     locally {
       def leaseProbe(statePath: String)(body: => Unit): Double = {
         val worst = new java.util.concurrent.atomic.AtomicLong(0L)
@@ -969,53 +967,31 @@ object ScaleBench {
         worst.get() / 1e9
       }
       // ~200-token docs (the testdata's ~20-token rows x10): real corpora
-      // run hundreds of tokens per doc, and the regimes' cost split is
-      // token-shaped — the rebuild re-shingles/minhashes every retained
-      // token (CPU ~25x pricier per byte than columnar IO) where the
-      // keyed path pays only the parquet rewrite of the same bytes
+      // run hundreds of tokens per doc
       val expireDocs = docs
         .select(col("doc_id"),
           expr("rtrim(repeat(text || ' ', 10))").as("text"))
         .localCheckpoint(true)
-      def setup(tag: String, keyed: Boolean): (String, String) = {
-        val tmp = java.nio.file.Files.createTempDirectory(s"expire_$tag")
-        val corpusDir = s"$tmp/corpus"
-        val statePath = s"$tmp/state"
-        expireDocs.write.mode("overwrite").parquet(corpusDir)
-        StandingState.write(
-          spark.read.parquet(corpusDir), statePath, docKeyed = keyed)
-        (corpusDir, statePath)
-      }
+      val tmp = java.nio.file.Files.createTempDirectory("expire_keyed")
+      val corpusK = s"$tmp/corpus"
+      val stateK = s"$tmp/state"
+      expireDocs.write.mode("overwrite").parquet(corpusK)
+      StandingState.write(spark.read.parquet(corpusK), stateK)
       val pred = col("doc_id") % 97 === 0 // ~1% of the corpus
-      val (corpusK, stateK) = setup("keyed", keyed = true)
+      val corpus0 = spark.read.parquet(corpusK)
+      val nTotal = corpus0.count()
+      val nExpected = corpus0
+        .join(corpus0.filter(pred).select("doc_id"), Seq("doc_id"), "left_semi")
+        .count()
       var nK = 0L
       var tKeyed = 0.0
       val blockedK = leaseProbe(stateK) {
         val (n, t) = timed(StandingState.expire(spark, stateK, corpusK, pred))
         nK = n; tKeyed = t
       }
-      val (corpusL, stateL) = setup("legacy", keyed = false)
-      var nL = 0L
-      var tRebuild = 0.0
-      val blockedL = leaseProbe(stateL) {
-        val (n, t) = timed(StandingState.expire(spark, stateL, corpusL, pred))
-        nL = n; tRebuild = t
-      }
-      val sameCorpus =
-        spark.read.parquet(corpusK).count() == spark.read.parquet(corpusL).count()
-      // the CPU term the keyed regime deletes, measured directly: the
-      // full artifact re-featurize (digest + shingle + minhash + band)
-      // of the retained corpus, no writes. On local[32] the native
-      // kernels make this small at probe scale — wall-clock there is
-      // orchestration-bound either way, and the terms that matter at
-      // 100 TB are this featurize term (CPU scaling with corpus TOKENS,
-      // vs the keyed path's columnar IO) and the lease window below.
-      val (_, tFeaturize) = timed {
-        val st = StandingState.build(
-          spark.read.parquet(corpusK), docKeyed = false)
-        st.digests.count(); st.bands.count()
-      }
-      println(s"""{"op":"keyed_expire","corpus":$nDocs,"expired":$nK,"keyed_sec":${f"$tKeyed%.2f"},"rebuild_sec":${f"$tRebuild%.2f"},"featurize_sec":${f"$tFeaturize%.2f"},"lease_blocked_keyed_sec":${f"$blockedK%.2f"},"lease_blocked_rebuild_sec":${f"$blockedL%.2f"},"lease_blocked_shrunk":${blockedK < blockedL},"results_equal":${nK == nL && sameCorpus}}""")
+      val resultsEqual = nK == nExpected &&
+        spark.read.parquet(corpusK).count() == nTotal - nExpected
+      println(s"""{"op":"keyed_expire","corpus":$nDocs,"expired":$nK,"keyed_sec":${f"$tKeyed%.2f"},"lease_blocked_keyed_sec":${f"$blockedK%.2f"},"results_equal":$resultsEqual}""")
     }
 
     // Per-key rate maps at DOMAIN cardinality (~100k keys): above
@@ -1043,53 +1019,11 @@ object ScaleBench {
     }
 
     // Post-expire cluster-label hygiene at label scale: 100k labels in
-    // 50k two-member clusters over a keyed state; ~1% of docs expire
-    // with relabelClusters = true folded into the pass. Every expired
-    // doc's partner becomes a singleton and must DROP with it, so the
-    // fixed points are sharp: zero ghost rows, labels_after == labels -
-    // 2 * expired, every remaining cluster_size == its actual member
-    // count and >= 2, and the idempotent re-scan is a cheap no-op.
-    locally {
-      val tmp = java.nio.file.Files.createTempDirectory("relabel_probe")
-      val corpusDir = s"$tmp/corpus"
-      val statePath = s"$tmp/state"
-      val nLab = 100000L
-      val corpus = spark.range(nLab).select(
-        col("id").as("doc_id"),
-        concat_ws(" ", lit("the tale of and to in"),
-          concat(lit("w"), col("id")), concat(lit("x"), col("id")),
-          concat(lit("y"), col("id"))).as("text"))
-      corpus.write.mode("overwrite").parquet(corpusDir)
-      StandingState.write(spark.read.parquet(corpusDir), statePath)
-      StandingState.writeClusters(
-        spark.range(nLab).select(
-          col("id").as("doc_id"),
-          (col("id") - pmod(col("id"), lit(2L))).as("cluster_id"),
-          lit(2).as("cluster_size")),
-        statePath)
-      val (nExp, tExpire) = timed {
-        StandingState.expire(spark, statePath, corpusDir,
-          col("doc_id") % 97 === 0, relabelClusters = true)
-      }
-      val lab = spark.read.parquet(s"$statePath/clusters")
-        .localCheckpoint(true)
-      val ghosts = lab.join(
-        spark.read.parquet(corpusDir).select("doc_id"),
-        Seq("doc_id"), "left_anti").count()
-      val sizesOk = lab.groupBy("cluster_id", "cluster_size")
-        .agg(count(lit(1)).as("m"))
-        .filter(col("m") =!= col("cluster_size") || col("cluster_size") < 2)
-        .count() == 0L
-      val nAfter = lab.count()
-      val (noop, tRescan) = timed {
-        StandingState.relabelClusters(spark, statePath, corpusDir)
-      }
-      println(s"""{"op":"relabel_clusters","labels":$nLab,"expired":$nExp,"expire_relabel_sec":${f"$tExpire%.2f"},"rescan_sec":${f"$tRescan%.2f"},"ghosts_after":$ghosts,"labels_after":$nAfter,"labels_expected":${nLab - 2 * nExp},"sizes_consistent":$sizesOk,"rescan_noop":${noop == 0L}}""")
-    }
-
-    // relabelClusters on the BUCKETED layout: same 100k-label / 50k-
-    // cluster state bucketed under nParts = 64 — cluster_id is the even
-    // member, so only the 32 EVEN cparts hold data — with the expiry
+    // 50k two-member clusters over a keyed state, bucketed under
+    // nParts = 64 — cluster_id is the even member, so only the 32 EVEN
+    // cparts hold data. Every expired doc's partner becomes a singleton
+    // and must DROP with it, so labels_after == labels - 2 * expired.
+    // The expiry is
     // CONCENTRATED on clusters whose cpart is in {0, 2}: the predicate
     // `even && doc_id % 64 < 4` ghosts ~3,125 clusters all living in 2
     // of the 32 populated partitions. The probe pins the touched-
@@ -1111,7 +1045,7 @@ object ScaleBench {
           concat(lit("d"), col("id"))).as("text"))
       corpus.write.mode("overwrite").parquet(corpusDir)
       StandingState.write(spark.read.parquet(corpusDir), statePath)
-      StandingState.writeClustersPartitioned(
+      StandingState.writeClusters(
         spark.range(nLab).select(
           col("id").as("doc_id"),
           (col("id") - pmod(col("id"), lit(2L))).as("cluster_id"),

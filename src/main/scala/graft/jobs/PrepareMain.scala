@@ -32,14 +32,13 @@ import graft.llm.{CorpusPipeline, StandingState}
   *                                     # fallback as above)
   *     [--standingVecs=/data/vecs.parquet]   # standing VECTOR table for --expireEmbeddings
   *     [--standingMedia=/data/media.parquet] # standing MEDIA table for --expireMedia
-  *     [--migrateToKeyed]              # one-time legacy -> doc-keyed state migration
   *     [--tau=0.8] [--minWords=20] [--maxWords=100000]
   *     [--normalize] [--packBudget=2048]
   * }}}
   *
   * MAINTENANCE-ONLY invocation (no `--in`/`--out`): `--state=...` with
-  * `--breakStateLease`, `--compactState`, `--expireState` and/or
-  * `--migrateToKeyed` runs the state maintenance alone.
+  * `--breakStateLease`, `--compactState` and/or an expire flag runs the
+  * state maintenance alone.
   * `--breakStateLease` removes a CRASHED mutator's lease file
   * ([[StandingState.breakLease]]) — only safe after confirming the
   * recorded holder process is dead; it runs before anything else in the
@@ -52,13 +51,10 @@ import graft.llm.{CorpusPipeline, StandingState}
   * [[StandingState.expire]] drops the matching corpus rows AND their
   * digest/band/span artifacts so expired content no longer blocks
   * re-admission; NULL-predicate rows are retained. This is the daily
-  * TTL ops loop as a flag instead of Scala. `--migrateToKeyed`
-  * ([[StandingState.migrateToKeyed]]) is the one-time legacy
-  * payload-free -> doc-keyed conversion that makes every later expire
-  * an O(expired) anti-join; it no-ops on an already-keyed state. Both
-  * run BEFORE a prepare pass when combined with one (expire old rows
-  * first, then ingest the new batch) and need `--standing` (the corpus
-  * table retention rewrites). `--expireEmbeddings`/`--expireMedia` are
+  * TTL ops loop as a flag instead of Scala. It runs BEFORE a prepare
+  * pass when combined with one (expire old rows first, then ingest the
+  * new batch) and needs `--standing` (the corpus table retention
+  * rewrites). `--expireEmbeddings`/`--expireMedia` are
   * the vector/media twins ([[StandingState.expireEmbeddings]] /
   * [[StandingState.expireMedia]]) — MAINTENANCE-ONLY (the text prepare
   * pipeline has no business mid-run with those states). The three expire
@@ -102,7 +98,6 @@ object PrepareMain {
       expireState: Option[String] = None,
       expireEmbeddings: Option[String] = None,
       expireMedia: Option[String] = None,
-      migrateToKeyed: Boolean = false,
       tau: Double = 0.8,
       minWords: Int = 20,
       maxWords: Int = 100000,
@@ -127,7 +122,6 @@ object PrepareMain {
         case Array("--expireState", v) => a.copy(expireState = Some(v))
         case Array("--expireEmbeddings", v) => a.copy(expireEmbeddings = Some(v))
         case Array("--expireMedia", v) => a.copy(expireMedia = Some(v))
-        case Array("--migrateToKeyed") => a.copy(migrateToKeyed = true)
         case Array("--tau", v) => a.copy(tau = v.toDouble)
         case Array("--minWords", v) => a.copy(minWords = v.toInt)
         case Array("--maxWords", v) => a.copy(maxWords = v.toInt)
@@ -140,11 +134,11 @@ object PrepareMain {
     val maintenanceOnly =
       a.in.isEmpty && a.out.isEmpty && a.state.nonEmpty &&
         (a.breakStateLease || a.compactState || a.expireState.nonEmpty ||
-          a.expireEmbeddings.nonEmpty || a.expireMedia.nonEmpty ||
-          a.migrateToKeyed) && !a.appendState
+          a.expireEmbeddings.nonEmpty || a.expireMedia.nonEmpty) &&
+        !a.appendState
     require(maintenanceOnly || (a.in.nonEmpty && a.out.nonEmpty),
       "--in and --out are required (except a maintenance-only --state + " +
-        "--breakStateLease/--compactState/--expireState/--migrateToKeyed invocation)")
+        "--breakStateLease/--compactState/--expire{State,Embeddings,Media} invocation)")
     require(maintenanceOnly || a.state.isEmpty || a.standing.nonEmpty,
       "--state needs --standing (the corpus table the state was built over)")
     require(!a.appendState || a.state.nonEmpty, "--appendState needs --state")
@@ -168,8 +162,6 @@ object PrepareMain {
       "--expireMedia is maintenance-only and needs --state and " +
         "--standingMedia (the standing MEDIA table; --standing works only " +
         "when this is the invocation's sole expire flag)")
-    require(!a.migrateToKeyed || (a.state.nonEmpty && a.standing.nonEmpty),
-      "--migrateToKeyed needs --state and --standing (artifacts rebuild from the corpus)")
     // the reverse direction of the combined-TTL flags: a standing-table
     // flag without its expire predicate would silently skip that
     // family's retention pass (the --retentionEvery silent-strand class)
@@ -213,16 +205,12 @@ object PrepareMain {
     // prepare's append, the retention pass, or the compact) re-takes the
     // lease normally
     if (a.breakStateLease) StandingState.breakLease(spark, a.state.get)
-    // migration before retention (a legacy state's first expire should
-    // already run the keyed anti-join path), retention before the
-    // prepare pass (the daily ops order: expire old rows first so the
-    // incremental dedup does not hold the new batch against
-    // already-expired content)
-    if (a.migrateToKeyed)
-      StandingState.migrateToKeyed(spark, a.state.get, a.standing.get)
-    // sequential, text -> embeddings -> media: the three twins mutate
-    // DISJOINT tables, each under its own lease cycle, so one JVM (and
-    // one flag set) covers the whole daily TTL loop
+    // retention before the prepare pass (the daily ops order: expire old
+    // rows first so the incremental dedup does not hold the new batch
+    // against already-expired content); sequential, text -> embeddings
+    // -> media: the three twins mutate DISJOINT tables, each under its
+    // own lease cycle, so one JVM (and one flag set) covers the whole
+    // daily TTL loop
     val nExpired = a.expireState.fold(0L)(p =>
       StandingState.expire(spark, a.state.get, a.standing.get, expr(p))) +
       a.expireEmbeddings.fold(0L)(p =>

@@ -641,8 +641,8 @@ object Dedup {
     duplicateClustersIncrementalParts(standing, newPairs, maxRounds)._1
 
   /** [[duplicateClustersIncremental]] plus the two TOUCHED-set frames the
-    * partitioned state rewrite ([[StandingState.updateClusters]] on a
-    * partitioned table) needs to bound its IO: `rootMap` = (old_root,
+    * bucketed state rewrite ([[StandingState.updateClusters]]) needs to
+    * bound its IO: `rootMap` = (old_root,
     * new_root) for every standing root whose component merged (identity
     * rows included — a root that keeps its id but gains members still has
     * its size rewritten), and `touchedRows` = the full updated label rows

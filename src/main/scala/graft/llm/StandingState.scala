@@ -14,9 +14,9 @@ import org.apache.spark.sql.functions._
   * all O(standing), i.e. O(100 TB), for a batch-sized result. This state
   * persists exactly those standing-side derivations as parquet tables:
   *
-  *  - `digests/`   — distinct content digests ([[Dedup.digestCol]] of the
+  *  - `digests/`   — (doc_id, digest) rows ([[Dedup.digestCol]] of the
   *                   scrubbed text), the [[Dedup.exactIncrementalVsDigests]]
-  *                   side: 16 bytes per standing doc;
+  *                   side: 16 + 8 bytes per standing doc;
   *  - `bands/`     — LSH band rows (doc_id, band, sig, n) over the
   *                   (optionally normalized) text, the
   *                   [[Dedup.dedupNearLshIncrementalVsBands]] side;
@@ -62,17 +62,12 @@ final case class StandingState(
 
 object StandingState {
 
-  /** `docKeyed` is NOT persisted in the meta table — it is derived at
-    * [[load]] from the digests table's own schema (presence of a
-    * `doc_id` column), so the artifact regime is self-describing and a
-    * meta row can never disagree with the rows it describes. Legacy
-    * (payload-free) states read back `docKeyed = false` untouched. */
+  /** The fingerprint regime a state was written under (the `meta/` row). */
   final case class Meta(
       shingleSize: Int,
       numHashes: Int,
       bandRows: Int,
-      normalizedFingerprints: Boolean,
-      docKeyed: Boolean = false)
+      normalizedFingerprints: Boolean)
 
   /** The regime-compatibility check behind [[StandingState.requireCompatible]],
     * meta-only so the append paths can run it without a loaded state. */
@@ -91,17 +86,14 @@ object StandingState {
     * [[CorpusPipeline.prepareIncremental]]'s legs exactly. */
   private def artifacts(
       corpus: DataFrame, cfg: CorpusPipeline.Config,
-      numHashes: Int, bandRows: Int, docKeyed: Boolean): (DataFrame, DataFrame) = {
-    // DOC-KEYED digests carry the contributing doc_id (one row per doc,
-    // +8 bytes over the payload-free set) — the schema that makes
-    // retention SUBTRACTION sound: an expired doc's row drops by
-    // anti-join while a retained doc sharing the digest keeps its own
-    // row, so the digest stays standing. Consumers are unchanged either
-    // way ([[Dedup.exactIncrementalVsDigests]] projects
+      numHashes: Int, bandRows: Int): (DataFrame, DataFrame) = {
+    // DOC-KEYED digests carry the contributing doc_id (one row per doc) —
+    // the schema that makes retention SUBTRACTION sound: an expired doc's
+    // row drops by anti-join while a retained doc sharing the digest
+    // keeps its own row, so the digest stays standing
+    // ([[Dedup.exactIncrementalVsDigests]] projects
     // `select("digest").distinct()`).
-    val digests =
-      if (docKeyed) corpus.select(col("doc_id"), Dedup.digestCol("text").as("digest"))
-      else corpus.select(Dedup.digestCol("text").as("digest")).distinct()
+    val digests = corpus.select(col("doc_id"), Dedup.digestCol("text").as("digest"))
     val fpCorpus =
       if (cfg.normalizeFingerprints) TextOps.normalized(corpus) else corpus
     val bands = TextOps.bandRowsSizedDF(
@@ -113,19 +105,15 @@ object StandingState {
   /** IN-SESSION state for an already-prepared standing corpus — no IO;
     * [[write]] is this plus persistence. `embeddings` (covering at least
     * the standing doc_ids) trains and freezes the SemDeDup centroids.
-    * `docKeyed` (default TRUE — the regime for new states) keys the
-    * digest and span-hash rows by contributing doc_id, which is what
-    * makes [[expire]] an O(expired) anti-join pass instead of a
-    * lease-held full-corpus re-featurize; pass false only to build a
-    * legacy payload-free state (the rebuild-on-expire regime). */
+    * The digest and span-hash rows are keyed by contributing doc_id,
+    * which is what makes [[expire]] an O(expired) anti-join pass. */
   def build(
       standing: DataFrame,
       cfg: CorpusPipeline.Config = CorpusPipeline.Config(),
       embeddings: Option[DataFrame] = None,
       numHashes: Int = 16,
-      bandRows: Int = 2,
-      docKeyed: Boolean = true): StandingState = {
-    val (digests, bands) = artifacts(standing, cfg, numHashes, bandRows, docKeyed)
+      bandRows: Int = 2): StandingState = {
+    val (digests, bands) = artifacts(standing, cfg, numHashes, bandRows)
     val cs = embeddings.map { ef =>
       val standVecs = ef.join(standing.select("doc_id"), Seq("doc_id"), "left_semi")
         .select(col("doc_id").as("vec_id"), col("embedding"))
@@ -133,12 +121,10 @@ object StandingState {
       Dedup.semDedupCentroids(standVecs, cfg.semDedupNCentroids)
     }
     val spans = cfg.removeDupSpans.map { case (w, _) =>
-      (if (docKeyed) TextOps.spanWindowHashesKeyed(standing, w)
-       else TextOps.spanWindowHashes(standing, w), w)
+      (TextOps.spanWindowHashesKeyed(standing, w), w)
     }
     StandingState(digests, bands, cs,
-      Meta(cfg.shingleSize, numHashes, bandRows, cfg.normalizeFingerprints,
-        docKeyed),
+      Meta(cfg.shingleSize, numHashes, bandRows, cfg.normalizeFingerprints),
       spans)
   }
 
@@ -152,19 +138,22 @@ object StandingState {
       cfg: CorpusPipeline.Config = CorpusPipeline.Config(),
       embeddings: Option[DataFrame] = None,
       numHashes: Int = 16,
-      bandRows: Int = 2,
-      docKeyed: Boolean = true): StandingState = {
+      bandRows: Int = 2): StandingState = {
     val spark = standing.sparkSession
     import spark.implicits._
     // one materialization of the scrubbed standing text feeds both legs
     val st = Frames.barrier(standing)
-    val state = build(st, cfg, embeddings, numHashes, bandRows, docKeyed)
+    val state = build(st, cfg, embeddings, numHashes, bandRows)
+    // an overwrite must not leave the OLD meta row valid while the tables
+    // below are replaced: a failure mid-group would otherwise load as a
+    // complete state over a mix of old and new tables. Meta goes first
+    // and commits strictly LAST, so a state dir without meta is exactly
+    // an incomplete write, and [[load]] refuses it.
+    deleteDir(spark, s"$path/meta")
     // the four data tables are independent projections of the same
     // barriered corpus — write them CONCURRENTLY (guide §2.6; the lazy
     // checkpoint races are benign: whichever job computes a partition
-    // first caches it for the others). The meta row commits strictly
-    // LAST, preserving the failure shape a partial write leaves today
-    // (a state dir without meta never loads as complete).
+    // first caches it for the others).
     inParallel(Seq(
       () => Frames.sizedWrite(state.digests)
         .write.mode("overwrite").parquet(s"$path/digests"),
@@ -200,16 +189,18 @@ object StandingState {
     * (parquet part names carry a per-write UUID), so any rewrite —
     * however fast — changes the key and re-reads; no mtime-granularity
     * aliasing, and the per-batch cost drops to one driver-side
-    * directory listing per regime table. */
+    * directory listing per regime table.
+    *
+    * A state whose digest or span-hash rows carry no `doc_id` (the
+    * payload-free layout of older code) fails here, loudly: retention
+    * cannot subtract from it. */
   def load(spark: SparkSession, path: String): StandingState = {
     Seq("digests", "bands").foreach(heal(spark, path, _))
-    val digests = readTable(spark, s"$path/digests")
+    val digests = requireDocKeyed(readTable(spark, s"$path/digests"), path, "digests")
     val metaRow = cachedRegimeRow(spark, s"$path/meta")
     val meta = Meta(metaRow.getAs[Int]("shingle_size"),
       metaRow.getAs[Int]("num_hashes"),
-      metaRow.getAs[Int]("band_rows"), metaRow.getAs[Boolean]("normalized"),
-      // the regime is self-describing: keyed iff the rows carry doc_id
-      docKeyed = digests.columns.contains("doc_id"))
+      metaRow.getAs[Int]("band_rows"), metaRow.getAs[Boolean]("normalized"))
     val cs =
       if (!tableExists(spark, s"$path/centroids")) None
       else Some(spark.read.parquet(s"$path/centroids")
@@ -220,12 +211,27 @@ object StandingState {
       else {
         heal(spark, path, "span_hashes")
         val w = cachedRegimeRow(spark, s"$path/span_meta").getAs[Int]("w")
-        Some((readTable(spark, s"$path/span_hashes"), w))
+        Some((requireDocKeyed(readTable(spark, s"$path/span_hashes"),
+          path, "span_hashes"), w))
       }
     StandingState(
       digests,
       readTable(spark, s"$path/bands"),
       cs, meta, spans)
+  }
+
+  /** `table` as read, or a loud failure when its rows carry no `doc_id`:
+    * payload-free digest and span-hash rows were written by older code,
+    * and no anti-join can subtract an expired doc from them. Checks the
+    * schema only (no Spark job). */
+  private def requireDocKeyed(
+      table: DataFrame, statePath: String, name: String): DataFrame = {
+    if (!table.columns.contains("doc_id"))
+      throw new IllegalStateException(
+        s"StandingState: $name under $statePath has no doc_id column — a " +
+          "payload-free state written by older code; rewrite it via " +
+          "StandingState.write")
+    table
   }
 
   /** Single-row regime tables (meta, span_meta), cached by the table
@@ -253,8 +259,7 @@ object StandingState {
     * hiccup falls back to the plain inference read, preserving today's
     * behavior including its error shapes. NO schema caching across
     * calls: the footer is re-read per call (~ms on any FS), so a
-    * regime-changing rewrite (e.g. digest-table key migration) can
-    * never serve a stale schema. */
+    * schema-changing rewrite can never serve a stale schema. */
   private[graft] def readTable(spark: SparkSession, path: String): DataFrame = {
     import org.apache.hadoop.fs.{Path => HPath}
     val schema =
@@ -346,33 +351,17 @@ object StandingState {
     if (!tableExists(spark, s"$path/span_meta")) None
     else {
       val w = cachedRegimeRow(spark, s"$path/span_meta").getAs[Int]("w")
-      // follow the PERSISTED table's regime (self-describing schema, same
-      // rule as [[load]]) — appending payload-free rows to a keyed index
-      // would fail the scan; appending keyed rows to a legacy index would
-      // leave rows no anti-join can reach
-      Some(if (spanIndexKeyed(spark, path)) TextOps.spanWindowHashesKeyed(batch, w)
-           else TextOps.spanWindowHashes(batch, w))
+      Some(TextOps.spanWindowHashesKeyed(batch, w))
     }
   }
 
   /** [[spanHashesFor]] against an already-LOADED state — the streaming
-    * batch leg's form: [[load]] just resolved the span regime (width +
-    * keyed-ness), so re-probing the path per micro-batch would re-pay
-    * two existence probes and a schema read for constants already in
-    * hand. Same regime rules, zero additional IO. */
+    * batch leg's form: [[load]] just resolved the span width, so
+    * re-probing the path per micro-batch would re-pay an existence probe
+    * and a regime-row read for a constant already in hand. */
   private[graft] def spanHashesForState(
       batch: DataFrame, state: StandingState): Option[DataFrame] =
-    state.spanIndex.map { case (hashes, w) =>
-      if (hashes.columns.contains("doc_id")) TextOps.spanWindowHashesKeyed(batch, w)
-      else TextOps.spanWindowHashes(batch, w)
-    }
-
-  /** True iff the persisted span index at `path` is doc-keyed (carries a
-    * `doc_id` column). False for legacy payload-free indexes and when the
-    * table does not exist yet. */
-  private def spanIndexKeyed(spark: SparkSession, path: String): Boolean =
-    tableExists(spark, s"$path/span_hashes") &&
-      spark.read.parquet(s"$path/span_hashes").columns.contains("doc_id")
+    state.spanIndex.map { case (_, w) => TextOps.spanWindowHashesKeyed(batch, w) }
 
   /** The artifact projection of [[appendWithMeta]] split from its write,
     * so the ingest batch leg can compute lazily and commit the corpus
@@ -383,7 +372,7 @@ object StandingState {
       meta: Meta): (DataFrame, DataFrame) = {
     requireMetaCompatible(meta, cfg)
     val b = Frames.barrier(batch)
-    artifacts(b, cfg, meta.numHashes, meta.bandRows, meta.docKeyed)
+    artifacts(b, cfg, meta.numHashes, meta.bandRows)
   }
 
   /** The write half of [[appendWithMeta]] — caller MUST hold the lease.
@@ -393,8 +382,7 @@ object StandingState {
     * every span-indexed ingest batch), bands strictly LAST: a crash
     * anywhere before the band write leaves docs with no band rows —
     * exactly the drift [[repairTextArtifacts]] detects (bands-absence is
-    * the single witness; digests carry no doc_id in the legacy regime,
-    * so digest-absence cannot be audited) and repairs by re-appending
+    * the single witness) and repairs by re-appending
     * everything (duplicates are set-semantic on every table). A failure
     * in EITHER parallel leg propagates before the band write, so every
     * crash/failure shape still leaves the drifted docs missing from
@@ -473,16 +461,31 @@ object StandingState {
 
   /** Persist duplicate-CLUSTER labels (`clusters/` — the
     * [[Dedup.duplicateClusters]] output shape (doc_id, cluster_id,
-    * cluster_size)) as part of the standing state. Written once from a
-    * batch CC run; each ingest then maintains them with
+    * cluster_size)) as part of the standing state (overwrites). Written
+    * once from a batch CC run; each ingest then maintains them with
     * [[updateClusters]] instead of re-running connected components over
-    * the standing graph. This layout is UNPARTITIONED (one table dir,
-    * full rewrite per update); a deployment where the per-ingest rewrite
-    * of the whole labels table dominates uses
-    * [[writeClustersPartitioned]] instead. */
-  def writeClusters(labels: DataFrame, path: String): Unit =
-    labels.select("doc_id", "cluster_id", "cluster_size")
-      .write.mode("overwrite").parquet(s"$path/clusters")
+    * the standing graph.
+    *
+    * The table is BUCKETED by cluster_id (`cpart = pmod(cluster_id,
+    * nParts)` partition dirs): every row of one cluster lands in one
+    * partition, so an ingest's [[updateClusters]] rewrites ONLY the
+    * partitions holding touched components — O(touched clusters) write
+    * IO instead of O(standing labels). `nParts` is pinned in a
+    * `clusters_meta` row (like every other state regime) so updates can
+    * never bucket under a different modulus. The row is deleted before
+    * the table is rewritten and committed after it, so a labels table
+    * without its meta row is exactly an interrupted write, which
+    * [[loadClusters]] refuses. */
+  def writeClusters(
+      labels: DataFrame, path: String, nParts: Int = DefaultClusterParts): Unit = {
+    val spark = labels.sparkSession
+    import spark.implicits._
+    require(nParts > 0, s"nParts must be positive, got $nParts")
+    deleteDir(spark, s"$path/clusters_meta")
+    writeBucketed(labels, s"$path/clusters", nParts)
+    Seq(nParts).toDF("n_parts")
+      .coalesce(1).write.mode("overwrite").parquet(s"$path/clusters_meta")
+  }
 
   /** Persist the VERIFIED PAIR EDGES behind the duplicate-cluster labels
     * (`pair_edges/` — (doc_a, doc_b) rows, set-semantic): the OPT-IN
@@ -514,69 +517,50 @@ object StandingState {
     spark.read.parquet(s"$path/pair_edges")
   }
 
-  /** Default cluster_id bucket count for [[writeClustersPartitioned]]. */
+  /** Default cluster_id bucket count for [[writeClusters]]. */
   val DefaultClusterParts = 64
 
   private def cpartCol(c: Column, nParts: Int): Column =
     pmod(c.cast("long"), lit(nParts.toLong))
 
-  /** n_parts of the bucketed clusters layout — trusting the TABLE over
-    * the meta row — or None for the plain layout. The empty-result
-    * degrade in [[relabelClusters]] commits the plain table FIRST and
-    * deletes `clusters_meta` second (the reverse order would strand a
-    * healed partitioned table with no meta row, silently rerouting
-    * subsequent updates through the legacy whole-table path); a crash
-    * between the two leaves a meta row describing a table that is
-    * already plain. Routing a TOUCHED-PARTITION rewrite at that shape
-    * would rename cpart= dirs into a directory of plain parquet files —
-    * a mixed table every reader would double-read — so the stale meta is
-    * treated as the incomplete half of a committed degrade: this
-    * COMPLETES it (deletes the meta) and reports the layout as plain.
-    * Caller MUST hold the state lease (the delete mutates the state
-    * dir) and must have healed/recovered the clusters table first
-    * ([[loadClustersLeased]] / the relabel pass's healStranded), so the
-    * live-dir probe never reads a mid-swap directory. A missing live dir
-    * with a meta row (pre-first-write shape) trusts the meta. */
-  private def leasedNParts(spark: SparkSession, path: String): Option[Int] = {
+  /** The label columns of `labels` bucketed under `nParts` into the
+    * table dir `dir` (overwrites). A zero-row `partitionBy` write emits
+    * no partition dir, and a parquet table without a data file has no
+    * schema to read back — so an empty input leaves one schema-bearing
+    * empty part file under `cpart=0`, and the table loads as zero label
+    * rows in the same layout. */
+  private def writeBucketed(labels: DataFrame, dir: String, nParts: Int): Unit = {
     import org.apache.hadoop.fs.{Path => HPath}
-    if (!tableExists(spark, s"$path/clusters_meta")) return None
-    val nParts = spark.read.parquet(s"$path/clusters_meta")
-      .head().getAs[Int]("n_parts")
-    val base = new HPath(path)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val live = new HPath(base, "clusters")
-    val stale = fs.exists(live) &&
-      !fs.listStatus(live).exists(_.getPath.getName.startsWith("cpart="))
-    if (!stale) Some(nParts)
-    else {
-      fs.delete(new HPath(base, "clusters_meta"), true)
-      None
-    }
+    val rows = labels.select("doc_id", "cluster_id", "cluster_size")
+    rows.withColumn("cpart", cpartCol(col("cluster_id"), nParts))
+      .write.mode("overwrite").partitionBy("cpart").parquet(dir)
+    val d = new HPath(dir)
+    val fs = d.getFileSystem(labels.sparkSession.sparkContext.hadoopConfiguration)
+    if (!fs.listStatus(d).exists(_.getPath.getName.startsWith("cpart=")))
+      writeEmptyLabels(rows, new HPath(d, "cpart=0").toString)
   }
 
-  /** [[writeClusters]] BUCKETED by cluster_id (`cpart = pmod(cluster_id,
-    * nParts)` partition dirs): every row of one cluster lands in one
-    * partition, so an ingest's [[updateClusters]] rewrites ONLY the
-    * partitions holding touched components — O(touched clusters) write
-    * IO instead of O(standing labels), removing the last
-    * O(standing-labels) step from the ingest cycle. `nParts` is pinned in
-    * a `clusters_meta` row (like every other state regime) so updates
-    * can never bucket under a different modulus. */
-  def writeClustersPartitioned(
-      labels: DataFrame, path: String, nParts: Int = DefaultClusterParts): Unit = {
-    val spark = labels.sparkSession
-    import spark.implicits._
-    require(nParts > 0, s"nParts must be positive, got $nParts")
-    labels.select("doc_id", "cluster_id", "cluster_size")
-      .withColumn("cpart", cpartCol(col("cluster_id"), nParts))
-      .write.mode("overwrite").partitionBy("cpart").parquet(s"$path/clusters")
-    Seq(nParts).toDF("n_parts")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/clusters_meta")
+  /** One zero-row part file carrying `rows`' schema, written to `dir`. */
+  private def writeEmptyLabels(rows: DataFrame, dir: String): Unit =
+    rows.limit(0).write.mode("overwrite").parquet(dir)
+
+  /** Fail loudly when `clusters/` has no `clusters_meta` row: the
+    * unbucketed layout of older code, or a [[writeClusters]] interrupted
+    * between its table and meta writes. Neither can be updated in place
+    * — the bucket modulus is unknown. */
+  private def requireClustersMeta(spark: SparkSession, path: String): Unit = {
+    import org.apache.hadoop.fs.{Path => HPath}
+    val meta = new HPath(path, "clusters_meta")
+    if (!meta.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(meta))
+      throw new IllegalStateException(
+        s"StandingState: clusters under $path has no clusters_meta — the " +
+          "unbucketed layout of older code or an interrupted writeClusters; " +
+          "rewrite it via StandingState.writeClusters")
   }
 
-  /** Lazy scan of the persisted cluster labels, in either layout
-    * (self-healing first: a crashed legacy swap via [[healTable]], a
-    * crashed partitioned commit via [[recoverClusterParts]]).
+  /** Lazy scan of the persisted cluster labels (self-healing first: a
+    * crashed whole-table swap via [[healTable]], a crashed partition
+    * commit via [[recoverClusterParts]]).
     *
     * A commit marker that SURVIVES the recovery pass means the lease is
     * held (recovery skips) — either a live mutator is mid-commit (its
@@ -586,7 +570,9 @@ object StandingState {
     * better than a mutator can, so the safe default is to FAIL LOUDLY
     * naming the holder instead of returning silently wrong labels (run
     * [[breakLease]] after confirming a crashed holder; the next load's
-    * recovery then rolls the commit forward). */
+    * recovery then rolls the commit forward). A table without its
+    * `clusters_meta` row fails loudly as well (see
+    * [[requireClustersMeta]]). */
   def loadClusters(spark: SparkSession, path: String): DataFrame = {
     import org.apache.hadoop.fs.{Path => HPath}
     heal(spark, path, "clusters")
@@ -602,19 +588,22 @@ object StandingState {
           "gone and run StandingState.breakLease (the next load rolls the " +
           "commit forward).")
     val df = spark.read.parquet(s"$path/clusters")
-    if (df.columns.contains("cpart")) df.drop("cpart") else df
+    requireClustersMeta(spark, path)
+    df.drop("cpart")
   }
 
   /** [[loadClusters]] for a caller that ALREADY HOLDS the state lease —
     * the read half of every leased read-modify-write ([[updateClusters]]
-    * and the partitioned twin). Recovery mutations (crashed-commit
-    * roll-forward/back, crashed-swap heal) run DIRECTLY: the lease we
-    * hold is exactly the exclusion recovery needs. Loading under the
-    * lease is what makes the subsequent rewrite sound — a snapshot pinned
-    * before the acquire could be silently overwritten by a mutator that
-    * commits in the load->acquire window (a lost update, contradicting
-    * the lease's fails-loudly contract). */
-  private def loadClustersLeased(spark: SparkSession, path: String): DataFrame = {
+    * and [[relabelClusters]]), returned with the table's pinned bucket
+    * count. Recovery mutations (crashed-commit roll-forward/back,
+    * crashed-swap heal) run DIRECTLY: the lease we hold is exactly the
+    * exclusion recovery needs. Loading under the lease is what makes the
+    * subsequent rewrite sound — a snapshot pinned before the acquire
+    * could be silently overwritten by a mutator that commits in the
+    * load->acquire window (a lost update, contradicting the lease's
+    * fails-loudly contract). */
+  private def loadClustersLeased(
+      spark: SparkSession, path: String): (DataFrame, Int) = {
     import org.apache.hadoop.fs.{Path => HPath}
     val base = new HPath(path)
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -626,22 +615,11 @@ object StandingState {
     }
     healTable(fs, base, "clusters")
     val df = spark.read.parquet(s"$path/clusters")
-    if (df.columns.contains("cpart")) df.drop("cpart") else df
+    requireClustersMeta(spark, path)
+    (df.drop("cpart"),
+      cachedRegimeRow(spark, s"$path/clusters_meta").getAs[Int]("n_parts"))
   }
 
-  /** Ingest-cycle cluster maintenance: fold a batch's verified pairs into
-    * the persisted labels via [[Dedup.duplicateClustersIncremental]]
-    * (star rounds over the contracted batch-shaped graph only; exact
-    * batch-on-union equality) and atomically replace `clusters/` — the
-    * updated labels are staged to a sibling directory and swapped in with
-    * two renames, because parquet cannot overwrite a table that is its
-    * own scan input. Returns the updated labels (a scan of the new
-    * table). Cost per ingest: the incremental CC (O(batch + touched
-    * components) compute) plus one rewrite of the labels table — labels
-    * are (id, id, int) rows over only the docs that ARE in clusters,
-    * orders of magnitude smaller than the corpus; a deployment where even
-    * that rewrite dominates partitions `clusters/` by cluster_id range
-    * and rewrites touched partitions only. */
   /** CLUSTER-LABEL HYGIENE after retention — [[expire]] deliberately
     * leaves `clusters/` untouched (labels are a REPORTING artifact, not
     * an admission input: none of the dedup legs read them, spec-pinned),
@@ -656,26 +634,22 @@ object StandingState {
     * SEMANTICS: the result is the HISTORICAL pair graph's components
     * restricted to retained docs — two retained docs whose only
     * connection ran THROUGH an expired bridge doc stay co-labeled (a
-    * deliberate coarsening: the pair edges are not persisted, so exact
-    * re-clustering needs a fresh [[Dedup.duplicateClusters]] run over
-    * the retained corpus + [[writeClusters]]; sizes here are exact
-    * retained-member counts either way). Ghost detection is an
-    * anti-join against the corpus id column, so the pass needs no
-    * expired-id input, is idempotent, and can run any time after one or
-    * MORE [[expire]] passes — or fold into the pass itself via
-    * `expire(..., relabelClusters = true)`. Both cluster layouts are
-    * preserved — and the BUCKETED layout rewrites ONLY the ghost-bearing
-    * partitions: `cpart = pmod(cluster_id, nParts)` is a pure function
-    * of cluster_id, so every member of a ghost cluster lives in that
-    * cluster's partition, sizes change nowhere else, and a partition
-    * without ghosts is bit-identical before and after the recount — its
-    * files are never opened for write. The rewrite rides the same
-    * staged-partition roll-forward protocol as
-    * [[updateClustersPartitioned]] (stage -> marker -> per-partition
+    * deliberate coarsening: labels alone cannot tell a direct edge from
+    * a transitive one; `exact = true` below re-clusters from persisted
+    * pair edges instead; sizes here are exact retained-member counts
+    * either way). Ghost detection is an anti-join against the corpus id
+    * column, so the pass needs no expired-id input, is idempotent, and
+    * can run any time after one or MORE [[expire]] passes — or fold into
+    * the pass itself via `expire(..., relabelClusters = true)`. Only the
+    * ghost-bearing partitions are rewritten: `cpart = pmod(cluster_id,
+    * nParts)` is a pure function of cluster_id, so every member of a
+    * ghost cluster lives in that cluster's partition, sizes change
+    * nowhere else, and a partition without ghosts is bit-identical
+    * before and after the recount — its files are never opened for
+    * write. The rewrite rides the same staged-partition roll-forward
+    * protocol as [[updateClusters]] (stage -> marker -> per-partition
     * rename; crash before the marker rolls back, after it rolls
-    * forward). The whole-table rewrite remains the legacy layout's
-    * documented cost — labels are orders of magnitude smaller than the
-    * corpus. Returns the number of ghost label rows dropped. */
+    * forward). Returns the number of ghost label rows dropped. */
   def relabelClusters(
       spark: SparkSession,
       statePath: String,
@@ -693,13 +667,13 @@ object StandingState {
     // expired doc SPLIT here, exactly as a fresh
     // [[Dedup.duplicateClusters]] over the retained corpus's verified
     // pairs would label them (spec-pinned equality). The rewrite is
-    // whole-table BY NATURE (a re-clustering can move any label), so
-    // both layouts stage-and-swap the full table; the cheap
+    // whole-table BY NATURE (a re-clustering can move any label), so it
+    // stages the full bucketed table and swaps it in; the cheap
     // ghost-bearing-partitions path remains the default. Returns the
     // SIGNED label-row delta (rows removed — ghosts + split-off
     // singletons — in the common case; NEGATIVE when persisted edges
     // outran the labels, e.g. an updateClusters crash after its edge
-    // append but before the label swap, where the exact pass ADDS the
+    // append but before the label commit, where the exact pass ADDS the
     // missing co-labels).
     if (exact) {
       healStranded(spark, statePath, "pair_edges", "relabelClusters:healEdges")
@@ -708,7 +682,8 @@ object StandingState {
           "(StandingState.writePairEdges) — without the edges only the " +
           "coarsening default is computable")
       return withLeaseRetry(spark, statePath, "relabelClusters:exact") {
-        val before = loadClustersLeased(spark, statePath).count()
+        val (labels, nParts) = loadClustersLeased(spark, statePath)
+        val before = labels.count()
         val corpusIds = spark.read.parquet(corpusPath)
           .select("doc_id").distinct()
         // restrict BOTH endpoints to retained docs: expire already
@@ -722,222 +697,113 @@ object StandingState {
         val relabeled = Dedup.duplicateClusters(edges)
           .select("doc_id", "cluster_id", "cluster_size")
           .localCheckpoint(true)
-        val nPartsOpt = leasedNParts(spark, statePath)
-        if (nPartsOpt.nonEmpty && !relabeled.isEmpty) {
-          val nParts = nPartsOpt.get
-          swapTable(spark, statePath, "clusters") { staged =>
-            relabeled.withColumn("cpart", cpartCol(col("cluster_id"), nParts))
-              .write.mode("overwrite").partitionBy("cpart").parquet(staged)
-          }
-        } else {
-          // empty bucketed result: degrade to the plain layout (the
-          // globalEmpty discipline — a zero-row partitionBy write emits
-          // no partition dirs and would brick the table). The plain
-          // table SWAPS IN FIRST, the meta row dies second: a crash
-          // between the two leaves a plain table with a stale meta row,
-          // which leasedNParts detects and completes on the next
-          // mutator (the reverse order's crash shape — a partitioned
-          // table with no meta — would silently reroute every later
-          // update through the legacy whole-table path).
-          swapTable(spark, statePath, "clusters") { staged =>
-            relabeled.write.mode("overwrite").parquet(staged)
-          }
-          if (nPartsOpt.nonEmpty) {
-            import org.apache.hadoop.fs.{Path => HPath}
-            val meta = new HPath(s"$statePath/clusters_meta")
-            meta.getFileSystem(spark.sparkContext.hadoopConfiguration)
-              .delete(meta, true)
-          }
+        swapTable(spark, statePath, "clusters") { staged =>
+          writeBucketed(relabeled, staged, nParts)
         }
         before - relabeled.count()
       }
     }
     withLeaseRetry(spark, statePath, "relabelClusters") {
-      val labels = loadClustersLeased(spark, statePath)
+      val (labels, nParts) = loadClustersLeased(spark, statePath)
       val corpusIds = spark.read.parquet(corpusPath)
         .select("doc_id").distinct()
-      val kept = labels.join(corpusIds, Seq("doc_id"), "left_semi")
-      // ghost ROWS, not just a count — the bucketed branch keys its
-      // touched-partition list by their cluster_ids. One anti-join scan;
-      // the lease is held through this phase and concurrent ingests
-      // wait on it. Checkpointed so the count, the partition collect
-      // and the staged write don't re-run the anti-join (and the last
-      // two don't re-read a live table mid-mutation).
+      // ghost ROWS, not just a count — the touched-partition list is
+      // keyed by their cluster_ids. One anti-join scan; the lease is held
+      // through this phase and concurrent ingests wait on it.
+      // Checkpointed so the count and the partition collect don't re-run
+      // the anti-join.
       val ghostRows = labels.join(corpusIds, Seq("doc_id"), "left_anti")
         .select("cluster_id").localCheckpoint(true)
       val ghosts = ghostRows.count()
-      if (ghosts == 0L) 0L
-      else {
-        // recount sizes over the surviving members of `rows`' clusters
-        // and drop clusters shrunk below two members
-        def recountOf(rows: DataFrame): DataFrame = rows
+      if (ghosts > 0L) {
+        // TOUCHED partitions = the ghost clusters' cparts: cpart is a
+        // pure function of cluster_id, so a ghost's co-members (whose
+        // sizes change) live in the same partition, and every other
+        // partition is bit-identical after the recount. <= nParts
+        // values collected.
+        val parts = ghostRows
+          .select(cpartCol(col("cluster_id"), nParts).as("p"))
+          .distinct().collect().map(_.getLong(0)).sorted
+        val touched = labels.join(corpusIds, Seq("doc_id"), "left_semi")
+          .filter(cpartCol(col("cluster_id"), nParts).isin(parts.toIndexedSeq: _*))
+        // recount sizes over the surviving members and drop clusters
+        // shrunk below two members
+        val recounted = touched
           .drop("cluster_size")
           .join(
-            rows.groupBy("cluster_id")
+            touched.groupBy("cluster_id")
               .agg(count(lit(1)).cast("int").as("cluster_size")),
             Seq("cluster_id"))
           .filter(col("cluster_size") >= 2)
-          .select("doc_id", "cluster_id", "cluster_size")
-        val nPartsOpt = leasedNParts(spark, statePath)
-        if (nPartsOpt.nonEmpty) {
-          val nParts = nPartsOpt.get
-          // TOUCHED partitions = the ghost clusters' cparts: cpart is a
-          // pure function of cluster_id, so a ghost's co-members (whose
-          // sizes change) live in the same partition, and every other
-          // partition is bit-identical after the recount. <= nParts
-          // values collected.
-          val parts = ghostRows
-            .select(cpartCol(col("cluster_id"), nParts).as("p"))
-            .distinct().collect().map(_.getLong(0)).sorted
-          val touched = kept.filter(
-            cpartCol(col("cluster_id"), nParts).isin(parts.toIndexedSeq: _*))
-          // checkpointed: the emptiness probe below must not recompute
-          // the join, and the staged write must not re-read the live
-          // table after the commit begins
-          val recounted = recountOf(touched).localCheckpoint(true)
-          // EMPTY TABLE in the bucketed layout: a dynamic partitionBy
-          // write of zero rows emits zero partition dirs (just
-          // _SUCCESS), which would brick the table. Emptiness here is
-          // GLOBAL — no surviving rows in the touched partitions AND no
-          // rows outside them (untouched partitions hold no ghosts, so
-          // labels == kept there). Degrade the layout to the plain one:
-          // swap in the schema-bearing empty plain table FIRST, then
-          // drop clusters_meta — a crash between the two leaves a plain
-          // table with a stale meta row, which leasedNParts detects and
-          // completes on the next mutator (the reverse order's crash
-          // shape — a partitioned table with no meta — would silently
-          // reroute every later update through the legacy path).
-          val globalEmpty = recounted.isEmpty && labels.filter(
-            !cpartCol(col("cluster_id"), nParts)
-              .isin(parts.toIndexedSeq: _*)).isEmpty
-          if (globalEmpty) {
-            import org.apache.hadoop.fs.{Path => HPath}
-            swapTable(spark, statePath, "clusters") { staged =>
-              recounted.write.mode("overwrite").parquet(staged)
-            }
-            val meta = new HPath(s"$statePath/clusters_meta")
-            meta.getFileSystem(spark.sparkContext.hadoopConfiguration)
-              .delete(meta, true)
-          } else
-            // ghost-bearing partitions only, through the same staged
-            // roll-forward protocol as updateClustersPartitioned —
-            // untouched partitions' files are never opened for write
-            stageAndCommitClusterParts(
-              spark, statePath, recounted, parts, nParts)
-        } else {
-          val recounted = recountOf(kept)
-            // the swap below must not re-read the live table it replaces
-            .localCheckpoint(true)
-          // mode("overwrite"): a pass that crashed after staging leaves
-          // the staged dir behind (healTable only restores the LIVE
-          // dir), and the next pass must overwrite it, not die
-          // path-exists — the updateClusters/expireRebuild swap
-          // discipline
-          swapTable(spark, statePath, "clusters") { staged =>
-            recounted.write.mode("overwrite").parquet(staged)
-          }
-        }
-        ghosts
+        stageAndCommitClusterParts(spark, statePath, recounted, parts, nParts)
       }
+      ghosts
     }
   }
 
+  /** Ingest-cycle cluster maintenance: fold a batch's verified pairs into
+    * the persisted labels via [[Dedup.duplicateClustersIncrementalParts]]
+    * (star rounds over the contracted batch-shaped graph only; exact
+    * batch-on-union equality) and rewrite only the partitions whose
+    * content can change. Every changed or moved row's OLD location is
+    * keyed by a merged standing root (`rootMap.old_root`) and its NEW
+    * location by a touched component's final id
+    * (`touchedRows.cluster_id`) — both batch-shaped frames, so the
+    * touched-partition list is a <= nParts-value collect. Untouched
+    * partitions' files are never opened for write. Returns the updated
+    * labels (a scan of the new table).
+    *
+    * Commit protocol (roll-FORWARD): the replacement rows for ALL
+    * touched partitions are staged under `clusters__parts_staged/`
+    * first, then a `clusters__parts_commit` marker makes the staged set
+    * authoritative, then each staged partition dir replaces its live
+    * twin. A crash before the marker rolls back (staged dir deleted on
+    * next load); a crash after it rolls forward ([[recoverClusterParts]]
+    * completes the remaining per-partition renames — idempotent, runs on
+    * every load). A reader scanning ACROSS the rename instant can see a
+    * transiently missing partition, the same transient-reader caveat as
+    * [[swapTable]]; mutators are excluded by the lease. */
   def updateClusters(path: String, newPairs: DataFrame): DataFrame = {
     val spark = newPairs.sparkSession
-    if (tableExists(spark, s"$path/clusters_meta"))
-      updateClustersPartitioned(spark, path, newPairs)
-    else
-      // the WHOLE read-modify-write holds the lease: the standing scan's
-      // pinned file index, the incremental CC, and the swap all run under
-      // it, so a concurrent mutator fails loudly at its acquire instead
-      // of having its committed update computed over and clobbered
-      withLease(spark, path, "updateClusters") {
-        // edge upkeep FIRST (opt-in, iff the state persists pair edges):
-        // a crash after this append leaves edges whose label update never
-        // landed — set-semantic extras the retried update re-delivers
-        if (tableExists(spark, s"$path/pair_edges"))
-          Frames.sizedWrite(newPairs.select("doc_a", "doc_b"))
-            .write.mode("append").parquet(s"$path/pair_edges")
-        val standing = loadClustersLeased(spark, path)
-        val updated = Dedup.duplicateClustersIncremental(standing, newPairs)
-        swapTable(spark, path, "clusters") { staged =>
-          updated.select("doc_id", "cluster_id", "cluster_size")
-            .write.mode("overwrite").parquet(staged)
-        }
-      }
-    loadClusters(spark, path)
-  }
-
-  /** [[updateClusters]] over the BUCKETED layout: only partitions whose
-    * content can change are rewritten. Every changed or moved row's OLD
-    * location is keyed by a merged standing root (`rootMap.old_root`) and
-    * its NEW location by a touched component's final id
-    * (`touchedRows.cluster_id`) — [[Dedup.duplicateClustersIncrementalParts]]
-    * returns both batch-shaped frames, so the touched-partition list is a
-    * <= nParts-value collect. Untouched partitions' files are never
-    * opened for write.
-    *
-    * Commit protocol (roll-FORWARD, not the legacy whole-table swap): the
-    * replacement rows for ALL touched partitions are staged under
-    * `clusters__parts_staged/` first, then a `clusters__parts_commit`
-    * marker makes the staged set authoritative, then each staged
-    * partition dir replaces its live twin. A crash before the marker
-    * rolls back (staged dir deleted on next load); a crash after it
-    * rolls forward ([[recoverClusterParts]] completes the remaining
-    * per-partition renames — idempotent, runs on every load). A reader
-    * scanning ACROSS the rename instant can see a transiently missing
-    * partition, the same transient-reader caveat as [[swapTable]];
-    * mutators are excluded by the lease. */
-  private def updateClustersPartitioned(
-      spark: SparkSession, path: String, newPairs: DataFrame): Unit = {
-    import org.apache.hadoop.fs.{Path => HPath}
-    // the WHOLE read-modify-write holds the lease (same contract as the
-    // legacy path): the standing load, the incremental CC, the touched-
-    // partition collect, and the staged commit — a mutator that committed
-    // between an unleased load and the acquire would otherwise have its
-    // update silently overwritten by a rewrite computed from the
-    // pre-commit snapshot
-    withLease(spark, path, "updateClustersPartitioned") {
-      // edge upkeep first — see the legacy branch's ordering note
+    // the WHOLE read-modify-write holds the lease: the standing load, the
+    // incremental CC, the touched-partition collect, and the staged
+    // commit — a mutator that committed between an unleased load and the
+    // acquire would otherwise have its update silently overwritten by a
+    // rewrite computed from the pre-commit snapshot
+    withLease(spark, path, "updateClusters") {
+      // edge upkeep FIRST (opt-in, iff the state persists pair edges):
+      // a crash after this append leaves edges whose label update never
+      // landed — set-semantic extras the retried update re-delivers
       if (tableExists(spark, s"$path/pair_edges"))
         Frames.sizedWrite(newPairs.select("doc_a", "doc_b"))
           .write.mode("append").parquet(s"$path/pair_edges")
-      val standing = loadClustersLeased(spark, path)
-      leasedNParts(spark, path) match {
-        case Some(nParts) =>
-          val (updated, rootMap, touchedRows) =
-            Dedup.duplicateClustersIncrementalParts(standing, newPairs)
-          val parts = rootMap.select(cpartCol(col("old_root"), nParts).as("p"))
-            .union(touchedRows.select(cpartCol(col("cluster_id"), nParts).as("p")))
-            .distinct().collect().map(_.getLong(0)).sorted
-          if (parts.nonEmpty)
-            stageAndCommitClusterParts(spark, path, updated, parts, nParts)
-        case None =>
-          // the meta row was STALE (a crashed empty-degrade's pending
-          // delete — leasedNParts just completed it): the live table is
-          // plain, so a touched-partition commit would mix cpart= dirs
-          // into plain files. Finish this update through the legacy
-          // whole-table swap instead.
-          val updated = Dedup.duplicateClustersIncremental(standing, newPairs)
-          swapTable(spark, path, "clusters") { staged =>
-            updated.select("doc_id", "cluster_id", "cluster_size")
-              .write.mode("overwrite").parquet(staged)
-          }
-      }
+      val (standing, nParts) = loadClustersLeased(spark, path)
+      val (updated, rootMap, touchedRows) =
+        Dedup.duplicateClustersIncrementalParts(standing, newPairs)
+      val parts = rootMap.select(cpartCol(col("old_root"), nParts).as("p"))
+        .union(touchedRows.select(cpartCol(col("cluster_id"), nParts).as("p")))
+        .distinct().collect().map(_.getLong(0)).sorted
+      if (parts.nonEmpty)
+        stageAndCommitClusterParts(spark, path, updated, parts, nParts)
     }
+    loadClusters(spark, path)
   }
 
   /** Steps 1–3 of the touched-partition commit, shared by
-    * [[updateClustersPartitioned]] and [[relabelClusters]]: stage the
-    * replacement rows for every partition in `parts` under
-    * `clusters__parts_staged/` (plus an explicit EMPTY dir for any
-    * touched partition whose rows all merged or dropped away, so the
-    * commit still clears its live twin — otherwise the stale rows would
-    * survive at their old location), drop the `clusters__parts_commit`
-    * marker, then roll each staged partition forward over its live twin.
-    * Caller must hold the state lease and must not mutate the live table
-    * first — the staged write is the last reader of the pre-commit rows
-    * (live dirs are only touched after it completes). */
+    * [[updateClusters]] and [[relabelClusters]]: stage the replacement
+    * rows for every partition in `parts` under `clusters__parts_staged/`
+    * (plus an explicit EMPTY dir for any touched partition whose rows all
+    * merged or dropped away, so the commit still clears its live twin —
+    * otherwise the stale rows would survive at their old location), drop
+    * the `clusters__parts_commit` marker, then roll each staged partition
+    * forward over its live twin. The first emptied partition gets a
+    * schema-bearing empty part file rather than a bare dir: if every
+    * other partition ends empty too, the table still has a file to read
+    * its schema from, and loads as zero rows in the same layout (see
+    * [[writeBucketed]]). Caller must hold the state lease and must not
+    * mutate the live table first — the staged write is the last reader
+    * of the pre-commit rows (live dirs are only touched after it
+    * completes). */
   private def stageAndCommitClusterParts(
       spark: SparkSession,
       path: String,
@@ -952,13 +818,13 @@ object StandingState {
     // table was never touched) is overwritten, not a path-exists error
     if (fs.exists(staged)) fs.delete(staged, true)
     // 1. STAGE
-    rows.withColumn("cpart", cpartCol(col("cluster_id"), nParts))
+    val labels = rows.select("doc_id", "cluster_id", "cluster_size")
+    labels.withColumn("cpart", cpartCol(col("cluster_id"), nParts))
       .filter(col("cpart").isin(parts.toIndexedSeq: _*))
       .write.mode("overwrite").partitionBy("cpart").parquet(staged.toString)
-    parts.foreach { p =>
-      val d = new HPath(staged, s"cpart=$p")
-      if (!fs.exists(d)) fs.mkdirs(d)
-    }
+    val emptied = parts.map(p => new HPath(staged, s"cpart=$p")).filterNot(fs.exists)
+    emptied.headOption.foreach(d => writeEmptyLabels(labels, d.toString))
+    emptied.foreach(fs.mkdirs)
     // 2. COMMIT POINT: marker makes the staged partitions authoritative
     val marker = new HPath(base, "clusters__parts_commit")
     fs.create(marker, true).close()
@@ -1080,13 +946,13 @@ object StandingState {
   /** MUTATOR-side heal of a state table — the maintenance passes' form.
     * Unlike the reader-side [[heal]] (which SKIPS while the lease is
     * held — correct for loads, where a live holder's own commit path
-    * finishes the work), a retention or regime-sniffing pass must not
+    * finishes the work), a retention or append pass must not
     * silently treat a table stranded at `__retired` by an old crashed
     * swap as ABSENT: the skip would pass an existence filter, the
     * pass's other swaps would still land, and the stranded rows would
     * resurrect on the next load-side heal — permanently blocking
-    * re-admission (expire) or manufacturing the mixed regime expire
-    * refuses (span appends). So when — and only when — the table is
+    * re-admission (expire) — or be orphaned behind a fresh live dir
+    * (span appends). So when — and only when — the table is
     * actually stranded, WAIT for the lease ([[withLeaseRetry]]: a live
     * ingest's brief hold passes; a crashed holder fails loudly with its
     * identity) and heal under it. The healthy path costs two existence
@@ -1236,7 +1102,7 @@ object StandingState {
     * per-ingest scan linearly with sloppy history. State tables get a
     * distinct() rewrite; the corpus table (rows already unique by doc_id)
     * gets a pure FILE-COUNT rewrite sized to `targetFileBytes` outputs.
-    * Cluster labels are already rewritten whole by [[updateClusters]].
+    * Cluster labels are rewritten partition-wise by [[updateClusters]].
     *
     * LIVE-STREAM COEXISTENCE: compaction must NOT require stopping the
     * intake stream (the reference's own posture is continuous operation —
@@ -1265,32 +1131,20 @@ object StandingState {
     * and EVERY artifact derived from them, so expired documents no
     * longer block replicas of their own text from (re-)admission.
     *
-    * Two regimes, dispatched on the state's SELF-DESCRIBING artifact
-    * schema (presence of `doc_id` on the digests rows — see [[Meta]]):
+    * Expire is SUBTRACTION: one anti-join per artifact table against
+    * the pinned expired-id set, each run under the snapshot-delta
+    * compaction discipline ([[compactDirLive]]): the O(table) anti-join
+    * rewrite holds NO lease (intake appends proceed freely), and the
+    * lease is held only for each table's delta catch-up + two renames.
+    * No text is ever re-featurized — the pass costs columnar IO over the
+    * small artifact rows (16-byte digest + 8-byte id) plus the corpus
+    * filter rewrite. Subtraction is SOUND precisely because the digest
+    * and span-hash rows are keyed by doc_id: a retained doc that shares
+    * a digest/window with an expired doc keeps its OWN row, so the value
+    * stays standing. A state whose rows carry no doc_id (written by older
+    * code) fails loudly instead.
     *
-    *  - DOC-KEYED states (the default regime since round 14): expire
-    *    is SUBTRACTION — one anti-join per artifact table against the
-    *    pinned expired-id set, each run under the snapshot-delta
-    *    compaction discipline ([[compactDirLive]]): the O(table)
-    *    anti-join rewrite holds NO lease (intake appends proceed
-    *    freely), and the lease is held only for each table's delta
-    *    catch-up + two renames. No text is ever re-featurized — the
-    *    pass costs columnar IO over the small artifact rows (16-byte
-    *    digest + 8-byte id) plus the corpus filter rewrite, instead of
-    *    a re-digest / re-minhash / re-window-hash of every retained
-    *    doc. Subtraction is SOUND precisely because the rows are
-    *    keyed: a retained doc that shares a digest/window with an
-    *    expired doc keeps its OWN row, so the value stays standing.
-    *  - LEGACY payload-free states: digests and span hashes are
-    *    doc_id-free sets, so subtraction is unsound (an expired doc's
-    *    digest may also be a retained doc's digest, and dropping it
-    *    would un-block the retained doc's replicas) — expire REBUILDS
-    *    digests, bands and span hashes from the RETAINED corpus under
-    *    the state's persisted regime, holding the lease for the whole
-    *    O(retained) pass (the pre-round-14 behavior, kept as the
-    *    migration fallback; [[write]] a fresh state to leave it).
-    *
-    * NULL-predicate rows are RETAINED in both regimes: a corpus row
+    * NULL-predicate rows are RETAINED: a corpus row
     * where `expired` evaluates to NULL (e.g. `col("ts") < horizon`
     * with a null timestamp) does not POSITIVELY match the retention
     * policy, and a destructive maintenance op must not treat
@@ -1299,11 +1153,10 @@ object StandingState {
     * Crash-safety: artifact tables mutate FIRST, the corpus LAST — a
     * crash anywhere earlier leaves the expired rows still in the
     * corpus, so a re-run detects pending work (n > 0) and completes
-    * the pass (keyed anti-joins are idempotent; the legacy rebuild
-    * derives only from the retained set). A repair pass racing a
-    * keyed crash window can re-append a still-in-corpus expired doc's
+    * the pass (the anti-joins are idempotent). A repair pass racing a
+    * crash window can re-append a still-in-corpus expired doc's
     * artifacts; the re-run subtracts them again. Concurrent appends
-    * during a keyed pass survive via each table's delta catch-up; a
+    * during a pass survive via each table's delta catch-up; a
     * doc appended DURING the pass that itself matches the predicate
     * is outside the pinned snapshot and falls to the next retention
     * pass. SemDeDup centroids are untouched (frozen training state,
@@ -1327,24 +1180,7 @@ object StandingState {
       corpusPath: String,
       expired: Column,
       relabelClusters: Boolean = false): Long = {
-    val pred = coalesce(expired, lit(false))
-    // heal a crashed digests swap BEFORE sniffing the regime — a
-    // missing-live table would otherwise read as "no digests" and
-    // silently downgrade a keyed state to the payload-free rebuild.
-    // healStranded, not the reader-side heal: a concurrent ingest
-    // briefly holding the lease at this instant would make heal() skip
-    // and re-open exactly that downgrade
-    healStranded(spark, statePath, "digests", "expire:healDigests")
-    val keyed = digestsKeyed(spark, statePath)
-    val n =
-      if (keyed) expireKeyed(spark, statePath, corpusPath, pred)
-      else expireRebuild(spark, statePath, corpusPath, pred) match {
-        // the rebuild re-sniffs under its lease (a migrateToKeyed or
-        // keyed writer can land in the sniff->acquire window); a state
-        // found keyed there must subtract, never be rebuilt legacy
-        case Some(m) => m
-        case None => expireKeyed(spark, statePath, corpusPath, pred)
-      }
+    val n = expireKeyed(spark, statePath, corpusPath, coalesce(expired, lit(false)))
     // optional label hygiene, AFTER the corpus swap (the ghost detection
     // anti-joins the post-expire corpus); crash between the swap and
     // here just leaves the ghosts for the next relabel — see
@@ -1360,8 +1196,7 @@ object StandingState {
     n
   }
 
-  /** [[expire]]'s doc-keyed subtraction regime. `pred` is already
-    * null-coalesced. */
+  /** [[expire]]'s subtraction pass. `pred` is already null-coalesced. */
   private def expireKeyed(
       spark: SparkSession,
       statePath: String,
@@ -1387,22 +1222,18 @@ object StandingState {
     // instant would re-open exactly the skip this heal exists to close
     Seq("digests", "span_hashes", "bands", "pair_edges")
       .foreach(healStranded(spark, statePath, _, "expire:healArtifacts"))
-    // mixed-regime guard: a keyed state whose span index was written
-    // payload-free (standalone writeSpanIndex) cannot be subtracted —
-    // fail loudly instead of silently leaving unreachable rows
-    if (tableExists(spark, s"$statePath/span_hashes") &&
-        !spanIndexKeyed(spark, statePath))
-      throw new IllegalStateException(
-        s"expire: state at $statePath has doc-keyed digests but a " +
-          "payload-free span index — rewrite the span index doc-keyed " +
-          "(writeSpanIndex(..., docKeyed = true)) before expiring")
+    // payload-free rows (older code) cannot be subtracted — refuse before
+    // any mutation instead of silently leaving unreachable rows
+    Seq("digests", "span_hashes")
+      .filter(t => tableExists(spark, s"$statePath/$t"))
+      .foreach(t => requireDocKeyed(readTable(spark, s"$statePath/$t"), statePath, t))
     // pin the expired-id set EAGERLY before any mutation: every
     // anti-join below subtracts exactly this set, and the corpus filter
     // drops exactly these rows, so the pass is consistent even as
     // appends land mid-pass. Keyed expiry is ID-level by construction:
     // every row of an expired doc_id drops (a duplicate-doc_id corpus is
     // already outside the ingest invariants); the returned count is
-    // corpus ROWS dropped, matching the legacy regime's contract.
+    // corpus ROWS dropped.
     // BARRIER + COUNT in one job (round-19 diet, the intake pattern):
     // the lazy checkpoint materializes — fully pinned — inside the
     // count's single RDD job; the eager checkpoint + count form paid
@@ -1421,8 +1252,8 @@ object StandingState {
       // (any completed subset + still-expired corpus rows = a re-run
       // completes the pass), so their snapshot-delta subtractions run
       // CONCURRENTLY (guide §2.6): the O(table) phase-2 rewrites overlap,
-      // and the brief lease-held phase-3 swaps serialize themselves via
-      // withLeaseRetry's backoff. inParallel awaits every job before the
+      // and the brief lease-held phase-3 swaps queue on compactDirLive's
+      // per-state monitor. inParallel awaits every job before the
       // corpus subtraction below can start.
       inParallel(
         (Seq("digests", "span_hashes", "bands")
@@ -1448,162 +1279,6 @@ object StandingState {
       compactDirLive(spark, statePath, corpusDir,
         _.join(expiredIds, Seq("doc_id"), "left_anti"))
       n
-    }
-  }
-
-  /** ONE-TIME migration of a legacy payload-free state to the
-    * doc-keyed regime: rebuild digests, bands and (when present) the
-    * span index from the standing corpus with doc_id-keyed rows, under
-    * the lease — the LAST lease-held O(corpus) pass this state will
-    * ever need, after which every [[expire]] is anti-join subtraction.
-    * Centroids, meta, clusters and the emb/media tables are untouched
-    * (meta carries no regime — keyedness is self-describing from the
-    * rebuilt rows). No-op on an already-keyed state. Returns true iff
-    * the migration ran. */
-  def migrateToKeyed(
-      spark: SparkSession,
-      statePath: String,
-      corpusPath: String): Boolean = {
-    heal(spark, statePath, "digests")
-    val alreadyKeyed = digestsKeyed(spark, statePath)
-    if (alreadyKeyed) false
-    else withLeaseRetry(spark, statePath, "migrateToKeyed") {
-      import org.apache.hadoop.fs.{Path => HPath}
-      locally {
-        val base = new HPath(statePath)
-        val sfs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        Seq("digests", "span_hashes", "bands").foreach(healTable(sfs, base, _))
-      }
-      // re-sniff UNDER the lease (post-heal): two migrations racing the
-      // outside check — or a migration racing an expire-rebuild — can
-      // both pass it; the loser must keep the no-op promise rather than
-      // re-run the O(corpus) rebuild
-      val keyedNow = digestsKeyed(spark, statePath)
-      if (keyedNow) false else {
-      val meta = {
-        val r = spark.read.parquet(s"$statePath/meta").head()
-        Meta(r.getAs[Int]("shingle_size"), r.getAs[Int]("num_hashes"),
-          r.getAs[Int]("band_rows"), r.getAs[Boolean]("normalized"))
-      }
-      val cfg = CorpusPipeline.Config(
-        shingleSize = meta.shingleSize,
-        normalizeFingerprints = meta.normalizedFingerprints)
-      val corpus = Frames.barrier(spark.read.parquet(corpusPath))
-      val (digests, bands) =
-        artifacts(corpus, cfg, meta.numHashes, meta.bandRows, docKeyed = true)
-      swapTable(spark, statePath, "digests") { staged =>
-        digests.write.mode("overwrite").parquet(staged)
-      }
-      if (tableExists(spark, s"$statePath/span_meta")) {
-        val w = spark.read.parquet(s"$statePath/span_meta")
-          .head().getAs[Int]("w")
-        swapTable(spark, statePath, "span_hashes") { staged =>
-          TextOps.spanWindowHashesKeyed(corpus, w).write.mode("overwrite").parquet(staged)
-        }
-      }
-      swapTable(spark, statePath, "bands") { staged =>
-        bands.write.mode("overwrite").parquet(staged)
-      }
-      true
-      }
-    }
-  }
-
-  /** [[expire]]'s legacy payload-free regime: lease-held rebuild of
-    * every artifact from the retained corpus. `pred` is already
-    * null-coalesced. Returns None when the under-lease re-sniff finds
-    * the state KEYED (a migration or keyed writer landed in the
-    * dispatcher's sniff->acquire window) — the dispatcher then runs
-    * the subtraction path instead. */
-  private def expireRebuild(
-      spark: SparkSession,
-      statePath: String,
-      corpusPath: String,
-      pred: Column): Option[Long] = {
-    import org.apache.hadoop.fs.{Path => HPath}
-    withLeaseRetry(spark, statePath, "expire") {
-      val corpusDir = new HPath(corpusPath)
-      val fs = corpusDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      healDir(fs, corpusDir) // we hold the lease — safe to heal a crashed swap
-      // heal crashed artifact swaps too (directly — we hold the lease):
-      // a table stranded at __retired must be rebuilt, not skipped; and
-      // spanIndexKeyed below must see the healed table, not absence
-      locally {
-        val base = new HPath(statePath)
-        val sfs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        Seq("digests", "span_hashes", "bands").foreach(healTable(sfs, base, _))
-      }
-      // re-sniff the regime UNDER the lease (post-heal): a migrateToKeyed
-      // or keyed writer landing in expire's sniff->acquire window must
-      // not have its doc-keyed artifacts silently rebuilt payload-free —
-      // hand the pass back to the dispatcher, which subtracts instead
-      val keyedNow = digestsKeyed(spark, statePath)
-      if (keyedNow) None
-      else {
-      val corpus0 = spark.read.parquet(corpusPath)
-      val retained = Frames.barrier(corpus0.filter(!pred))
-      val n = corpus0.count() - retained.count()
-      if (n == 0L) Some(0L)
-      else {
-        val meta = {
-          val r = spark.read.parquet(s"$statePath/meta").head()
-          Meta(r.getAs[Int]("shingle_size"), r.getAs[Int]("num_hashes"),
-            r.getAs[Int]("band_rows"), r.getAs[Boolean]("normalized"))
-        }
-        val cfg = CorpusPipeline.Config(
-          shingleSize = meta.shingleSize,
-          normalizeFingerprints = meta.normalizedFingerprints)
-        val (digests, bands) =
-          artifacts(retained, cfg, meta.numHashes, meta.bandRows,
-            docKeyed = false)
-        swapTable(spark, statePath, "digests") { staged =>
-          digests.write.mode("overwrite").parquet(staged)
-        }
-        if (tableExists(spark, s"$statePath/span_meta")) {
-          val w = spark.read.parquet(s"$statePath/span_meta")
-            .head().getAs[Int]("w")
-          // rebuild in the index's OWN regime — a doc-keyed span index on
-          // a legacy-digests state must not be silently downgraded to
-          // payload-free (check BEFORE the swap replaces the table)
-          val keyedSpans = spanIndexKeyed(spark, statePath)
-          swapTable(spark, statePath, "span_hashes") { staged =>
-            (if (keyedSpans) TextOps.spanWindowHashesKeyed(retained, w)
-             else TextOps.spanWindowHashes(retained, w)).write.mode("overwrite").parquet(staged)
-          }
-        }
-        swapTable(spark, statePath, "bands") { staged =>
-          bands.write.mode("overwrite").parquet(staged)
-        }
-        // pair edges subtract in BOTH regimes (doubly doc-keyed by
-        // construction — they cannot be rebuilt from text, only kept
-        // where both endpoints survive)
-        if (tableExists(spark, s"$statePath/pair_edges")) {
-          val keptEdges = spark.read.parquet(s"$statePath/pair_edges")
-            .join(retained.select(col("doc_id").as("doc_a")),
-              Seq("doc_a"), "left_semi")
-            .join(retained.select(col("doc_id").as("doc_b")),
-              Seq("doc_b"), "left_semi")
-            .select("doc_a", "doc_b") // joins reorder; keep the schema
-            .localCheckpoint(true)
-          swapTable(spark, statePath, "pair_edges") { staged =>
-            keptEdges.write.mode("overwrite").parquet(staged)
-          }
-        }
-        // corpus LAST (see crash-safety note above)
-        val staged = sibling(corpusDir, "__staged")
-        retained.write.mode("overwrite").parquet(staged.toString)
-        val retired = sibling(corpusDir, "__retired")
-        if (fs.exists(retired)) fs.delete(retired, true)
-        if (!fs.rename(corpusDir, retired))
-          throw new java.io.IOException(
-            s"expire: rename $corpusDir -> $retired failed")
-        if (!fs.rename(staged, corpusDir))
-          throw new java.io.IOException(
-            s"expire: rename $staged -> $corpusDir failed — pre-expire rows intact at $retired")
-        fs.delete(retired, true)
-        Some(n)
-      }
-      }
     }
   }
 
@@ -1828,31 +1503,36 @@ object StandingState {
           // acquire RETRIES: against a live intake stream the lease is briefly
           // held every few seconds by batch commits, and the compactor must
           // wait its turn like any other mutator (the bounded timeout still
-          // surfaces a crashed holder loudly).
-          withLeaseRetry(spark, leasePath, s"compact:${live.getName}") {
-            val f0set = f0.map(_.toString).toSet
-            val current = listDataFiles(fs, live)
-            if (!f0set.forall(current.map(_.toString).toSet)) {
-              // a full-table rewrite replaced the pinned snapshot — the
-              // staged output is stale; drop it and re-pin
-              fs.delete(staged, true)
-              false
-            } else {
-              val delta = current.filterNot(p => f0set(p.toString))
-              if (delta.nonEmpty)
-                spark.read.parquet(delta.map(_.toString): _*)
-                  .write.mode("append").parquet(staged.toString)
-              val retired = sibling(live, "__retired")
-              if (fs.exists(retired)) fs.delete(retired, true)
-              if (!fs.rename(live, retired))
-                throw new java.io.IOException(
-                  s"compact: rename $live -> $retired failed")
-              if (!fs.rename(staged, live))
-                throw new java.io.IOException(
-                  s"compact: rename $staged -> $live failed — pre-swap rows intact at $retired")
-              fs.delete(retired, true)
-              gcStaleStaged(fs, live)
-              true
+          // surfaces a crashed holder loudly). Sibling compactors of this
+          // JVM (expire's parallel artifact group) queue on a per-state
+          // monitor instead of racing each other for the lease, so only
+          // holders outside the JVM count against the retry timeout.
+          phase3Monitor(leasePath).synchronized {
+            withLeaseRetry(spark, leasePath, s"compact:${live.getName}") {
+              val f0set = f0.map(_.toString).toSet
+              val current = listDataFiles(fs, live)
+              if (!f0set.forall(current.map(_.toString).toSet)) {
+                // a full-table rewrite replaced the pinned snapshot — the
+                // staged output is stale; drop it and re-pin
+                fs.delete(staged, true)
+                false
+              } else {
+                val delta = current.filterNot(p => f0set(p.toString))
+                if (delta.nonEmpty)
+                  spark.read.parquet(delta.map(_.toString): _*)
+                    .write.mode("append").parquet(staged.toString)
+                val retired = sibling(live, "__retired")
+                if (fs.exists(retired)) fs.delete(retired, true)
+                if (!fs.rename(live, retired))
+                  throw new java.io.IOException(
+                    s"compact: rename $live -> $retired failed")
+                if (!fs.rename(staged, live))
+                  throw new java.io.IOException(
+                    s"compact: rename $staged -> $live failed — pre-swap rows intact at $retired")
+                fs.delete(retired, true)
+                gcStaleStaged(fs, live)
+                true
+              }
             }
           }
         } catch {
@@ -1870,6 +1550,14 @@ object StandingState {
     if (lastAbort != null) fail.initCause(lastAbort)
     throw fail
   }
+
+  /** One monitor per state path, serializing [[compactDirLive]]'s phase-3
+    * lease entry within this JVM. */
+  private val phase3Monitors =
+    new java.util.concurrent.ConcurrentHashMap[String, Object]()
+
+  private def phase3Monitor(leasePath: String): Object =
+    phase3Monitors.computeIfAbsent(leasePath, _ => new Object)
 
   /** TEST-ONLY injection point: invoked with the table dir's name after
     * each [[compactDirLive]] phase-2 rewrite (staged snapshot written,
@@ -1904,6 +1592,12 @@ object StandingState {
     catch { case _: java.io.IOException => () } // GC is best-effort
   }
 
+  /** Recursively delete `path` if it exists. */
+  private def deleteDir(spark: SparkSession, path: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+  }
+
   /** `<dir>__suffix` beside `dir`. */
   private def sibling(
       dir: org.apache.hadoop.fs.Path, suffix: String): org.apache.hadoop.fs.Path =
@@ -1924,20 +1618,6 @@ object StandingState {
     * file:), where a local-File check is always false (which would e.g.
     * silently drop the frozen centroids and re-run a Lloyd training every
     * ingest). One probe idiom for every optional state table. */
-  /** The digest-regime predicate every expire/migrate decision pivots
-    * on: a state is DOC-KEYED iff its digests table exists and carries
-    * the doc_id column (regimes are self-describing from schema — no
-    * meta flag to drift). ONE implementation: the sniff is the
-    * correctness pivot of the retention surface, and hand-copied
-    * instances drifting independently is how a silent
-    * keyed->payload-free downgrade gets reintroduced. Callers are
-    * responsible for healing a crashed swap FIRST ([[healStranded]]
-    * outside a lease, [[healTable]] under one) — a stranded table reads
-    * as absent here. */
-  private def digestsKeyed(spark: SparkSession, statePath: String): Boolean =
-    tableExists(spark, s"$statePath/digests") &&
-      spark.read.parquet(s"$statePath/digests").columns.contains("doc_id")
-
   private def tableExists(spark: SparkSession, path: String): Boolean =
     try { spark.read.parquet(path); true }
     catch { case _: org.apache.spark.sql.AnalysisException => false }
@@ -2001,10 +1681,8 @@ object StandingState {
     * that chain leaves admitted docs with text but no (or partial)
     * artifacts, and byte-replicas of those docs would be re-admitted on
     * replay (duplicate corpus rows). Band-row ABSENCE is the drift
-    * witness (the digest table has no doc_id column, so digests cannot be
-    * audited directly — which is why [[append]] writes digests before
-    * bands: every crash shape leaves the drifted doc missing from
-    * `bands/`):
+    * witness ([[append]] writes digests before bands, so every crash
+    * shape leaves the drifted doc missing from `bands/`):
     *
     *  - corpus docs MISSING from `bands/` get BOTH artifacts recomputed
     *    under the state's persisted regime and appended (a digest that
@@ -2051,8 +1729,7 @@ object StandingState {
     val nDrift = drift.count()
     if (nDrift > 0) {
       val (digests, bands) =
-        artifacts(drift, cfg, state.meta.numHashes, state.meta.bandRows,
-          state.meta.docKeyed)
+        artifacts(drift, cfg, state.meta.numHashes, state.meta.bandRows)
       // drifted docs' span hashes re-append too (corpus text IS the
       // admitted cleaned text, and spanWindowHashes is deterministic, so
       // the repair rebuilds exactly what the crashed append would have
@@ -2192,45 +1869,32 @@ object StandingState {
   }
 
   /** Persist the standing corpus' SPAN-DEDUP window-hash index
-    * (`span_hashes/` — one 16-byte md5 per DISTINCT w-token window, the
-    * [[TextOps.spanWindowHashes]] projection — plus a `span_meta` row
-    * pinning `w`): the standing side of
-    * [[TextOps.removeDuplicatedSpansIncremental]]. O(corpus tokens) rows
-    * — the exact-substring index's honest, published cost, paid once as
-    * a table instead of a census rebuild per ingest. */
-  def writeSpanIndex(
-      docs: DataFrame, path: String, w: Int = 20,
-      docKeyed: Option[Boolean] = None): Unit = {
+    * (`span_hashes/` — one (doc_id, 16-byte md5) row per doc x DISTINCT
+    * w-token window in it, the [[TextOps.spanWindowHashesKeyed]]
+    * projection — plus a `span_meta` row pinning `w`): the standing side
+    * of [[TextOps.removeDuplicatedSpansIncremental]]. O(corpus tokens)
+    * rows — the exact-substring index's honest, published cost, paid
+    * once as a table instead of a census rebuild per ingest. */
+  def writeSpanIndex(docs: DataFrame, path: String, w: Int = 20): Unit = {
     val spark = docs.sparkSession
     import spark.implicits._
-    // heal crashed swaps BEFORE the regime sniff and the overwrite: a
-    // digests table stranded at __retired would read as "no digests"
-    // and silently downgrade the new index to payload-free (the mixed
-    // regime expire refuses); a stranded span_hashes would be orphaned
-    // by the fresh overwrite below (its live dir then blocks healDir's
-    // rename — standing hashes silently lost)
-    healStranded(spark, path, "digests", "writeSpanIndex:healDigests")
+    // heal a crashed swap BEFORE the overwrite: a span_hashes table
+    // stranded at __retired would be orphaned by the fresh overwrite
+    // below (its live dir then blocks healDir's rename — standing hashes
+    // silently lost)
     healStranded(spark, path, "span_hashes", "writeSpanIndex:healSpans")
-    // default: FOLLOW the state's digest regime when one exists at this
-    // path — an all-defaults write() + writeSpanIndex() must not
-    // manufacture the mixed keyed-digests/payload-free-span state that
-    // expire() refuses. A span-only path (no digests table) stays
-    // payload-free unless explicitly asked.
-    val keyed = docKeyed.getOrElse(
-      tableExists(spark, s"$path/digests") &&
-        spark.read.parquet(s"$path/digests").columns.contains("doc_id"))
-    (if (keyed) TextOps.spanWindowHashesKeyed(docs, w)
-     else TextOps.spanWindowHashes(docs, w))
+    TextOps.spanWindowHashesKeyed(docs, w)
       .write.mode("overwrite").parquet(s"$path/span_hashes")
     Seq(w).toDF("w")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/span_meta")
   }
 
-  /** Lazy scan of the persisted span index: (hashes, w). */
+  /** Lazy scan of the persisted span index: (hashes, w). Refuses a
+    * payload-free index (see [[load]]). */
   def loadSpanIndex(spark: SparkSession, path: String): (DataFrame, Int) = {
     heal(spark, path, "span_hashes")
     val w = spark.read.parquet(s"$path/span_meta").head().getAs[Int]("w")
-    (spark.read.parquet(s"$path/span_hashes"), w)
+    (requireDocKeyed(readTable(spark, s"$path/span_hashes"), path, "span_hashes"), w)
   }
 
   /** Close the span-dedup cycle: append the CLEANED admitted batch's
@@ -2238,18 +1902,13 @@ object StandingState {
     * appends are set-semantic; [[compact]] folds them). */
   def appendSpanHashes(cleanedBatch: DataFrame, path: String): Unit = {
     val spark = cleanedBatch.sparkSession
-    // heal a crashed span_hashes swap BEFORE the regime sniff: in the
-    // crash window the sniff would read 'absent', the append would
-    // write payload-free rows into a FRESH live dir, and that live dir
-    // would block healDir's rename — the retired keyed rows orphaned
-    // (standing hashes silently lost, under-dedup) and the state left
-    // in the mixed regime expire refuses
+    // heal a crashed span_hashes swap BEFORE the append: in the crash
+    // window the append would write into a FRESH live dir, and that live
+    // dir would block healDir's rename — the retired rows orphaned
+    // (standing hashes silently lost, under-dedup)
     healStranded(spark, path, "span_hashes", "appendSpanHashes:heal")
     val w = spark.read.parquet(s"$path/span_meta").head().getAs[Int]("w")
-    val rows =
-      if (spanIndexKeyed(spark, path))
-        TextOps.spanWindowHashesKeyed(cleanedBatch, w)
-      else TextOps.spanWindowHashes(cleanedBatch, w)
+    val rows = TextOps.spanWindowHashesKeyed(cleanedBatch, w)
     withLease(spark, path, "appendSpanHashes") {
       Frames.sizedWrite(rows).write.mode("append").parquet(s"$path/span_hashes")
     }

@@ -1121,7 +1121,7 @@ object TextOps {
     * (itself O(corpus tokens) — the exact-substring index's honest,
     * published cost, paid as a TABLE on disk instead of a rebuild per
     * ingest). Close the cycle by appending the CLEANED batch's window
-    * hashes ([[spanWindowHashes]]) to the standing table. */
+    * hashes ([[spanWindowHashesKeyed]]) to the standing table. */
   def removeDuplicatedSpansIncremental(
       batch: DataFrame,
       standingHashes: DataFrame,
@@ -1153,44 +1153,39 @@ object TextOps {
     spanCoverageRewrite(base, spans, w)
   }
 
-  /** The distinct w-token window hashes of `docs` — the artifact
-    * [[removeDuplicatedSpansIncremental]]'s standing side persists
-    * (`StandingState` span-index table): one 16-byte hash per distinct
-    * window. Append the CLEANED admitted batch's hashes after each
-    * ingest to close the cycle. */
-  def spanWindowHashes(docs: DataFrame, w: Int): DataFrame = {
-    require(w > 0, s"window width $w must be positive")
-    docs
-      .select(expr(
-        s"""explode(if(size(filter(split(text, ' '), x -> length(x) > 0)) < $w,
-           |  cast(array() as array<string>),
-           |  transform(sequence(0, size(filter(split(text, ' '), x -> length(x) > 0)) - $w),
-           |    p -> md5(cast(concat_ws(' ',
-           |      slice(filter(split(text, ' '), x -> length(x) > 0), p + 1, $w)) as binary)))))"""
-          .stripMargin).as("h"))
-      .distinct()
-  }
+  /** The distinct w-token window hashes of `docs` — the standing side
+    * [[removeDuplicatedSpansIncremental]] reads when it is recomputed
+    * from a standing frame: one 16-byte hash per distinct window. The
+    * persisted `StandingState` span index keeps the doc-keyed form,
+    * [[spanWindowHashesKeyed]]. */
+  def spanWindowHashes(docs: DataFrame, w: Int): DataFrame =
+    docs.select(windowHashCol(w)).distinct()
 
   /** [[spanWindowHashes]] KEYED by the contributing document — one
     * (doc_id, h) row per doc x distinct-window-in-that-doc, the
-    * doc-keyed span-index regime ([[StandingState]]): the extra 8-byte
-    * id per row is what makes retention SUBTRACTION sound (an expired
-    * doc's rows drop by anti-join; a retained doc that shares the
-    * window keeps its own row, so the hash stays standing). Consumers
-    * are unchanged — [[removeDuplicatedSpansIncremental]] projects
-    * `select("h").distinct()`, identical to the payload-free table's
-    * hash set whenever the tables cover the same docs. */
-  def spanWindowHashesKeyed(docs: DataFrame, w: Int): DataFrame = {
+    * persisted span index ([[StandingState]]; append the CLEANED
+    * admitted batch's hashes after each ingest to close the cycle): the
+    * extra 8-byte id per row is what makes retention SUBTRACTION sound
+    * (an expired doc's rows drop by anti-join; a retained doc that
+    * shares the window keeps its own row, so the hash stays standing).
+    * [[removeDuplicatedSpansIncremental]] projects
+    * `select("h").distinct()`, identical to [[spanWindowHashes]]' set
+    * over the same docs. */
+  def spanWindowHashesKeyed(docs: DataFrame, w: Int): DataFrame =
+    docs.select(col("doc_id"), windowHashCol(w)).distinct()
+
+  /** `h`: one row per w-token window of `text` (exploded md5 of the
+    * window's tokens joined by single spaces; none when the doc is
+    * shorter than w). */
+  private def windowHashCol(w: Int): Column = {
     require(w > 0, s"window width $w must be positive")
-    docs
-      .select(col("doc_id"), expr(
-        s"""explode(if(size(filter(split(text, ' '), x -> length(x) > 0)) < $w,
-           |  cast(array() as array<string>),
-           |  transform(sequence(0, size(filter(split(text, ' '), x -> length(x) > 0)) - $w),
-           |    p -> md5(cast(concat_ws(' ',
-           |      slice(filter(split(text, ' '), x -> length(x) > 0), p + 1, $w)) as binary)))))"""
-          .stripMargin).as("h"))
-      .distinct()
+    expr(
+      s"""explode(if(size(filter(split(text, ' '), x -> length(x) > 0)) < $w,
+         |  cast(array() as array<string>),
+         |  transform(sequence(0, size(filter(split(text, ' '), x -> length(x) > 0)) - $w),
+         |    p -> md5(cast(concat_ws(' ',
+         |      slice(filter(split(text, ' '), x -> length(x) > 0), p + 1, $w)) as binary)))))"""
+        .stripMargin).as("h")
   }
 
   /** RefinedWeb/CCNet-style BOILERPLATE REMOVAL — the rewrite counterpart

@@ -1161,10 +1161,11 @@ object LlmQueries {
     // Q73 — cluster maintenance through the PERSISTED state (q72's
     // incremental CC composed with StandingState, the q71 discipline):
     // day-0 labels (batch CC over standing-only pairs) go through a full
-    // writeClusters -> parquet -> updateClusters(batch pairs) round-trip
-    // with the atomic table swap, and the reloaded table must STILL equal
-    // q43's batch-on-everything labels — same oracle, third distinct
-    // Spark path (batch q43, in-memory incremental q72, persisted q73).
+    // writeClusters -> bucketed parquet -> updateClusters(batch pairs)
+    // round-trip with the touched-partition commit, and the reloaded
+    // table must STILL equal q43's batch-on-everything labels — same
+    // oracle, third distinct Spark path (batch q43, in-memory
+    // incremental q72, persisted q73).
     Declared(
       "q73_dup_clusters_state",
       (s, dir) => {
@@ -3295,12 +3296,11 @@ object LlmQueries {
     // ------------------------------------------------------------------
     // Q90 — RETENTION end to end (the reference's key-TTL twin,
     // meeseeker.rb:99): a persisted standing corpus + state has a third
-    // of its docs expired (doc_id % 3 == 0 — since round 14 the state
-    // is DOC-KEYED by default, so StandingState.expire dispatches to
-    // the anti-join SUBTRACTION regime: per-table snapshot-delta
-    // rewrites, lease held only for each delta+swap; the legacy
-    // payload-free REBUILD regime is pinned row-identical to this path
-    // by StandingStateSpec's keyed-vs-rebuild differential), then the
+    // of its docs expired (doc_id % 3 == 0 — the state is DOC-KEYED, so
+    // StandingState.expire is anti-join SUBTRACTION: per-table
+    // snapshot-delta rewrites, lease held only for each delta+swap;
+    // StandingStateSpec pins it equal to StandingState.build over the
+    // retained corpus), then the
     // q63 incoming slice ingests through the full production batch leg
     // against the expired state. Incoming docs
     // whose ONLY exact/near match was an EXPIRED doc must now ADMIT;

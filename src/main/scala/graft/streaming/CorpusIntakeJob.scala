@@ -49,9 +49,9 @@ object CorpusIntakeJob {
     * Column over the standing table (an ingest-time horizon, a doc_id
     * policy, a source rule); NULL-predicate rows are retained, and a
     * crash mid-expire is healed by the pass's own idempotent re-run on
-    * the next due batch. Keep the state doc-keyed
-    * ([[StandingState.migrateToKeyed]]) so each pass is O(expired)
-    * anti-joins, not an O(corpus) rebuild under the lease.
+    * the next due batch. The state's artifact rows are doc-keyed, so
+    * each pass is O(expired) anti-joins, not an O(corpus) rebuild under
+    * the lease.
     *
     * CADENCE COST: even a NO-OP pass scans the standing table twice
     * (predicate filter + count), and a pass that expires anything

@@ -82,8 +82,8 @@ class PrepareMainSpec extends SparkSpec {
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(path, "_lease")))
   }
 
-  test("CLI retention ops: --migrateToKeyed converts a legacy state, --expireState runs the TTL loop") {
-    // day 0: a LEGACY payload-free state over a prepared standing corpus
+  test("CLI retention ops: --expireState runs the TTL loop") {
+    // day 0: a state over a prepared standing corpus
     val corpus0 = writeDocs(1L -> base(1), 2L -> base(2), 3L -> base(3))
     val standingPrep = graft.llm.CorpusPipeline.prepare(
       spark.read.parquet(corpus0)).localCheckpoint(true)
@@ -91,26 +91,12 @@ class PrepareMainSpec extends SparkSpec {
     standingPrep.select("doc_id", "source", "text")
       .write.mode("overwrite").parquet(standingDir)
     val statePath = tmp("ret_state_")
-    graft.llm.StandingState.write(
-      spark.read.parquet(standingDir), statePath, docKeyed = false)
-    assert(!spark.read.parquet(s"$statePath/digests")
-      .columns.contains("doc_id"))
+    graft.llm.StandingState.write(spark.read.parquet(standingDir), statePath)
 
-    // new-flag preconditions
+    // flag precondition
     intercept[IllegalArgumentException] {
       PrepareMain.parseArgs(Array("--state=/sp", "--expireState=doc_id < 2"))
     } // needs --standing
-    intercept[IllegalArgumentException] {
-      PrepareMain.parseArgs(Array("--migrateToKeyed")) // needs --state
-    }
-
-    // CLI migration (maintenance-only): legacy -> doc-keyed, idempotent
-    val migArgs = PrepareMain.parseArgs(Array(
-      s"--state=$statePath", s"--standing=$standingDir", "--migrateToKeyed"))
-    assert(PrepareMain.run(spark, migArgs) === ((0L, "maintenance")))
-    assert(spark.read.parquet(s"$statePath/digests")
-      .columns.contains("doc_id"))
-    PrepareMain.run(spark, migArgs) // second invocation no-ops
 
     // CLI retention: expire doc 1 — corpus row dropped, rows_out reports it
     val (nExp, modeExp) = PrepareMain.run(spark, PrepareMain.parseArgs(Array(

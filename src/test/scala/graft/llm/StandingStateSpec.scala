@@ -158,8 +158,7 @@ class StandingStateSpec extends SparkSpec {
     val written = StandingState.write(standing, dir, cfg)
     val loaded = StandingState.load(spark, dir)
     assert(loaded.spanIndex.isDefined && loaded.spanIndex.get._2 === 20)
-    // project to the hash column — valid for both the doc-keyed (default)
-    // and legacy payload-free index schemas
+    // compare the hash column (the consumer's projection)
     assert(loaded.spanIndex.get._1.select("h").as[String].collect().sorted.toSeq ===
       written.spanIndex.get._1.select("h").as[String].collect().sorted.toSeq)
 
@@ -367,16 +366,12 @@ class StandingStateSpec extends SparkSpec {
       .toDF("doc_a", "doc_b")
     val ing1 = Seq((100L, 3L), (100L, 10L), (200L, 201L)).toDF("doc_a", "doc_b")
     val ing2 = Seq((300L, 21L), (1L, 2L)).toDF("doc_a", "doc_b")
-    // legacy full-rewrite path as the reference
-    val legacyPath = java.nio.file.Files.createTempDirectory("clusters_legacy_").toString
-    StandingState.writeClusters(Dedup.duplicateClusters(day0), legacyPath)
-    StandingState.updateClusters(legacyPath, ing1)
-    StandingState.updateClusters(legacyPath, ing2)
-    val expect = StandingState.loadClusters(spark, legacyPath)
-      .as[(Long, Long, Int)].collect().toSet
-    // partitioned path: same ingests, bucketed table
+    // the full-rewrite reference: one batch CC over every pair
+    val expect = Dedup.duplicateClusters(
+      day0.unionByName(ing1).unionByName(ing2)).as[(Long, Long, Int)].collect().toSet
+    // bucketed table: day-0 labels, then the two ingests folded in
     val partPath = java.nio.file.Files.createTempDirectory("clusters_part_").toString
-    StandingState.writeClustersPartitioned(
+    StandingState.writeClusters(
       Dedup.duplicateClusters(day0), partPath, nParts = 8)
     def fileSnapshot(): Map[String, Long] = {
       import scala.jdk.CollectionConverters._
@@ -393,8 +388,6 @@ class StandingStateSpec extends SparkSpec {
     val got = StandingState.loadClusters(spark, partPath)
       .as[(Long, Long, Int)].collect().toSet
     assert(got === expect)
-    assert(got === Dedup.duplicateClusters(
-      day0.unionByName(ing1).unionByName(ing2)).as[(Long, Long, Int)].collect().toSet)
     // IO tracks touched clusters, not the table: ingest 1 touches the
     // components rooted 1 and 10 (merged via doc 100) and creates
     // {200, 201} — the partitions of the UNTOUCHED clusters {20,21} and
@@ -412,7 +405,7 @@ class StandingStateSpec extends SparkSpec {
   test("partitioned clusters: crash between commit marker and renames rolls FORWARD on load") {
     val day0 = Seq((1L, 2L), (10L, 11L)).toDF("doc_a", "doc_b")
     val path = java.nio.file.Files.createTempDirectory("clusters_crash_").toString
-    StandingState.writeClustersPartitioned(Dedup.duplicateClusters(day0), path, nParts = 4)
+    StandingState.writeClusters(Dedup.duplicateClusters(day0), path, nParts = 4)
     // manufacture the mid-commit crash state BY HAND: stage a replacement
     // for the partition holding cluster {1,2,3} (cpart = 1 % 4 = 1) plus
     // the marker — exactly what a crash right after the commit point
@@ -609,11 +602,11 @@ class StandingStateSpec extends SparkSpec {
   }
 
   test("crash matrix: every unpartitioned swap crash shape recovers or fails loudly") {
-    // the partitioned commit's crash shapes are pinned by the
-    // roll-forward test above; this is the UNPARTITIONED swapTable twin
-    // (verdict stretch: verify both paths match) — every reachable
-    // on-disk shape of a crashed swap must either self-heal or fail
-    // loudly, never serve wrong labels silently
+    // the touched-partition commit's crash shapes are pinned by the
+    // roll-forward test above; this is the whole-table swapTable twin
+    // (the exact relabel's commit) over the bucketed labels table —
+    // every reachable on-disk shape of a crashed swap must either
+    // self-heal or fail loudly, never serve wrong labels silently
     import org.apache.spark.sql.DataFrame
     val day0 = Seq((1L, 2L), (10L, 11L)).toDF("doc_a", "doc_b")
     def fresh(): (String, Set[(Long, Long, Int)]) = {
@@ -852,81 +845,60 @@ class StandingStateSpec extends SparkSpec {
       === Set(3L, 100L, 900L))
   }
 
-  test("keyed expire == legacy rebuild expire row-identically (differential)") {
-    // the O(expired) anti-join regime must be RESULT-INVISIBLE vs the
-    // legacy O(retained) rebuild: same corpus, same predicate, same
-    // retained rows, same consumer-visible artifact sets
+  test("keyed expire == StandingState.build over the retained corpus") {
+    // the O(expired) anti-join pass must be RESULT-INVISIBLE vs building
+    // the artifacts from scratch over the retained corpus: same retained
+    // rows, same consumer-visible artifact sets
     val mk: Int => String = i => (1 to 24).map(j => s"dx${i}x$j").mkString(" ")
     val cfg = CorpusPipeline.Config(removeDupSpans = Some((6, 2)))
     val rows = Seq((1L, mk(1)), (2L, mk(2)), (3L, mk(2)), (4L, mk(4)))
-    def setup(tag: String, keyed: Boolean): (String, String) = {
-      val corpusDir = java.nio.file.Files
-        .createTempDirectory(s"dexp_${tag}_docs_").toString
-      rows.toDF("doc_id", "text").write.mode("overwrite").parquet(corpusDir)
-      val statePath = java.nio.file.Files
-        .createTempDirectory(s"dexp_${tag}_state_").toString
-      StandingState.write(spark.read.parquet(corpusDir), statePath, cfg,
-        docKeyed = keyed)
-      (corpusDir, statePath)
-    }
-    val (corpusK, stateK) = setup("keyed", keyed = true)
-    val (corpusL, stateL) = setup("legacy", keyed = false)
-    // regimes really differ on disk (self-describing schema)
-    assert(spark.read.parquet(s"$stateK/digests").columns.contains("doc_id"))
-    assert(!spark.read.parquet(s"$stateL/digests").columns.contains("doc_id"))
+    val corpusDir = java.nio.file.Files.createTempDirectory("dexp_docs_").toString
+    rows.toDF("doc_id", "text").write.mode("overwrite").parquet(corpusDir)
+    val statePath = java.nio.file.Files.createTempDirectory("dexp_state_").toString
+    StandingState.write(spark.read.parquet(corpusDir), statePath, cfg)
     val pred = col("doc_id") === 1L || col("doc_id") === 2L
-    assert(StandingState.expire(spark, stateK, corpusK, pred) === 2L)
-    assert(StandingState.expire(spark, stateL, corpusL, pred) === 2L)
-    def corpusRows(dir: String): Seq[String] =
-      spark.read.parquet(dir).orderBy("doc_id").collect().map(_.toString).toSeq
-    assert(corpusRows(corpusK) === corpusRows(corpusL))
+    assert(StandingState.expire(spark, statePath, corpusDir, pred) === 2L)
+    assert(spark.read.parquet(corpusDir).orderBy("doc_id").collect().map(_.toString).toSeq ===
+      rows.toDF("doc_id", "text").filter(!pred).orderBy("doc_id").collect().map(_.toString).toSeq)
+    // the pure reference: the artifacts of the retained rows, built fresh
+    val ref = StandingState.build(rows.toDF("doc_id", "text").filter(!pred), cfg)
     // consumer projections: the exact leg's digest set, the span leg's
-    // hash set, the LSH leg's band rows — identical across regimes
-    def digestSet(p: String): Set[String] =
-      spark.read.parquet(s"$p/digests").select("digest")
-        .distinct().as[String].collect().toSet
-    def spanSet(p: String): Set[String] =
-      spark.read.parquet(s"$p/span_hashes").select("h")
-        .distinct().as[String].collect().toSet
-    def bandRows(p: String): Set[String] =
-      spark.read.parquet(s"$p/bands").distinct()
-        .orderBy("doc_id", "band").collect().map(_.toString).toSet
-    assert(digestSet(stateK) === digestSet(stateL))
-    assert(spanSet(stateK) === spanSet(stateL))
-    assert(bandRows(stateK) === bandRows(stateL))
-    // the shared-digest invariant holds in BOTH: doc 3 (replica of
-    // expired 2) is retained, so the shared digest must still stand
+    // hash set, the LSH leg's band rows
+    def digestSet(df: org.apache.spark.sql.DataFrame): Set[String] =
+      df.select("digest").distinct().as[String].collect().toSet
+    def spanSet(df: org.apache.spark.sql.DataFrame): Set[String] =
+      df.select("h").distinct().as[String].collect().toSet
+    def bandRows(df: org.apache.spark.sql.DataFrame): Set[String] =
+      df.select("doc_id", "band", "sig", "n").distinct().collect().map(_.toString).toSet
+    val loaded = StandingState.load(spark, statePath)
+    assert(digestSet(loaded.digests) === digestSet(ref.digests))
+    assert(spanSet(loaded.spanIndex.get._1) === spanSet(ref.spanIndex.get._1))
+    assert(bandRows(loaded.bands) === bandRows(ref.bands))
+    assert(digestSet(loaded.digests).nonEmpty && bandRows(loaded.bands).nonEmpty)
+    // the shared-digest invariant: doc 3 (replica of expired 2) is
+    // retained, so the shared digest must still stand
     val replica = Seq((900L, mk(2))).toDF("doc_id", "text")
-    Seq(stateK, stateL).foreach { p =>
-      val st = StandingState.load(spark, p)
-      assert(Dedup.exactIncrementalVsDigests(replica, st.digests).count() === 0L)
-    }
+    assert(Dedup.exactIncrementalVsDigests(replica, loaded.digests).count() === 0L)
   }
 
-  test("expire retains NULL-predicate rows in both regimes") {
+  test("expire retains NULL-predicate rows") {
     // a destructive maintenance op must not treat don't-know as expired:
     // a row where the predicate evaluates NULL (null ts) is RETAINED
     val mk: Int => String = i => (1 to 24).map(j => s"nx${i}x$j").mkString(" ")
-    Seq(true, false).foreach { keyed =>
-      val corpusDir = java.nio.file.Files
-        .createTempDirectory(s"nexp_docs_$keyed").toString
-      Seq((1L, mk(1), Some("2024-01-01 00:00:00")),
-          (2L, mk(2), None),
-          (3L, mk(3), Some("2024-06-01 00:00:00")))
-        .toDF("doc_id", "text", "ts")
-        .withColumn("ts", col("ts").cast("timestamp"))
-        .write.mode("overwrite").parquet(corpusDir)
-      val statePath = java.nio.file.Files
-        .createTempDirectory(s"nexp_state_$keyed").toString
-      StandingState.write(spark.read.parquet(corpusDir), statePath,
-        docKeyed = keyed)
-      val n = StandingState.expire(spark, statePath, corpusDir,
-        col("ts") < lit("2024-03-01 00:00:00").cast("timestamp"))
-      assert(n === 1L, s"keyed=$keyed: only the positively-matching row drops")
-      assert(spark.read.parquet(corpusDir).select("doc_id").as[Long]
-        .collect().toSet === Set(2L, 3L),
-        s"keyed=$keyed: the NULL-ts row must be retained")
-    }
+    val corpusDir = java.nio.file.Files.createTempDirectory("nexp_docs_").toString
+    Seq((1L, mk(1), Some("2024-01-01 00:00:00")),
+        (2L, mk(2), None),
+        (3L, mk(3), Some("2024-06-01 00:00:00")))
+      .toDF("doc_id", "text", "ts")
+      .withColumn("ts", col("ts").cast("timestamp"))
+      .write.mode("overwrite").parquet(corpusDir)
+    val statePath = java.nio.file.Files.createTempDirectory("nexp_state_").toString
+    StandingState.write(spark.read.parquet(corpusDir), statePath)
+    val n = StandingState.expire(spark, statePath, corpusDir,
+      col("ts") < lit("2024-03-01 00:00:00").cast("timestamp"))
+    assert(n === 1L, "only the positively-matching row drops")
+    assert(spark.read.parquet(corpusDir).select("doc_id").as[Long]
+      .collect().toSet === Set(2L, 3L), "the NULL-ts row must be retained")
   }
 
   test("expireEmbeddings: expired vectors unblock replicas end to end") {
@@ -968,55 +940,44 @@ class StandingStateSpec extends SparkSpec {
   test("relabelClusters after expire: ghosts drop, sizes recount, singletons drop, coarsening pinned") {
     val mk: Int => String = i =>
       "the tale of and to in " + (1 to 18).map(j => s"rc${i}x$j").mkString(" ")
-    def setup(partitioned: Boolean): (String, String) = {
-      val corpusDir = java.nio.file.Files
-        .createTempDirectory("relabel_docs_").toString
-      Seq(1L, 2L, 3L, 10L, 11L, 20L).map(i => (i, mk(i.toInt)))
-        .toDF("doc_id", "text")
-        .write.mode("overwrite").parquet(corpusDir)
-      val statePath = java.nio.file.Files
-        .createTempDirectory("relabel_state_").toString
-      StandingState.write(spark.read.parquet(corpusDir), statePath)
-      // cluster A = {1,2,3} connected THROUGH bridge doc 2; B = {10,11}
-      val labels = Dedup.duplicateClusters(
-        Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("doc_a", "doc_b"))
-      if (partitioned) StandingState.writeClustersPartitioned(labels, statePath, 4)
-      else StandingState.writeClusters(labels, statePath)
-      (corpusDir, statePath)
-    }
-    Seq(false, true).foreach { partitioned =>
-      val (corpusDir, statePath) = setup(partitioned)
-      // expire the bridge of A and one member of B, hygiene folded in
-      val n = StandingState.expire(spark, statePath, corpusDir,
-        expr("doc_id IN (2, 11)"), relabelClusters = true)
-      assert(n === 2L, s"partitioned=$partitioned")
-      val labels = StandingState.loadClusters(spark, statePath)
-        .select("doc_id", "cluster_id", "cluster_size")
-        .as[(Long, Long, Int)].collect().toSet
-      // ghosts (2, 11) gone; B shrank to singleton {10} and DROPPED;
-      // the pinned COARSENING: 1 and 3 were connected only through the
-      // expired bridge 2, but the pair edges are not persisted, so they
-      // stay co-labeled with the size recounted to the retained members
-      assert(labels === Set((1L, 1L, 2), (3L, 1L, 2)),
-        s"partitioned=$partitioned")
-      if (partitioned) {
-        // the bucketed layout survives the rewrite (cpart dirs + meta)
-        assert(spark.read.parquet(s"$statePath/clusters")
-          .columns.contains("cpart"), "bucketed layout lost")
-        assert(spark.read.parquet(s"$statePath/clusters_meta")
-          .head().getAs[Int]("n_parts") === 4)
-      }
-      // idempotent: no ghosts left -> 0, table untouched
-      assert(StandingState.relabelClusters(spark, statePath, corpusDir) === 0L)
-      // labels never affect ADMISSION: a replica of the EXPIRED bridge
-      // re-admits and a replica of a RETAINED doc drops, cluster rows or
-      // not — admission reads digests/bands only
-      assert(graft.streaming.CorpusIntakeJob.ingestTextBatch(
-        Seq((900L, mk(2)), (901L, mk(1))).toDF("doc_id", "text"),
-        statePath, corpusDir, tau = 0.5, gate = false, scrub = false) === 1L)
-      assert(spark.read.parquet(corpusDir).filter(col("doc_id") === 900L)
-        .count() === 1L, s"partitioned=$partitioned")
-    }
+    val corpusDir = java.nio.file.Files
+      .createTempDirectory("relabel_docs_").toString
+    Seq(1L, 2L, 3L, 10L, 11L, 20L).map(i => (i, mk(i.toInt)))
+      .toDF("doc_id", "text")
+      .write.mode("overwrite").parquet(corpusDir)
+    val statePath = java.nio.file.Files
+      .createTempDirectory("relabel_state_").toString
+    StandingState.write(spark.read.parquet(corpusDir), statePath)
+    // cluster A = {1,2,3} connected THROUGH bridge doc 2; B = {10,11}
+    StandingState.writeClusters(Dedup.duplicateClusters(
+      Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("doc_a", "doc_b")), statePath, 4)
+    // expire the bridge of A and one member of B, hygiene folded in
+    val n = StandingState.expire(spark, statePath, corpusDir,
+      expr("doc_id IN (2, 11)"), relabelClusters = true)
+    assert(n === 2L)
+    val labels = StandingState.loadClusters(spark, statePath)
+      .select("doc_id", "cluster_id", "cluster_size")
+      .as[(Long, Long, Int)].collect().toSet
+    // ghosts (2, 11) gone; B shrank to singleton {10} and DROPPED;
+    // the pinned COARSENING: 1 and 3 were connected only through the
+    // expired bridge 2, but the pair edges are not persisted, so they
+    // stay co-labeled with the size recounted to the retained members
+    assert(labels === Set((1L, 1L, 2), (3L, 1L, 2)))
+    // the bucketed layout survives the rewrite (cpart dirs + meta)
+    assert(spark.read.parquet(s"$statePath/clusters")
+      .columns.contains("cpart"), "bucketed layout lost")
+    assert(spark.read.parquet(s"$statePath/clusters_meta")
+      .head().getAs[Int]("n_parts") === 4)
+    // idempotent: no ghosts left -> 0, table untouched
+    assert(StandingState.relabelClusters(spark, statePath, corpusDir) === 0L)
+    // labels never affect ADMISSION: a replica of the EXPIRED bridge
+    // re-admits and a replica of a RETAINED doc drops, cluster rows or
+    // not — admission reads digests/bands only
+    assert(graft.streaming.CorpusIntakeJob.ingestTextBatch(
+      Seq((900L, mk(2)), (901L, mk(1))).toDF("doc_id", "text"),
+      statePath, corpusDir, tau = 0.5, gate = false, scrub = false) === 1L)
+    assert(spark.read.parquet(corpusDir).filter(col("doc_id") === 900L)
+      .count() === 1L)
   }
 
   test("relabelClusters bucketed: only ghost-bearing partitions rewritten, rest byte-untouched") {
@@ -1033,7 +994,7 @@ class StandingStateSpec extends SparkSpec {
     val statePath = java.nio.file.Files
       .createTempDirectory("tpart_state_").toString
     StandingState.write(spark.read.parquet(corpusDir), statePath)
-    StandingState.writeClustersPartitioned(
+    StandingState.writeClusters(
       Dedup.duplicateClusters(
         Seq((1L, 2L), (10L, 11L), (20L, 21L), (31L, 32L))
           .toDF("doc_a", "doc_b")),
@@ -1092,7 +1053,7 @@ class StandingStateSpec extends SparkSpec {
     val statePath = java.nio.file.Files
       .createTempDirectory("pcrash_state_").toString
     StandingState.write(spark.read.parquet(corpusDir), statePath)
-    StandingState.writeClustersPartitioned(
+    StandingState.writeClusters(
       Dedup.duplicateClusters(
         Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("doc_a", "doc_b")),
       statePath, 4)
@@ -1133,110 +1094,99 @@ class StandingStateSpec extends SparkSpec {
   test("relabelClusters crash shapes: leftover staged dir, stranded table, emptied labels") {
     val mk: Int => String = i =>
       "the tale of and to in " + (1 to 18).map(j => s"rx${i}x$j").mkString(" ")
-    Seq(false, true).foreach { partitioned =>
-      val corpusDir = java.nio.file.Files
-        .createTempDirectory("rcrash_docs_").toString
-      Seq(1L, 2L, 10L, 11L).map(i => (i, mk(i.toInt)))
-        .toDF("doc_id", "text")
-        .write.mode("overwrite").parquet(corpusDir)
-      val statePath = java.nio.file.Files
-        .createTempDirectory("rcrash_state_").toString
-      StandingState.write(spark.read.parquet(corpusDir), statePath)
-      val labels = Dedup.duplicateClusters(
-        Seq((1L, 2L), (10L, 11L)).toDF("doc_a", "doc_b"))
-      if (partitioned) StandingState.writeClustersPartitioned(labels, statePath, 4)
-      else StandingState.writeClusters(labels, statePath)
-      // (a) LEFTOVER STAGED DIR from a crashed pass: the next relabel
-      // must overwrite it, not die path-exists
-      java.nio.file.Files.createDirectories(
-        java.nio.file.Paths.get(statePath, "clusters__staged"))
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(statePath, "clusters__staged", "junk"),
-        "junk".getBytes("UTF-8"))
-      assert(StandingState.expire(spark, statePath, corpusDir,
-        expr("doc_id = 2"), relabelClusters = true) === 1L)
-      assert(StandingState.loadClusters(spark, statePath)
-        .select("doc_id").as[Long].collect().toSet === Set(10L, 11L),
-        s"partitioned=$partitioned")
-      // (b) STRANDED TABLE: simulate a crash between swapTable's two
-      // renames (live missing, only __retired) — relabel must heal and
-      // run, not read "no labels" and no-op forever
-      val live = java.nio.file.Paths.get(statePath, "clusters")
-      val retired = java.nio.file.Paths.get(statePath, "clusters__retired")
-      java.nio.file.Files.move(live, retired)
-      // strand a ghost by expiring WITHOUT the hygiene first
-      assert(StandingState.expire(spark, statePath, corpusDir,
-        expr("doc_id = 11")) === 1L)
-      assert(StandingState.relabelClusters(spark, statePath, corpusDir) === 1L,
-        s"partitioned=$partitioned: stranded table must heal, then drop the ghost")
-      // 11's ghost dropped -> 10 is a singleton -> cluster B gone: the
-      // labels EMPTIED, and the table must stay readable in both
-      // layouts (the bucketed layout degrades to the plain one — a
-      // zero-row dynamic partitionBy write would brick the table)
-      assert(StandingState.loadClusters(spark, statePath).count() === 0L,
-        s"partitioned=$partitioned")
-      assert(!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(statePath, "clusters_meta")) || !partitioned)
-      // idempotent after the empty rewrite
-      assert(StandingState.relabelClusters(spark, statePath, corpusDir) === 0L)
-    }
-  }
-
-  test("stale clusters_meta (crashed empty-degrade) completes: mutators route plain, never mixed") {
-    // the empty-degrade commits the plain table FIRST and deletes
-    // clusters_meta second; this test plants the crash shape between the
-    // two (plain table + surviving meta row) and pins that BOTH
-    // partitioned mutators complete the degrade — delete the stale meta
-    // and commit through the whole-table swap — instead of renaming
-    // cpart= dirs into a directory of plain files (a mixed table every
-    // reader would double-read)
-    val mk: Int => String = i =>
-      "the tale of and to in " + (1 to 18).map(j => s"sm${i}x$j").mkString(" ")
     val corpusDir = java.nio.file.Files
-      .createTempDirectory("smeta_docs_").toString
-    Seq(1L, 2L, 10L, 11L).map(i => (i, mk(i.toInt))).toDF("doc_id", "text")
+      .createTempDirectory("rcrash_docs_").toString
+    Seq(1L, 2L, 10L, 11L).map(i => (i, mk(i.toInt)))
+      .toDF("doc_id", "text")
       .write.mode("overwrite").parquet(corpusDir)
     val statePath = java.nio.file.Files
-      .createTempDirectory("smeta_state_").toString
+      .createTempDirectory("rcrash_state_").toString
     StandingState.write(spark.read.parquet(corpusDir), statePath)
-    StandingState.writeClusters(
-      Dedup.duplicateClusters(Seq((1L, 2L), (10L, 11L)).toDF("doc_a", "doc_b")),
-      statePath)
-    def plantStaleMeta(): Unit =
-      Seq(4).toDF("n_parts").coalesce(1)
-        .write.mode("overwrite").parquet(s"$statePath/clusters_meta")
-    def cpartDirs(): Seq[String] = {
+    StandingState.writeClusters(Dedup.duplicateClusters(
+      Seq((1L, 2L), (10L, 11L)).toDF("doc_a", "doc_b")), statePath, 4)
+    // (a) LEFTOVER STAGED DIR from a crashed whole-table swap: inert for
+    // the touched-partition pass, which must proceed
+    java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(statePath, "clusters__staged"))
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(statePath, "clusters__staged", "junk"),
+      "junk".getBytes("UTF-8"))
+    assert(StandingState.expire(spark, statePath, corpusDir,
+      expr("doc_id = 2"), relabelClusters = true) === 1L)
+    assert(StandingState.loadClusters(spark, statePath)
+      .select("doc_id").as[Long].collect().toSet === Set(10L, 11L))
+    // (b) STRANDED TABLE: simulate a crash between swapTable's two
+    // renames (live missing, only __retired) — relabel must heal and
+    // run, not read "no labels" and no-op forever
+    val live = java.nio.file.Paths.get(statePath, "clusters")
+    val retired = java.nio.file.Paths.get(statePath, "clusters__retired")
+    java.nio.file.Files.move(live, retired)
+    // strand a ghost by expiring WITHOUT the hygiene first
+    assert(StandingState.expire(spark, statePath, corpusDir,
+      expr("doc_id = 11")) === 1L)
+    assert(StandingState.relabelClusters(spark, statePath, corpusDir) === 1L,
+      "stranded table must heal, then drop the ghost")
+    // 11's ghost dropped -> 10 is a singleton -> cluster B gone: the
+    // labels EMPTIED, and the table must stay readable in its layout
+    assert(StandingState.loadClusters(spark, statePath).count() === 0L)
+    assert(java.nio.file.Files.exists(
+      java.nio.file.Paths.get(statePath, "clusters_meta")))
+    // idempotent after the empty rewrite
+    assert(StandingState.relabelClusters(spark, statePath, corpusDir) === 0L)
+  }
+
+  test("empty labels: writeClusters and a relabel to zero keep the bucketed layout; updateClusters repopulates") {
+    def cpartDirs(statePath: String): Set[String] = {
       import scala.jdk.CollectionConverters._
-      val st = java.nio.file.Files.list(
-        java.nio.file.Paths.get(statePath, "clusters"))
+      val st = java.nio.file.Files.list(java.nio.file.Paths.get(statePath, "clusters"))
       try st.iterator().asScala.map(_.getFileName.toString)
-        .filter(_.startsWith("cpart=")).toSeq
+        .filter(_.startsWith("cpart=")).toSet
       finally st.close()
     }
-    // (a) updateClusters at the crash shape
-    plantStaleMeta()
-    StandingState.updateClusters(statePath, Seq((1L, 10L)).toDF("doc_a", "doc_b"))
-    assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(statePath, "clusters_meta")),
-      "stale meta must be completed (deleted), not trusted")
-    assert(cpartDirs().isEmpty,
-      "mixed layout: cpart= dirs renamed into a plain table")
-    assert(StandingState.loadClusters(spark, statePath)
-      .select("doc_id", "cluster_id", "cluster_size")
-      .as[(Long, Long, Int)].collect().toSet ===
-      Set((1L, 1L, 4), (2L, 1L, 4), (10L, 1L, 4), (11L, 1L, 4)))
-    // (b) relabelClusters (ghost hygiene) at the same crash shape
-    plantStaleMeta()
-    assert(StandingState.expire(
-      spark, statePath, corpusDir, expr("doc_id = 2")) === 1L)
-    assert(StandingState.relabelClusters(spark, statePath, corpusDir) === 1L)
-    assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(statePath, "clusters_meta")))
-    assert(cpartDirs().isEmpty)
-    assert(StandingState.loadClusters(spark, statePath)
-      .select("doc_id", "cluster_id", "cluster_size")
-      .as[(Long, Long, Int)].collect().toSet ===
-      Set((1L, 1L, 3), (10L, 1L, 3), (11L, 1L, 3)))
+    def labelsOf(statePath: String): Set[(Long, Long, Int)] =
+      StandingState.loadClusters(spark, statePath)
+        .as[(Long, Long, Int)].collect().toSet
+    // (a) writeClusters over ZERO labels: loads as zero rows with the
+    // label schema, in the bucketed layout
+    val emptyPath = java.nio.file.Files.createTempDirectory("empty_labels_").toString
+    StandingState.writeClusters(
+      Dedup.duplicateClusters(Seq((1L, 2L)).toDF("doc_a", "doc_b")).limit(0),
+      emptyPath, 4)
+    val empty = StandingState.loadClusters(spark, emptyPath)
+    assert(empty.count() === 0L)
+    assert(empty.columns.toSeq === Seq("doc_id", "cluster_id", "cluster_size"))
+    assert(cpartDirs(emptyPath).nonEmpty)
+    StandingState.updateClusters(emptyPath, Seq((5L, 6L)).toDF("doc_a", "doc_b"))
+    assert(labelsOf(emptyPath) === Set((5L, 5L, 2), (6L, 5L, 2)))
+
+    // (b) relabel DOWN to zero labels over a populated table: every
+    // cluster loses a member to expire, so every touched partition ends
+    // empty
+    val mk: Int => String = i =>
+      "the tale of and to in " + (1 to 18).map(j => s"ez${i}x$j").mkString(" ")
+    val corpusDir = java.nio.file.Files.createTempDirectory("ezero_docs_").toString
+    Seq(1L, 2L, 10L, 11L).map(i => (i, mk(i.toInt))).toDF("doc_id", "text")
+      .write.mode("overwrite").parquet(corpusDir)
+    val statePath = java.nio.file.Files.createTempDirectory("ezero_state_").toString
+    StandingState.write(spark.read.parquet(corpusDir), statePath)
+    StandingState.writeClusters(Dedup.duplicateClusters(
+      Seq((1L, 2L), (10L, 11L)).toDF("doc_a", "doc_b")), statePath, 4)
+    val before = cpartDirs(statePath)
+    assert(before === Set("cpart=1", "cpart=2"))
+    assert(StandingState.expire(spark, statePath, corpusDir,
+      expr("doc_id IN (2, 11)"), relabelClusters = true) === 2L)
+    // zero rows loaded in between, same layout: cpart dirs + meta row
+    assert(labelsOf(statePath).isEmpty)
+    assert(cpartDirs(statePath) === before)
+    assert(spark.read.parquet(s"$statePath/clusters_meta")
+      .head().getAs[Int]("n_parts") === 4)
+    // the next ingest's pairs repopulate through the touched-partition
+    // commit
+    StandingState.updateClusters(statePath,
+      Seq((1L, 10L), (20L, 21L)).toDF("doc_a", "doc_b"))
+    assert(labelsOf(statePath) ===
+      Set((1L, 1L, 2), (10L, 1L, 2), (20L, 20L, 2), (21L, 20L, 2)))
+    assert(spark.read.parquet(s"$statePath/clusters").columns.contains("cpart"))
   }
 
   test("DSIR ratios: torn/partial tables refuse at load, re-fit swaps, crashed swap heals") {
@@ -1303,9 +1253,8 @@ class StandingStateSpec extends SparkSpec {
     java.nio.file.Files.move(
       java.nio.file.Paths.get(statePath, "digests"),
       java.nio.file.Paths.get(statePath, "digests__retired"))
-    // the dispatch must HEAL (not read "no digests" / payload-free) and
-    // run the keyed subtraction — a downgrade would rebuild the
-    // artifacts without doc_id and undo the one-time migration
+    // expire must HEAL (not read "no digests") and run the keyed
+    // subtraction over the healed table
     assert(StandingState.expire(spark, statePath, corpusDir,
       col("doc_id") === 0L) === 1L)
     assert(spark.read.parquet(s"$statePath/digests")
@@ -1372,50 +1321,6 @@ class StandingStateSpec extends SparkSpec {
     // idempotent re-run
     assert(StandingState.expireMedia(spark, statePath, mediaDir,
       col("media_id") === 1L) === 0L)
-  }
-
-  test("migrateToKeyed: one-time legacy->keyed rebuild; consumers unchanged; expire turns subtractive") {
-    val mk: Int => String = i => (1 to 24).map(j => s"mg${i}x$j").mkString(" ")
-    val corpusDir = java.nio.file.Files.createTempDirectory("mig_docs_").toString
-    Seq((1L, mk(1)), (2L, mk(2))).toDF("doc_id", "text")
-      .write.mode("overwrite").parquet(corpusDir)
-    val statePath = java.nio.file.Files.createTempDirectory("mig_state_").toString
-    val cfg = CorpusPipeline.Config(removeDupSpans = Some((6, 2)))
-    StandingState.write(spark.read.parquet(corpusDir), statePath, cfg,
-      docKeyed = false)
-    // ingest against the LEGACY state so appended artifacts are
-    // payload-free too (the span/digest appends follow the table schema)
-    assert(graft.streaming.CorpusIntakeJob.ingestTextBatch(
-      Seq((3L, mk(3))).toDF("doc_id", "text"),
-      statePath, corpusDir, tau = 0.5, gate = false, scrub = false) === 1L)
-    assert(!spark.read.parquet(s"$statePath/digests").columns.contains("doc_id"))
-    assert(!spark.read.parquet(s"$statePath/span_hashes").columns.contains("doc_id"))
-    def digestSet: Set[String] = spark.read.parquet(s"$statePath/digests")
-      .select("digest").distinct().as[String].collect().toSet
-    def spanSet: Set[String] = spark.read.parquet(s"$statePath/span_hashes")
-      .select("h").distinct().as[String].collect().toSet
-    def bandSet: Set[String] = spark.read.parquet(s"$statePath/bands")
-      .distinct().collect().map(_.toString).toSet
-    val (d0, s0, b0) = (digestSet, spanSet, bandSet)
-
-    assert(StandingState.migrateToKeyed(spark, statePath, corpusDir))
-    // keyed on disk, consumer projections unchanged
-    assert(spark.read.parquet(s"$statePath/digests").columns.contains("doc_id"))
-    assert(spark.read.parquet(s"$statePath/span_hashes").columns.contains("doc_id"))
-    assert(digestSet === d0 && spanSet === s0 && bandSet === b0)
-    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(statePath, "_lease")))
-    // idempotent: already keyed -> no-op
-    assert(!StandingState.migrateToKeyed(spark, statePath, corpusDir))
-    // expire now runs the SUBTRACTIVE regime end to end: doc 1 expires,
-    // a replica of its text re-admits, replicas of retained still drop
-    assert(StandingState.expire(spark, statePath, corpusDir,
-      col("doc_id") === 1L) === 1L)
-    assert(graft.streaming.CorpusIntakeJob.ingestTextBatch(
-      Seq((900L, mk(1))).toDF("doc_id", "text"),
-      statePath, corpusDir, tau = 0.5, gate = false, scrub = false) === 1L)
-    assert(graft.streaming.CorpusIntakeJob.ingestTextBatch(
-      Seq((901L, mk(2)), (902L, mk(3))).toDF("doc_id", "text"),
-      statePath, corpusDir, tau = 0.5, gate = false, scrub = false) === 0L)
   }
 
   test("a staged dir deleted mid-compaction (cross-host staged-GC) re-pins cleanly") {
@@ -1497,69 +1402,59 @@ class StandingStateSpec extends SparkSpec {
     def labelsOf(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Int)] =
       df.select("doc_id", "cluster_id", "cluster_size")
         .as[(Long, Long, Int)].collect().toSet
-    def setup(partitioned: Boolean): (String, String) = {
-      val corpusDir = java.nio.file.Files.createTempDirectory("pe_docs_").toString
-      (1 to 5).map(i => (i.toLong, mk(i), "s"))
-        .toDF("doc_id", "text", "source")
-        .write.mode("overwrite").parquet(corpusDir)
-      val statePath = java.nio.file.Files.createTempDirectory("pe_state_").toString
-      StandingState.write(spark.read.parquet(corpusDir), statePath)
-      // 3 BRIDGES 1 and 2 (no direct 1-2 edge); 4-5 is a direct pair
-      val pairs = Seq((1L, 3L), (2L, 3L), (4L, 5L)).toDF("doc_a", "doc_b")
-      val labels = Dedup.duplicateClusters(pairs)
-      if (partitioned)
-        StandingState.writeClustersPartitioned(labels, statePath, nParts = 4)
-      else StandingState.writeClusters(labels, statePath)
-      StandingState.writePairEdges(pairs, statePath)
-      (corpusDir, statePath)
-    }
-
-    for (partitioned <- Seq(false, true)) {
-      val (corpusDir, statePath) = setup(partitioned)
-      // keyed expire of the bridge doc subtracts its edges like every
-      // other doc-keyed artifact (an edge drops when EITHER end expires)
-      assert(StandingState.expire(
-        spark, statePath, corpusDir, col("doc_id") === 3L) === 1L)
-      assert(StandingState.loadPairEdges(spark, statePath)
-        .as[(Long, Long)].collect().toSet === Set((4L, 5L)))
-      // COARSE default first: 1 and 2 stay co-labeled (documented
-      // coarsening), sizes recounted
-      assert(StandingState.relabelClusters(spark, statePath, corpusDir) === 1L)
-      val coarse = labelsOf(StandingState.loadClusters(spark, statePath))
-      assert(coarse.filter(r => Set(1L, 2L)(r._1)).map(_._3) === Set(2),
-        s"coarse form must keep the bridged pair co-labeled (layout part=$partitioned)")
-      // EXACT relabel: the bridge is gone, so 1 and 2 split to singletons
-      // and drop; result == fresh CC over the retained verified pairs
-      assert(StandingState.relabelClusters(
-        spark, statePath, corpusDir, exact = true) === 2L)
-      val exact = labelsOf(StandingState.loadClusters(spark, statePath))
-      assert(exact === labelsOf(
-        Dedup.duplicateClusters(Seq((4L, 5L)).toDF("doc_a", "doc_b"))),
-        s"exact relabel must equal fresh CC over retained pairs (part=$partitioned)")
-      // idempotent: a re-run removes nothing further
-      assert(StandingState.relabelClusters(
-        spark, statePath, corpusDir, exact = true) === 0L)
-      // updateClusters MAINTAINS the edge table once present: a new
-      // direct 1-2 pair appends and survives the next exact relabel
-      StandingState.updateClusters(statePath, Seq((1L, 2L)).toDF("doc_a", "doc_b"))
-      assert(StandingState.loadPairEdges(spark, statePath)
-        .as[(Long, Long)].collect().toSet === Set((4L, 5L), (1L, 2L)))
-      assert(StandingState.relabelClusters(
-        spark, statePath, corpusDir, exact = true) === 0L)
-      assert(labelsOf(StandingState.loadClusters(spark, statePath)) ===
-        labelsOf(Dedup.duplicateClusters(
-          Seq((4L, 5L), (1L, 2L)).toDF("doc_a", "doc_b"))))
-    }
+    val corpusDir = java.nio.file.Files.createTempDirectory("pe_docs_").toString
+    (1 to 5).map(i => (i.toLong, mk(i), "s"))
+      .toDF("doc_id", "text", "source")
+      .write.mode("overwrite").parquet(corpusDir)
+    val statePath = java.nio.file.Files.createTempDirectory("pe_state_").toString
+    StandingState.write(spark.read.parquet(corpusDir), statePath)
+    // 3 BRIDGES 1 and 2 (no direct 1-2 edge); 4-5 is a direct pair
+    val pairs = Seq((1L, 3L), (2L, 3L), (4L, 5L)).toDF("doc_a", "doc_b")
+    StandingState.writeClusters(Dedup.duplicateClusters(pairs), statePath, nParts = 4)
+    StandingState.writePairEdges(pairs, statePath)
+    // keyed expire of the bridge doc subtracts its edges like every
+    // other doc-keyed artifact (an edge drops when EITHER end expires)
+    assert(StandingState.expire(
+      spark, statePath, corpusDir, col("doc_id") === 3L) === 1L)
+    assert(StandingState.loadPairEdges(spark, statePath)
+      .as[(Long, Long)].collect().toSet === Set((4L, 5L)))
+    // COARSE default first: 1 and 2 stay co-labeled (documented
+    // coarsening), sizes recounted
+    assert(StandingState.relabelClusters(spark, statePath, corpusDir) === 1L)
+    val coarse = labelsOf(StandingState.loadClusters(spark, statePath))
+    assert(coarse.filter(r => Set(1L, 2L)(r._1)).map(_._3) === Set(2),
+      "coarse form must keep the bridged pair co-labeled")
+    // EXACT relabel: the bridge is gone, so 1 and 2 split to singletons
+    // and drop; result == fresh CC over the retained verified pairs
+    assert(StandingState.relabelClusters(
+      spark, statePath, corpusDir, exact = true) === 2L)
+    val exact = labelsOf(StandingState.loadClusters(spark, statePath))
+    assert(exact === labelsOf(
+      Dedup.duplicateClusters(Seq((4L, 5L)).toDF("doc_a", "doc_b"))),
+      "exact relabel must equal fresh CC over retained pairs")
+    // idempotent: a re-run removes nothing further
+    assert(StandingState.relabelClusters(
+      spark, statePath, corpusDir, exact = true) === 0L)
+    // updateClusters MAINTAINS the edge table once present: a new
+    // direct 1-2 pair appends and survives the next exact relabel
+    StandingState.updateClusters(statePath, Seq((1L, 2L)).toDF("doc_a", "doc_b"))
+    assert(StandingState.loadPairEdges(spark, statePath)
+      .as[(Long, Long)].collect().toSet === Set((4L, 5L), (1L, 2L)))
+    assert(StandingState.relabelClusters(
+      spark, statePath, corpusDir, exact = true) === 0L)
+    assert(labelsOf(StandingState.loadClusters(spark, statePath)) ===
+      labelsOf(Dedup.duplicateClusters(
+        Seq((4L, 5L), (1L, 2L)).toDF("doc_a", "doc_b"))))
     // exact without edges fails loudly — silently falling back to the
     // coarse form would misreport the semantics the caller asked for
-    val corpusDir = java.nio.file.Files.createTempDirectory("pe_docs2_").toString
+    val corpusDir2 = java.nio.file.Files.createTempDirectory("pe_docs2_").toString
     Seq((1L, mk(1), "s")).toDF("doc_id", "text", "source")
-      .write.mode("overwrite").parquet(corpusDir)
-    val statePath = java.nio.file.Files.createTempDirectory("pe_state2_").toString
+      .write.mode("overwrite").parquet(corpusDir2)
+    val statePath2 = java.nio.file.Files.createTempDirectory("pe_state2_").toString
     StandingState.writeClusters(
-      Dedup.duplicateClusters(Seq((1L, 2L)).toDF("doc_a", "doc_b")), statePath)
+      Dedup.duplicateClusters(Seq((1L, 2L)).toDF("doc_a", "doc_b")), statePath2)
     intercept[IllegalArgumentException](
-      StandingState.relabelClusters(spark, statePath, corpusDir, exact = true))
+      StandingState.relabelClusters(spark, statePath2, corpusDir2, exact = true))
   }
 
   test("source census: maintained == recount after init, each ingest append, and expire; consumers agree") {
@@ -1731,4 +1626,123 @@ class StandingStateSpec extends SparkSpec {
     assert(StandingState.loadDsirRatios(spark, statePath, 64, 1.0)
       .count() === 64L)
   }
+
+  test("payload-free digests and unbucketed clusters fail at load with the rewrite message") {
+    val mk: Int => String = i => (1 to 24).map(j => s"pf${i}x$j").mkString(" ")
+    val corpusDir = java.nio.file.Files.createTempDirectory("pfree_docs_").toString
+    Seq((1L, mk(1)), (2L, mk(2))).toDF("doc_id", "text")
+      .write.mode("overwrite").parquet(corpusDir)
+    val statePath = java.nio.file.Files.createTempDirectory("pfree_state_").toString
+    val cfg = CorpusPipeline.Config(removeDupSpans = Some((6, 2)))
+    StandingState.write(spark.read.parquet(corpusDir), statePath, cfg)
+    // plant the payload-free layout of older code: hash rows, no doc_id
+    def stripDocId(table: String, hash: String): Unit =
+      spark.read.parquet(s"$statePath/$table").select(hash).distinct()
+        .localCheckpoint(true)
+        .write.mode("overwrite").parquet(s"$statePath/$table")
+    stripDocId("digests", "digest")
+    val e1 = intercept[IllegalStateException](StandingState.load(spark, statePath))
+    assert(e1.getMessage.contains("digests") &&
+      e1.getMessage.contains("rewrite it via StandingState.write"), e1.getMessage)
+    val e2 = intercept[IllegalStateException](StandingState.expire(
+      spark, statePath, corpusDir, col("doc_id") === 1L))
+    assert(e2.getMessage.contains("rewrite it via StandingState.write"), e2.getMessage)
+    assert(spark.read.parquet(corpusDir).count() === 2L,
+      "the refusal must come before any mutation")
+    // the span index likewise, after a rewrite restored the digests
+    StandingState.write(spark.read.parquet(corpusDir), statePath, cfg)
+    stripDocId("span_hashes", "h")
+    val e3 = intercept[IllegalStateException](StandingState.load(spark, statePath))
+    assert(e3.getMessage.contains("span_hashes") &&
+      e3.getMessage.contains("rewrite it via StandingState.write"), e3.getMessage)
+    intercept[IllegalStateException](StandingState.loadSpanIndex(spark, statePath))
+    StandingState.write(spark.read.parquet(corpusDir), statePath, cfg)
+    assert(StandingState.load(spark, statePath).spanIndex.isDefined)
+    // an unbucketed clusters/ table (no clusters_meta): loud at load and
+    // at update, healthy again after writeClusters
+    val labels = Dedup.duplicateClusters(Seq((1L, 2L)).toDF("doc_a", "doc_b"))
+    labels.write.mode("overwrite").parquet(s"$statePath/clusters")
+    val e4 = intercept[IllegalStateException](StandingState.loadClusters(spark, statePath))
+    assert(e4.getMessage.contains("clusters_meta") &&
+      e4.getMessage.contains("rewrite it via StandingState.writeClusters"), e4.getMessage)
+    intercept[IllegalStateException](StandingState.updateClusters(
+      statePath, Seq((2L, 3L)).toDF("doc_a", "doc_b")))
+    StandingState.writeClusters(labels, statePath)
+    assert(StandingState.loadClusters(spark, statePath).count() === 2L)
+  }
+
+  test("a failed overwrite of an existing state never loads as complete") {
+    // parent dir name "overwrite_tear_" selects the state whose centroids
+    // write the test committer fails at job commit (below)
+    val path = java.nio.file.Files.createTempDirectory("overwrite_tear_").toString
+    val emb = Seq((1L, Seq.fill(8)(1.0f)), (2L, Seq.fill(8)(-1.0f)),
+        (3L, Seq.fill(8)(0.5f)), (4L, Seq.fill(8)(-0.5f)))
+      .toDF("doc_id", "embedding")
+    val cfg = CorpusPipeline.Config(semDedupNCentroids = 2)
+    StandingState.write(docs(1L -> base(1), 2L -> base(2)), path, cfg,
+      embeddings = Some(emb))
+    assert(StandingState.load(spark, path).centroids.isDefined)
+    // overwrite with a new corpus: the digest/band legs land, the
+    // centroids leg fails
+    val key = "spark.sql.parquet.output.committer.class"
+    spark.conf.set(key, classOf[FailingCentroidsCommitter].getName)
+    try intercept[Exception](StandingState.write(
+      docs(3L -> base(3), 4L -> base(4)), path, cfg, embeddings = Some(emb)))
+    finally spark.conf.unset(key)
+    // the old meta must not vouch for the mixed tables
+    val e = intercept[Exception](StandingState.load(spark, path))
+    assert(e.getMessage.contains("meta"), e.getMessage)
+    // a completed rewrite loads again
+    StandingState.write(docs(3L -> base(3), 4L -> base(4)), path, cfg,
+      embeddings = Some(emb))
+    val loaded = StandingState.load(spark, path)
+    assert(loaded.centroids.isDefined)
+    assert(ids(loaded.digests) === Seq(3L, 4L))
+  }
+
+  test("expire's parallel compactors queue within the JVM for the lease") {
+    // the digests and bands subtractions run concurrently; released into
+    // phase 3 together with a zero lease-retry timeout, a compactor that
+    // found its SIBLING holding the lease would fail the whole expire.
+    // Only holders outside the JVM may count against the timeout.
+    val mk: Int => String = i => (1 to 24).map(j => s"pq${i}x$j").mkString(" ")
+    val corpusDir = java.nio.file.Files.createTempDirectory("pcomp_docs_").toString
+    (1L to 4L).map(i => (i, mk(i.toInt))).toDF("doc_id", "text")
+      .write.mode("overwrite").parquet(corpusDir)
+    val statePath = java.nio.file.Files.createTempDirectory("pcomp_state_").toString
+    StandingState.write(spark.read.parquet(corpusDir), statePath)
+    val atPhase3 = new java.util.concurrent.CountDownLatch(2)
+    StandingState.compactPostStageHook = { table =>
+      if (table == "digests" || table == "bands") {
+        atPhase3.countDown()
+        atPhase3.await(60, java.util.concurrent.TimeUnit.SECONDS)
+      }
+    }
+    spark.conf.set("spark.graft.lease.retryTimeoutMs", "0")
+    try assert(StandingState.expire(
+      spark, statePath, corpusDir, col("doc_id") === 1L) === 1L)
+    finally {
+      StandingState.compactPostStageHook = _ => ()
+      spark.conf.set("spark.graft.lease.retryTimeoutMs", "60000")
+    }
+    assert(atPhase3.getCount === 0L, "both compactors must reach phase 3")
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(statePath, "_lease")))
+    val state = StandingState.load(spark, statePath)
+    assert(ids(state.digests) === Seq(2L, 3L, 4L))
+    assert(ids(state.bands.select("doc_id").distinct()) === Seq(2L, 3L, 4L))
+  }
+}
+
+/** Parquet committer that fails the job commit of a `centroids` table
+  * under a dir named `overwrite_tear_*` and commits everything else
+  * normally — the injected failure of one [[StandingState.write]] leg. */
+class FailingCentroidsCommitter(
+    out: org.apache.hadoop.fs.Path,
+    ctx: org.apache.hadoop.mapreduce.TaskAttemptContext)
+    extends org.apache.parquet.hadoop.ParquetOutputCommitter(out, ctx) {
+  override def commitJob(job: org.apache.hadoop.mapreduce.JobContext): Unit =
+    if (out.getName == "centroids" &&
+        out.getParent.getName.startsWith("overwrite_tear_"))
+      throw new java.io.IOException(s"injected commit failure for $out")
+    else super.commitJob(job)
 }
