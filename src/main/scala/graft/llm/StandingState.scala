@@ -197,27 +197,33 @@ object StandingState {
   def load(spark: SparkSession, path: String): StandingState = {
     Seq("digests", "bands").foreach(heal(spark, path, _))
     val digests = requireDocKeyed(readTable(spark, s"$path/digests"), path, "digests")
-    val metaRow = cachedRegimeRow(spark, s"$path/meta")
-    val meta = Meta(metaRow.getAs[Int]("shingle_size"),
-      metaRow.getAs[Int]("num_hashes"),
-      metaRow.getAs[Int]("band_rows"), metaRow.getAs[Boolean]("normalized"))
+    val (meta, spanW) = textRegime(spark, path)
     val cs =
       if (!tableExists(spark, s"$path/centroids")) None
       else Some(spark.read.parquet(s"$path/centroids")
         .orderBy("idx").collect()
         .map(r => r.getSeq[Double](r.fieldIndex("c")).toSeq).toSeq)
-    val spans =
-      if (!tableExists(spark, s"$path/span_meta")) None
-      else {
-        heal(spark, path, "span_hashes")
-        val w = cachedRegimeRow(spark, s"$path/span_meta").getAs[Int]("w")
-        Some((requireDocKeyed(readTable(spark, s"$path/span_hashes"),
-          path, "span_hashes"), w))
-      }
+    val spans = spanW.map { w =>
+      heal(spark, path, "span_hashes")
+      (requireDocKeyed(readTable(spark, s"$path/span_hashes"), path, "span_hashes"), w)
+    }
     StandingState(
       digests,
       readTable(spark, s"$path/bands"),
       cs, meta, spans)
+  }
+
+  /** The text state's fingerprint regime and span-index width (Some iff
+    * the state carries a span index), read from the content-cached
+    * regime rows — write-time constants, so no Spark job. */
+  private def textRegime(spark: SparkSession, path: String): (Meta, Option[Int]) = {
+    val m = cachedRegimeRow(spark, s"$path/meta")
+    val meta = Meta(m.getAs[Int]("shingle_size"), m.getAs[Int]("num_hashes"),
+      m.getAs[Int]("band_rows"), m.getAs[Boolean]("normalized"))
+    val spanW =
+      if (!tableExists(spark, s"$path/span_meta")) None
+      else Some(cachedRegimeRow(spark, s"$path/span_meta").getAs[Int]("w"))
+    (meta, spanW)
   }
 
   /** `table` as read, or a loud failure when its rows carry no `doc_id`:
@@ -316,56 +322,24 @@ object StandingState {
   def append(
       batch: DataFrame,
       path: String,
-      cfg: CorpusPipeline.Config = CorpusPipeline.Config()): Unit =
-    appendWithMeta(batch, path, cfg, load(batch.sparkSession, path).meta)
-
-  /** [[append]] with the state's meta row already in hand — the streaming
-    * batch leg ([[graft.streaming.CorpusIntakeJob.ingestTextBatch]]) loads
-    * the state once per micro-batch and passes the meta through, skipping
-    * a second load per batch. Same compatibility checks, same write
-    * order. */
-  private[graft] def appendWithMeta(
-      batch: DataFrame,
-      path: String,
-      cfg: CorpusPipeline.Config,
-      meta: Meta): Unit = {
+      cfg: CorpusPipeline.Config = CorpusPipeline.Config()): Unit = {
     val spark = batch.sparkSession
-    val (digests, bands) = artifactsFor(batch, cfg, meta)
-    val spans = spanHashesFor(batch, path)
+    val state = load(spark, path)
+    val (digests, bands) = artifactsFor(batch, cfg, state.meta)
+    // the span index (when the state keeps one) closes its cycle the same
+    // way, under the state's PERSISTED window width — hashes of another
+    // width would never match
+    val spans = state.spanIndex.map { case (_, w) =>
+      TextOps.spanWindowHashesKeyed(batch, w)
+    }
     withLease(spark, path, "append") {
       writeArtifacts(digests, bands, path, spans)
     }
   }
 
-  /** The admitted batch's span-window hashes under the state's PERSISTED
-    * window width — Some iff the state carries a span index (`span_meta`
-    * exists). Appending these closes the span-dedup cycle exactly like
-    * digests/bands close the exact/near cycles: the next ingest's span
-    * stage sees this batch's windows as standing. `w` is read from the
-    * state, never passed — hashes built under a different width would
-    * never match and cross-batch duplication would silently sail through
-    * (the [[append]] band-regime rule applied to spans). */
-  private[graft] def spanHashesFor(
-      batch: DataFrame, path: String): Option[DataFrame] = {
-    val spark = batch.sparkSession
-    if (!tableExists(spark, s"$path/span_meta")) None
-    else {
-      val w = cachedRegimeRow(spark, s"$path/span_meta").getAs[Int]("w")
-      Some(TextOps.spanWindowHashesKeyed(batch, w))
-    }
-  }
-
-  /** [[spanHashesFor]] against an already-LOADED state — the streaming
-    * batch leg's form: [[load]] just resolved the span width, so
-    * re-probing the path per micro-batch would re-pay an existence probe
-    * and a regime-row read for a constant already in hand. */
-  private[graft] def spanHashesForState(
-      batch: DataFrame, state: StandingState): Option[DataFrame] =
-    state.spanIndex.map { case (_, w) => TextOps.spanWindowHashesKeyed(batch, w) }
-
-  /** The artifact projection of [[appendWithMeta]] split from its write,
-    * so the ingest batch leg can compute lazily and commit the corpus
-    * append + artifact append under ONE (retried) lease hold. */
+  /** The artifact projection of [[append]] split from its write, so the
+    * ingest batch leg can compute lazily and commit the corpus append +
+    * artifact append under ONE (retried) lease hold. */
   private[graft] def artifactsFor(
       batch: DataFrame,
       cfg: CorpusPipeline.Config,
@@ -375,7 +349,7 @@ object StandingState {
     artifacts(b, cfg, meta.numHashes, meta.bandRows)
   }
 
-  /** The write half of [[appendWithMeta]] — caller MUST hold the lease.
+  /** The write half of [[append]] — caller MUST hold the lease.
     * Digests and span hashes commit CONCURRENTLY (independent tables,
     * both projections of the same checkpointed admitted frame — round-19
     * append fusion: overlapping them cuts one append's wall time from
@@ -429,7 +403,7 @@ object StandingState {
     * (guide §2.6 — actions are only sequential because driver code calls
     * them sequentially): used where several tables derive from the same
     * input and carry no cross-table crash-ordering constraint among
-    * themselves ([[write]]'s initial table writes, [[expireKeyed]]'s
+    * themselves ([[write]]'s initial table writes, [[expireKind]]'s
     * artifact subtractions). EVERY task is awaited before the first
     * failure propagates — a caller sequencing a crash-ordered step after
     * this (meta write, corpus subtraction) must know no parallel job is
@@ -447,7 +421,7 @@ object StandingState {
   }
 
   /** Pool for [[inParallel]] — four daemon threads: the widest parallel
-    * group today is [[expireKeyed]]'s artifact tables (digests,
+    * group today is [[expire]]'s artifact tables (digests,
     * span_hashes, bands, pair_edges); the jobs are mostly driver-side
     * commit/rename latency plus small Spark jobs, so a deeper pool buys
     * nothing. */
@@ -979,7 +953,7 @@ object StandingState {
     * scaladoc convention; an append racing compact's snapshot->swap window
     * would be silently deleted with the old directory). Every mutator
     * ([[append]], [[appendEmbBuckets]], [[updateClusters]], [[compact]],
-    * [[repairEmbBuckets]]' rewrite) takes the lease for its write window:
+    * the repair passes' appends and rewrites) takes the lease for its write window:
     * an exclusive-create of `_lease` under the state dir. ATOMICITY is
     * scheme-dependent: on HDFS, `create(overwrite=false)` is a single
     * atomic namenode op; on the LOCAL filesystem Hadoop's
@@ -1088,6 +1062,295 @@ object StandingState {
   /** Default target output-file size for compaction rewrites. */
   val DefaultCompactTargetBytes: Long = 128L * 1024 * 1024
 
+  /** One STATE KIND — text, embeddings or media — as the shared intake
+    * protocol sees it. Every kind is a PRIMARY table of id-keyed rows
+    * (the corpus, the standing vectors, the standing media) plus
+    * artifact tables derived from those rows and keyed by the same id,
+    * and every kind runs the same three paths over it: the ingest batch
+    * skeleton ([[graft.streaming.CorpusIntakeJob]]), the id-keyed
+    * retention pass ([[expireKind]]) and the drift repair
+    * ([[repairKind]]).
+    *
+    *  - `id`        — the id column shared by the primary and its artifacts;
+    *  - `primary`   — the primary table's path (it may live outside the
+    *                  state dir; the state's lease still serializes it);
+    *  - `artifacts` — the artifact tables in WRITE order. The last one is
+    *                  the drift WITNESS: every crash shape of a commit
+    *                  (primary first, artifacts after, witness last) leaves
+    *                  the torn rows' ids missing from it;
+    *  - `ghosts`    — the artifact tables the repair scans for rows whose
+    *                  id left the primary;
+    *  - `appendFor` — the artifact rows for a primary-shaped frame,
+    *                  computed lazily now; the returned thunk appends them
+    *                  and MUST run under the lease. */
+  private[graft] final case class Kind(
+      name: String,
+      id: String,
+      primary: String,
+      artifacts: Seq[String],
+      ghosts: Seq[String],
+      appendFor: DataFrame => () => Unit) {
+    def witness: String = artifacts.last
+  }
+
+  /** The text kind: corpus rows -> digests, span hashes (when the state
+    * keeps a span index) and band rows, under the state's PERSISTED
+    * fingerprint regime (read per call from the cached regime rows). */
+  private[graft] def textKind(
+      spark: SparkSession, statePath: String, corpusPath: String): Kind =
+    Kind("Text", "doc_id", corpusPath, Seq("digests", "span_hashes", "bands"),
+      Seq("bands"), { rows =>
+        val (meta, spanW) = textRegime(spark, statePath)
+        val cfg = CorpusPipeline.Config(
+          shingleSize = meta.shingleSize,
+          normalizeFingerprints = meta.normalizedFingerprints)
+        val (digests, bands) = artifactsFor(rows, cfg, meta)
+        val spans = spanW.map(TextOps.spanWindowHashesKeyed(rows, _))
+        () => writeArtifacts(digests, bands, statePath, spans)
+      })
+
+  /** The embedding kind: vectors -> sign-LSH bucket rows under the
+    * persisted hyperplane regime (`emb_meta`). */
+  private[graft] def embeddingKind(
+      spark: SparkSession, statePath: String, vecsPath: String): Kind =
+    Kind("Embedding", "vec_id", vecsPath, Seq("emb_buckets"), Seq("emb_buckets"), {
+      rows =>
+        val buckets = embBucketRowsFor(rows, statePath)
+        () => Frames.sizedWrite(buckets)
+          .write.mode("append").parquet(s"$statePath/emb_buckets")
+    })
+
+  /** The media kind: records -> phash rows, then band rows (the witness)
+    * under the persisted band regime (`media_meta`). A frame that already
+    * carries `phash` (the ingest's admitted rows) is never decoded again;
+    * any other frame is decoded and hashed executor-side by `phashOf`. */
+  private[graft] def mediaKind(
+      spark: SparkSession, statePath: String, mediaPath: String,
+      phashOf: DataFrame => DataFrame = Multimodal.imagePhash): Kind = {
+    val tables = Seq("media_phashes", "media_bands")
+    Kind("Media", "media_id", mediaPath, tables, tables, { rows =>
+      val nBands =
+        cachedRegimeRow(spark, s"$statePath/media_meta").getAs[Int]("n_bands")
+      val ph = Frames.barrier(
+        (if (rows.columns.contains("phash")) rows else phashOf(rows))
+          .select("media_id", "phash"))
+      val bands = Multimodal.phashBandRows(ph, nBands)
+        .select(col("doc_id").as("media_id"), col("band"), col("sig"))
+      () => {
+        Frames.sizedWrite(ph).write.mode("append").parquet(s"$statePath/media_phashes")
+        Frames.sizedWrite(bands).write.mode("append").parquet(s"$statePath/media_bands")
+      }
+    })
+  }
+
+  /** Heal a kind's primary and the given state tables where a crashed
+    * swap stranded them at `<table>__retired` — the MUTATOR-side heal
+    * ([[healStranded]]'s contract, extended to the primary, which may
+    * live outside the state dir): a maintenance pass must not read a
+    * stranded table as absent. */
+  private def healKind(
+      spark: SparkSession, statePath: String, kind: Kind,
+      tables: Seq[String], op: String): Unit = {
+    import org.apache.hadoop.fs.{Path => HPath}
+    val live = new HPath(kind.primary)
+    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(live) && fs.exists(sibling(live, "__retired")))
+      withLeaseRetry(spark, statePath, s"$op:healPrimary") { healDir(fs, live) }
+    tables.foreach(healStranded(spark, statePath, _, s"$op:healArtifacts"))
+  }
+
+  /** RETENTION, one pass for every kind — the reference's key TTL
+    * (it expires every materialized key after `expire_keys` seconds,
+    * `lib/meeseeker.rb:99`): drop the primary rows matching `expired`
+    * and EVERY artifact row keyed by their ids, so expired items no
+    * longer block replicas of themselves from (re-)admission.
+    *
+    * Expire is SUBTRACTION: the primary and every artifact table are
+    * healed first (a table stranded at `__retired` must be subtracted,
+    * not skipped — the skip would resurrect its expired rows on the next
+    * load's heal), then the expired-id set is pinned and each artifact
+    * table anti-joins it under the snapshot-delta discipline
+    * ([[compactDirLive]]): the O(table) rewrite holds NO lease (intake
+    * appends proceed freely), and the lease is held only for each
+    * table's delta catch-up + two renames. No row is ever re-featurized.
+    *
+    * NULL-predicate rows are RETAINED: a row where `expired` evaluates to
+    * NULL does not POSITIVELY match the retention policy, and a
+    * destructive maintenance op must not treat don't-know as expired.
+    *
+    * Crash-safety: artifact tables mutate FIRST (concurrently, via
+    * [[inParallel]] — no ordering among them), the primary LAST with the
+    * SAME pinned id set — a crash anywhere earlier leaves the expired
+    * rows in the primary, so a re-run finds pending work and completes
+    * the pass (the anti-joins are idempotent). A repair racing a crash
+    * window can re-append a still-present expired row's artifacts; the
+    * re-run subtracts them again. A row appended DURING the pass that
+    * matches the predicate is outside the pinned set and falls to the
+    * next pass. `extra` adds artifact tables with their own subtraction
+    * (given the pinned ids) to the same parallel group. Returns the
+    * number of primary ROWS dropped (a transient crash-window double
+    * append counts twice). */
+  private def expireKind(
+      spark: SparkSession,
+      statePath: String,
+      kind: Kind,
+      expired: Column,
+      extra: Seq[(String, DataFrame => DataFrame => DataFrame)] = Nil): Long = {
+    import org.apache.hadoop.fs.{Path => HPath}
+    healKind(spark, statePath, kind, kind.artifacts ++ extra.map(_._1),
+      s"expire${kind.name}")
+    // BARRIER + COUNT in one job (round-19 diet): the lazy checkpoint
+    // materializes — fully pinned — inside the count's single RDD job
+    val expiredIds = readTable(spark, kind.primary)
+      .filter(coalesce(expired, lit(false)))
+      .select(kind.id).distinct().localCheckpoint(false)
+    val n =
+      if (expiredIds.queryExecution.toRdd.count() == 0L) 0L
+      else readTable(spark, kind.primary)
+        .join(expiredIds, Seq(kind.id), "left_semi").count()
+    if (n > 0L) {
+      val subtract: DataFrame => DataFrame =
+        _.join(expiredIds, Seq(kind.id), "left_anti")
+      inParallel(
+        (kind.artifacts.map(_ -> subtract) ++
+          extra.map { case (t, rewrite) => t -> rewrite(expiredIds) })
+          .filter { case (t, _) => tableExists(spark, s"$statePath/$t") }
+          .map { case (t, rewrite) => () =>
+            compactDirLive(spark, statePath, new HPath(s"$statePath/$t"), rewrite)
+          })
+      compactDirLive(spark, statePath, new HPath(kind.primary), subtract)
+    }
+    n
+  }
+
+  /** Restore a kind's primary <-> artifact invariant after a crash in
+    * the ingest's commit window (primary appended, artifacts not, or only
+    * partly) — one pass for every kind:
+    *
+    *  - heal the primary and the artifact tables (a crashed swap's
+    *    `__retired` leftover is renamed back, so a restarted stream
+    *    starts instead of failing to read its table);
+    *  - DRIFT: primary rows whose id is missing from the witness table
+    *    get ALL their artifacts recomputed and appended under the lease
+    *    (an artifact row that did land re-appends as a set-semantic
+    *    duplicate — harmless, [[compact]] folds it);
+    *  - GHOSTS: rows of the kind's ghost tables whose id left the primary
+    *    (the reversed tear, or a manual write) are dropped by a rewrite
+    *    swap — ONLY when some exist, so the healthy call never rewrites.
+    *
+    * Idempotent. Returns (drift rows repaired, ghost rows dropped). */
+  private def repairKind(spark: SparkSession, statePath: String, kind: Kind): (Long, Long) = {
+    val op = s"repair${kind.name}"
+    healKind(spark, statePath, kind, kind.artifacts, op)
+    val primary = readTable(spark, kind.primary)
+    val drift = primary
+      .join(readTable(spark, s"$statePath/${kind.witness}").select(kind.id).distinct(),
+        Seq(kind.id), "left_anti")
+      .localCheckpoint(true) // consumed by the artifact append AND the count
+    val nDrift = drift.count()
+    if (nDrift > 0L) {
+      val append = kind.appendFor(drift)
+      withLeaseRetry(spark, statePath, s"$op:append")(append())
+    }
+    val ids = primary.select(kind.id).distinct().localCheckpoint(false)
+    val nGhosts = kind.ghosts.map { table =>
+      val rows = readTable(spark, s"$statePath/$table")
+      val ghosts = rows.join(ids, Seq(kind.id), "left_anti").count()
+      if (ghosts > 0L) {
+        val keep = rows.join(ids, Seq(kind.id), "left_semi").localCheckpoint(true)
+        withLeaseRetry(spark, statePath, s"$op:rewrite:$table") {
+          swapTable(spark, statePath, table) { staged =>
+            keep.write.mode("overwrite").parquet(staged)
+          }
+        }
+      }
+      ghosts
+    }.sum
+    (nDrift, nGhosts)
+  }
+
+  /** RETENTION for the TEXT state — [[expireKind]] over the corpus and
+    * its digests, span hashes and band rows, plus the text-only steps
+    * around it. Subtraction is SOUND because the digest and span-hash
+    * rows are keyed by doc_id: a retained doc that shares a digest or
+    * window with an expired doc keeps its OWN row, so the value stays
+    * standing. A state whose rows carry no doc_id (written by older code)
+    * fails loudly before any mutation. Pair edges are DOUBLY keyed and
+    * subtract in the same group: an edge drops when EITHER endpoint
+    * expires (keeping it would let the exact relabel resurrect a
+    * connection through a doc that no longer exists).
+    *
+    * SemDeDup centroids are untouched (frozen training state, not a
+    * per-doc blocker); cluster LABELS are untouched by DEFAULT — they are
+    * a reporting artifact, not an admission input, and a bare anti-join
+    * would leave stale cluster_size values — pass `relabelClusters =
+    * true` (or run [[relabelClusters]] any time later) to drop ghost
+    * rows, recount sizes and drop shrunk-to-singleton clusters, with the
+    * documented coarsening semantics (a fresh [[Dedup.duplicateClusters]]
+    * + [[writeClusters]] rebuild remains the exact re-clustering path).
+    * The census, when kept, is reconciled LAST.
+    *
+    * `expired` is a boolean predicate over corpus rows (an ingest-time
+    * timestamp column, a doc_id horizon, a source policy — schema is
+    * the caller's). Returns the number of corpus rows dropped. */
+  def expire(
+      spark: SparkSession,
+      statePath: String,
+      corpusPath: String,
+      expired: Column,
+      relabelClusters: Boolean = false): Long = {
+    // payload-free rows (older code) cannot be subtracted — refuse before
+    // any mutation instead of silently leaving unreachable rows
+    Seq("digests", "span_hashes")
+      .filter(t => tableExists(spark, s"$statePath/$t"))
+      .foreach(t => requireDocKeyed(readTable(spark, s"$statePath/$t"), statePath, t))
+    val pairEdges = (ids: DataFrame) => (edges: DataFrame) =>
+      edges
+        .join(ids.withColumnRenamed("doc_id", "doc_a"), Seq("doc_a"), "left_anti")
+        .join(ids.withColumnRenamed("doc_id", "doc_b"), Seq("doc_b"), "left_anti")
+        .select("doc_a", "doc_b") // joins reorder; keep the schema
+    val n = expireKind(spark, statePath, textKind(spark, statePath, corpusPath),
+      expired, Seq("pair_edges" -> pairEdges))
+    // optional label hygiene, AFTER the corpus swap (the ghost detection
+    // anti-joins the post-expire corpus); crash between the swap and
+    // here just leaves the ghosts for the next relabel — see
+    // [[relabelClusters]]'s idempotence contract
+    if (relabelClusters) this.relabelClusters(spark, statePath, corpusPath)
+    // census upkeep LAST: a completed expire preserves sum(census) ==
+    // count(corpus) via one recount; a crash anywhere above leaves the
+    // mismatch this same call heals on the re-run (no-op when the state
+    // maintains no census). DEEP witness here: the pass already paid
+    // corpus-shaped work, so the per-source compare (which also catches
+    // a compensating equal-total drift) is marginal.
+    reconcileSourceCensus(spark, statePath, corpusPath, deep = true)
+    n
+  }
+
+  /** RETENTION for the EMBEDDING state — [[expireKind]] over the
+    * standing vectors and their `emb_buckets` rows, so an expired vector
+    * no longer blocks replicas of itself from (re-)admission through
+    * [[graft.streaming.CorpusIntakeJob.ingestEmbeddingBatch]]. Returns
+    * the number of vector rows dropped. */
+  def expireEmbeddings(
+      spark: SparkSession,
+      statePath: String,
+      standingVecsPath: String,
+      expired: Column): Long =
+    expireKind(spark, statePath, embeddingKind(spark, statePath, standingVecsPath), expired)
+
+  /** RETENTION for the MEDIA state — [[expireKind]] over the standing
+    * media and their `media_phashes` + `media_bands` rows, so an expired
+    * item's perceptual hash no longer blocks near-replicas from
+    * (re-)admission through
+    * [[graft.streaming.CorpusIntakeJob.ingestMediaBatch]]. Returns the
+    * number of media rows dropped. */
+  def expireMedia(
+      spark: SparkSession,
+      statePath: String,
+      standingMediaPath: String,
+      expired: Column): Long =
+    expireKind(spark, statePath, mediaKind(spark, statePath, standingMediaPath), expired)
+
   /** Compact the APPEND-ONLY state tables — and, when `corpusPath` is
     * given, the standing CORPUS table itself (the largest append-grown
     * table of the intake cycle, and previously the only one with no
@@ -1125,274 +1388,6 @@ object StandingState {
     * table lives outside the state dir — sound because every corpus
     * mutator (the ingest batch leg) appends under that same lease; a
     * manual corpus writer must hold it too (or quiesce). */
-  /** RETENTION — the reference's key-TTL twin (it expires every
-    * materialized key after `expire_keys` seconds,
-    * `lib/meeseeker.rb:99`): drop the corpus rows matching `expired`
-    * and EVERY artifact derived from them, so expired documents no
-    * longer block replicas of their own text from (re-)admission.
-    *
-    * Expire is SUBTRACTION: one anti-join per artifact table against
-    * the pinned expired-id set, each run under the snapshot-delta
-    * compaction discipline ([[compactDirLive]]): the O(table) anti-join
-    * rewrite holds NO lease (intake appends proceed freely), and the
-    * lease is held only for each table's delta catch-up + two renames.
-    * No text is ever re-featurized — the pass costs columnar IO over the
-    * small artifact rows (16-byte digest + 8-byte id) plus the corpus
-    * filter rewrite. Subtraction is SOUND precisely because the digest
-    * and span-hash rows are keyed by doc_id: a retained doc that shares
-    * a digest/window with an expired doc keeps its OWN row, so the value
-    * stays standing. A state whose rows carry no doc_id (written by older
-    * code) fails loudly instead.
-    *
-    * NULL-predicate rows are RETAINED: a corpus row
-    * where `expired` evaluates to NULL (e.g. `col("ts") < horizon`
-    * with a null timestamp) does not POSITIVELY match the retention
-    * policy, and a destructive maintenance op must not treat
-    * don't-know as expired.
-    *
-    * Crash-safety: artifact tables mutate FIRST, the corpus LAST — a
-    * crash anywhere earlier leaves the expired rows still in the
-    * corpus, so a re-run detects pending work (n > 0) and completes
-    * the pass (the anti-joins are idempotent). A repair pass racing a
-    * crash window can re-append a still-in-corpus expired doc's
-    * artifacts; the re-run subtracts them again. Concurrent appends
-    * during a pass survive via each table's delta catch-up; a
-    * doc appended DURING the pass that itself matches the predicate
-    * is outside the pinned snapshot and falls to the next retention
-    * pass. SemDeDup centroids are untouched (frozen training state,
-    * not a per-doc blocker); cluster LABELS are untouched by DEFAULT —
-    * they are a reporting artifact, not an admission input, and a bare
-    * anti-join would leave stale cluster_size values — pass
-    * `relabelClusters = true` (or run [[relabelClusters]] any time
-    * later) to drop ghost rows, recount sizes and drop shrunk-to-
-    * singleton clusters, with the documented coarsening semantics (a
-    * fresh [[Dedup.duplicateClusters]] + [[writeClusters]] rebuild
-    * remains the exact re-clustering path); the embedding and media
-    * states have their own id-keyed twins,
-    * [[expireEmbeddings]]/[[expireMedia]].
-    *
-    * `expired` is a boolean predicate over corpus rows (an ingest-time
-    * timestamp column, a doc_id horizon, a source policy — schema is
-    * the caller's). Returns the number of corpus rows dropped. */
-  def expire(
-      spark: SparkSession,
-      statePath: String,
-      corpusPath: String,
-      expired: Column,
-      relabelClusters: Boolean = false): Long = {
-    val n = expireKeyed(spark, statePath, corpusPath, coalesce(expired, lit(false)))
-    // optional label hygiene, AFTER the corpus swap (the ghost detection
-    // anti-joins the post-expire corpus); crash between the swap and
-    // here just leaves the ghosts for the next relabel — see
-    // [[relabelClusters]]'s idempotence contract
-    if (relabelClusters) this.relabelClusters(spark, statePath, corpusPath)
-    // census upkeep LAST: a completed expire preserves sum(census) ==
-    // count(corpus) via one recount; a crash anywhere above leaves the
-    // mismatch this same call heals on the re-run (no-op when the state
-    // maintains no census). DEEP witness here: the pass already paid
-    // corpus-shaped work, so the per-source compare (which also catches
-    // a compensating equal-total drift) is marginal.
-    reconcileSourceCensus(spark, statePath, corpusPath, deep = true)
-    n
-  }
-
-  /** [[expire]]'s subtraction pass. `pred` is already null-coalesced. */
-  private def expireKeyed(
-      spark: SparkSession,
-      statePath: String,
-      corpusPath: String,
-      pred: Column): Long = {
-    import org.apache.hadoop.fs.{Path => HPath}
-    val corpusDir = new HPath(corpusPath)
-    val fs = corpusDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // a prior pass that crashed between the corpus swap's two renames
-    // left the table at __retired only — heal before reading (under the
-    // lease, the same skip-free contract as every mutator-side heal)
-    if (!fs.exists(corpusDir) && fs.exists(sibling(corpusDir, "__retired")))
-      withLeaseRetry(spark, statePath, "expire:healCorpus") {
-        healDir(fs, corpusDir)
-      }
-    // heal every artifact table BEFORE the existence filter below — a
-    // table stranded at <table>__retired by a crashed swap would
-    // otherwise read as absent, be silently skipped, and resurrect its
-    // expired rows on the next load's heal (permanently blocking
-    // re-admission, the exact invariant expire exists to remove).
-    // healStranded, NOT the reader-side heal: that one skips while the
-    // lease is held, and a concurrent ingest's brief hold at this
-    // instant would re-open exactly the skip this heal exists to close
-    Seq("digests", "span_hashes", "bands", "pair_edges")
-      .foreach(healStranded(spark, statePath, _, "expire:healArtifacts"))
-    // payload-free rows (older code) cannot be subtracted — refuse before
-    // any mutation instead of silently leaving unreachable rows
-    Seq("digests", "span_hashes")
-      .filter(t => tableExists(spark, s"$statePath/$t"))
-      .foreach(t => requireDocKeyed(readTable(spark, s"$statePath/$t"), statePath, t))
-    // pin the expired-id set EAGERLY before any mutation: every
-    // anti-join below subtracts exactly this set, and the corpus filter
-    // drops exactly these rows, so the pass is consistent even as
-    // appends land mid-pass. Keyed expiry is ID-level by construction:
-    // every row of an expired doc_id drops (a duplicate-doc_id corpus is
-    // already outside the ingest invariants); the returned count is
-    // corpus ROWS dropped.
-    // BARRIER + COUNT in one job (round-19 diet, the intake pattern):
-    // the lazy checkpoint materializes — fully pinned — inside the
-    // count's single RDD job; the eager checkpoint + count form paid
-    // the same barrier as two jobs.
-    val expiredIds = spark.read.parquet(corpusPath).filter(pred)
-      .select("doc_id").distinct().localCheckpoint(false)
-    val nIds = expiredIds.queryExecution.toRdd.count()
-    val n =
-      if (nIds == 0L) 0L
-      else spark.read.parquet(corpusPath)
-        .join(expiredIds, Seq("doc_id"), "left_semi").count()
-    if (n == 0L) 0L
-    else {
-      // artifacts FIRST, corpus LAST (see the expire crash-safety note).
-      // The artifact tables carry no ordering constraint AMONG THEMSELVES
-      // (any completed subset + still-expired corpus rows = a re-run
-      // completes the pass), so their snapshot-delta subtractions run
-      // CONCURRENTLY (guide §2.6): the O(table) phase-2 rewrites overlap,
-      // and the brief lease-held phase-3 swaps queue on compactDirLive's
-      // per-state monitor. inParallel awaits every job before the
-      // corpus subtraction below can start.
-      inParallel(
-        (Seq("digests", "span_hashes", "bands")
-          .filter(t => tableExists(spark, s"$statePath/$t"))
-          .map { t => () =>
-            compactDirLive(spark, statePath, new HPath(s"$statePath/$t"),
-              _.join(expiredIds, Seq("doc_id"), "left_anti"))
-          }) ++
-        // pair edges are DOUBLY keyed: an edge drops when EITHER endpoint
-        // expires (keeping it would let the exact relabel resurrect a
-        // connection through a doc that no longer exists)
-        (if (!tableExists(spark, s"$statePath/pair_edges")) Seq.empty
-         else Seq(() =>
-          compactDirLive(spark, statePath, new HPath(s"$statePath/pair_edges"),
-            _.join(expiredIds.withColumnRenamed("doc_id", "doc_a"),
-                Seq("doc_a"), "left_anti")
-              .join(expiredIds.withColumnRenamed("doc_id", "doc_b"),
-                Seq("doc_b"), "left_anti")
-              .select("doc_a", "doc_b"))))) // joins reorder; keep the schema
-      // the corpus subtracts the SAME pinned id set as the artifacts —
-      // re-evaluating the predicate here could drop a matching row
-      // appended mid-pass whose artifacts were never subtracted
-      compactDirLive(spark, statePath, corpusDir,
-        _.join(expiredIds, Seq("doc_id"), "left_anti"))
-      n
-    }
-  }
-
-  /** RETENTION for the EMBEDDING state — [[expire]]'s vector twin: drop
-    * the standing-vector rows matching `expired` and their `emb_buckets`
-    * rows, so an expired vector no longer blocks replicas of itself
-    * from (re-)admission through
-    * [[Dedup.dedupByEmbeddingLshIncrementalVsBuckets]] /
-    * [[graft.streaming.CorpusIntakeJob.ingestEmbeddingBatch]].
-    *
-    * The bucket table keys by vec_id ALREADY, so subtraction is sound
-    * with no schema migration: each table anti-joins the pinned expired
-    * id set under the snapshot-delta discipline ([[compactDirLive]] —
-    * lease held only for delta catch-up + renames; concurrent ingest
-    * appends ride through). Buckets subtract FIRST, the vector table
-    * LAST: a crash mid-pass leaves the expired vectors in the table, so
-    * a re-run finds n > 0 and re-subtracts (idempotent); the transient
-    * missing-bucket drift is exactly what [[repairEmbBuckets]] detects,
-    * and a repair racing the crash window merely re-appends rows the
-    * re-run subtracts again. NULL-predicate rows are RETAINED (see
-    * [[expire]]). Returns the number of vector rows dropped. */
-  def expireEmbeddings(
-      spark: SparkSession,
-      statePath: String,
-      standingVecsPath: String,
-      expired: Column): Long = {
-    import org.apache.hadoop.fs.{Path => HPath}
-    val pred = coalesce(expired, lit(false))
-    val vecsDir = new HPath(standingVecsPath)
-    val fs = vecsDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(vecsDir) && fs.exists(sibling(vecsDir, "__retired")))
-      withLeaseRetry(spark, statePath, "expireEmbeddings:healVecs") {
-        healDir(fs, vecsDir)
-      }
-    // heal a crashed bucket-table swap before the existence probe — a
-    // table stranded at __retired must be subtracted, not skipped (and
-    // not reader-side: that heal skips while a concurrent ingest holds
-    // the lease, re-opening the skip)
-    healStranded(spark, statePath, "emb_buckets", "expireEmbeddings:healBuckets")
-    // barrier + count in one job (the expireKeyed round-19 shape)
-    val expiredIds = spark.read.parquet(standingVecsPath).filter(pred)
-      .select("vec_id").distinct().localCheckpoint(false)
-    // count DROPPED ROWS via semi-join, not distinct ids — transient
-    // crash-window double appends can leave duplicate-id rows, and the
-    // contract ("number of vector rows dropped") matches expire's
-    val n =
-      if (expiredIds.queryExecution.toRdd.count() == 0L) 0L
-      else spark.read.parquet(standingVecsPath)
-        .join(expiredIds, Seq("vec_id"), "left_semi").count()
-    if (n == 0L) 0L
-    else {
-      if (tableExists(spark, s"$statePath/emb_buckets"))
-        compactDirLive(spark, statePath, new HPath(s"$statePath/emb_buckets"),
-          _.join(expiredIds, Seq("vec_id"), "left_anti"))
-      compactDirLive(spark, statePath, vecsDir,
-        _.join(expiredIds, Seq("vec_id"), "left_anti"))
-      n
-    }
-  }
-
-  /** RETENTION for the MEDIA state — [[expire]]'s image/audio/video
-    * twin: drop the standing-media rows matching `expired` and their
-    * `media_phashes` + `media_bands` rows, so an expired item's
-    * perceptual hash no longer blocks near-replicas from
-    * (re-)admission through
-    * [[graft.streaming.CorpusIntakeJob.ingestMediaBatch]]. Both
-    * artifact tables key by media_id already — same sound-subtraction
-    * shape, same snapshot-delta discipline, same artifacts-first /
-    * media-table-LAST crash ordering and idempotent re-run as
-    * [[expireEmbeddings]] (the transient phash/band drift of a crash
-    * window is [[repairMediaArtifacts]]' witness). NULL-predicate rows
-    * are RETAINED. Returns the number of media rows dropped. */
-  def expireMedia(
-      spark: SparkSession,
-      statePath: String,
-      standingMediaPath: String,
-      expired: Column): Long = {
-    import org.apache.hadoop.fs.{Path => HPath}
-    val pred = coalesce(expired, lit(false))
-    val mediaDir = new HPath(standingMediaPath)
-    val fs = mediaDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(mediaDir) && fs.exists(sibling(mediaDir, "__retired")))
-      withLeaseRetry(spark, statePath, "expireMedia:healMedia") {
-        healDir(fs, mediaDir)
-      }
-    // heal crashed artifact swaps before the existence probes — a table
-    // stranded at __retired must be subtracted, not skipped (and not
-    // reader-side: that heal skips under a concurrent ingest's lease)
-    Seq("media_phashes", "media_bands")
-      .foreach(healStranded(spark, statePath, _, "expireMedia:healArtifacts"))
-    // barrier + count in one job (the expireKeyed round-19 shape)
-    val expiredIds = spark.read.parquet(standingMediaPath).filter(pred)
-      .select("media_id").distinct().localCheckpoint(false)
-    // dropped-ROW count via semi-join (see expireEmbeddings)
-    val n =
-      if (expiredIds.queryExecution.toRdd.count() == 0L) 0L
-      else spark.read.parquet(standingMediaPath)
-        .join(expiredIds, Seq("media_id"), "left_semi").count()
-    if (n == 0L) 0L
-    else {
-      // both artifact tables subtract CONCURRENTLY (the expireKeyed
-      // rationale — no ordering among artifacts, media table strictly last)
-      inParallel(Seq("media_phashes", "media_bands")
-        .filter(t => tableExists(spark, s"$statePath/$t"))
-        .map { t => () =>
-          compactDirLive(spark, statePath, new HPath(s"$statePath/$t"),
-            _.join(expiredIds, Seq("media_id"), "left_anti"))
-        })
-      compactDirLive(spark, statePath, mediaDir,
-        _.join(expiredIds, Seq("media_id"), "left_anti"))
-      n
-    }
-  }
-
   def compact(spark: SparkSession, path: String): Unit =
     compact(spark, path, None)
 
@@ -1613,156 +1608,73 @@ object StandingState {
         !st.getPath.getName.startsWith("_") && !st.getPath.getName.startsWith("."))
       .map(_.getPath)
 
-  /** Parquet-table existence through the Spark reader, not java.io.File —
-    * the state path may be any Hadoop-addressable URI (hdfs://, s3a://,
-    * file:), where a local-File check is always false (which would e.g.
-    * silently drop the frozen centroids and re-run a Lloyd training every
-    * ingest). One probe idiom for every optional state table. */
-  private def tableExists(spark: SparkSession, path: String): Boolean =
-    try { spark.read.parquet(path); true }
-    catch { case _: org.apache.spark.sql.AnalysisException => false }
-
-  /** Restore the vector-table <-> bucket-table invariant after a crash in
-    * the ingest's two-append window ([[graft.streaming.CorpusIntakeJob
-    * .ingestEmbeddingBatch]] appends vectors, then bucket rows — a failure
-    * between them leaves admitted vectors with no bucket rows, and those
-    * vectors would never collide with future replicas):
-    *
-    *  - vectors MISSING bucket rows get them recomputed and appended
-    *    (batch-shaped: an anti-join finds the drift, the hyperplane
-    *    projection runs over drift rows only);
-    *  - GHOST bucket rows (vec_id absent from the vector table — the
-    *    reversed crash order) are dropped via a distinct-rewrite swap,
-    *    but ONLY when ghosts exist (the common no-drift call never
-    *    rewrites the table).
-    *
-    * Idempotent; [[graft.streaming.CorpusIntakeJob.runEmbeddingStream]]
-    * runs it once at startup so a restarted stream always resumes from a
-    * consistent pair of tables. Returns (bucket rows added, ghost rows
-    * dropped). */
-  def repairEmbBuckets(
-      spark: SparkSession, statePath: String, standingVecsPath: String): (Long, Long) = {
-    heal(spark, statePath, "emb_buckets")
-    val m = spark.read.parquet(s"$statePath/emb_meta").head()
-    val (nPlanes, dim) = (m.getAs[Int]("n_planes"), m.getAs[Int]("dim"))
-    val vecs = spark.read.parquet(standingVecsPath)
-    val buckets = spark.read.parquet(s"$statePath/emb_buckets")
-    val missing = vecs.join(
-        buckets.select("vec_id").distinct(), Seq("vec_id"), "left_anti")
-      .localCheckpoint(true) // consumed by the append AND the count
-    val nMissing = missing.count()
-    if (nMissing > 0)
-      withLease(spark, statePath, "repairEmbBuckets:append") {
-        VectorOps.hyperplaneBuckets(missing, nPlanes, dim)
-          .select("vec_id", "bucket")
-          .write.mode("append").parquet(s"$statePath/emb_buckets")
+  /** Parquet-table existence as a filesystem probe: the path holds a
+    * data file — a name not starting with `_` or `.`, at any depth (the
+    * bucketed `clusters/cpart=*` layout counts) — so an empty directory
+    * or one holding only `_SUCCESS` reads as absent. Hadoop FS, not
+    * java.io.File: the state path may be any Hadoop-addressable URI
+    * (hdfs://, s3a://, file:), where a local-File check is always false
+    * (which would e.g. silently drop the frozen centroids and re-run a
+    * Lloyd training every ingest). No Spark job: an untyped
+    * `spark.read.parquet` probe paid a schema-inference job per table
+    * that exists. One probe idiom for every optional state table. */
+  private def tableExists(spark: SparkSession, path: String): Boolean = {
+    import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+    val p = new HPath(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def holdsData(st: FileStatus): Boolean =
+      st.isFile || fs.listStatus(st.getPath).exists { c =>
+        val n = c.getPath.getName
+        !n.startsWith("_") && !n.startsWith(".") && holdsData(c)
       }
-    val ghosts = buckets.join(
-        vecs.select("vec_id").distinct(), Seq("vec_id"), "left_anti")
-    val nGhosts = ghosts.count()
-    if (nGhosts > 0) {
-      val keep = spark.read.parquet(s"$statePath/emb_buckets")
-        .join(vecs.select("vec_id").distinct(), Seq("vec_id"), "left_semi")
-        .localCheckpoint(true)
-      withLease(spark, statePath, "repairEmbBuckets:rewrite") {
-        swapTable(spark, statePath, "emb_buckets") { staged =>
-          keep.write.mode("overwrite").parquet(staged)
-        }
-      }
-    }
-    (nMissing, nGhosts)
+    try holdsData(fs.getFileStatus(p))
+    catch { case _: java.io.FileNotFoundException => false }
   }
 
+  /** Restore the vector-table <-> bucket-table invariant after a crash in
+    * the ingest's commit window ([[repairKind]] over the embedding kind):
+    * vectors MISSING bucket rows get them recomputed under the persisted
+    * hyperplane regime and appended — otherwise they would never collide
+    * with future replicas — and GHOST bucket rows (vec_id absent from the
+    * vector table) are dropped. Idempotent;
+    * [[graft.streaming.CorpusIntakeJob.runEmbeddingStream]] runs it once
+    * at startup. Returns (bucket rows added, ghost rows dropped). */
+  def repairEmbBuckets(
+      spark: SparkSession, statePath: String, standingVecsPath: String): (Long, Long) =
+    repairKind(spark, statePath, embeddingKind(spark, statePath, standingVecsPath))
+
   /** Restore the corpus-table <-> digest/band-table invariant after a
-    * crash in the TEXT ingest's append window — the text twin of
-    * [[repairEmbBuckets]]. [[graft.streaming.CorpusIntakeJob
-    * .ingestTextBatch]] appends admitted text to the corpus table FIRST,
-    * then its digests + band rows via [[append]]; a failure anywhere in
-    * that chain leaves admitted docs with text but no (or partial)
-    * artifacts, and byte-replicas of those docs would be re-admitted on
-    * replay (duplicate corpus rows). Band-row ABSENCE is the drift
-    * witness ([[append]] writes digests before bands, so every crash
-    * shape leaves the drifted doc missing from `bands/`):
-    *
-    *  - corpus docs MISSING from `bands/` get BOTH artifacts recomputed
-    *    under the state's persisted regime and appended (a digest that
-    *    did land re-appends as a set-semantic duplicate — harmless,
-    *    [[compact]] folds it);
-    *  - GHOST band rows (doc_id absent from the corpus table — only a
-    *    manual reversed write can produce this) are dropped via a
-    *    distinct-rewrite swap, only when ghosts exist.
+    * crash in the TEXT ingest's commit window ([[repairKind]] over the
+    * text kind): corpus docs MISSING from `bands/` get their digests, band
+    * rows and span hashes recomputed under the state's persisted regime
+    * and appended — otherwise byte-replicas of them would be re-admitted
+    * — and GHOST band rows (doc_id absent from the corpus) are dropped.
     *
     * Docs whose FINGERPRINT text is shorter than the shingle size can
-    * never carry band rows, so they would re-appear as drift every run;
-    * they re-append only their digest (idempotent up to set-semantic
-    * duplicates). The gated intake never admits them (minWords >= shingle
-    * size) — they arise only from manually-built corpus tables.
+    * never carry band rows, so they re-appear as drift every run and
+    * re-append only their digest (idempotent up to set-semantic
+    * duplicates). The gated intake never admits them (minWords >=
+    * shingle size) — they arise only from manually-built corpus tables.
     *
-    * Idempotent; [[graft.streaming.CorpusIntakeJob.runTextStream]] runs it
-    * once at startup so a restarted stream always resumes from a
-    * consistent (corpus, state) pair. Returns (drift docs repaired, ghost
-    * band rows dropped). */
+    * The state is [[load]]ed first, so a payload-free state written by
+    * older code is refused before anything appends to it, and the
+    * census (when kept) is reconciled last with the DEEP witness:
+    * startup runs once and already scans the corpus, and the per-source
+    * compare also catches a compensating equal-total drift the cheap
+    * witness cannot see. Idempotent;
+    * [[graft.streaming.CorpusIntakeJob.runTextStream]] runs it once at
+    * startup. Returns (drift docs repaired, ghost band rows dropped). */
   def repairTextArtifacts(
       spark: SparkSession, statePath: String, standingDocsPath: String): (Long, Long) = {
-    // a corpus compaction that crashed between its two renames leaves the
-    // table only at `<corpus>__retired` — heal it here (the startup path)
-    // under the state lease, same skip-when-held contract as [[heal]]
-    locally {
-      import org.apache.hadoop.fs.{Path => HPath}
-      val live = new HPath(standingDocsPath)
-      val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val stateBase = new HPath(statePath)
-      if (!fs.exists(live) && fs.exists(sibling(live, "__retired")) &&
-          !leaseHeld(fs, stateBase))
-        withLease(spark, statePath, "repairTextArtifacts:healCorpus") {
-          healDir(fs, live)
-        }
-    }
-    val state = load(spark, statePath)
-    val cfg = CorpusPipeline.Config(
-      shingleSize = state.meta.shingleSize,
-      normalizeFingerprints = state.meta.normalizedFingerprints)
-    val docs = spark.read.parquet(standingDocsPath).select("doc_id", "text")
-    val bandIds = state.bands.select("doc_id").distinct()
-    val drift = docs.join(bandIds, Seq("doc_id"), "left_anti")
-      .localCheckpoint(true) // consumed by the artifact writes AND the count
-    val nDrift = drift.count()
-    if (nDrift > 0) {
-      val (digests, bands) =
-        artifacts(drift, cfg, state.meta.numHashes, state.meta.bandRows)
-      // drifted docs' span hashes re-append too (corpus text IS the
-      // admitted cleaned text, and spanWindowHashes is deterministic, so
-      // the repair rebuilds exactly what the crashed append would have
-      // written; duplicates across the crash window are set-semantic)
-      val spans = spanHashesFor(drift, statePath)
-      withLease(spark, statePath, "repairTextArtifacts:append") {
-        writeArtifacts(digests, bands, statePath, spans)
-      }
-    }
-    val nGhosts = state.bands
-      .join(docs.select("doc_id").distinct(), Seq("doc_id"), "left_anti")
-      .count()
-    if (nGhosts > 0) {
-      val keep = spark.read.parquet(s"$statePath/bands")
-        .join(docs.select("doc_id").distinct(), Seq("doc_id"), "left_semi")
-        .localCheckpoint(true)
-      withLease(spark, statePath, "repairTextArtifacts:rewrite") {
-        swapTable(spark, statePath, "bands") { staged =>
-          keep.write.mode("overwrite").parquet(staged)
-        }
-      }
-    }
-    // census drift (a crash between the corpus append and its census
-    // bump) heals on the same startup pass — no-op when no census. DEEP
-    // witness: startup runs once and already scans the corpus, and the
-    // per-source compare also catches a compensating equal-total drift
-    // accumulated across crashes the cheap witness cannot see.
+    load(spark, statePath)
+    val repaired =
+      repairKind(spark, statePath, textKind(spark, statePath, standingDocsPath))
     reconcileSourceCensus(spark, statePath, standingDocsPath, deep = true)
-    (nDrift, nGhosts)
+    repaired
   }
 
   /** Persist the standing corpus' PERCEPTUAL-HASH artifacts for the
-    * MEDIA dedup cycle — the image/audio/video twin of `digests`/`bands`:
+    * MEDIA dedup cycle — the image/audio/video counterpart of `digests`/`bands`:
     * `media_phashes/` (media_id, phash — 8 bytes of state per standing
     * item, the fingerprint-then-discard shape: standing payloads are
     * never decoded again) + `media_bands/` (media_id, band, sig — the
@@ -1797,76 +1709,19 @@ object StandingState {
       readTable(spark, s"$path/media_bands"), nBands)
   }
 
-  /** Close the media ingest cycle: append an ADMITTED batch's phash and
-    * band rows under the persisted regime. */
-  def appendMediaPhashes(phashes: DataFrame, path: String): Unit = {
-    val spark = phashes.sparkSession
-    val nBands = cachedRegimeRow(spark, s"$path/media_meta").getAs[Int]("n_bands")
-    withLease(spark, path, "appendMediaPhashes") {
-      writeMediaArtifacts(phashes, path, nBands)
-    }
-  }
-
-  /** The write half of [[appendMediaPhashes]] — caller MUST hold the
-    * lease. Phashes FIRST, bands second: bands-absence is the drift
-    * witness [[repairMediaArtifacts]] keys on (the same ordering
-    * contract as [[writeArtifacts]]). */
-  private[graft] def writeMediaArtifacts(
-      phashes: DataFrame, path: String, nBands: Int): Unit = {
-    val ph = Frames.barrier(phashes.select("media_id", "phash"))
-    Frames.sizedWrite(ph).write.mode("append").parquet(s"$path/media_phashes")
-    Frames.sizedWrite(Multimodal.phashBandRows(ph, nBands)
-        .select(col("doc_id").as("media_id"), col("band"), col("sig")))
-      .write.mode("append").parquet(s"$path/media_bands")
-  }
-
   /** Restore the media-table <-> phash/band-table invariant after a crash
-    * in the media ingest's append window — the media twin of
-    * [[repairTextArtifacts]]: standing media rows missing from
-    * `media_bands/` get BOTH artifacts recomputed (a per-partition
-    * payload decode over the drift rows only, via `phashOf`) and
-    * appended; ghost rows (artifacts whose media_id left the media
-    * table) are dropped via a distinct-rewrite swap, only when present.
+    * in the media ingest's commit window ([[repairKind]] over the media
+    * kind): standing media rows missing from `media_bands/` get BOTH
+    * artifacts recomputed (a per-partition payload decode over the drift
+    * rows only, via `phashOf`) and appended; ghost rows in either
+    * artifact table (media_id absent from the media table) are dropped.
     * Returns (drift items repaired, ghost rows dropped). */
   def repairMediaArtifacts(
       spark: SparkSession,
       statePath: String,
       standingMediaPath: String,
-      phashOf: DataFrame => DataFrame = Multimodal.imagePhash): (Long, Long) = {
-    Seq("media_phashes", "media_bands").foreach(heal(spark, statePath, _))
-    val nBands =
-      spark.read.parquet(s"$statePath/media_meta").head().getAs[Int]("n_bands")
-    val media = spark.read.parquet(standingMediaPath)
-    val bandIds = spark.read.parquet(s"$statePath/media_bands")
-      .select("media_id").distinct()
-    val drift = media.join(bandIds, Seq("media_id"), "left_anti")
-      .localCheckpoint(true) // consumed by the artifact writes AND the count
-    val nDrift = drift.count()
-    if (nDrift > 0) {
-      val ph = phashOf(drift).localCheckpoint(true)
-      withLease(spark, statePath, "repairMediaArtifacts:append") {
-        writeMediaArtifacts(ph, statePath, nBands)
-      }
-    }
-    val mediaIds = media.select("media_id").distinct().localCheckpoint(false)
-    var nGhosts = 0L
-    Seq("media_bands", "media_phashes").foreach { table =>
-      val ghosts = spark.read.parquet(s"$statePath/$table")
-        .join(mediaIds, Seq("media_id"), "left_anti").count()
-      if (ghosts > 0) {
-        nGhosts += ghosts
-        val keep = spark.read.parquet(s"$statePath/$table")
-          .join(mediaIds, Seq("media_id"), "left_semi")
-          .localCheckpoint(true)
-        withLease(spark, statePath, s"repairMediaArtifacts:rewrite:$table") {
-          swapTable(spark, statePath, table) { staged =>
-            keep.write.mode("overwrite").parquet(staged)
-          }
-        }
-      }
-    }
-    (nDrift, nGhosts)
-  }
+      phashOf: DataFrame => DataFrame = Multimodal.imagePhash): (Long, Long) =
+    repairKind(spark, statePath, mediaKind(spark, statePath, standingMediaPath, phashOf))
 
   /** Persist the standing corpus' SPAN-DEDUP window-hash index
     * (`span_hashes/` — one (doc_id, 16-byte md5) row per doc x DISTINCT
@@ -2127,7 +1982,7 @@ object StandingState {
 
   /** Persist the standing corpus' sign-LSH bucket rows for the EMBEDDING
     * dedup cycle (`emb_buckets/` + an `emb_meta/` row pinning the
-    * hyperplane regime) — the vector twin of the `bands/` table: a daily
+    * hyperplane regime) — the vector counterpart of the `bands/` table: a daily
     * ingest feeds [[Dedup.dedupByEmbeddingLshIncrementalVsBuckets]] a
     * scan of precomputed (vec_id, bucket) rows instead of re-projecting
     * every standing float vector against the hyperplanes. */
@@ -2171,9 +2026,8 @@ object StandingState {
   }
 
   /** The bucket projection of [[appendEmbBuckets]] split from its write
-    * (the PERSISTED hyperplane regime, read from `emb_meta`), so the
-    * ingest batch leg can commit the vector append + bucket append under
-    * ONE (retried) lease hold — the embedding twin of [[artifactsFor]]. */
+    * (the PERSISTED hyperplane regime, read from `emb_meta`) — the
+    * embedding kind's artifact rows ([[embeddingKind]]). */
   private[graft] def embBucketRowsFor(batchVecs: DataFrame, path: String): DataFrame = {
     val spark = batchVecs.sparkSession
     val m = cachedRegimeRow(spark, s"$path/emb_meta")

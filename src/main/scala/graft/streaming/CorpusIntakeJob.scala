@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -30,6 +30,13 @@ import graft.sink.KvPubSubSink
   * global by nature and stay batch — run them periodically over the
   * accumulated intake output, exactly how production pipelines split
   * online intake from offline corpus prep.
+  *
+  * The STATE-FED intakes — [[runTextStream]], [[runEmbeddingStream]],
+  * [[runMediaStream]] and their batch legs — keep no streaming state:
+  * each dedups against persisted standing state and all three run one
+  * protocol, [[ingestBatch]] per micro-batch under one stream runner. A
+  * state kind is a [[StandingState.Kind]] descriptor plus its admission
+  * step ([[Intake]]); a new kind adds those, not a copy of the protocol.
   */
 object CorpusIntakeJob {
 
@@ -38,9 +45,8 @@ object CorpusIntakeJob {
     * of an external job: every `everyBatches` micro-batches (on
     * `batchId % everyBatches == 0`, BEFORE that batch's ingest, so
     * replicas of just-expired content re-admit within the same trigger)
-    * the stream itself runs the id-keyed expire
-    * ([[StandingState.expire]] / [[StandingState.expireEmbeddings]] /
-    * [[StandingState.expireMedia]]) with `expired` over the standing
+    * the stream itself runs its kind's id-keyed expire (one shared pass,
+    * [[StandingState.expire]] for text) with `expired` over the standing
     * table's rows. Safe under the proven coexistence contract — expire's
     * rewrites are snapshot-delta (lease held only for delta catch-up +
     * swap) and the ingest legs wait via `withLeaseRetry` — and here the
@@ -165,10 +171,8 @@ object CorpusIntakeJob {
       nearExact: Boolean = true,
       minWords: Int = 20,
       maxWords: Int = 100000): DataFrame = {
-    val gated = TextOps.gopherGate(docs, minWords = minWords, maxWords = maxWords)
-    val scrubbed = TextOps.redactPii(gated, "text")
-      .drop("text", "n_email", "n_ipv4", "n_phone")
-      .withColumnRenamed("redacted", "text")
+    val scrubbed =
+      scrubPii(TextOps.gopherGate(docs, minWords = minWords, maxWords = maxWords))
     if (nearExact)
       EventStreamJobs.streamingNearExactDedup(scrubbed, tsCol, watermark)
     else
@@ -215,10 +219,8 @@ object CorpusIntakeJob {
       k: Int = 3,
       numHashes: Int = 16,
       bandRows: Int = 2): DataFrame = {
-    val gated = TextOps.gopherGate(docs, minWords = minWords, maxWords = maxWords)
-    val scrubbed = TextOps.redactPii(gated, "text")
-      .drop("text", "n_email", "n_ipv4", "n_phone")
-      .withColumnRenamed("redacted", "text")
+    val scrubbed =
+      scrubPii(TextOps.gopherGate(docs, minWords = minWords, maxWords = maxWords))
     EventStreamJobs.streamingBandVerdicts(
       scrubbed, tsCol, watermark, horizonMs, verifyTau, k, numHashes, bandRows)
       .toDF()
@@ -306,29 +308,19 @@ object CorpusIntakeJob {
       }
       .start()
 
-  /** Streaming EMBEDDING intake against the PERSISTED standing state —
-    * the vector twin of [[runStream]] with a different state posture:
-    * there is ZERO Structured-Streaming state. Each micro-batch dedups
-    * against the persisted sign-LSH bucket table
-    * ([[StandingState.loadEmbBuckets]] feeding
-    * [[Dedup.dedupByEmbeddingLshIncrementalVsBuckets]] — within-batch
-    * lower-id collisions drop too) and the admitted vectors append to
-    * BOTH the standing vector table and the bucket table, closing the
-    * ingest cycle inside the stream. All state lives in the two parquet
-    * tables, so executors stay stateless and the tables are shared with
-    * the batch/[[graft.jobs.PrepareMain]] cycle.
-    *
-    * Crash-recovery admission is SELF-HEALING rather than stateful: if a
-    * batch replays after its appends were committed, every replayed
-    * vector now collides with its own standing copy (cosine 1 at any
-    * tau <= 1) and is dropped — no duplicate appends, no admission lost
-    * (spec-pinned). The residual window is a crash BETWEEN the two
-    * appends (vectors committed, bucket rows not — or vice versa after a
-    * manual reversed write): [[StandingState.repairEmbBuckets]] restores
-    * the invariant, and this job runs it ONCE at startup, so a restarted
-    * stream always resumes from a consistent pair of tables. The batch
-    * stream must carry (vec_id, embedding [, label]); ids must be unique
-    * across the stream and disjoint from standing. */
+  /** Streaming EMBEDDING intake against the PERSISTED standing state:
+    * ZERO Structured-Streaming state. Each micro-batch dedups against the
+    * persisted sign-LSH bucket table ([[StandingState.loadEmbBuckets]]
+    * feeding [[Dedup.dedupByEmbeddingLshIncrementalVsBuckets]] —
+    * within-batch lower-id collisions drop too) and the admitted vectors
+    * append to BOTH the standing vector table and the bucket table,
+    * closing the ingest cycle inside the stream. The shared state-fed
+    * protocol is [[runStateStream]]'s (startup repair, in-stream
+    * retention) and [[ingestBatch]]'s (self-healing replays, single-lease
+    * commit); [[StandingState.repairEmbBuckets]] is this kind's startup
+    * repair. The batch stream must carry
+    * (vec_id, embedding [, label]); ids must be unique across the stream
+    * and disjoint from standing. */
   def runEmbeddingStream(
       vecs: DataFrame,
       statePath: String,
@@ -338,37 +330,20 @@ object CorpusIntakeJob {
       nPlanes: Int = 4,
       dim: Int = 64,
       trigger: Trigger = Trigger.ProcessingTime("3 seconds"),
-      retention: Option[Retention] = None): StreamingQuery = {
-    StandingState.repairEmbBuckets(vecs.sparkSession, statePath, standingVecsPath)
-    vecs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (b: Dataset[Row], id: Long) =>
-        retention.filter(_.due(id)).foreach { r =>
-          StandingState.expireEmbeddings(
-            b.sparkSession, statePath, standingVecsPath, r.expired)
-        }
-        ingestEmbeddingBatch(b.toDF(), statePath, standingVecsPath, tau, nPlanes, dim)
-        ()
-      }
-      .start()
-  }
+      retention: Option[Retention] = None): StreamingQuery =
+    runStateStream(vecs, checkpoint, trigger, retention,
+      repair = StandingState.repairEmbBuckets(_, statePath, standingVecsPath),
+      expire = StandingState.expireEmbeddings(_, statePath, standingVecsPath, _),
+      ingest = ingestEmbeddingBatch(_, statePath, standingVecsPath, tau, nPlanes, dim))
 
-  /** One micro-batch of [[runEmbeddingStream]], factored out so the batch
-    * leg is testable (and usable) standalone: dedup vs persisted buckets,
-    * then append the admitted rows + their bucket rows. Returns the
-    * admitted count.
-    *
-    * Carries the same RETRY SELF-REPAIR and live-compaction posture as
-    * the text twin ([[ingestTextBatch]]): vec_ids already in the standing
-    * vector table are replays of committed vectors (ids are contractually
-    * unique and disjoint from standing) — never re-appended; replays
-    * missing bucket rows (the crash window between the two appends) get
-    * them completed in place, so a bare retry is safe without the
-    * startup-only [[StandingState.repairEmbBuckets]] pass. Both appends
-    * commit under ONE retried lease hold, and the whole attempt retries
-    * through a concurrent compaction's transient swap window. */
+  /** One micro-batch of [[runEmbeddingStream]], usable standalone: dedup
+    * vs the persisted buckets, then append the admitted vectors + their
+    * bucket rows through [[ingestBatch]]. ZERO-NORM vectors are REJECTED
+    * at intake: a zero vector has no cosine direction, so it can never
+    * collide with anything — including its own standing copy on a
+    * replay, which would re-append it forever. The vector table's
+    * columns define what is persisted; a missing `label` column is added
+    * as null. Returns the admitted count. */
   def ingestEmbeddingBatch(
       batch: DataFrame,
       statePath: String,
@@ -377,133 +352,36 @@ object CorpusIntakeJob {
       nPlanes: Int = 4,
       dim: Int = 64): Long = {
     val spark = batch.sparkSession
-    val attempts =
-      math.max(1, spark.conf.get("spark.graft.intake.batchAttempts", "3").toInt)
-    var last: Throwable = null
-    var attempt = 0
-    while (attempt < attempts) {
-      try return ingestEmbeddingBatchOnce(
-        batch, statePath, standingVecsPath, tau, nPlanes, dim)
-      catch {
-        case e: IllegalStateException => throw e
-        case scala.util.control.NonFatal(e) =>
-          last = e
-          attempt += 1
-          if (attempt < attempts) Thread.sleep(250L * attempt)
-      }
-    }
-    throw last
-  }
-
-  private def ingestEmbeddingBatchOnce(
-      batch: DataFrame,
-      statePath: String,
-      standingVecsPath: String,
-      tau: Double,
-      nPlanes: Int,
-      dim: Int): Long = {
-    val spark = batch.sparkSession
-    val withLabel =
-      if (batch.columns.contains("label")) batch
-      else batch.withColumn("label", lit(null).cast("string"))
-    // ZERO-NORM vectors are REJECTED at intake: a zero vector has no
-    // cosine direction, so it can never collide with anything — including
-    // its own standing copy on a checkpoint replay, which would break the
-    // self-healing admission contract (the replayed zero vector would be
-    // re-appended on every replay, duplicating rows in both tables).
-    // Rejecting at the door keeps the "replica always collides" invariant
-    // total over everything admitted.
-    val b0 = withLabel.filter(
-      graft.llm.VectorOps.norm("embedding") =!= 0.0)
-    val standingVecs = StandingState.readTable(spark, standingVecsPath)
-    // RETRY SELF-REPAIR (see scaladoc): split replays off by id-presence,
-    // complete the bucket rows of any caught in the crash window
-    // no distinct on the standing id column: vec_ids are contractually
-    // unique in the vector table, so the distinct bought nothing and
-    // cost a dedicated aggregation stage per batch (round-19 diet —
-    // same rule in the text and media twins)
-    val marked = b0.select("vec_id", "embedding", "label").join(
-        standingVecs.select("vec_id").withColumn("__in_standing", lit(1)),
-        Seq("vec_id"), "left")
-      .localCheckpoint(false)
-    val b = marked.filter(col("__in_standing").isNull).drop("__in_standing")
-    val replayed = marked.filter(col("__in_standing").isNotNull).drop("__in_standing")
-    var buckets = StandingState.loadEmbBuckets(spark, statePath, nPlanes, dim)
-    // healthy-case fast path — the text twin's discipline: only an actual
-    // retry pays for the drift repair
-    if (replayed.limit(1).count() > 0) {
-      val drifted = replayed.join(
-          buckets.select("vec_id").distinct(), Seq("vec_id"), "left_anti")
-        .localCheckpoint(true) // consumed by the bucket append AND the count
-      if (drifted.count() > 0) {
-        val rows = StandingState.embBucketRowsFor(drifted, statePath)
-        StandingState.withLeaseRetry(spark, statePath, "ingestEmbeddingBatch:repair") {
-          rows.write.mode("append").parquet(s"$statePath/emb_buckets")
-        }
-        // pinned file index predates the repair append — reload
-        buckets = StandingState.loadEmbBuckets(spark, statePath, nPlanes, dim)
-      }
-    }
-    // BARRIER + COUNT in one job (round-19 jobs-per-batch diet): the
-    // lazy localCheckpoint materializes — fully, all partitions — inside
-    // the count's single RDD job, so the admitted frame (whose plan
-    // READS standingVecsPath) is pinned in executor storage before the
-    // append below writes new files into that same directory; the eager
-    // checkpoint + Dataset.count() form paid the same barrier as two to
-    // three jobs.
-    val admitted = Dedup.dedupByEmbeddingLshIncrementalVsBuckets(
-      b, buckets,
-      standingVecs.select("vec_id", "embedding"),
-      tau, nPlanes, dim)
-      .localCheckpoint(false)
-    // vectors first, bucket rows second: a crash between the two leaves
-    // admitted vectors WITHOUT bucket rows (future replicas would not
-    // collide) — the batch-scoped repair above (and the startup
-    // repairEmbBuckets pass) recomputes exactly the missing rows. Both
-    // writes share one lease hold, serializing them against a live
-    // compaction's swap of either table.
-    // admit-nothing fast path (the text twin's rule): skip the lease and
-    // the two zero-row append jobs
-    val nAdmitted = admitted.queryExecution.toRdd.count()
-    if (nAdmitted == 0L) return 0L
-    val bucketRows = StandingState.embBucketRowsFor(admitted, statePath)
-    StandingState.withLeaseRetry(spark, statePath, "ingestEmbeddingBatch:commit") {
-      graft.llm.Frames.sizedWrite(admitted.select("vec_id", "embedding", "label"))
-        .write.mode("append").parquet(standingVecsPath)
-      graft.llm.Frames.sizedWrite(bucketRows)
-        .write.mode("append").parquet(s"$statePath/emb_buckets")
-    }
-    nAdmitted
+    ingestBatch(batch, statePath, Intake[DataFrame](
+      StandingState.embeddingKind(spark, statePath, standingVecsPath),
+      prepare = { b =>
+        val withLabel =
+          if (b.columns.contains("label")) b
+          else b.withColumn("label", lit(null).cast("string"))
+        withLabel.filter(graft.llm.VectorOps.norm("embedding") =!= 0.0)
+      },
+      load = () => StandingState.loadEmbBuckets(spark, statePath, nPlanes, dim),
+      admit = (fresh, standing, buckets) =>
+        Dedup.dedupByEmbeddingLshIncrementalVsBuckets(
+          fresh, buckets, standing.select("vec_id", "embedding"), tau, nPlanes, dim)))
   }
 
   /** Streaming TEXT intake against the PERSISTED standing state — the
-    * missing twin of [[runEmbeddingStream]], and the posture the
-    * watermark-bounded [[runStream]] cannot provide: a doc that exactly or
-    * nearly duplicates the STANDING CORPUS (not just a recently-streamed
-    * anchor) is dropped, because each micro-batch dedups against the
-    * persisted digest and LSH band tables
+    * posture the watermark-bounded [[runStream]] cannot provide: a doc
+    * that exactly or nearly duplicates the STANDING CORPUS (not just a
+    * recently-streamed anchor) is dropped, because each micro-batch
+    * dedups against the persisted digest and LSH band tables
     * ([[Dedup.exactIncrementalVsDigests]] +
     * [[Dedup.dedupNearLshIncrementalVsBands]]) and admitted docs append
-    * back to BOTH the corpus table and the state — the resume-don't-restart
-    * semantics of the reference's block follower
+    * back to BOTH the corpus table and the state — the resume-don't-
+    * restart semantics of the reference's block follower
     * (`block_follower_job.rb:111-138`), applied to continuous corpus
-    * intake against yesterday's corpus.
-    *
-    * ZERO Structured-Streaming state, like the embedding twin: all state
-    * lives in the shared parquet tables (corpus + `digests/` + `bands/`),
-    * so executors stay stateless and the tables are shared with the
-    * batch/[[graft.jobs.PrepareMain]] cycle. Crash-recovery admission is
-    * SELF-HEALING: a replayed micro-batch's admitted docs already sit in
-    * the corpus with their digests, so every replica collides with its own
-    * standing copy (digest equality is byte-exact) and is dropped — no
-    * duplicate appends, no admission lost. The residual window is a crash
-    * between the corpus append and the artifact append;
-    * [[StandingState.repairTextArtifacts]] restores the invariant and runs
-    * ONCE here at startup, so a restarted stream always resumes from a
-    * consistent (corpus, state) pair — and [[ingestTextBatch]] additionally
-    * carries a batch-scoped retry self-repair (id-presence split + drift
-    * completion), so even a bare batch retry without this startup pass
-    * cannot duplicate corpus rows.
+    * intake against yesterday's corpus. ZERO Structured-Streaming state:
+    * all state lives in the shared parquet tables (corpus + `digests/` +
+    * `bands/`), shared with the batch/[[graft.jobs.PrepareMain]] cycle.
+    * The shared state-fed protocol is [[runStateStream]]'s and
+    * [[ingestBatch]]'s; [[StandingState.repairTextArtifacts]] is this
+    * kind's startup repair.
     *
     * The fingerprint regime (shingle size, hash count, band rows,
     * normalization) is READ FROM THE STATE's meta row per batch — a state
@@ -539,7 +417,6 @@ object CorpusIntakeJob {
       gates: TrainedGates = TrainedGates(),
       censusDeepEvery: Long = 0L): StreamingQuery = {
     require(censusDeepEvery >= 0L, "censusDeepEvery must be >= 0")
-    StandingState.repairTextArtifacts(docs.sparkSession, statePath, standingDocsPath)
     // sourced gates load at stream start (the gates always mirror their
     // tables at batch 0, whether or not the caller pre-loaded them), then
     // rotate on the reloadEvery cadence; unsourced gates ride unchanged
@@ -547,34 +424,26 @@ object CorpusIntakeJob {
       if (gates.qualitySource.nonEmpty || gates.langSource.nonEmpty)
         gates.reloaded(docs.sparkSession)
       else gates
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (b: Dataset[Row], id: Long) =>
+    runStateStream(docs, checkpoint, trigger, retention,
+      repair = StandingState.repairTextArtifacts(_, statePath, standingDocsPath),
+      expire = StandingState.expire(_, statePath, standingDocsPath, _),
+      ingest = ingestTextBatch(_, statePath, standingDocsPath, tau,
+        minWords = minWords, maxWords = maxWords, gates = liveGates),
+      beforeIngest = { (spark, id) =>
         if (gates.reloadDue(id))
-          liveGates = liveGates.reloadedOrLastGood(b.sparkSession, id)
-        retention.filter(_.due(id)).foreach { r =>
-          StandingState.expire(
-            b.sparkSession, statePath, standingDocsPath, r.expired)
-        }
-        // batch 0 is covered by the startup repair pass above; the
-        // cadence heals BEFORE the batch's ingest so the batch's own
-        // census bump lands on a reconciled table
+          liveGates = liveGates.reloadedOrLastGood(spark, id)
+        // batch 0 is covered by the startup repair; the cadence heals
+        // BEFORE the batch's ingest so its census bump lands on a
+        // reconciled table
         if (censusDeepEvery > 0L && id > 0L && id % censusDeepEvery == 0L)
           StandingState.reconcileSourceCensus(
-            b.sparkSession, statePath, standingDocsPath, deep = true)
-        ingestTextBatch(b.toDF(), statePath, standingDocsPath, tau,
-          minWords = minWords, maxWords = maxWords, gates = liveGates)
-        ()
-      }
-      .start()
+            spark, statePath, standingDocsPath, deep = true)
+      })
   }
 
-  /** Streaming MEDIA intake against the PERSISTED standing state — the
-    * image/audio/video twin of [[runTextStream]]/[[runEmbeddingStream]]:
-    * each micro-batch of media records (media_id, mime, n_bytes, payload)
-    * is decoded and perceptually hashed executor-side (`phashOf` —
+  /** Streaming MEDIA intake against the PERSISTED standing state: each
+    * micro-batch of media records (media_id, mime, n_bytes, payload) is
+    * decoded and perceptually hashed executor-side (`phashOf` —
     * [[graft.llm.Multimodal.imagePhash]] by default; pass `audioPhash` /
     * `videoPhash` for those corpora, the state machinery is
     * representation-agnostic over the 64-bit hash string), deduplicated
@@ -584,13 +453,9 @@ object CorpusIntakeJob {
     * drops), and admitted records append to BOTH the standing media
     * table and the state. ZERO Structured-Streaming state; standing
     * payloads are never re-decoded (8 bytes of phash per standing item).
-    *
-    * Same crash posture as the text twin: replays self-heal (a replayed
-    * batch's items collide with their own standing phashes at hamming
-    * 0), [[StandingState.repairMediaArtifacts]] runs once at startup,
-    * and [[ingestMediaBatch]] carries the batch-scoped id-presence
-    * retry self-repair + single-lease commit + bounded whole-batch
-    * retry, so the stream rides through live compactions. */
+    * The shared state-fed protocol is [[runStateStream]]'s and
+    * [[ingestBatch]]'s; [[StandingState.repairMediaArtifacts]] is this
+    * kind's startup repair. */
   def runMediaStream(
       media: DataFrame,
       statePath: String,
@@ -599,29 +464,17 @@ object CorpusIntakeJob {
       maxHamming: Int = 8,
       phashOf: DataFrame => DataFrame = graft.llm.Multimodal.imagePhash,
       trigger: Trigger = Trigger.ProcessingTime("3 seconds"),
-      retention: Option[Retention] = None): StreamingQuery = {
-    StandingState.repairMediaArtifacts(
-      media.sparkSession, statePath, standingMediaPath, phashOf)
-    media.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (b: Dataset[Row], id: Long) =>
-        retention.filter(_.due(id)).foreach { r =>
-          StandingState.expireMedia(
-            b.sparkSession, statePath, standingMediaPath, r.expired)
-        }
-        ingestMediaBatch(b.toDF(), statePath, standingMediaPath, maxHamming, phashOf)
-        ()
-      }
-      .start()
-  }
+      retention: Option[Retention] = None): StreamingQuery =
+    runStateStream(media, checkpoint, trigger, retention,
+      repair = StandingState.repairMediaArtifacts(_, statePath, standingMediaPath, phashOf),
+      expire = StandingState.expireMedia(_, statePath, standingMediaPath, _),
+      ingest = ingestMediaBatch(_, statePath, standingMediaPath, maxHamming, phashOf))
 
-  /** One micro-batch of [[runMediaStream]] — decode + phash the batch,
-    * dedup vs the persisted bands, append admitted records + artifacts.
-    * Returns the admitted count. Carries the full retry posture of the
-    * text twin (see [[ingestTextBatch]]): id-presence self-repair,
-    * single-lease commit, bounded whole-batch retry. */
+  /** One micro-batch of [[runMediaStream]], usable standalone: decode +
+    * phash the FRESH records only (replays are split off first, so a
+    * committed record is never decoded again), dedup vs the persisted
+    * bands, then append the admitted records + their artifacts through
+    * [[ingestBatch]]. Returns the admitted count. */
   def ingestMediaBatch(
       batch: DataFrame,
       statePath: String,
@@ -629,118 +482,40 @@ object CorpusIntakeJob {
       maxHamming: Int = 8,
       phashOf: DataFrame => DataFrame = graft.llm.Multimodal.imagePhash): Long = {
     val spark = batch.sparkSession
-    val attempts =
-      math.max(1, spark.conf.get("spark.graft.intake.batchAttempts", "3").toInt)
-    var last: Throwable = null
-    var attempt = 0
-    while (attempt < attempts) {
-      try return ingestMediaBatchOnce(
-        batch, statePath, standingMediaPath, maxHamming, phashOf)
-      catch {
-        case e: IllegalStateException => throw e
-        case scala.util.control.NonFatal(e) =>
-          last = e
-          attempt += 1
-          if (attempt < attempts) Thread.sleep(250L * attempt)
-      }
-    }
-    throw last
+    ingestBatch(batch, statePath, Intake[(DataFrame, DataFrame, Int)](
+      StandingState.mediaKind(spark, statePath, standingMediaPath, phashOf),
+      prepare = identity,
+      load = () => StandingState.loadMediaState(spark, statePath),
+      admit = { case (fresh, _, (standingPh, standingBands, nBands)) =>
+        // decode + hash ONCE per fresh record, executor-side; payload
+        // bytes never hit the driver
+        val freshPh = phashOf(fresh).localCheckpoint(false)
+        val admittedPh = graft.llm.Multimodal.phashNearDupIncrementalVsBands(
+          freshPh, standingBands, standingPh, nBands, maxHamming)
+        // the record columns AND the phash: the commit appends the
+        // former and derives the artifacts from the latter, undecoded
+        fresh.join(admittedPh, Seq("media_id"))
+      }))
   }
 
-  private def ingestMediaBatchOnce(
-      batch: DataFrame,
-      statePath: String,
-      standingMediaPath: String,
-      maxHamming: Int,
-      phashOf: DataFrame => DataFrame): Long = {
-    val spark = batch.sparkSession
-    var (standingPh, standingBands, nBands) =
-      StandingState.loadMediaState(spark, statePath)
-    val standingMedia = StandingState.readTable(spark, standingMediaPath)
-    // RETRY SELF-REPAIR — the text twin's discipline: ids already in the
-    // media table are replays of committed records (ids contractually
-    // unique/disjoint); never re-appended, artifacts completed if the
-    // crash window left them missing
-    val marked = batch.join(
-        standingMedia.select("media_id").withColumn("__in", lit(1)),
-        Seq("media_id"), "left") // ids unique in the media table — no distinct
-      .localCheckpoint(false)
-    val fresh = marked.filter(col("__in").isNull).drop("__in")
-    val replayed = marked.filter(col("__in").isNotNull).drop("__in")
-    if (replayed.limit(1).count() > 0) {
-      val drifted = replayed.join(
-          standingBands.select("media_id").distinct(), Seq("media_id"), "left_anti")
-        .localCheckpoint(true)
-      if (drifted.count() > 0) {
-        val ph = phashOf(drifted).localCheckpoint(true)
-        StandingState.withLeaseRetry(spark, statePath, "ingestMediaBatch:repair") {
-          StandingState.writeMediaArtifacts(ph, statePath, nBands)
-        }
-        val reloaded = StandingState.loadMediaState(spark, statePath)
-        standingPh = reloaded._1
-        standingBands = reloaded._2
-      }
-    }
-    // decode + hash ONCE per fresh record, executor-side; payload bytes
-    // never hit the driver
-    val freshPh = phashOf(fresh).localCheckpoint(false)
-    // BARRIER + COUNT in one job (the text twin's round-19 shape): the
-    // lazy checkpoint materializes fully inside the count's single RDD
-    // job, pinning the frame (whose plan READS the tables the commit
-    // appends into) before any append runs
-    val admittedPh = graft.llm.Multimodal.phashNearDupIncrementalVsBands(
-        freshPh, standingBands, standingPh, nBands, maxHamming)
-      .localCheckpoint(false)
-    // admit-nothing fast path (the text twin's rule): skip the lease,
-    // the media append, and the artifact append jobs
-    val nAdmitted = admittedPh.queryExecution.toRdd.count()
-    if (nAdmitted == 0L) return 0L
-    val cols = standingMedia.columns.toIndexedSeq
-    val admitted = fresh
-      .join(admittedPh.select("media_id"), Seq("media_id"), "left_semi")
-      .localCheckpoint(true)
-    // media rows first, artifacts second (bands-absence is the drift
-    // witness), both under ONE retried lease hold — the live-compaction
-    // contract shared with the text and embedding twins
-    StandingState.withLeaseRetry(spark, statePath, "ingestMediaBatch:commit") {
-      graft.llm.Frames.sizedWrite(admitted.select(cols.head, cols.tail: _*))
-        .write.mode("append").parquet(standingMediaPath)
-      StandingState.writeMediaArtifacts(admittedPh, statePath, nBands)
-    }
-    nAdmitted
-  }
-
-  /** One micro-batch of [[runTextStream]], factored out so the batch leg
-    * is testable (and usable) standalone — e.g. a scripted daily ingest
-    * drives the exact same code path batch-by-batch (q75 replays q63's
-    * scenario through it):
+  /** One micro-batch of [[runTextStream]], usable standalone — e.g. a
+    * scripted daily ingest drives the exact same code path batch-by-batch
+    * (q75 replays q63's scenario through it):
     *
     *   gate -> scrub -> exact dedup vs persisted digests (+ within-batch)
     *     -> LSH near-dedup vs persisted bands (+ within-batch, lower-id
     *        wins) -> append admitted text to the corpus table -> append
-    *        admitted digests + band rows to the state
+    *        admitted digests + band rows to the state -> census bump
     *
     * `gate = false` / `scrub = false` skip stages 1-2 for pre-prepared
     * batches (the q63/q75 shape, where the batch is raw corpus text and
-    * the dedup semantics are under test). Corpus append precedes the
-    * state append deliberately: every crash shape then leaves drifted
-    * docs missing from `bands/`, the witness
-    * [[StandingState.repairTextArtifacts]] keys on. Returns the admitted
-    * count.
-    *
-    * RETRY SELF-REPAIR: a caller retrying after a failure BETWEEN the
-    * corpus append and the state append would otherwise duplicate corpus
-    * rows — the half-committed docs have text in the corpus but no
-    * digests, so their replicas sail through the exact leg. doc_ids are
-    * contractually unique and disjoint from standing, so id-presence in
-    * the corpus IS the replay witness: docs whose id is already in the
-    * corpus are never re-appended; those among them missing from `bands/`
-    * (the crash window) get their artifacts completed in place — the
-    * [[StandingState.repairTextArtifacts]] drift repair restricted to the
-    * batch, so it stays batch-shaped and runs on EVERY call, making a
-    * bare retry safe without the startup-only repair pass. Healthy-case
-    * cost: one broadcast id-join against the corpus id column and one
-    * against the distinct band ids — both narrow single-column scans.
+    * the dedup semantics are under test); the trained `gates` run between
+    * the rule gate and the scrub in the pipeline's pinned order. Scrub is
+    * deterministic, so a replayed batch's text equals its corpus text.
+    * The census, when the state keeps one, is bumped LAST in the commit,
+    * so every crash shape leaves it UNDER-counting — the drift
+    * [[StandingState.reconcileSourceCensus]] heals on every replay.
+    * Returns the admitted count.
     *
     * Shape at scale: stages 1-2 are per-row projections over the batch;
     * the exact leg shuffles 16-byte digests against the digest table; the
@@ -758,26 +533,107 @@ object CorpusIntakeJob {
       gate: Boolean = true,
       scrub: Boolean = true,
       gates: TrainedGates = TrainedGates()): Long = {
-    // LIVE-COMPACTION COEXISTENCE: a concurrent [[StandingState.compact]]
-    // swap can (a) hold the lease for its O(delta + rename) window — the
-    // commit below WAITS via withLeaseRetry — and (b) invalidate a scan
-    // whose pinned file list straddles the rename instant (the documented
-    // transient-reader caveat), which surfaces as a mid-batch read
-    // failure. The batch is idempotent under retry (the id-presence
-    // self-repair above), so the whole attempt retries a bounded number
-    // of times (`spark.graft.intake.batchAttempts`) instead of killing
-    // the streaming query. Lease-timeout IllegalStateExceptions are NOT
-    // swallowed: a crashed holder needs breakLease, and retrying would
-    // just re-spin the same wait.
     val spark = batch.sparkSession
-    val attempts =
-      math.max(1, spark.conf.get("spark.graft.intake.batchAttempts", "3").toInt)
+    ingestBatch(batch, statePath, Intake[StandingState](
+      StandingState.textKind(spark, statePath, standingDocsPath),
+      prepare = { b =>
+        val rgated =
+          if (gate) TextOps.gopherGate(b, minWords = minWords, maxWords = maxWords)
+          else b
+        // 1b + 1c. the trained gates in the pipeline's pinned order (rule
+        // gate -> quality -> language -> scrub), through CorpusPipeline's
+        // shared transforms — FUSED over one featurize when both gates
+        // share m (applyTrainedGates, spec-pinned equal to the sequential
+        // form). No barrier of its own: the skeleton's id-split checkpoint
+        // is the single consumer and caches the whole prefix.
+        val gated = graft.llm.CorpusPipeline.applyTrainedGates(
+          rgated, gates.qualityGate, gates.keepLangs)
+        if (scrub) scrubPii(gated) else gated
+      },
+      load = () => StandingState.load(spark, statePath),
+      admit = { (fresh, standing, state) =>
+        val meta = state.meta
+        val fp: DataFrame => DataFrame =
+          if (meta.normalizedFingerprints) TextOps.normalized(_) else identity
+        val unfp: DataFrame => DataFrame =
+          if (meta.normalizedFingerprints)
+            _.withColumn("text", col("raw_text")).drop("raw_text")
+          else identity
+        val exact = Dedup.exactIncrementalVsDigests(fresh, state.digests)
+        unfp(Dedup.dedupNearLshIncrementalVsBands(
+          fp(exact), state.bands, fp(standing).select("doc_id", "text"),
+          tau, meta.shingleSize, meta.numHashes, meta.bandRows))
+      },
+      // a crash that stranded the census bump behind the corpus append is
+      // only reachable through a replay (no-op sans census)
+      onReplay = () =>
+        StandingState.reconcileSourceCensus(spark, statePath, standingDocsPath),
+      commitLast = admitted =>
+        if (StandingState.sourceCensusExists(spark, statePath))
+          StandingState.bumpSourceCensus(spark, statePath, admitted)))
+  }
+
+  /** One state kind's ADMISSION step — everything the shared batch
+    * skeleton ([[ingestBatch]]) leaves to the kind:
+    *
+    *  - `prepare`    — per-row transforms before the replay split (text:
+    *                   gates + scrub; vectors: the zero-norm reject);
+    *  - `load`       — the kind's standing state, loaded before the split
+    *                   and RELOADED after a drift repair;
+    *  - `admit`      — (fresh rows, standing primary, state) -> the
+    *                   admitted rows, carrying the primary's columns;
+    *  - `onReplay`   — run once when the batch holds replays;
+    *  - `commitLast` — the last step of the commit, under its lease. */
+  private final case class Intake[S](
+      kind: StandingState.Kind,
+      prepare: DataFrame => DataFrame,
+      load: () => S,
+      admit: (DataFrame, DataFrame, S) => DataFrame,
+      onReplay: () => Unit = () => (),
+      commitLast: DataFrame => Unit = _ => ())
+
+  /** THE STATE-FED INTAKE PROTOCOL — one skeleton for the text, vector
+    * and media intakes, and the batch-side half of the reference's
+    * resume-by-replay follower (`block_follower_job.rb:111-138`): a
+    * micro-batch dedups against PERSISTED standing state and commits
+    * its admitted rows back to the primary table and the artifact
+    * tables, so a crash never needs Structured-Streaming state to
+    * recover. Per attempt:
+    *
+    *   1. REPLAY SPLIT — ids are contractually unique and disjoint from
+    *      standing, so id-presence in the primary IS the replay witness:
+    *      replayed rows are never re-appended.
+    *   2. DRIFT REPAIR — replayed rows missing from the witness table
+    *      (the crash window between the primary append and the
+    *      artifacts) get their artifacts completed in place, so a BARE
+    *      retry is safe without the startup repair; then the state
+    *      reloads. Healthy batches skip this (a 1-row replay probe).
+    *   3. ADMISSION — the kind's own dedup over the fresh rows; a
+    *      barrier + count in ONE job pins the admitted frame (whose plan
+    *      reads the tables the commit writes) before any append, and an
+    *      admit-nothing batch commits nothing (no lease, no empty
+    *      appends).
+    *   4. COMMIT — under ONE retried lease hold: the primary first, then
+    *      the artifacts with the witness last, then the kind's last step.
+    *      Every crash shape leaves the torn ids missing from the witness
+    *      — exactly the drift step 2 and the startup repair complete —
+    *      and the shared hold serializes the appends against a live
+    *      compaction's swap.
+    *
+    * A replayed batch's admitted rows already sit in the primary with
+    * their artifacts, so its replay admits nothing: no duplicate
+    * appends, no admission lost. LIVE-COMPACTION COEXISTENCE: a scan
+    * whose pinned file list straddles a concurrent swap's rename fails
+    * mid-batch; the attempt is idempotent, so the batch gets three
+    * attempts (backoff 250 ms x attempt). Lease-timeout
+    * `IllegalStateException`s are NOT retried: a crashed holder needs
+    * [[StandingState.breakLease]], and a retry would re-spin the wait. */
+  private def ingestBatch[S](batch: DataFrame, statePath: String, intake: Intake[S]): Long = {
+    val attempts = 3
     var last: Throwable = null
     var attempt = 0
     while (attempt < attempts) {
-      try return ingestTextBatchOnce(
-        batch, statePath, standingDocsPath, tau, minWords, maxWords, gate,
-        scrub, gates)
+      try return ingestOnce(batch, statePath, intake)
       catch {
         case e: IllegalStateException => throw e
         case scala.util.control.NonFatal(e) =>
@@ -789,121 +645,82 @@ object CorpusIntakeJob {
     throw last
   }
 
-  private def ingestTextBatchOnce(
-      batch: DataFrame,
-      statePath: String,
-      standingDocsPath: String,
-      tau: Double,
-      minWords: Int,
-      maxWords: Int,
-      gate: Boolean,
-      scrub: Boolean,
-      gates: TrainedGates): Long = {
+  /** One attempt of [[ingestBatch]]. */
+  private def ingestOnce[S](batch: DataFrame, statePath: String, intake: Intake[S]): Long = {
     val spark = batch.sparkSession
-    var state = StandingState.load(spark, statePath)
-    val meta = state.meta
-    val rgated =
-      if (gate) TextOps.gopherGate(batch, minWords = minWords, maxWords = maxWords)
-      else batch
-    // 1b + 1c. the trained gates in the pipeline's pinned order (rule
-    // gate -> quality -> language -> scrub), through CorpusPipeline's
-    // shared transforms — FUSED over one featurize when both gates share
-    // m (applyTrainedGates, spec-pinned equal to the sequential form),
-    // so a both-gates batch pays one feature pass instead of two
-    val gated = graft.llm.CorpusPipeline.applyTrainedGates(
-      rgated, gates.qualityGate, gates.keepLangs)
-    // the gate + PII-regex prefix needs no barrier of its own: `marked`
-    // just below is the single consumer, and ITS lazy checkpoint caches
-    // the whole prefix for the exact leg, the near leg, and the
-    // surviving-row chain (a second buffer here only double-copied every
-    // batch row through executor storage)
-    val scrubbed0 =
-      if (scrub)
-        TextOps.redactPii(gated, "text")
-          .drop("text", "n_email", "n_ipv4", "n_phone")
-          .withColumnRenamed("redacted", "text")
-      else gated
-    val standingDocs = StandingState.readTable(spark, standingDocsPath)
-    // RETRY SELF-REPAIR (see scaladoc): ids already in the corpus are
-    // replays of committed docs — split them off so a retry after a
-    // mid-append crash never re-appends their text, and complete the
-    // artifacts of any that are missing from bands/ (the crash window).
-    // Scrub is deterministic, so the replayed batch text == corpus text.
-    val marked = scrubbed0.join(
-        standingDocs.select("doc_id").withColumn("__in_corpus", lit(1)),
-        Seq("doc_id"), "left") // ids unique in the corpus — no distinct
+    val kind = intake.kind
+    var state = intake.load()
+    val standing = StandingState.readTable(spark, kind.primary)
+    // no distinct on the standing id column: ids are unique in the
+    // primary, and the distinct cost an aggregation stage per batch
+    val marked = intake.prepare(batch).join(
+        standing.select(kind.id).withColumn("__in_standing", lit(1)),
+        Seq(kind.id), "left")
       .localCheckpoint(false)
-    val scrubbed = marked.filter(col("__in_corpus").isNull).drop("__in_corpus")
-    val replayed = marked.filter(col("__in_corpus").isNotNull).drop("__in_corpus")
-    val cfg = graft.llm.CorpusPipeline.Config(
-      shingleSize = meta.shingleSize,
-      normalizeFingerprints = meta.normalizedFingerprints)
-    // healthy-case fast path: no replays (the 1-row probe forces `marked`,
-    // which the legs below need anyway) -> skip the drift machinery and
-    // its band-id scan entirely; only an actual retry pays for repair
+    val fresh = marked.filter(col("__in_standing").isNull).drop("__in_standing")
+    val replayed = marked.filter(col("__in_standing").isNotNull).drop("__in_standing")
     if (replayed.limit(1).count() > 0) {
-      val drifted = replayed.join(
-          state.bands.select("doc_id").distinct(), Seq("doc_id"), "left_anti")
+      val witnessIds = StandingState.readTable(spark, s"$statePath/${kind.witness}")
+        .select(kind.id).distinct()
+      val drifted = replayed.join(witnessIds, Seq(kind.id), "left_anti")
         .localCheckpoint(true) // consumed by the artifact append AND the count
       if (drifted.count() > 0) {
-        val (dg, bd) = StandingState.artifactsFor(drifted, cfg, meta)
-        val sp = StandingState.spanHashesForState(drifted, state)
-        StandingState.withLeaseRetry(spark, statePath, "ingestTextBatch:repair") {
-          StandingState.writeArtifacts(dg, bd, statePath, sp)
+        val append = kind.appendFor(drifted)
+        StandingState.withLeaseRetry(spark, statePath, s"ingest${kind.name}Batch:repair") {
+          append()
         }
-        // the state's pinned file index predates the repair append — reload
-        // so the legs below dedup against the completed artifact tables
-        state = StandingState.load(spark, statePath)
+        // the loaded state's file index predates the repair append
+        state = intake.load()
       }
-      // a crash that stranded the census bump behind the corpus append is
-      // only reachable through a replay — heal it here (no-op sans census)
-      StandingState.reconcileSourceCensus(spark, statePath, standingDocsPath)
+      intake.onReplay()
     }
-    val fp: DataFrame => DataFrame =
-      if (meta.normalizedFingerprints) TextOps.normalized(_) else identity
-    val unfp: DataFrame => DataFrame =
-      if (meta.normalizedFingerprints)
-        _.withColumn("text", col("raw_text")).drop("raw_text")
-      else identity
-    val exact = Dedup.exactIncrementalVsDigests(scrubbed, state.digests)
-    // BARRIER + COUNT in one job (round-19 jobs-per-batch diet): the
-    // admitted frame's plan READS the corpus and state tables the
-    // appends below write into, so it must fully materialize first —
-    // the lazy localCheckpoint pins every partition in executor storage
-    // inside the count's single RDD job, where the previous eager
-    // checkpoint + Dataset.count() paid three jobs for the same barrier.
-    val admitted = unfp(Dedup.dedupNearLshIncrementalVsBands(
-        fp(exact), state.bands, fp(standingDocs).select("doc_id", "text"),
-        tau, meta.shingleSize, meta.numHashes, meta.bandRows))
-      .localCheckpoint(false)
-    // an ADMIT-NOTHING batch (every doc gated out or deduped — the
-    // steady state of a replay-heavy or duplicate-heavy feed) skips the
-    // whole commit: the lease acquire, four empty appends, and the
-    // census bump would each still cost a Spark job writing zero rows.
+    val admitted = intake.admit(fresh, standing, state).localCheckpoint(false)
     val nAdmitted = admitted.queryExecution.toRdd.count()
     if (nAdmitted == 0L) return 0L
-    // BOTH appends commit under ONE (retried) lease hold: corpus first,
-    // artifacts second — see the repair contract above — and the shared
-    // hold is what serializes the corpus append against a live
-    // compaction's swap of that same directory (a file landing in the
-    // corpus dir mid-rename would be deleted with the retired snapshot)
-    val cols = standingDocs.columns.toIndexedSeq
-    val (dg, bd) = StandingState.artifactsFor(admitted, cfg, meta)
-    // span-index upkeep: when the state carries one, the admitted batch's
-    // window hashes append with the other artifacts (same lease hold), so
-    // a span-stage ingest tomorrow sees today's admissions as standing
-    // (the span regime rides the loaded state — no per-batch re-probe)
-    val sp = StandingState.spanHashesForState(admitted, state)
-    // census upkeep is opt-in (iff the state maintains one) and updates
-    // LAST in the commit, so every crash shape leaves it UNDER-counting —
-    // exactly the drift reconcileSourceCensus detects and heals
-    val censusOn = StandingState.sourceCensusExists(spark, statePath)
-    StandingState.withLeaseRetry(spark, statePath, "ingestTextBatch:commit") {
+    val cols = standing.columns.toIndexedSeq
+    val appendArtifacts = kind.appendFor(admitted)
+    StandingState.withLeaseRetry(spark, statePath, s"ingest${kind.name}Batch:commit") {
       graft.llm.Frames.sizedWrite(admitted.select(cols.head, cols.tail: _*))
-        .write.mode("append").parquet(standingDocsPath)
-      StandingState.writeArtifacts(dg, bd, statePath, sp)
-      if (censusOn) StandingState.bumpSourceCensus(spark, statePath, admitted)
+        .write.mode("append").parquet(kind.primary)
+      appendArtifacts()
+      intake.commitLast(admitted)
     }
     nAdmitted
   }
+
+  /** The state-fed STREAM RUNNER shared by [[runTextStream]],
+    * [[runEmbeddingStream]] and [[runMediaStream]]: the kind's repair runs
+    * ONCE at startup, so a restarted stream always resumes from a
+    * consistent (primary, state) pair; then each micro-batch runs the
+    * kind's expire when `retention` is due (BEFORE the ingest, so
+    * replicas of just-expired content re-admit in the same trigger),
+    * then `beforeIngest`, then the ingest. */
+  private def runStateStream(
+      input: DataFrame,
+      checkpoint: String,
+      trigger: Trigger,
+      retention: Option[Retention],
+      repair: SparkSession => Unit,
+      expire: (SparkSession, Column) => Long,
+      ingest: DataFrame => Long,
+      beforeIngest: (SparkSession, Long) => Unit = (_, _) => ()): StreamingQuery = {
+    repair(input.sparkSession)
+    input.writeStream
+      .outputMode("append")
+      .option("checkpointLocation", checkpoint)
+      .trigger(trigger)
+      .foreachBatch { (b: Dataset[Row], id: Long) =>
+        retention.filter(_.due(id)).foreach(r => expire(b.sparkSession, r.expired))
+        beforeIngest(b.sparkSession, id)
+        ingest(b.toDF())
+        ()
+      }
+      .start()
+  }
+
+  /** Stage 2 — the PII scrub: `text` rewritten by [[TextOps.redactPii]]. */
+  private def scrubPii(docs: DataFrame): DataFrame =
+    TextOps.redactPii(docs, "text")
+      .drop("text", "n_email", "n_ipv4", "n_phone")
+      .withColumnRenamed("redacted", "text")
 }

@@ -547,6 +547,89 @@ class StandingStateSpec extends SparkSpec {
     assert(StandingState.repairTextArtifacts(spark, statePath, corpusDir) === ((0L, 0L)))
   }
 
+  test("repairMediaArtifacts restores the media<->artifact invariant after a torn append") {
+    // engineered bright/dark rasters — see the runMediaStream spec's
+    // aHash note: prose rasters all hash within hamming 8 of each other
+    val mk: Int => String = i =>
+      (0 until 20).map { j =>
+        if (((i.toLong * 2654435761L >> j) & 1L) == 1L) "!!!!!" else "zzzzz"
+      }.mkString(" ")
+    def mediaOf(rows: (Long, String)*) =
+      Multimodal.asMedia(rows.toDF("doc_id", "text"))
+    val mediaDir = java.nio.file.Files.createTempDirectory("media_repair_m_").toString
+    val statePath = java.nio.file.Files.createTempDirectory("media_repair_state_").toString
+    def artifactIds(t: String): Set[Long] =
+      spark.read.parquet(s"$statePath/$t").select("media_id").as[Long].collect().toSet
+    mediaOf(1L -> mk(1), 2L -> mk(2)).write.mode("overwrite").parquet(mediaDir)
+    StandingState.writeMediaState(
+      Multimodal.imagePhash(spark.read.parquet(mediaDir)), statePath)
+
+    // TORN APPEND (crash between the ingest's media append and its
+    // artifact append): item 5 landed in the media table, its phash and
+    // band rows did not — a replica of 5 would be admitted until repaired
+    mediaOf(5L -> mk(5)).write.mode("append").parquet(mediaDir)
+    val (drift, ghosts) = StandingState.repairMediaArtifacts(spark, statePath, mediaDir)
+    assert(drift === 1L && ghosts === 0L)
+    Seq("media_phashes", "media_bands").foreach { t =>
+      assert(artifactIds(t) === Set(1L, 2L, 5L), s"$t not completed")
+    }
+    val (ph, bands, nBands) = StandingState.loadMediaState(spark, statePath)
+    val survivors = Multimodal.phashNearDupIncrementalVsBands(
+      Multimodal.imagePhash(mediaOf(50L -> mk(5))), bands, ph, nBands, 8)
+      .select("media_id").as[Long].collect()
+    assert(survivors.isEmpty, "post-repair, the torn item's replica must drop")
+
+    // GHOST rows in BOTH artifact tables (artifacts whose item never
+    // landed in the media table — the reversed tear): written directly,
+    // then dropped by the repair, which is then a no-op
+    val ghostPh = Multimodal.imagePhash(mediaOf(9L -> mk(9))).select("media_id", "phash")
+    ghostPh.write.mode("append").parquet(s"$statePath/media_phashes")
+    Multimodal.phashBandRows(ghostPh, nBands)
+      .select(col("doc_id").as("media_id"), col("band"), col("sig"))
+      .write.mode("append").parquet(s"$statePath/media_bands")
+    val (d2, g2) = StandingState.repairMediaArtifacts(spark, statePath, mediaDir)
+    assert(d2 === 0L && g2 === 1L + nBands, "one phash row + one row per band")
+    Seq("media_phashes", "media_bands").foreach { t =>
+      assert(artifactIds(t) === Set(1L, 2L, 5L), s"$t ghost rows survived")
+    }
+    assert(StandingState.repairMediaArtifacts(spark, statePath, mediaDir) === ((0L, 0L)))
+  }
+
+  test("optional-table probe is a filesystem check: directory shapes, no Spark job") {
+    import java.nio.file.{Files, Paths}
+    val statePath = Files.createTempDirectory("census_probe_").toString
+    val census = Paths.get(statePath, "source_census")
+    val group = s"census-probe-${System.nanoTime()}"
+    def probe(at: String = statePath): Boolean = {
+      spark.sparkContext.setJobGroup(group, "existence probe")
+      try StandingState.sourceCensusExists(spark, at)
+      finally spark.sparkContext.clearJobGroup()
+    }
+    // absent: no directory, an empty one, one holding only bookkeeping
+    assert(!probe())
+    Files.createDirectories(census)
+    assert(!probe())
+    Files.createFile(census.resolve("_SUCCESS"))
+    Files.createFile(census.resolve(".hidden.crc"))
+    assert(!probe())
+    // present: a data file at the top level ...
+    val corpusDir = Files.createTempDirectory("census_probe_docs_").toString
+    docs(1L -> base(1)).write.mode("overwrite").parquet(corpusDir)
+    StandingState.writeSourceCensus(spark, statePath, corpusDir)
+    assert(probe())
+    // ... or only below a partition directory (the bucketed `cpart=*` shape)
+    val nested = Files.createTempDirectory("census_probe_nested_").toString
+    val parted = Paths.get(nested, "source_census", "cpart=0")
+    Files.createDirectories(parted)
+    Files.createFile(Paths.get(nested, "source_census", "_SUCCESS"))
+    Files.copy(Files.list(census).filter(_.getFileName.toString.startsWith("part-"))
+      .findFirst().get(), parted.resolve("part-00000.parquet"))
+    assert(probe(nested))
+    // none of the probes above submitted a Spark job
+    assert(spark.sparkContext.statusTracker.getJobIdsForGroup(group).isEmpty,
+      "the existence probe ran a Spark job")
+  }
+
   test("incompatible config is refused loudly") {
     val standing = docs(1L -> base(1))
     val state = StandingState.build(standing, CorpusPipeline.Config(shingleSize = 3))

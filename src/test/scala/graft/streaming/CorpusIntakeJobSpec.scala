@@ -1083,6 +1083,121 @@ class CorpusIntakeJobSpec extends SparkSpec {
     assert(spark.read.parquet(standingDir).count() === 4L)
   }
 
+  test("bare ingestMediaBatch retry after a mid-append crash: no duplicate media rows, artifacts completed") {
+    // the media twin of the text and embedding retry tests: the records
+    // landed in the media table, the process died before the artifact
+    // append, and the caller retries the batch directly — id-presence
+    // must route the replays to repair, never re-append
+    import graft.llm.Multimodal
+    // engineered bright/dark rasters — see the runMediaStream spec's
+    // aHash note: prose rasters all hash within hamming 8 of each other
+    val mk: Int => String = i =>
+      (0 until 20).map { j =>
+        if (((i.toLong * 2654435761L >> j) & 1L) == 1L) "!!!!!" else "zzzzz"
+      }.mkString(" ")
+    def mediaOf(rows: (Long, String)*) =
+      Multimodal.asMedia(rows.toDF("doc_id", "text"))
+    val mediaDir = java.nio.file.Files.createTempDirectory("media_retry_m_").toString
+    mediaOf(1L -> mk(1), 2L -> mk(2)).write.mode("overwrite").parquet(mediaDir)
+    val statePath = java.nio.file.Files.createTempDirectory("media_retry_s_").toString
+    graft.llm.StandingState.writeMediaState(
+      Multimodal.imagePhash(spark.read.parquet(mediaDir)), statePath)
+    // crashed first attempt: items 10/23 admitted + appended, NO artifacts
+    mediaOf(10L -> mk(10), 23L -> mk(23)).write.mode("append").parquet(mediaDir)
+    // the bare retry of the SAME batch (12 is a replica of standing 1)
+    val batch = mediaOf(10L -> mk(10), 23L -> mk(23), 12L -> mk(1))
+    assert(CorpusIntakeJob.ingestMediaBatch(batch, statePath, mediaDir) === 0L,
+      "a retry repairs, it does not re-admit")
+    def tableIds: Seq[Long] =
+      spark.read.parquet(mediaDir).select("media_id").as[Long].collect().toSeq
+    assert(tableIds.length === tableIds.distinct.length, "duplicate media rows")
+    assert(tableIds.toSet === Set(1L, 2L, 10L, 23L))
+    // artifacts completed in place, in BOTH artifact tables
+    Seq("media_phashes", "media_bands").foreach { t =>
+      assert(spark.read.parquet(s"$statePath/$t").select("media_id").as[Long]
+        .collect().toSet === Set(1L, 2L, 10L, 23L), s"$t not completed")
+    }
+    // replicas (fresh ids) of the torn items now drop — a byte replica and
+    // a near-identical raster — while a novel item admits
+    assert(CorpusIntakeJob.ingestMediaBatch(
+      mediaOf(20L -> mk(10), 21L -> (mk(23) + " !!"), 22L -> mk(200)),
+      statePath, mediaDir) === 1L)
+    assert(tableIds.toSet === Set(1L, 2L, 10L, 23L, 22L))
+    // idempotent: a second full retry is a no-op
+    assert(CorpusIntakeJob.ingestMediaBatch(batch, statePath, mediaDir) === 0L)
+    assert(spark.read.parquet(mediaDir).count() === 5L)
+  }
+
+  test("embedding and media streams restart after a crashed primary swap: the startup repair heals the table") {
+    // crash shape: an in-stream expire rewrote the primary table through
+    // its snapshot-delta swap and died between the two renames, leaving
+    // only `<table>__retired`. The restarted stream's startup repair must
+    // heal it back in place instead of failing to read the table.
+    import java.nio.file.{Files, Paths}
+    import org.apache.spark.sql.functions.lit
+    import graft.llm.{Multimodal, StandingState}
+    implicit val sqlCtx = spark.sqlContext
+    def strand(dir: String): Unit =
+      Files.move(Paths.get(dir), Paths.get(dir + "__retired"))
+    def healed(dir: String): Boolean =
+      Files.exists(Paths.get(dir)) && !Files.exists(Paths.get(dir + "__retired"))
+
+    def vec(seed: Int): Array[Float] =
+      Array.tabulate(64)(i => (math.sin(seed * 31 + i) * 0.5).toFloat)
+    val vecsDir = Files.createTempDirectory("emb_restart_vecs_").toString
+    Seq((1L, vec(1)), (2L, vec(2))).toDF("vec_id", "embedding")
+      .withColumn("label", lit("s"))
+      .write.mode("overwrite").parquet(vecsDir)
+    val vState = Files.createTempDirectory("emb_restart_state_").toString
+    StandingState.writeEmbBuckets(spark.read.parquet(vecsDir), vState)
+    strand(vecsDir)
+    val vIn = MemoryStream[IntakeVec]
+    val vq = CorpusIntakeJob.runEmbeddingStream(vIn.toDF(), vState, vecsDir,
+      Files.createTempDirectory("emb_restart_ck_").toString, tau = 0.999)
+    try {
+      assert(healed(vecsDir), "startup repair left the vector table stranded")
+      vIn.addData(
+        IntakeVec(10L, vec(1), "b"),   // replica of standing 1 -> dropped
+        IntakeVec(11L, vec(11), "b"))  // novel -> admitted
+      vq.processAllAvailable()
+      assert(vq.exception.isEmpty, s"stream died: ${vq.exception}")
+    } finally vq.stop()
+    assert(spark.read.parquet(vecsDir).select("vec_id").as[Long].collect().toSet
+      === Set(1L, 2L, 11L))
+
+    val mk: Int => String = i =>
+      (0 until 20).map { j =>
+        if (((i.toLong * 2654435761L >> j) & 1L) == 1L) "!!!!!" else "zzzzz"
+      }.mkString(" ")
+    def mediaOf(rows: (Long, String)*) =
+      Multimodal.asMedia(rows.toDF("doc_id", "text"))
+    def rec(id: Long, text: String): (Long, String, Long, Array[Byte]) = {
+      val r = mediaOf(id -> text).head()
+      (r.getAs[Long]("media_id"), r.getAs[String]("mime"),
+        r.getAs[Long]("n_bytes"), r.getAs[Array[Byte]]("payload"))
+    }
+    val mediaDir = Files.createTempDirectory("media_restart_m_").toString
+    mediaOf(1L -> mk(1), 2L -> mk(2)).write.mode("overwrite").parquet(mediaDir)
+    val mState = Files.createTempDirectory("media_restart_s_").toString
+    StandingState.writeMediaState(
+      Multimodal.imagePhash(spark.read.parquet(mediaDir)), mState)
+    strand(mediaDir)
+    val mIn = MemoryStream[(Long, String, Long, Array[Byte])]
+    val mq = CorpusIntakeJob.runMediaStream(
+      mIn.toDF().toDF("media_id", "mime", "n_bytes", "payload"), mState, mediaDir,
+      Files.createTempDirectory("media_restart_ck_").toString, maxHamming = 8)
+    try {
+      assert(healed(mediaDir), "startup repair left the media table stranded")
+      mIn.addData(
+        rec(10, mk(1)),    // replica of standing 1 -> dropped
+        rec(11, mk(10)))   // novel -> admitted
+      mq.processAllAvailable()
+      assert(mq.exception.isEmpty, s"stream died: ${mq.exception}")
+    } finally mq.stop()
+    assert(spark.read.parquet(mediaDir).select("media_id").as[Long].collect().toSet
+      === Set(1L, 2L, 11L))
+  }
+
   test("intake: exact mode dedups on redacted text; distinct texts all pass") {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[StreamDoc]
