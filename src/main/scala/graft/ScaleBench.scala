@@ -624,6 +624,10 @@ object ScaleBench {
     // compaction (snapshot-delta, lease-retried) must drop the file
     // counts without killing the stream or losing admissions.
     locally {
+      import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
+      import java.util.concurrent.atomic.AtomicLong
+      import scala.jdk.CollectionConverters._
+      import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
       import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       import graft.streaming.CorpusIntakeJob
       import spark.implicits._
@@ -659,14 +663,30 @@ object ScaleBench {
         // driver-side machinery (state loads, probes, empty appends) caps
         // stream throughput at high trigger cadence regardless of data
         // volume. Count Spark jobs per micro-batch so the fixed overhead
-        // is a measured number, not a log-archaeology exercise.
-        val jobsPerBatch = new Array[Long](nB)
-        val jobCount = new java.util.concurrent.atomic.AtomicLong(0L)
-        val jobListener = new org.apache.spark.scheduler.SparkListener {
-          override def onJobStart(
-              js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-            jobCount.incrementAndGet(); ()
+        // is a measured number, not a log-archaeology exercise. Jobs are
+        // keyed by their `streaming.sql.batchId` local property (-1 outside
+        // the stream) and read only once a marker job's start event, queued
+        // behind every earlier one on the asynchronous listener bus, has
+        // arrived: a read right after processAllAvailable misses late ones.
+        val drainProp = "graft.scalebench.drain"
+        val jobsByBatch = new ConcurrentHashMap[Long, AtomicLong]()
+        def jobsOf(batchId: Long): Long = jobsByBatch.getOrDefault(batchId, new AtomicLong).get
+        @volatile var drained = new CountDownLatch(0)
+        val jobListener = new SparkListener {
+          override def onJobStart(js: SparkListenerJobStart): Unit = {
+            val props = Option(js.properties).getOrElse(new java.util.Properties)
+            if (props.getProperty(drainProp) != null) drained.countDown()
+            else jobsByBatch.computeIfAbsent(props.getProperty("streaming.sql.batchId", "-1").toLong,
+              _ => new AtomicLong).incrementAndGet()
+            ()
           }
+        }
+        def drainListenerBus(): Unit = {
+          drained = new CountDownLatch(1)
+          spark.sparkContext.setLocalProperty(drainProp, "1")
+          try spark.sparkContext.parallelize(Seq(1), 1).count()
+          finally spark.sparkContext.setLocalProperty(drainProp, null)
+          drained.await(30, TimeUnit.SECONDS)
         }
         spark.sparkContext.addSparkListener(jobListener)
         var filesBefore = 0
@@ -675,10 +695,8 @@ object ScaleBench {
         try {
           (0 until nB).foreach { b =>
             in.addData(mkBatch(b, 500): _*)
-            val j0 = jobCount.get()
             val (_, t) = timed(q.processAllAvailable())
             perBatch(b) = t
-            jobsPerBatch(b) = jobCount.get() - j0
             if (b == 2) { // live compaction mid-run, stream still open
               filesBefore = intakeFiles
               val (_, tc) = timed(StandingState.compact(spark, statePath, Some(corpusDir)))
@@ -687,10 +705,9 @@ object ScaleBench {
             }
           }
           require(q.exception.isEmpty, s"intake stream died: ${q.exception}")
-        } finally {
-          q.stop()
-          spark.sparkContext.removeSparkListener(jobListener)
-        }
+        } finally q.stop()
+        drainListenerBus()
+        val jobsPerBatch = jobsByBatch.keySet.asScala.toSeq.filter(_ >= 0).sorted.map(jobsOf)
         // ADMIT-NOTHING fixed machinery (the round-17 "44 jobs, 5-6 s at
         // sf0.1 admitting nothing" measurement, re-taken per round): a
         // replay of batch 0 through the bare batch leg — every doc's id
@@ -698,17 +715,16 @@ object ScaleBench {
         // dedup + self-repair machinery and commits nothing. Its job
         // count and latency ARE the per-call overhead a high-frequency
         // trigger pays regardless of data.
-        val (replayJobs, replaySec) = {
-          spark.sparkContext.addSparkListener(jobListener)
+        val (replayJobs, replaySec) =
           try {
-            val j0 = jobCount.get()
+            val j0 = jobsOf(-1)
             val (n, t) = timed(CorpusIntakeJob.ingestTextBatch(
               mkBatch(0, 500).toDF("doc_id", "text"),
               statePath, corpusDir, tau = 0.5))
             require(n == 0L, s"replay batch must admit nothing, admitted $n")
-            (jobCount.get() - j0, t)
+            drainListenerBus()
+            (jobsOf(-1) - j0, t)
           } finally spark.sparkContext.removeSparkListener(jobListener)
-        }
         val admitted = spark.read.parquet(corpusDir)
           .filter(col("doc_id") >= 5000000000L).count()
         // flat = the last (post-compaction, most-appended) batch costs no

@@ -6,7 +6,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.model.Model
 import graft.ops.{BlockOps, FollowerConfig}
-import graft.sink.KvPubSubSink
+import graft.streaming.JsonlReplaySource
 
 /** The `meeseeker sync` lifecycle (SURVEY §3.1) on Spark: source -> explode
   * -> normalize -> key -> [summaries] -> sink, as one declarative plan per
@@ -33,11 +33,10 @@ object BlockFollowerPipeline {
   /** Run the whole pipeline over one (batch or micro-batch) block frame.
     *
     * With `carrySummaries` (the streaming path), the summary of the
-    * batch-final trx prefix — which strict parity suppresses within the
-    * batch — is parked under a per-batch KV control key and published at the
-    * head of the next non-empty batch, so an N-micro-batch replay produces
-    * the exact publish sequence of a single continuous run; empty batches
-    * carry the pending summary forward. */
+    * batch-final trx prefix is parked under [[pendingSummaryKey]] and
+    * published at the head of the next non-empty batch (see
+    * [[FollowerBatch.run]]), so an N-micro-batch replay produces the exact
+    * publish sequence of a single continuous run. */
   def processBatch(
       blocks: DataFrame,
       vops: DataFrame,
@@ -46,43 +45,15 @@ object BlockFollowerPipeline {
       carrySummaries: Boolean = false,
       batchId: Long = 0L,
       publishMode: graft.sink.PublishMode = graft.sink.PublishMode.Strict): Unit = {
-    // the explode/window chain feeds kv writes, checkpoints, messages, and
-    // the tail summary — one cache instead of ~5 re-derivations per batch
-    val ops = BlockOps.allOps(blocks, vops, cfg).cache()
-    try {
+    // the carried summary is the one corrected mode places last
+    val messageCfg = if (carrySummaries) cfg.copy(strictParity = false) else cfg
+    FollowerBatch.run(BlockOps.allOps(blocks, vops, cfg), backendName, cfg.ttlSeconds,
+        publishMode, Option.when(carrySummaries)((id: Long) => pendingSummaryKey(cfg, id)), batchId) { ops =>
       val keyed = BlockOps.keyedOps(ops, cfg)
-      KvPubSubSink.writeKv(keyed, backendName, cfg.ttlSeconds)
-      KvPubSubSink.writeCheckpoints(BlockOps.checkpointUpdates(ops, cfg), backendName)
-
-      val messages = BlockOps.channelMessagesFrom(blocks, ops, keyed, cfg)
-      if (!carrySummaries) {
-        KvPubSubSink.publish(messages, backendName, BlockOps.messageSortCols, publishMode)
-      } else {
-        val backend = graft.sink.KvBackends(backendName)
-        val prev = backend.get(pendingSummaryKey(cfg, batchId - 1))
-        val batchHasOps = !ops.isEmpty
-        if (batchHasOps) {
-          // carried summary first: it is the "previous prefix" transition
-          // fired by this batch's first record
-          prev.foreach { p =>
-            backend.publish(s"${cfg.chain}:transaction", p)
-            // flush NOW: this driver-thread publish must reach the backend
-            // before the executor tasks' publishes (pipelined backends
-            // buffer per thread)
-            backend.flush()
-          }
-          KvPubSubSink.publish(messages, backendName, BlockOps.messageSortCols, publishMode)
-        }
-        val tail = if (batchHasOps) BlockOps.tailSummary(ops, cfg) else prev
-        tail.foreach(t => backend.set(pendingSummaryKey(cfg, batchId), t))
-        backend.del(Seq(pendingSummaryKey(cfg, batchId - 2)))
-        // explicit durability barrier: the pending-summary SET must be on
-        // the wire before this micro-batch commits. (The del above happens
-        // to round-trip on pipelined backends, but that is incidental —
-        // making it conditional would silently lose the summary on crash.)
-        backend.flush()
-      }
-    } finally ops.unpersist()
+      FollowerBatch(keyed, BlockOps.checkpointUpdates(ops, cfg),
+        BlockOps.channelMessagesFrom(blocks, ops, keyed, messageCfg), BlockOps.messageSortCols,
+        _ => s"${cfg.chain}:transaction")
+    }
   }
 
   /** Streaming entry: replay-source (or any (idx, value) JSONL stream) of
@@ -100,15 +71,9 @@ object BlockFollowerPipeline {
       cfg: FollowerConfig,
       backendName: String,
       checkpointDir: String,
-      linesPerTrigger: Long = 2L): StreamingQuery = {
-
-    val rawBlocks = spark.readStream
-      .format("graft.streaming.JsonlReplaySource")
-      .option("path", blocksJsonl)
-      .option("linesPerTrigger", linesPerTrigger.toString)
-      .load()
-    runStreamFrom(spark, rawBlocks, vopsJsonl, cfg, backendName, checkpointDir)
-  }
+      linesPerTrigger: Long = 2L): StreamingQuery =
+    runStreamFrom(spark, JsonlReplaySource.stream(spark, blocksJsonl, linesPerTrigger),
+      vopsJsonl, cfg, backendName, checkpointDir)
 
   /** Stream entry over ANY raw (idx, value) block stream — the replay
     * source or the production [[graft.streaming.JsonRpcBlockSource]]. */
@@ -129,21 +94,16 @@ object BlockFollowerPipeline {
       case None => emptyVops(spark)
     }
 
-    rawBlocks.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val blocks = parseBlocks(batch).cache()
-        try {
-          val batchVops = allVops.join(
-            blocks.select(col("block_num").as("b_bn")),
-            col("block") === col("b_bn"), "left_semi")
-          processBatch(blocks, batchVops, cfg, backendName,
-            carrySummaries = true, batchId = batchId, publishMode = publishMode)
-        } finally blocks.unpersist()
-        ()
-      }
-      .start()
+    FollowerBatch.stream(rawBlocks, checkpointDir, trigger) { (batch, batchId) =>
+      val blocks = parseBlocks(batch).cache()
+      try {
+        val batchVops = allVops.join(
+          blocks.select(col("block_num").as("b_bn")),
+          col("block") === col("b_bn"), "left_semi")
+        processBatch(blocks, batchVops, cfg, backendName,
+          carrySummaries = true, batchId = batchId, publishMode = publishMode)
+      } finally blocks.unpersist()
+    }
   }
 
   def emptyVops(spark: SparkSession): DataFrame =

@@ -6,7 +6,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.model.Model
 import graft.ops.{EngineConfig, EngineOps}
-import graft.sink.KvPubSubSink
+import graft.streaming.JsonlReplaySource
 
 /** Sidechain `meeseeker sync hive_engine` lifecycle (SURVEY §3.2). */
 object EngineFollowerPipeline {
@@ -19,6 +19,8 @@ object EngineFollowerPipeline {
   def pendingSummaryKey(cfg: EngineConfig, batchId: Long): String =
     s"${cfg.chainKeyPrefix}:graft:pending_summary:$batchId"
 
+  /** As BlockFollowerPipeline.processBatch; the carried summary's channel
+    * follows the batch's first record ([[EngineOps.carriedSummaryChannel]]). */
   def processBatch(
       blocks: DataFrame,
       cfg: EngineConfig,
@@ -26,44 +28,14 @@ object EngineFollowerPipeline {
       carrySummaries: Boolean = false,
       batchId: Long = 0L,
       publishMode: graft.sink.PublishMode = graft.sink.PublishMode.Strict): Unit = {
-    val trxs = EngineOps.explodeEngineTrxs(blocks).cache()
-    try {
+    val messageCfg = if (carrySummaries) cfg.copy(strictParity = false) else cfg
+    FollowerBatch.run(EngineOps.explodeEngineTrxs(blocks), backendName, cfg.ttlSeconds,
+        publishMode, Option.when(carrySummaries)((id: Long) => pendingSummaryKey(cfg, id)), batchId) { trxs =>
       val keyed = EngineOps.keyedTrxs(trxs, cfg)
-      KvPubSubSink.writeKv(keyed, backendName, cfg.ttlSeconds)
-      KvPubSubSink.writeCheckpoints(EngineOps.checkpointUpdates(trxs, cfg), backendName)
-
-      val messages = EngineOps.channelMessagesFrom(trxs, keyed, cfg)
-      if (!carrySummaries) {
-        KvPubSubSink.publish(messages, backendName, EngineOps.messageSortCols, publishMode,
-          blockCol = "o_block")
-      } else {
-        val backend = graft.sink.KvBackends(backendName)
-        val prev = backend.get(pendingSummaryKey(cfg, batchId - 1))
-        val firstVirt = EngineOps.firstRecordVirtual(trxs)
-        firstVirt.foreach { virt =>
-          // carried summary: channel keyed off THIS batch's first record
-          // (the triggering record), per follower_job.rb:44-50
-          val channel =
-            if (virt) s"${cfg.chainKeyPrefix}:virtual_transaction"
-            else s"${cfg.chainKeyPrefix}:transaction"
-          prev.foreach { p =>
-            backend.publish(channel, p)
-            // flush NOW: must precede the executor tasks' publishes on a
-            // per-thread-pipelined backend
-            backend.flush()
-          }
-          KvPubSubSink.publish(messages, backendName, EngineOps.messageSortCols, publishMode)
-        }
-        val tail =
-          if (firstVirt.isDefined) EngineOps.tailSummary(trxs, cfg) else prev
-        tail.foreach(t => backend.set(pendingSummaryKey(cfg, batchId), t))
-        backend.del(Seq(pendingSummaryKey(cfg, batchId - 2)))
-        // explicit durability barrier — see BlockFollowerPipeline: the
-        // pending-summary SET must not rely on the del's incidental
-        // round-trip to reach the wire before batch commit
-        backend.flush()
-      }
-    } finally trxs.unpersist()
+      FollowerBatch(keyed, EngineOps.checkpointUpdates(trxs, cfg),
+        EngineOps.channelMessagesFrom(trxs, keyed, messageCfg), EngineOps.messageSortCols,
+        EngineOps.carriedSummaryChannel(cfg))
+    }
   }
 
   def runStream(
@@ -73,18 +45,9 @@ object EngineFollowerPipeline {
       backendName: String,
       checkpointDir: String,
       linesPerTrigger: Long = 2L): StreamingQuery =
-    spark.readStream
-      .format("graft.streaming.JsonlReplaySource")
-      .option("path", blocksJsonl)
-      .option("linesPerTrigger", linesPerTrigger.toString)
-      .load()
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(parseEngineBlocks(batch), cfg, backendName,
-          carrySummaries = true, batchId = batchId)
-        ()
-      }
-      .start()
+    FollowerBatch.stream(JsonlReplaySource.stream(spark, blocksJsonl, linesPerTrigger),
+        checkpointDir, Trigger.AvailableNow()) { (batch, batchId) =>
+      processBatch(parseEngineBlocks(batch), cfg, backendName,
+        carrySummaries = true, batchId = batchId)
+    }
 }

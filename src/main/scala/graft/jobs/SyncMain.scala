@@ -5,6 +5,7 @@ import org.apache.spark.sql.streaming.Trigger
 
 import graft.ops.{FollowerConfig, Policies}
 import graft.sink.{InMemoryKvBackend, KvBackends, PublishMode, RedisKvBackend}
+import graft.streaming.JsonlReplaySource
 
 /** The `meeseeker sync` CLI lifecycle (bin/meeseeker:19-33): wire a block
   * source -> follower pipeline -> KV/pub-sub backend, and keep it alive
@@ -288,12 +289,7 @@ object SyncMain {
           .option("mode", a.mode)
           .option("blocksPerTrigger", a.blocksPerTrigger.toString)
         a.startBlock.fold(r)(sb => r.option("startBlock", sb.toString)).load()
-      case (None, Some(path)) =>
-        spark.readStream
-          .format("graft.streaming.JsonlReplaySource")
-          .option("path", path)
-          .option("linesPerTrigger", a.blocksPerTrigger.toString)
-          .load()
+      case (None, Some(path)) => JsonlReplaySource.stream(spark, path, a.blocksPerTrigger)
       case _ => sys.error("need --endpoints or --replay")
     }
     val mode = if (a.relaxedPublish) PublishMode.RelaxedPerBlock else PublishMode.Strict

@@ -46,25 +46,6 @@ object Dedup {
     docs.join(drop, Seq("doc_id"), "left_anti")
   }
 
-  /** Near-dup pairs via MinHash LSH banding + exact-Jaccard verification
-    * (the 100 TB path: candidate generation is an equi-join on bands).
-    * Returns a lazy frame over an UNCACHED shingle expansion — callers that
-    * consume it more than once (or downstream of multiple joins) should
-    * cache the shingles themselves, as [[dedupNearLsh]] does with a bounded
-    * lifetime. */
-  def nearDuplicatePairs(
-      docs: DataFrame,
-      tau: Double,
-      shingleSize: Int = 3,
-      numHashes: Int = 16,
-      bandRows: Int = 2,
-      shingles: Option[DataFrame] = None): DataFrame = {
-    val sh = shingles.getOrElse(TextOps.shingleRows(docs, shingleSize))
-    val sigs = TextOps.minhashSignatures(sh, numHashes)
-    val cand = TextOps.lshCandidates(sigs, numHashes, bandRows)
-    TextOps.verifyCandidates(cand, sh).filter(col("jaccard") >= tau)
-  }
-
   /** Near-dedup the corpus: drop every doc that is a verified near-dup of a
     * lower-id doc — on the FUSED LSH pipeline (one shuffle over shingle
     * rows, skew-capped buckets). The drop set is eagerly materialized with

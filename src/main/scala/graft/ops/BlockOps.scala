@@ -156,8 +156,10 @@ object BlockOps {
 
     // The stream-final prefix has no successor: in strict parity it emits
     // nothing (the reference quirk); in corrected mode it is placed at the
-    // end. PendingTail marks it so the streaming pipeline can carry it into
-    // the next micro-batch instead (exact parity across batch boundaries).
+    // end (o_block = Long.MaxValue). The streaming pipeline builds its
+    // messages in corrected mode and its ordered publish drain withholds
+    // that row, carrying it into the next micro-batch instead (exact
+    // parity across batch boundaries — KvPubSubSink.Carry).
     val placed =
       if (cfg.strictParity) withNext.filter(col("pub_block").isNotNull)
       else withNext
@@ -235,18 +237,6 @@ object BlockOps {
       base.unionByName(custom)
     }
   }
-
-  /** Summary payload of the batch-final prefix — the one strict parity
-    * suppresses. The streaming pipeline stores it in a control key and
-    * publishes it at the head of the NEXT micro-batch, restoring the exact
-    * continuous-run publish sequence of the reference across micro-batch
-    * boundaries. (The reference itself only loses this summary at process
-    * shutdown — which for us is the stream end, where the pending key
-    * simply stays unconsumed.) */
-  def tailSummary(ops: DataFrame, cfg: FollowerConfig): Option[String] =
-    trxSummaries(ops, cfg.copy(strictParity = false))
-      .filter(col("o_block") === Long.MaxValue)
-      .select("payload").collect().headOption.map(_.getString(0))
 
   /** B3 checkpoint writes: `{chain}:meeseeker:last_block_num` once per
     * processed block (KV set; final state == max block). */

@@ -38,6 +38,9 @@ object EngineOps {
 
   import graft.model.Model.VirtualTrxId
 
+  /** `ord` offset of virtual records: they order after a block's real ones. */
+  private val VirtualOrd: Int = Int.MaxValue / 2
+
   /** C12 chain-name prettify: 'hive_engine' -> 'Hive Engine'
     * (follower_job.rb:9-11). */
   def chainName(chainKeyPrefix: String): String =
@@ -65,7 +68,7 @@ object EngineOps {
       .select(
         col("block_num"), col("timestamp"), col("is_virtual"),
         // virtual records order after all real records within a block
-        (col("is_virtual").cast("int") * lit(Int.MaxValue / 2) + col("pos")).as("ord"),
+        (col("is_virtual").cast("int") * lit(VirtualOrd) + col("pos")).as("ord"),
         col("trx.transactionId").as("transactionId"),
         col("trx.refSteemBlockNumber").as("refSteemBlockNumber"),
         col("trx.refHiveBlockNumber").as("refHiveBlockNumber"),
@@ -167,20 +170,13 @@ object EngineOps {
     contract.unionByName(action)
   }
 
-  /** Batch-final run's summary payload for the cross-micro-batch carry
-    * (see BlockOps.tailSummary). The channel is NOT decided here: on the
-    * Engine it depends on whether the record that triggers the publish —
-    * the first record of the next batch — is virtual (follower_job.rb:44). */
-  def tailSummary(trxs: DataFrame, cfg: EngineConfig): Option[String] =
-    trxSummaries(trxs, cfg.copy(strictParity = false))
-      .filter(col("o_block") === Long.MaxValue)
-      .select("payload").collect().headOption.map(_.getString(0))
-
-  /** Whether the stream-first record of this batch is virtual (drives the
-    * carried summary's channel). */
-  def firstRecordVirtual(trxs: DataFrame): Option[Boolean] =
-    trxs.orderBy("block_num", "ord").select("is_virtual")
-      .limit(1).collect().headOption.map(_.getBoolean(0))
+  /** Channel of the summary a micro-batch carries in from its predecessor
+    * (KvPubSubSink.Carry): keyed off the record that triggers the publish,
+    * the batch's first (follower_job.rb:44). The batch's first message sits
+    * at that record's `o_ord`, which is virtual past [[VirtualOrd]]. */
+  def carriedSummaryChannel(cfg: EngineConfig): org.apache.spark.sql.Row => String = first =>
+    cfg.chainKeyPrefix +
+      (if (first.getAs[Number]("o_ord").longValue >= VirtualOrd) ":virtual_transaction" else ":transaction")
 
   /** B3 checkpoint: `{prefix}:meeseeker:last_block_num` per block. */
   def checkpointUpdates(trxs: DataFrame, cfg: EngineConfig): DataFrame =

@@ -177,10 +177,12 @@ object LlmQueries {
 
   /** Shared k-means training CTE chain (seed pick -> `iters` Lloyd rounds
     * -> `ranked`/`assigned` against the final centroids); see
-    * [[ivfOracleSql]] for the cross-engine arithmetic contract. */
+    * [[ivfOracleSql]] for the cross-engine arithmetic contract. CTEs are
+    * `AS MATERIALIZED`: DuckDB inlines a plain CTE at each reference, so
+    * each round re-ran the ones before it and q56's chain ran out of memory. */
   private def kmeansCtes(nCentroids: Int, iters: Int, dim: Int): String = {
     def cs(t: Int) =
-      s"""cs$t AS (
+      s"""cs$t AS MATERIALIZED (
          |  SELECT cidx, c, sqrt(list_sum(list_transform(c, x -> x * x))) AS cn
          |  FROM c$t),""".stripMargin
     def dist(eAlias: String, sAlias: String) =
@@ -190,31 +192,31 @@ object LlmQueries {
          |          / ($eAlias.vn * $sAlias.cn) END""".stripMargin
     val iterCtes = (1 to iters).map { t =>
       s"""${cs(t - 1)}
-         |a$t AS (
+         |a$t AS MATERIALIZED (
          |  SELECT vec_id, cidx FROM (
          |    SELECT e.vec_id, s.cidx,
          |      row_number() OVER (PARTITION BY e.vec_id
          |        ORDER BY (${dist("e", "s")}), s.cidx) AS rn
          |    FROM e CROSS JOIN cs${t - 1} s)
          |  WHERE rn = 1),
-         |m$t AS (
+         |m$t AS MATERIALIZED (
          |  SELECT a.cidx, d.di,
          |    floor(avg(CAST(e.embedding[d.di] AS DOUBLE)) * 1e6 + 0.5) / 1e6 AS m
          |  FROM a$t a JOIN e USING (vec_id) CROSS JOIN dims d
          |  GROUP BY a.cidx, d.di),
-         |c$t AS (
+         |c$t AS MATERIALIZED (
          |  SELECT p.cidx, COALESCE(n.c, p.c) AS c
          |  FROM c${t - 1} p LEFT JOIN (
          |    SELECT cidx, list(m ORDER BY di) AS c FROM m$t GROUP BY cidx) n
          |    USING (cidx)),""".stripMargin
     }.mkString("\n")
-    s"""WITH e AS (
+    s"""WITH e AS MATERIALIZED (
        |  SELECT vec_id, embedding,
        |    sqrt(list_sum(list_transform(embedding,
        |         x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS vn
        |  FROM embeddings),
-       |dims AS (SELECT unnest(generate_series(1, $dim)) AS di),
-       |c0 AS (
+       |dims AS MATERIALIZED (SELECT unnest(generate_series(1, $dim)) AS di),
+       |c0 AS MATERIALIZED (
        |  SELECT row_number() OVER (ORDER BY hv, vec_id) - 1 AS cidx,
        |         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS c
        |  FROM (SELECT vec_id, embedding,
@@ -222,12 +224,12 @@ object LlmQueries {
        |        FROM embeddings ORDER BY hv, vec_id LIMIT $nCentroids)),
        |$iterCtes
        |${cs(iters)}
-       |ranked AS (
+       |ranked AS MATERIALIZED (
        |  SELECT e.vec_id, s.cidx,
        |    row_number() OVER (PARTITION BY e.vec_id
        |      ORDER BY (${dist("e", "s")}), s.cidx) AS rn
        |  FROM e CROSS JOIN cs$iters s),
-       |assigned AS (SELECT vec_id, cidx AS bucket FROM ranked WHERE rn = 1)""".stripMargin
+       |assigned AS MATERIALIZED (SELECT vec_id, cidx AS bucket FROM ranked WHERE rn = 1)""".stripMargin
   }
 
   private def ivfOracleSql(
@@ -275,7 +277,7 @@ object LlmQueries {
     * probed coarse buckets) and [[ivfPqResidualOracleSql]] (chains over
     * residuals). Expects a `pqsrc` CTE (vec_id, embedding) in scope — raw
     * vectors or residuals, whichever the caller quantizes; emits
-    * `sdims`/`seeds`/per-subspace chains/`recon`. */
+    * `sdims`/`seeds`/per-subspace chains/`recon` (materialized: [[kmeansCtes]]). */
   private def pqChainsCtes(m: Int, nCodes: Int, iters: Int, dim: Int): String = {
     val subDim = dim / m
     def off(j: Int) = j * subDim
@@ -285,30 +287,30 @@ object LlmQueries {
          |     * (CAST($eAlias.embedding[${off(j)} + i] AS DOUBLE) - $sAlias.c[i])))""".stripMargin
     val subspaceCtes = (0 until m).map { j =>
       val train = (1 to iters).map { t =>
-        s"""s${j}a$t AS (
+        s"""s${j}a$t AS MATERIALIZED (
            |  SELECT vec_id, cidx FROM (
            |    SELECT e.vec_id, s.cidx,
            |      row_number() OVER (PARTITION BY e.vec_id
            |        ORDER BY (${l2("e", j, "s")}), s.cidx) AS rn
            |    FROM pqsrc e CROSS JOIN s${j}c${t - 1} s)
            |  WHERE rn = 1),
-           |s${j}m$t AS (
+           |s${j}m$t AS MATERIALIZED (
            |  SELECT a.cidx, d.di,
            |    floor(avg(CAST(e.embedding[${off(j)} + d.di] AS DOUBLE)) * 1e6 + 0.5) / 1e6 AS m
            |  FROM s${j}a$t a JOIN pqsrc e USING (vec_id) CROSS JOIN sdims d
            |  GROUP BY a.cidx, d.di),
-           |s${j}c$t AS (
+           |s${j}c$t AS MATERIALIZED (
            |  SELECT p.cidx, COALESCE(n.c, p.c) AS c
            |  FROM s${j}c${t - 1} p LEFT JOIN (
            |    SELECT cidx, list(m ORDER BY di) AS c FROM s${j}m$t GROUP BY cidx) n
            |    USING (cidx)),""".stripMargin
       }.mkString("\n")
-      s"""s${j}c0 AS (
+      s"""s${j}c0 AS MATERIALIZED (
          |  SELECT cidx, list_transform(generate_series(1, $subDim),
          |           i -> CAST(embedding[${off(j)} + i] AS DOUBLE)) AS c
          |  FROM seeds),
          |$train
-         |s${j}code AS (
+         |s${j}code AS MATERIALIZED (
          |  SELECT vec_id, cidx AS code FROM (
          |    SELECT e.vec_id, s.cidx,
          |      row_number() OVER (PARTITION BY e.vec_id
@@ -320,14 +322,14 @@ object LlmQueries {
       s"  JOIN s${j}code k$j ON k$j.vec_id = e.vec_id\n" +
         s"  JOIN s${j}c$iters b$j ON b$j.cidx = k$j.code").mkString("\n")
     val reconConcat = (0 until m).map(j => s"b$j.c").mkString(" || ")
-    s"""sdims AS (SELECT unnest(generate_series(1, $subDim)) AS di),
-       |seeds AS (
+    s"""sdims AS MATERIALIZED (SELECT unnest(generate_series(1, $subDim)) AS di),
+       |seeds AS MATERIALIZED (
        |  SELECT row_number() OVER (ORDER BY hv, vec_id) - 1 AS cidx, embedding
        |  FROM (SELECT vec_id, embedding,
        |          ('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 8))::BIGINT AS hv
        |        FROM pqsrc ORDER BY hv, vec_id LIMIT $nCodes)),
        |$subspaceCtes
-       |recon AS (
+       |recon AS MATERIALIZED (
        |  SELECT e.vec_id, $reconConcat AS approx
        |  FROM pqsrc e
        |$reconJoins)""".stripMargin

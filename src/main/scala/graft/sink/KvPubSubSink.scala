@@ -1,6 +1,6 @@
 package graft.sink
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 
 /** The materialization + notify sink (B1/B2/B3), designed per SURVEY §4.2:
@@ -8,9 +8,10 @@ import org.apache.spark.sql.functions._
   *  - KV writes (SET + EXPIRE) run fully parallel via foreachPartition —
   *    they are idempotent by key, so order and replay don't matter;
   *  - channel publishes are tiny (a few rows per block) but order-sensitive,
-  *    so the message frame is sorted on the reference's publish order and
-  *    drained by a single executor-side writer (coalesce(1)), never
-  *    collected to the driver;
+  *    so the message frame is sorted on the reference's publish order in one
+  *    partition (no range-sampling job) and drained by a single
+  *    executor-side writer, never collected to the driver; the drain also
+  *    runs a follower micro-batch's summary carry ([[KvPubSubSink.Carry]]);
   *  - the checkpoint key is written after the batch's KV writes, ascending,
   *    so its final value is the batch's max block.
   *
@@ -41,34 +42,59 @@ object PublishMode {
 
 object KvPubSubSink {
 
-  /** Write one batch of keyed records: (key, kv_value) + TTL policy. */
-  def writeKv(keyed: DataFrame, backendName: String, ttlSeconds: Long): Unit = {
+  /** Write one batch of keyed records: (key, kv_value) + TTL policy.
+    * Returns how many were written, counted by the write job itself. */
+  def writeKv(keyed: DataFrame, backendName: String, ttlSeconds: Long): Long = {
     val ttl = ttlSeconds
-    keyed.select("key", "kv_value").foreachPartition {
-      (rows: Iterator[org.apache.spark.sql.Row]) =>
-        val backend = KvBackends(backendName)
-        rows.foreach { r =>
-          val key = r.getString(0)
-          backend.set(key, r.getString(1))
-          if (ttl != -1L) backend.expire(key, ttl)
-        }
-        backend.flush()
-    }
+    keyed.select("key", "kv_value").mapPartitions { (rows: Iterator[Row]) =>
+      val backend = KvBackends(backendName)
+      var n = 0L
+      rows.foreach { r =>
+        val key = r.getString(0)
+        backend.set(key, r.getString(1))
+        if (ttl != -1L) backend.expire(key, ttl)
+        n += 1
+      }
+      backend.flush()
+      Iterator(n)
+    }(Encoders.scalaLong).collect().sum
   }
+
+  /** A follower micro-batch's summary carry, run by the ordered drain:
+    * `prev`, handed on by the previous batch, is published first, on the
+    * channel `channelOf` picks from the batch's first message (the record
+    * that triggers it, follower_job.rb:44-50); the batch-final summary
+    * (corrected mode, sorted last at `blockCol = Long.MaxValue`) is
+    * withheld and returned. */
+  final case class Carry(prev: Option[String], channelOf: Row => String)
 
   /** Publish one batch of (channel, payload) messages in exact order. The
     * input must carry its sort columns; volume per batch is O(messages), not
     * O(data), so the single ordered partition is not a scale bottleneck. */
   def publishOrdered(messages: DataFrame, backendName: String, sortCols: Seq[String]): Unit =
-    messages
-      .orderBy(sortCols.map(col): _*)
-      .select("channel", "payload")
-      .coalesce(1)
-      .foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
-        val backend = KvBackends(backendName)
-        rows.foreach(r => backend.publish(r.getString(0), r.getString(1)))
-        backend.flush()
+    drain(messages.repartition(1), backendName, sortCols, None, "o_block")
+
+  /** Publish each partition in publish order from one task; with a [[Carry]]
+    * (on the one-partition drain), returns the withheld summary. */
+  private def drain(
+      partitioned: DataFrame, backendName: String, sortCols: Seq[String],
+      carry: Option[Carry], blockCol: String): Option[String] = {
+    val sorted = partitioned.sortWithinPartitions(sortCols.map(col): _*)
+    val (ci, pi) = (sorted.schema.fieldIndex("channel"), sorted.schema.fieldIndex("payload"))
+    val bi = if (carry.isDefined) sorted.schema.fieldIndex(blockCol) else -1
+    sorted.mapPartitions { (rows: Iterator[Row]) =>
+      val backend = KvBackends(backendName)
+      val buffered = rows.buffered
+      for (c <- carry; p <- c.prev if buffered.hasNext) backend.publish(c.channelOf(buffered.head), p)
+      var tail = Option.empty[String]
+      buffered.foreach { r =>
+        if (bi >= 0 && r.getLong(bi) == Long.MaxValue) tail = Some(r.getString(pi))
+        else backend.publish(r.getString(ci), r.getString(pi))
       }
+      backend.flush()
+      tail.iterator
+    }(Encoders.STRING).collect().headOption
+  }
 
   /** Per-block-ordered parallel publish: messages are hash-partitioned by
     * `blockCol` and sorted within each partition on the full publish order,
@@ -79,15 +105,7 @@ object KvPubSubSink {
   def publishPerBlock(
       messages: DataFrame, backendName: String,
       sortCols: Seq[String], blockCol: String): Unit =
-    messages
-      .repartition(col(blockCol))
-      .sortWithinPartitions(sortCols.map(col): _*)
-      .select("channel", "payload")
-      .foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
-        val backend = KvBackends(backendName)
-        rows.foreach(r => backend.publish(r.getString(0), r.getString(1)))
-        backend.flush()
-      }
+    drain(messages.repartition(col(blockCol)), backendName, sortCols, None, blockCol)
 
   /** Mode-dispatching publish entry (see [[PublishMode]]). Message frames
     * carry rank 0/1 for control messages (summaries, block headers) and
@@ -95,23 +113,23 @@ object KvPubSubSink {
   def publish(
       messages: DataFrame, backendName: String, sortCols: Seq[String],
       mode: PublishMode, rankCol: String = "o_rank", blockCol: String = "o_block"): Unit =
-    mode match {
-      case PublishMode.Strict =>
-        publishOrdered(messages, backendName, sortCols)
-      case PublishMode.RelaxedPerBlock =>
-        publishOrdered(messages.filter(col(rankCol) <= 1), backendName, sortCols)
-        publishPerBlock(messages.filter(col(rankCol) >= 2), backendName, sortCols, blockCol)
-    }
+    publishCarrying(messages, backendName, sortCols, mode, None, rankCol, blockCol)
 
-  /** Write checkpoint keys ascending so the last write is the max block. */
+  /** [[publish]] with a [[Carry]]; summaries are rank-0 control messages,
+    * so a relaxed publish carries them through its ordered drain too. */
+  private[graft] def publishCarrying(
+      messages: DataFrame, backendName: String, sortCols: Seq[String],
+      mode: PublishMode, carry: Option[Carry],
+      rankCol: String = "o_rank", blockCol: String = "o_block"): Option[String] = {
+    val ordered = if (mode == PublishMode.Strict) messages else messages.filter(col(rankCol) <= 1)
+    val tail = drain(ordered.repartition(1), backendName, sortCols, carry, blockCol)
+    if (mode == PublishMode.RelaxedPerBlock)
+      publishPerBlock(messages.filter(col(rankCol) >= 2), backendName, sortCols, blockCol)
+    tail
+  }
+
+  /** Write checkpoint keys ascending, from one task, so the last write is
+    * the max block (no TTL: the key is the follower's resume point). */
   def writeCheckpoints(checkpoints: DataFrame, backendName: String): Unit =
-    checkpoints
-      .orderBy("block_num")
-      .select("key", "kv_value")
-      .coalesce(1)
-      .foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
-        val backend = KvBackends(backendName)
-        rows.foreach(r => backend.set(r.getString(0), r.getString(1)))
-        backend.flush()
-      }
+    writeKv(checkpoints.repartition(1).sortWithinPartitions("block_num"), backendName, -1L)
 }

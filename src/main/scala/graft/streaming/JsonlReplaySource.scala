@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.util
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -60,6 +61,14 @@ object JsonlReplaySource {
     StructField("idx", LongType, nullable = false),
     StructField("value", StringType, nullable = false),
   ))
+
+  /** The replay stream over `path`, `linesPerTrigger` lines a micro-batch. */
+  def stream(spark: SparkSession, path: String, linesPerTrigger: Long): DataFrame =
+    spark.readStream
+      .format("graft.streaming.JsonlReplaySource")
+      .option("path", path)
+      .option("linesPerTrigger", linesPerTrigger.toString)
+      .load()
 }
 
 private[streaming] class ReplayTable(path: String, perTrigger: Long, numPartitions: Int)

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import graft.SparkSpec
 import graft.model.Model
 import graft.ops.{EngineConfig, FollowerConfig}
-import graft.sink.{InMemoryKvBackend, KvBackends}
+import graft.sink.{InMemoryKvBackend, KvBackends, PublishMode}
 
 /** End-to-end pipeline tests: batch and streaming (custom replay source +
   * foreachBatch sink) must materialize the identical KV state, checkpoint,
@@ -109,6 +109,102 @@ class PipelineSpec extends SparkSpec {
     val retried = backend.publishLog.drop(logAfter.size)
     val original = logAfter.drop(logAfter.size - retried.size)
     assert(retried === original) // byte-identical replay, no content corruption
+  }
+
+  test("corrected mode streams every transaction summary exactly once across micro-batches") {
+    val corrected = cfg.copy(strictParity = false)
+    val backend = freshBackend("stream-corrected")
+    val ckpt = Files.createTempDirectory("graft-ckpt-").toString
+    val q = BlockFollowerPipeline.runStream(
+      spark, resource("blocks.jsonl"), Some(resource("vops.jsonl")),
+      corrected, "stream-corrected", ckpt, linesPerTrigger = 1L)
+    q.awaitTermination(60000)
+
+    val summaries = backend.publishLog.filter(_._1 == "hive:transaction").map(_._2)
+    assert(summaries.nonEmpty)
+    assert(summaries.distinct === summaries) // no summary published twice
+
+    // the stream-final summary stays parked in the last batch's control key;
+    // with it appended, the stream's sequence is the single corrected run's
+    val lastBatch = backend.keys("hive:graft:pending_summary:*").map(_.split(':').last.toLong).max
+    val parked = backend.get(BlockFollowerPipeline.pendingSummaryKey(corrected, lastBatch))
+    val ref = freshBackend("stream-corrected-ref")
+    val blocks = spark.read.schema(Model.blockSchema).json(resource("blocks.jsonl"))
+    val vops = spark.read.schema(Model.vopSchema).json(resource("vops.jsonl"))
+    BlockFollowerPipeline.processBatch(blocks, vops, corrected, "stream-corrected-ref")
+    assert(backend.publishLog ++ parked.map("hive:transaction" -> _) === ref.publishLog)
+  }
+
+  test("RelaxedPerBlock stream over small micro-batches: control order and message multiset of one batch run") {
+    val backend = freshBackend("stream-relaxed")
+    val ckpt = Files.createTempDirectory("graft-ckpt-").toString
+    val raw = spark.readStream
+      .format("graft.streaming.JsonlReplaySource")
+      .option("path", resource("blocks.jsonl"))
+      .option("linesPerTrigger", "1")
+      .load()
+    val q = BlockFollowerPipeline.runStreamFrom(
+      spark, raw, Some(resource("vops.jsonl")), cfg, "stream-relaxed", ckpt,
+      publishMode = PublishMode.RelaxedPerBlock)
+    q.awaitTermination(60000)
+
+    val ref = freshBackend("stream-relaxed-ref")
+    val blocks = spark.read.schema(Model.blockSchema).json(resource("blocks.jsonl"))
+    val vops = spark.read.schema(Model.vopSchema).json(resource("vops.jsonl"))
+    BlockFollowerPipeline.processBatch(blocks, vops, cfg, "stream-relaxed-ref")
+
+    def isControl(m: (String, String)): Boolean = !m._1.contains(":op:")
+    val log = backend.publishLog
+    assert(log.count(_._1 == "hive:transaction") > 0)
+    assert(log.filter(isControl) === ref.publishLog.filter(isControl))
+    assert(log.groupBy(identity).view.mapValues(_.size).toMap ===
+      ref.publishLog.groupBy(identity).view.mapValues(_.size).toMap)
+  }
+
+  test("engine carry is idempotent under micro-batch RETRY") {
+    val ecfg = EngineConfig()
+    val backend = freshBackend("engine-retry")
+    val blocks = spark.read.schema(Model.engineBlockSchema).json(resource("engine_blocks.jsonl"))
+    val b0 = blocks.filter(org.apache.spark.sql.functions.col("blockNumber") === 18000)
+    val b1 = blocks.filter(org.apache.spark.sql.functions.col("blockNumber") === 18001)
+    EngineFollowerPipeline.processBatch(b0, ecfg, "engine-retry", carrySummaries = true, batchId = 0L)
+    EngineFollowerPipeline.processBatch(b1, ecfg, "engine-retry", carrySummaries = true, batchId = 1L)
+    val carried = backend.get(EngineFollowerPipeline.pendingSummaryKey(ecfg, 0L))
+    val pendingAfter = backend.get(EngineFollowerPipeline.pendingSummaryKey(ecfg, 1L))
+    val logAfter = backend.publishLog
+    assert(carried.isDefined && pendingAfter.isDefined)
+
+    // a re-run of batch 1 re-publishes batch 0's carried summary first, on
+    // the channel of batch 1's first record, and re-parks the same tail
+    EngineFollowerPipeline.processBatch(b1, ecfg, "engine-retry", carrySummaries = true, batchId = 1L)
+    assert(backend.get(EngineFollowerPipeline.pendingSummaryKey(ecfg, 1L)) === pendingAfter)
+    val retried = backend.publishLog.drop(logAfter.size)
+    assert(retried.head === ("hive_engine:transaction" -> carried.get))
+    assert(retried === logAfter.drop(logAfter.size - retried.size))
+  }
+
+  test("engine carry: a batch whose first record is virtual takes the summary in on virtual_transaction") {
+    val ecfg = EngineConfig()
+    val b0 = spark.read.schema(Model.engineBlockSchema).json(resource("engine_blocks.jsonl"))
+      .filter(org.apache.spark.sql.functions.col("blockNumber") === 18000)
+    val b1 = {
+      import spark.implicits._
+      spark.read.schema(Model.engineBlockSchema).json(Seq(
+        """{"blockNumber":18002,"timestamp":"2024-01-01T00:00:06","transactions":[],""" +
+          """"virtualTransactions":[{"transactionId":"18002-0","refHiveBlockNumber":102,""" +
+          """"contract":"tokens","action":"checkPendingUnstake","payload":"{}"}]}""").toDS())
+    }
+    val backend = freshBackend("engine-virtual-first")
+    EngineFollowerPipeline.processBatch(b0, ecfg, "engine-virtual-first", carrySummaries = true, batchId = 0L)
+    val carried = backend.get(EngineFollowerPipeline.pendingSummaryKey(ecfg, 0L))
+    val before = backend.publishLog.size
+    EngineFollowerPipeline.processBatch(b1, ecfg, "engine-virtual-first", carrySummaries = true, batchId = 1L)
+    assert(carried.isDefined)
+    assert(backend.publishLog(before) === ("hive_engine:virtual_transaction" -> carried.get))
+
+    val ref = freshBackend("engine-virtual-first-ref")
+    EngineFollowerPipeline.processBatch(b0.unionByName(b1), ecfg, "engine-virtual-first-ref")
+    assert(backend.publishLog === ref.publishLog)
   }
 
   test("engine streaming chunked: exact parity incl. carried-summary channel quirk") {
