@@ -1,11 +1,12 @@
 package graft.jobs
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.model.Model
 import graft.ops.{BlockOps, FollowerConfig}
+import graft.sink.{KvPubSubSink, PublishMode}
 import graft.streaming.JsonlReplaySource
 
 /** The `meeseeker sync` lifecycle (SURVEY §3.1) on Spark: source -> explode
@@ -36,7 +37,13 @@ object BlockFollowerPipeline {
     * batch-final trx prefix is parked under [[pendingSummaryKey]] and
     * published at the head of the next non-empty batch (see
     * [[FollowerBatch.run]]), so an N-micro-batch replay produces the exact
-    * publish sequence of a single continuous run. */
+    * publish sequence of a single continuous run.
+    *
+    * In `Strict` mode the drain places summaries and block headers itself
+    * ([[BlockOps.placeSummaries]] over [[BlockOps.drainRows]]), so the
+    * batch plans no window, join or aggregate; `RelaxedPerBlock` publishes
+    * the relational [[BlockOps.channelMessagesFrom]] form. Either drain SETs
+    * the checkpoint key at each block header. */
   def processBatch(
       blocks: DataFrame,
       vops: DataFrame,
@@ -44,15 +51,24 @@ object BlockFollowerPipeline {
       backendName: String,
       carrySummaries: Boolean = false,
       batchId: Long = 0L,
-      publishMode: graft.sink.PublishMode = graft.sink.PublishMode.Strict): Unit = {
-    // the carried summary is the one corrected mode places last
-    val messageCfg = if (carrySummaries) cfg.copy(strictParity = false) else cfg
-    FollowerBatch.run(BlockOps.allOps(blocks, vops, cfg), backendName, cfg.ttlSeconds,
-        publishMode, Option.when(carrySummaries)((id: Long) => pendingSummaryKey(cfg, id)), batchId) { ops =>
+      publishMode: PublishMode = PublishMode.Strict): Unit = {
+    val checkpoint = Some(KvPubSubSink.Checkpoint(
+      BlockOps.blockChannel(cfg), cfg.chain + Model.LastBlockNumKeySuffix))
+    FollowerBatch.run(blocks, BlockOps.allOps(blocks, vops, cfg), backendName, cfg.ttlSeconds,
+        Option.when(carrySummaries)((id: Long) => pendingSummaryKey(cfg, id)), batchId) { ops =>
       val keyed = BlockOps.keyedOps(ops, cfg)
-      FollowerBatch(keyed, BlockOps.checkpointUpdates(ops, cfg),
-        BlockOps.channelMessagesFrom(blocks, ops, keyed, messageCfg), BlockOps.messageSortCols,
-        _ => s"${cfg.chain}:transaction")
+      FollowerBatch(keyed, prev => publishMode match {
+        case PublishMode.Strict =>
+          KvPubSubSink.publishPlaced(BlockOps.drainRows(blocks, keyed, cfg), backendName,
+            BlockOps.messageSortCols, checkpoint, BlockOps.placeSummaries(cfg, prev, carrySummaries))
+        case PublishMode.RelaxedPerBlock =>
+          // the carried summary is the one corrected mode places last
+          val messageCfg = if (carrySummaries) cfg.copy(strictParity = false) else cfg
+          KvPubSubSink.publishCarrying(BlockOps.channelMessagesFrom(blocks, ops, keyed, messageCfg),
+            backendName, BlockOps.messageSortCols, publishMode,
+            Option.when(carrySummaries)(KvPubSubSink.Carry(prev, _ => s"${cfg.chain}:transaction")),
+            checkpoint)
+      })
     }
   }
 
@@ -84,7 +100,7 @@ object BlockFollowerPipeline {
       cfg: FollowerConfig,
       backendName: String,
       checkpointDir: String,
-      publishMode: graft.sink.PublishMode = graft.sink.PublishMode.Strict,
+      publishMode: PublishMode = PublishMode.Strict,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
 
     // Static side of the union: fixture vops, filtered per batch to the
@@ -106,7 +122,9 @@ object BlockFollowerPipeline {
     }
   }
 
+  /** No vops, as an empty local relation: the optimizer then drops the
+    * whole vops leg (semi-join, `normalizeVops` window, union) from the
+    * batch's plan, which an empty RDD would keep. */
   def emptyVops(spark: SparkSession): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Model.vopSchema)
+    spark.createDataFrame(java.util.Collections.emptyList[Row](), Model.vopSchema)
 }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.model.Model
 import graft.ops.{EngineConfig, EngineOps}
+import graft.sink.{KvPubSubSink, PublishMode}
 import graft.streaming.JsonlReplaySource
 
 /** Sidechain `meeseeker sync hive_engine` lifecycle (SURVEY §3.2). */
@@ -27,14 +28,19 @@ object EngineFollowerPipeline {
       backendName: String,
       carrySummaries: Boolean = false,
       batchId: Long = 0L,
-      publishMode: graft.sink.PublishMode = graft.sink.PublishMode.Strict): Unit = {
+      publishMode: PublishMode = PublishMode.Strict): Unit = {
+    // the carried summary is the one corrected mode places last
     val messageCfg = if (carrySummaries) cfg.copy(strictParity = false) else cfg
-    FollowerBatch.run(EngineOps.explodeEngineTrxs(blocks), backendName, cfg.ttlSeconds,
-        publishMode, Option.when(carrySummaries)((id: Long) => pendingSummaryKey(cfg, id)), batchId) { trxs =>
+    val checkpoint = Some(KvPubSubSink.Checkpoint(
+      cfg.chainKeyPrefix + ":block", cfg.chainKeyPrefix + Model.LastBlockNumKeySuffix))
+    FollowerBatch.run(blocks, EngineOps.explodeEngineTrxs(blocks), backendName, cfg.ttlSeconds,
+        Option.when(carrySummaries)((id: Long) => pendingSummaryKey(cfg, id)), batchId) { trxs =>
       val keyed = EngineOps.keyedTrxs(trxs, cfg)
-      FollowerBatch(keyed, EngineOps.checkpointUpdates(trxs, cfg),
-        EngineOps.channelMessagesFrom(trxs, keyed, messageCfg), EngineOps.messageSortCols,
-        EngineOps.carriedSummaryChannel(cfg))
+      FollowerBatch(keyed, prev =>
+        KvPubSubSink.publishCarrying(EngineOps.channelMessagesFrom(trxs, keyed, messageCfg),
+          backendName, EngineOps.messageSortCols, publishMode,
+          Option.when(carrySummaries)(KvPubSubSink.Carry(prev, EngineOps.carriedSummaryChannel(cfg))),
+          checkpoint))
     }
   }
 

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -23,8 +23,15 @@ final case class FollowerConfig(
   * loop (block_follower_job.rb:17-94) re-expressed as one declarative plan:
   *
   *   blocks --posexplode--> ops --withColumns--> keys + kv payloads
-  *                              \--window------> trx summaries
-  *                              \--explode-----> ordered channel messages
+  *      |                       \--select------> op notifications --+
+  *      \--select------------------------------> block headers -----+
+  *                                                                  |
+  *   Strict drain (one sorted task): trx summaries + headers placed in
+  *   its pass over the op rows ([[placeSummaries]]); the checkpoint key
+  *   is SET at each header publish
+  *
+  *   Relational form (RelaxedPerBlock, the golden API): trx summaries by
+  *   window + Stitch lead, headers by aggregate + join ([[channelMessages]])
   *
   * posexplode hands out transaction_num and trx_index statelessly (and
   * per-partition-parallel), replacing the reference's global run-length
@@ -156,8 +163,8 @@ object BlockOps {
 
     // The stream-final prefix has no successor: in strict parity it emits
     // nothing (the reference quirk); in corrected mode it is placed at the
-    // end (o_block = Long.MaxValue). The streaming pipeline builds its
-    // messages in corrected mode and its ordered publish drain withholds
+    // end (o_block = Long.MaxValue). A RelaxedPerBlock stream builds its
+    // messages in corrected mode and its ordered control drain withholds
     // that row, carrying it into the next micro-batch instead (exact
     // parity across batch boundaries — KvPubSubSink.Carry).
     val placed =
@@ -188,17 +195,11 @@ object BlockOps {
     val firstOp = ops.groupBy(col("block_num").as("fo_block"))
       .agg(
         min(struct(col("is_virtual").cast("int").as("v"), col("transaction_num").as("t"))).as("fo"))
-    val payload =
-      if (cfg.includeBlockHeader)
-        to_json(struct(
-          col("block_num"), col("previous"), col("timestamp"), col("witness"),
-          col("transaction_merkle_root"), col("extensions")))
-      else to_json(struct(col("block_num")))
     blocks
       .join(firstOp, col("block_num") === col("fo_block"))
       .select(
-        concat(lit(cfg.chain), lit(":block")).as("channel"),
-        payload.as("payload"),
+        lit(blockChannel(cfg)).as("channel"),
+        headerPayload(cfg).as("payload"),
         col("block_num").as("o_block"),
         col("fo.v").as("o_virt"),
         col("fo.t").as("o_otrx"),
@@ -206,10 +207,21 @@ object BlockOps {
         lit(1).as("o_rank"))
   }
 
+  def blockChannel(cfg: FollowerConfig): String = s"${cfg.chain}:block"
+
+  /** The `{chain}:block` payload, C11-gated header fields. */
+  private def headerPayload(cfg: FollowerConfig): org.apache.spark.sql.Column =
+    if (cfg.includeBlockHeader)
+      to_json(struct(
+        col("block_num"), col("previous"), col("timestamp"), col("witness"),
+        col("transaction_merkle_root"), col("extensions")))
+    else to_json(struct(col("block_num")))
+
   /** B2 per-op notifications: `{chain}:op:{type}` always, plus the gated
     * `{chain}:op:{type}:{custom_id}` fan-out (custom* ops with a non-empty
     * value.id — block_follower_job.rb:85-93). Channels are data-derived:
-    * built per row, never enumerated. */
+    * built per row, never enumerated. Rows keep the op's `trx_id`, which the
+    * Strict drain keys its prefixes on. */
   def opMessages(keyed: DataFrame, cfg: FollowerConfig): DataFrame = {
     val base = keyed.select(
       concat(lit(cfg.chain), lit(":op:"), col("op_type")).as("channel"),
@@ -217,6 +229,7 @@ object BlockOps {
       col("block_num").as("o_block"),
       col("is_virtual").cast("int").as("o_virt"),
       col("transaction_num").as("o_otrx"),
+      col("trx_id"),
       col("trx_index").as("o_oidx"),
       lit(2).as("o_rank"))
     if (!cfg.publishOpCustomId) base
@@ -232,20 +245,12 @@ object BlockOps {
           col("block_num").as("o_block"),
           col("is_virtual").cast("int").as("o_virt"),
           col("transaction_num").as("o_otrx"),
+          col("trx_id"),
           col("trx_index").as("o_oidx"),
           lit(3).as("o_rank"))
       base.unionByName(custom)
     }
   }
-
-  /** B3 checkpoint writes: `{chain}:meeseeker:last_block_num` once per
-    * processed block (KV set; final state == max block). */
-  def checkpointUpdates(ops: DataFrame, cfg: FollowerConfig): DataFrame =
-    ops.select(col("block_num")).distinct()
-      .select(
-        lit(cfg.chain + graft.model.Model.LastBlockNumKeySuffix).as("key"),
-        col("block_num").cast("string").as("kv_value"),
-        col("block_num"))
 
   val messageSortCols: Seq[String] =
     Seq("o_block", "o_virt", "o_otrx", "o_oidx", "o_rank", "channel")
@@ -257,7 +262,95 @@ object BlockOps {
       blocks: DataFrame, ops: DataFrame, keyed: DataFrame, cfg: FollowerConfig): DataFrame =
     trxSummaries(ops, cfg)
       .unionByName(blockMessages(blocks, ops, cfg))
+      .unionByName(opMessages(keyed, cfg).drop("trx_id"))
+
+  /** The Strict drain's input, two narrow frames: one header row per block
+    * (o_virt = -1, so it sorts ahead of the block's ops) and the op
+    * notifications with their `trx_id`. No window, join or aggregate: the
+    * drain places summaries and headers itself ([[placeSummaries]]). */
+  def drainRows(blocks: DataFrame, keyed: DataFrame, cfg: FollowerConfig): DataFrame =
+    blocks.select(
+        lit(blockChannel(cfg)).as("channel"),
+        headerPayload(cfg).as("payload"),
+        col("block_num").as("o_block"),
+        lit(-1).as("o_virt"),
+        lit(0).as("o_otrx"),
+        lit(null).cast("string").as("trx_id"),
+        lit(0).as("o_oidx"),
+        lit(1).as("o_rank"))
       .unionByName(opMessages(keyed, cfg))
+
+  /** The Strict drain's pass over [[drainRows]] sorted on
+    * [[messageSortCols]]: the reference's one ordered loop
+    * (block_follower_job.rb:21-37,59,78-93) with [[trxSummaries]]'
+    * numbering and [[blockMessages]]' placement.
+    *
+    * When an op row starts a new prefix (block, is_virtual,
+    * transaction_num, trx_id) in publish order, the previous prefix's
+    * summary is published; when it also starts a new block, the block's
+    * held header follows (a block without ops publishes none); then the op
+    * row. A real prefix is numbered by its op-producing rank in the block,
+    * a virtual one by max(#real trx - 1, 0).
+    *
+    * `prev` is the summary carried in from the previous micro-batch: it is
+    * published at the batch's first prefix. The batch-final summary is
+    * returned with `withhold` (the streaming carry), else dropped in strict
+    * parity and published last in corrected mode. */
+  def placeSummaries(cfg: FollowerConfig, prev: Option[String], withhold: Boolean)(
+      schema: org.apache.spark.sql.types.StructType)
+      : (Iterator[Row], (String, String, Long) => Unit) => Option[String] = {
+    val Seq(ci, pi, bi, vi, ti, ii) =
+      Seq("channel", "payload", "o_block", "o_virt", "o_otrx", "trx_id").map(schema.fieldIndex)
+    val trxChannel = s"${cfg.chain}:transaction"
+    val strictParity = cfg.strictParity
+    (rows, publish) => {
+      var pending = prev
+      var header: Row = null
+      // the current prefix, and the real prefixes seen in its block (a
+      // block's trx ids are distinct, so this is trxSummaries' #real trx)
+      var (block, virt, otrx, trxId) = (Long.MinValue, -1, 0, null: String)
+      var realPrefixes = 0
+      rows.foreach { r =>
+        val b = r.getLong(bi)
+        val v = r.getInt(vi)
+        if (v < 0) header = r
+        else {
+          val t = r.getInt(ti)
+          val id = r.getString(ii)
+          if (b != block || v != virt || t != otrx || id != trxId) {
+            pending.foreach(publish(trxChannel, _, block))
+            if (b != block) {
+              if (header != null && header.getLong(bi) == b)
+                publish(header.getString(ci), header.getString(pi), b)
+              header = null
+              realPrefixes = 0
+            }
+            val num =
+              if (v == 0) { realPrefixes += 1; realPrefixes - 1 }
+              else math.max(realPrefixes - 1, 0)
+            pending = Some(summaryJson(b, id, num))
+            block = b; virt = v; otrx = t; trxId = id
+          }
+          publish(r.getString(ci), r.getString(pi), b)
+        }
+      }
+      if (withhold) pending
+      else {
+        if (!strictParity) pending.foreach(publish(trxChannel, _, block))
+        None
+      }
+    }
+  }
+
+  /** The summary payload exactly as [[trxSummaries]]' `to_json` writes it:
+    * Jackson's string quoting, and a null trx id left out. */
+  private def summaryJson(block: Long, trxId: String, num: Int): String = {
+    val id =
+      if (trxId == null) ""
+      else "\"transaction_id\":\"" +
+        new String(com.fasterxml.jackson.core.io.JsonStringEncoder.getInstance.quoteAsString(trxId)) + "\","
+    s"""{"block_num":$block,$id"transaction_num":$num}"""
+  }
 
   /** The full notify stream in exact reference publish order (consumer /
     * golden-test API). */

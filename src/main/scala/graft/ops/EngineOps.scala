@@ -178,14 +178,6 @@ object EngineOps {
     cfg.chainKeyPrefix +
       (if (first.getAs[Number]("o_ord").longValue >= VirtualOrd) ":virtual_transaction" else ":transaction")
 
-  /** B3 checkpoint: `{prefix}:meeseeker:last_block_num` per block. */
-  def checkpointUpdates(trxs: DataFrame, cfg: EngineConfig): DataFrame =
-    trxs.select(col("block_num")).distinct()
-      .select(
-        lit(cfg.chainKeyPrefix + graft.model.Model.LastBlockNumKeySuffix).as("key"),
-        col("block_num").cast("string").as("kv_value"),
-        col("block_num"))
-
   val messageSortCols: Seq[String] = Seq("o_block", "o_ord", "o_rank", "channel")
 
   /** Notify stream from precomputed frames, unsorted (sink sorts). */

@@ -2,6 +2,7 @@ package graft.sink
 
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** The materialization + notify sink (B1/B2/B3), designed per SURVEY §4.2:
   *
@@ -10,10 +11,14 @@ import org.apache.spark.sql.functions._
   *  - channel publishes are tiny (a few rows per block) but order-sensitive,
   *    so the message frame is sorted on the reference's publish order in one
   *    partition (no range-sampling job) and drained by a single
-  *    executor-side writer, never collected to the driver; the drain also
-  *    runs a follower micro-batch's summary carry ([[KvPubSubSink.Carry]]);
-  *  - the checkpoint key is written after the batch's KV writes, ascending,
-  *    so its final value is the batch's max block.
+  *    executor-side writer, never collected to the driver. A drain task
+  *    runs a body over its sorted rows: ready-placed messages with an
+  *    optional summary carry ([[KvPubSubSink.Carry]]), or the Hive
+  *    follower's Strict pass that places summaries and block headers
+  *    itself ([[KvPubSubSink.publishPlaced]]);
+  *  - the follower's checkpoint key is SET by the ordered drain at each
+  *    block-channel publish ([[KvPubSubSink.Checkpoint]]), ascending, so
+  *    its final value is the batch's max block.
   *
   * `backendName` indirection keeps the backend out of task closures; each
   * task resolves it from [[KvBackends]] (local/tests) — a cluster deployment
@@ -60,6 +65,12 @@ object KvPubSubSink {
     }(Encoders.scalaLong).collect().sum
   }
 
+  /** The follower's checkpoint: the ordered drain SETs `key` (no TTL) to a
+    * block's number just before that block's `blockChannel` publish
+    * (block_follower_job.rb:78-79), so the key's last value is the batch's
+    * max block. */
+  final case class Checkpoint(blockChannel: String, key: String)
+
   /** A follower micro-batch's summary carry, run by the ordered drain:
     * `prev`, handed on by the previous batch, is published first, on the
     * channel `channelOf` picks from the batch's first message (the record
@@ -68,32 +79,54 @@ object KvPubSubSink {
     * withheld and returned. */
   final case class Carry(prev: Option[String], channelOf: Row => String)
 
+  /** A drain task's pass: given the sorted frame's schema, it publishes one
+    * partition's rows in order through `publish(channel, payload, block)`
+    * and returns the summary the batch withholds, if any. */
+  type DrainBody = StructType => (Iterator[Row], (String, String, Long) => Unit) => Option[String]
+
   /** Publish one batch of (channel, payload) messages in exact order. The
     * input must carry its sort columns; volume per batch is O(messages), not
     * O(data), so the single ordered partition is not a scale bottleneck. */
   def publishOrdered(messages: DataFrame, backendName: String, sortCols: Seq[String]): Unit =
-    drain(messages.repartition(1), backendName, sortCols, None, "o_block")
+    drain(messages.repartition(1), backendName, sortCols, None)(publishRows(None, None))
 
-  /** Publish each partition in publish order from one task; with a [[Carry]]
-    * (on the one-partition drain), returns the withheld summary. */
+  /** Sort each partition on `sortCols` and run `body` over it from one task;
+    * on the one-partition drain, returns what the body withholds. */
   private def drain(
       partitioned: DataFrame, backendName: String, sortCols: Seq[String],
-      carry: Option[Carry], blockCol: String): Option[String] = {
+      checkpoint: Option[Checkpoint])(body: DrainBody): Option[String] = {
     val sorted = partitioned.sortWithinPartitions(sortCols.map(col): _*)
-    val (ci, pi) = (sorted.schema.fieldIndex("channel"), sorted.schema.fieldIndex("payload"))
-    val bi = if (carry.isDefined) sorted.schema.fieldIndex(blockCol) else -1
+    val pass = body(sorted.schema)
     sorted.mapPartitions { (rows: Iterator[Row]) =>
       val backend = KvBackends(backendName)
-      val buffered = rows.buffered
-      for (c <- carry; p <- c.prev if buffered.hasNext) backend.publish(c.channelOf(buffered.head), p)
-      var tail = Option.empty[String]
-      buffered.foreach { r =>
-        if (bi >= 0 && r.getLong(bi) == Long.MaxValue) tail = Some(r.getString(pi))
-        else backend.publish(r.getString(ci), r.getString(pi))
-      }
+      val tail = pass(rows, (channel, payload, block) => {
+        for (c <- checkpoint if channel == c.blockChannel) backend.set(c.key, block.toString)
+        backend.publish(channel, payload)
+      })
       backend.flush()
       tail.iterator
     }(Encoders.STRING).collect().headOption
+  }
+
+  /** The body for ready-placed messages: each row as is; with a [[Carry]],
+    * the carried summary first and the `Long.MaxValue` row withheld. The
+    * carry and the checkpoint read `blockCol`; a frame that needs neither
+    * may have none. */
+  private def publishRows(carry: Option[Carry], blockCol: Option[String]): DrainBody = schema => {
+    val (ci, pi, bi) = (schema.fieldIndex("channel"), schema.fieldIndex("payload"),
+      blockCol.fold(-1)(schema.fieldIndex))
+    (rows, publish) => {
+      val buffered = rows.buffered
+      for (c <- carry; p <- c.prev if buffered.hasNext)
+        publish(c.channelOf(buffered.head), p, buffered.head.getLong(bi))
+      var tail = Option.empty[String]
+      buffered.foreach { r =>
+        val block = if (bi < 0) -1L else r.getLong(bi)
+        if (carry.isDefined && block == Long.MaxValue) tail = Some(r.getString(pi))
+        else publish(r.getString(ci), r.getString(pi), block)
+      }
+      tail
+    }
   }
 
   /** Per-block-ordered parallel publish: messages are hash-partitioned by
@@ -105,7 +138,7 @@ object KvPubSubSink {
   def publishPerBlock(
       messages: DataFrame, backendName: String,
       sortCols: Seq[String], blockCol: String): Unit =
-    drain(messages.repartition(col(blockCol)), backendName, sortCols, None, blockCol)
+    drain(messages.repartition(col(blockCol)), backendName, sortCols, None)(publishRows(None, None))
 
   /** Mode-dispatching publish entry (see [[PublishMode]]). Message frames
     * carry rank 0/1 for control messages (summaries, block headers) and
@@ -113,23 +146,27 @@ object KvPubSubSink {
   def publish(
       messages: DataFrame, backendName: String, sortCols: Seq[String],
       mode: PublishMode, rankCol: String = "o_rank", blockCol: String = "o_block"): Unit =
-    publishCarrying(messages, backendName, sortCols, mode, None, rankCol, blockCol)
+    publishCarrying(messages, backendName, sortCols, mode, None, None, rankCol, blockCol)
 
-  /** [[publish]] with a [[Carry]]; summaries are rank-0 control messages,
-    * so a relaxed publish carries them through its ordered drain too. */
+  /** [[publish]] for a follower micro-batch, with a [[Carry]] and the
+    * [[Checkpoint]]; summaries and block headers are control messages, so a
+    * relaxed publish runs both through its ordered drain too. */
   private[graft] def publishCarrying(
       messages: DataFrame, backendName: String, sortCols: Seq[String],
-      mode: PublishMode, carry: Option[Carry],
+      mode: PublishMode, carry: Option[Carry], checkpoint: Option[Checkpoint],
       rankCol: String = "o_rank", blockCol: String = "o_block"): Option[String] = {
     val ordered = if (mode == PublishMode.Strict) messages else messages.filter(col(rankCol) <= 1)
-    val tail = drain(ordered.repartition(1), backendName, sortCols, carry, blockCol)
+    val tail = drain(ordered.repartition(1), backendName, sortCols, checkpoint)(publishRows(carry, Some(blockCol)))
     if (mode == PublishMode.RelaxedPerBlock)
       publishPerBlock(messages.filter(col(rankCol) >= 2), backendName, sortCols, blockCol)
     tail
   }
 
-  /** Write checkpoint keys ascending, from one task, so the last write is
-    * the max block (no TTL: the key is the follower's resume point). */
-  def writeCheckpoints(checkpoints: DataFrame, backendName: String): Unit =
-    writeKv(checkpoints.repartition(1).sortWithinPartitions("block_num"), backendName, -1L)
+  /** Strict publish of rows that `body` places itself — the Hive
+    * follower's drain, which places transaction summaries and block headers
+    * in its one ordered pass ([[graft.ops.BlockOps.placeSummaries]]). */
+  private[graft] def publishPlaced(
+      rows: DataFrame, backendName: String, sortCols: Seq[String],
+      checkpoint: Option[Checkpoint], body: DrainBody): Option[String] =
+    drain(rows.repartition(1), backendName, sortCols, checkpoint)(body)
 }

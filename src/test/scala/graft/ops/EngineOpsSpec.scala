@@ -78,11 +78,4 @@ class EngineOpsSpec extends SparkSpec {
     assert(rows(0).getAs[String]("transactionId") === s"$Z40-")
     assert(rows(0).getAs[String]("key") === s"hive_engine:19000:$Z40:0:c:a")
   }
-
-  test("checkpoints per engine block") {
-    val cps = EngineOps.checkpointUpdates(EngineOps.explodeEngineTrxs(blocks), cfg)
-      .orderBy("block_num").collect()
-    assert(cps.map(_.getString(1)).toSeq === Seq("18000", "18001"))
-    assert(cps.forall(_.getString(0) == "hive_engine:meeseeker:last_block_num"))
-  }
 }
