@@ -168,7 +168,7 @@ object ScaleBench {
         .createTempDirectory(s"scalebench_standing_tbl_${standFactor}_").toString
       replicate(standingPrep, "doc_id", standFactor)
         .write.mode("overwrite").parquet(standingTblDir)
-      val bigStanding = spark.read.parquet(standingTblDir)
+      val bigStanding = Tables.read(spark, standingTblDir)
       val nBigStanding = bigStanding.count()
       val statePath = java.nio.file.Files
         .createTempDirectory(s"scalebench_standing_state_${standFactor}_").toString
@@ -466,7 +466,7 @@ object ScaleBench {
         graft.llm.Packing.writeShards(
           packedForWrite, s"$tmpShards/out", binsPerShard = 64L, shuffleSeed = Some(42L))
       }
-      val back = spark.read.parquet(s"$tmpShards/out")
+      val back = Tables.read(spark, s"$tmpShards/out")
       val outStats = back.agg(count(lit(1)), sum("doc_id")).head()
       val nShards = back.select("source", "shard").distinct().count()
       val wantShards = (inStats.getLong(2) + 63L) / 64L
@@ -594,7 +594,7 @@ object ScaleBench {
       val survivors = new java.util.concurrent.atomic.AtomicLong(0L)
       val (_, tStream) = timed {
         val in = spark.readStream
-          .schema(spark.read.parquet(s"$tmpStream/in").schema)
+          .schema(Tables.read(spark, s"$tmpStream/in").schema)
           .parquet(s"$tmpStream/in")
         val q = graft.streaming.EventStreamJobs
           .streamingEmbeddingDedup(in, "ts", "1 hour", cbsPq)
@@ -638,7 +638,7 @@ object ScaleBench {
         val statePath = s"$tmp/state"
         docs.select(col("doc_id"), col("text"))
           .write.mode("overwrite").parquet(corpusDir)
-        StandingState.write(spark.read.parquet(corpusDir), statePath)
+        StandingState.write(Tables.read(spark, corpusDir), statePath)
         def mkBatch(b: Int, n: Int): Seq[(Long, String)] =
           (0 until n).map { j =>
             (5000000000L + b * 100000L + j,
@@ -725,7 +725,7 @@ object ScaleBench {
             drainListenerBus()
             (jobsOf(-1) - j0, t)
           } finally spark.sparkContext.removeSparkListener(jobListener)
-        val admitted = spark.read.parquet(corpusDir)
+        val admitted = Tables.read(spark, corpusDir)
           .filter(col("doc_id") >= 5000000000L).count()
         // flat = the last (post-compaction, most-appended) batch costs no
         // more than the early batches modulo noise — the zero-SS-state
@@ -761,7 +761,7 @@ object ScaleBench {
           Multimodal.asMedia(docs.select(col("doc_id"), col("text")))
             .write.mode("overwrite").parquet(mediaDir)
           StandingState.writeMediaState(
-            Multimodal.imagePhash(spark.read.parquet(mediaDir)), statePath)
+            Multimodal.imagePhash(Tables.read(spark, mediaDir)), statePath)
         }
         val replicaBatch = Multimodal.asMedia(
           Tables.documents(spark, sfDir)
@@ -805,7 +805,7 @@ object ScaleBench {
         val (_, tIndex) = timed {
           StandingState.writeSpanIndex(docs, tmp.toString, w)
         }
-        val nHashes = spark.read.parquet(s"$tmp/span_hashes").count()
+        val nHashes = Tables.read(spark, s"$tmp/span_hashes").count()
         val batch = Tables.documents(spark, sfDir)
           .select((col("doc_id") + 930000000L).as("doc_id"), col("text"))
           .localCheckpoint(true)
@@ -992,9 +992,9 @@ object ScaleBench {
       val corpusK = s"$tmp/corpus"
       val stateK = s"$tmp/state"
       expireDocs.write.mode("overwrite").parquet(corpusK)
-      StandingState.write(spark.read.parquet(corpusK), stateK)
+      StandingState.write(Tables.read(spark, corpusK), stateK)
       val pred = col("doc_id") % 97 === 0 // ~1% of the corpus
-      val corpus0 = spark.read.parquet(corpusK)
+      val corpus0 = Tables.read(spark, corpusK)
       val nTotal = corpus0.count()
       val nExpected = corpus0
         .join(corpus0.filter(pred).select("doc_id"), Seq("doc_id"), "left_semi")
@@ -1006,7 +1006,7 @@ object ScaleBench {
         nK = n; tKeyed = t
       }
       val resultsEqual = nK == nExpected &&
-        spark.read.parquet(corpusK).count() == nTotal - nExpected
+        Tables.read(spark, corpusK).count() == nTotal - nExpected
       println(s"""{"op":"keyed_expire","corpus":$nDocs,"expired":$nK,"keyed_sec":${f"$tKeyed%.2f"},"lease_blocked_keyed_sec":${f"$blockedK%.2f"},"results_equal":$resultsEqual}""")
     }
 
@@ -1060,7 +1060,7 @@ object ScaleBench {
           concat(lit("b"), col("id")), concat(lit("c"), col("id")),
           concat(lit("d"), col("id"))).as("text"))
       corpus.write.mode("overwrite").parquet(corpusDir)
-      StandingState.write(spark.read.parquet(corpusDir), statePath)
+      StandingState.write(Tables.read(spark, corpusDir), statePath)
       StandingState.writeClusters(
         spark.range(nLab).select(
           col("id").as("doc_id"),
@@ -1095,10 +1095,10 @@ object ScaleBench {
       val after = census()
       val changed = after.keySet.filter(k => before.get(k) != after.get(k)) ++
         (before.keySet -- after.keySet)
-      val lab = spark.read.parquet(s"$statePath/clusters")
+      val lab = Tables.read(spark, s"$statePath/clusters")
         .localCheckpoint(true)
       val ghosts = lab.join(
-        spark.read.parquet(corpusDir).select("doc_id"),
+        Tables.read(spark, corpusDir).select("doc_id"),
         Seq("doc_id"), "left_anti").count()
       val sizesOk = lab.groupBy("cluster_id", "cluster_size")
         .agg(count(lit(1)).as("m"))
@@ -1192,7 +1192,7 @@ object ScaleBench {
       def censusMap(): Map[String, Long] =
         StandingState.loadSourceCensus(spark, statePath)
           .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      val recount = spark.read.parquet(corpusDir)
+      val recount = Tables.read(spark, corpusDir)
         .groupBy("source").agg(count(lit(1)).as("n"))
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       val exact = censusMap() == recount
@@ -1221,7 +1221,7 @@ object ScaleBench {
       def serialProbe(): Double = {
         val t0 = System.nanoTime()
         spark.range(1000).selectExpr("sum(id)").collect()
-        spark.read.parquet(s"$sfDir/lineitem.parquet").count()
+        Tables.read(spark, s"$sfDir/lineitem.parquet").count()
         (System.nanoTime() - t0) / 1e9
       }
       val perCore = Bench.DefaultParPerCore / 2 // ~0.25s/probe: the probe

@@ -1,9 +1,18 @@
 package graft
 
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader,
+  ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 
-/** Loaders for the driver-generated testdata tables (TESTDATA.md).
+/** The one parquet open ([[read]]) and the loaders for the
+  * driver-generated testdata tables (TESTDATA.md), which go through it.
   *
   * `events.ts` is parquet TIMESTAMP(MICROS) with no UTC adjustment, which
   * Spark surfaces as TIMESTAMP_NTZ. [[events]] casts it to session-zone
@@ -12,8 +21,49 @@ import org.apache.spark.sql.functions._
   */
 object Tables {
 
+  /** `path` opened as a parquet table with the schema inference gives,
+    * but without inference's Spark job.
+    *
+    * An untyped parquet read runs a distributed job to infer the schema,
+    * even for a single-file table; without `mergeSchema` that job reads one
+    * footer, of the first data file by path. This does the same step on
+    * the driver: it lists `path`, takes the first file Spark's listing
+    * keeps (by path, skipping `_`/`.`-prefixed names), reads its footer
+    * and converts it with the same `ParquetFileFormat.readSchemaFromFooter`
+    * and session-conf converter the job uses. That step takes Spark's row
+    * metadata when the writer left it and converts the parquet schema
+    * otherwise (the DuckDB-written testdata).
+    *
+    * Falls back to the plain inference read, with its results and error
+    * shapes, when `path` holds a subdirectory (a `k=v` partitioned
+    * layout), a `_metadata`/`_common_metadata` summary file (inference
+    * reads those first), or no data file, and on any exception (a missing
+    * path, a glob, a bad footer). No schema is cached: a rewrite of `path`
+    * is read with its new schema. */
+  def read(spark: SparkSession, path: String): DataFrame = {
+    val schema =
+      try {
+        val p = new Path(path)
+        val conf = spark.sparkContext.hadoopConfiguration
+        val listed = p.getFileSystem(conf).listStatus(p)
+        def summary(n: String): Boolean =
+          n.startsWith("_metadata") || n.startsWith("_common_metadata")
+        def hidden(n: String): Boolean =
+          (n.startsWith("_") && !n.contains("=")) || n.startsWith(".") || n.endsWith("._COPYING_")
+        if (listed.exists(st => st.isDirectory || summary(st.getPath.getName))) None
+        else listed.filterNot(st => hidden(st.getPath.getName))
+          .sortBy(_.getPath.toString).headOption.map { st =>
+            val footer = ParquetFooterReader.readFooter(
+              HadoopInputFile.fromStatus(st, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
+            ParquetFileFormat.readSchemaFromFooter(new Footer(st.getPath, footer),
+              new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+          }
+      } catch { case NonFatal(_) => None }
+    schema.fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
+  }
+
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    read(spark, s"$dir/$name.parquet")
 
   def region(spark: SparkSession, dir: String): DataFrame   = table(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame   = table(spark, dir, "nation")

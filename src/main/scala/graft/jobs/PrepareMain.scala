@@ -2,6 +2,7 @@ package graft.jobs
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.Tables
 import graft.llm.{CorpusPipeline, StandingState}
 
 /** CLI for the batch corpus-preparation side — the `sync` twin for the
@@ -224,19 +225,19 @@ object PrepareMain {
       // rows_out reports the rows the retention pass dropped
       return (nExpired, "maintenance")
     }
-    val docs = spark.read.parquet(a.in)
-    val eval = a.eval.map(spark.read.parquet(_))
-    val emb = a.embeddings.map(spark.read.parquet(_))
+    val docs = Tables.read(spark, a.in)
+    val eval = a.eval.map(Tables.read(spark, _))
+    val emb = a.embeddings.map(Tables.read(spark, _))
     val cfg = cfgOf(a)
     val (result, mode): (DataFrame, String) = (a.standing, a.state) match {
       case (Some(st), Some(sp)) =>
-        val standing = spark.read.parquet(st)
+        val standing = Tables.read(spark, st)
         val out = CorpusPipeline.prepareIncrementalWithState(
           docs, standing, StandingState.load(spark, sp), eval, cfg, emb)
         (out, "incremental-state")
       case (Some(st), None) =>
         (CorpusPipeline.prepareIncremental(
-          docs, spark.read.parquet(st), eval, cfg, emb), "incremental")
+          docs, Tables.read(spark, st), eval, cfg, emb), "incremental")
       case (None, _) =>
         a.report match {
           case Some(rp) =>
@@ -249,7 +250,7 @@ object PrepareMain {
     // one barrier: the written rows feed the count and the optional state
     // append without recomputing the pipeline
     result.write.mode("overwrite").parquet(a.out)
-    val written = spark.read.parquet(a.out)
+    val written = Tables.read(spark, a.out)
     val n = written.count()
     if (a.appendState)
       StandingState.append(written, a.state.get, cfg)

@@ -41,8 +41,11 @@ object Dedup {
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") > 1)
       .select("doc_id")
-      .localCheckpoint(false) // lazy: single consumer (the anti-join) — an
-      // eager checkpoint would pay a separate blocking job for the same rows
+      .localCheckpoint(false) // a lineage barrier for the one consumer (the
+      // anti-join). Not lazy: the call turns the plan into an RDD, and under
+      // AQE that runs every shuffle and broadcast stage below it as a job
+      // here; only the last stage runs inside the consumer. An eager
+      // checkpoint would add a separate blocking job for that stage's rows
     docs.join(drop, Seq("doc_id"), "left_anti")
   }
 
@@ -61,7 +64,7 @@ object Dedup {
       tauPrefilter = Some(tau))
       .filter(col("jaccard") >= tau)
       .select(col("doc_b").as("doc_id")).distinct()
-      .localCheckpoint(false) // lazy: single consumer (see exactByHash)
+      .localCheckpoint(false) // one consumer; not lazy (see exactByHash)
     docs.join(drop, Seq("doc_id"), "left_anti")
   }
 
@@ -101,7 +104,7 @@ object Dedup {
       .select(col("best.id").as("doc_id"))
     val drop = clusters.select("doc_id")
       .join(reps, Seq("doc_id"), "left_anti")
-      .localCheckpoint(false) // lazy; single anti-join consumer
+      .localCheckpoint(false) // one consumer; not lazy (see exactByHash)
     docs.join(drop, Seq("doc_id"), "left_anti")
   }
 
@@ -159,7 +162,7 @@ object Dedup {
       .withColumn("__rn", row_number().over(w))
       .filter(col("__seen").isNotNull || col("__rn") > 1)
       .select("doc_id")
-      .localCheckpoint(false) // lazy: single consumer (see exactByHash)
+      .localCheckpoint(false) // one consumer; not lazy (see exactByHash)
     incoming.join(drop, Seq("doc_id"), "left_anti")
   }
 
@@ -247,7 +250,7 @@ object Dedup {
       .withColumn("common", TextOps.isectSize(col("sa"), col("sb")))
       .filter(col("common").cast("double") / (col("na") + col("nb") - col("common")) >= tau)
       .select(col("doc_b").as("doc_id")).distinct()
-      .localCheckpoint(false) // lazy: single consumer (see exactByHash)
+      .localCheckpoint(false) // one consumer; not lazy (see exactByHash)
     incoming.join(drop, Seq("doc_id"), "left_anti")
   }
 
@@ -917,9 +920,10 @@ object Dedup {
         col("bucket").cast("string").as("sig"), lit(inc).as("inc"))
     // single-consumer join tree: `pairs` feeds exactly one join chain and
     // `drop` exactly one anti-join, so neither needs a barrier — the one
-    // LAZY checkpoint on `drop` only keeps the anti-join's build side from
-    // re-deriving the full pair subtree under AQE re-planning (it
-    // materializes during the run, never as a separate blocking job)
+    // non-eager checkpoint on `drop` only keeps the anti-join's build side
+    // from re-deriving the full pair subtree under AQE re-planning. It is
+    // not lazy: the stages below it run as jobs when it is called (see
+    // exactByHash)
     val pairs = TextOps.incrementalBucketPairs(
       toBands(VectorOps.hyperplaneBuckets(incoming, nPlanes, dim), 1L)
         .unionByName(toBands(standingBuckets, 0L)), maxBucketSize)
@@ -961,7 +965,7 @@ object Dedup {
       .filter(col("na") * col("nb") =!= 0 &&
         expr(VectorOps.dotExpr("qe", "ne")) / (col("na") * col("nb")) >= tau)
       .select(col("vec_b").as("vec_id")).distinct()
-      .localCheckpoint(false) // lazy: single consumer (see incremental twin)
+      .localCheckpoint(false) // one consumer; not lazy (see exactByHash)
     emb.join(drop, Seq("vec_id"), "left_anti")
   }
 }

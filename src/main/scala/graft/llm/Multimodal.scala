@@ -723,7 +723,7 @@ object Multimodal {
       .withColumn("hamming", hammingCol)
       .filter(col("hamming") <= maxHamming)
       .select(col("doc_b").as("media_id")).distinct()
-      .localCheckpoint(false) // lazy: single consumer
+      .localCheckpoint(false) // one consumer; not lazy (see Dedup.exactByHash)
     incomingPhashes.join(drop, Seq("media_id"), "left_anti")
   }
 

@@ -6,6 +6,8 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
+import graft.Tables
+
 /** Trained document-quality classifier (the fastText-style linear model
   * behind "quality classifier" corpus filters, e.g. the GPT-3/LLaMA
   * WebText-vs-CommonCrawl filter): hashed unigram+bigram bag-of-words
@@ -414,7 +416,7 @@ object QualityLr {
     * the missing buckets' contribution). */
   def loadWeights(spark: SparkSession, path: String): (Array[Long], Int) = {
     val rows = readWithHeal(spark, path) {
-      val raw = spark.read.parquet(path)
+      val raw = Tables.read(spark, path)
       require(raw.columns.contains("m"),
         s"weight table at $path carries no regime stamp (no 'm' column) — " +
           "it predates the regime-guarded writeWeights; re-write it " +
@@ -467,7 +469,7 @@ object QualityLr {
   def loadOneVsRestModels(
       spark: SparkSession, path: String): (Seq[(String, Array[Long])], Int) = {
     val rows = readWithHeal(spark, path) {
-      val raw = spark.read.parquet(path)
+      val raw = Tables.read(spark, path)
       require(raw.columns.contains("m"),
         s"model table at $path carries no regime stamp (no 'm' column) — " +
           "it predates the regime-guarded writeOneVsRestModels; re-write " +

@@ -3,6 +3,8 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Tables
+
 /** PERSISTED standing-corpus state for the ingest cycle — the artifact
   * store that makes [[CorpusPipeline.prepareIncremental]] truly
   * batch-shaped RUN-OVER-RUN, not just within one run.
@@ -196,20 +198,20 @@ object StandingState {
     * cannot subtract from it. */
   def load(spark: SparkSession, path: String): StandingState = {
     Seq("digests", "bands").foreach(heal(spark, path, _))
-    val digests = requireDocKeyed(readTable(spark, s"$path/digests"), path, "digests")
+    val digests = requireDocKeyed(Tables.read(spark, s"$path/digests"), path, "digests")
     val (meta, spanW) = textRegime(spark, path)
     val cs =
       if (!tableExists(spark, s"$path/centroids")) None
-      else Some(spark.read.parquet(s"$path/centroids")
+      else Some(Tables.read(spark, s"$path/centroids")
         .orderBy("idx").collect()
         .map(r => r.getSeq[Double](r.fieldIndex("c")).toSeq).toSeq)
     val spans = spanW.map { w =>
       heal(spark, path, "span_hashes")
-      (requireDocKeyed(readTable(spark, s"$path/span_hashes"), path, "span_hashes"), w)
+      (requireDocKeyed(Tables.read(spark, s"$path/span_hashes"), path, "span_hashes"), w)
     }
     StandingState(
       digests,
-      readTable(spark, s"$path/bands"),
+      Tables.read(spark, s"$path/bands"),
       cs, meta, spans)
   }
 
@@ -252,44 +254,6 @@ object StandingState {
   private val regimeRowCache =
     new java.util.concurrent.ConcurrentHashMap[String, (String, Row)]()
 
-  /** `spark.read.parquet(path)` with the table's Spark schema fetched
-    * from ONE part-file footer DRIVER-SIDE. Spark 4 runs a distributed
-    * schema-inference job per untyped parquet read — measured at one
-    * Spark job per read even for a single-file table — and the intake's
-    * per-micro-batch reads (state digests + bands + the corpus table)
-    * paid three such jobs per batch, pure driver-roundtrip latency at
-    * any scale (round-19 jobs-per-batch diet). Every table in scope is
-    * Spark-written, so each footer carries the exact Spark schema under
-    * the `org.apache.spark.sql.parquet.row.metadata` key; a file
-    * without it (foreign writer), an unlistable dir, or any footer
-    * hiccup falls back to the plain inference read, preserving today's
-    * behavior including its error shapes. NO schema caching across
-    * calls: the footer is re-read per call (~ms on any FS), so a
-    * schema-changing rewrite can never serve a stale schema. */
-  private[graft] def readTable(spark: SparkSession, path: String): DataFrame = {
-    import org.apache.hadoop.fs.{Path => HPath}
-    val schema =
-      try {
-        val p = new HPath(path)
-        val conf = spark.sparkContext.hadoopConfiguration
-        val fs = p.getFileSystem(conf)
-        fs.listStatus(p).find { st =>
-          val n = st.getPath.getName
-          st.isFile && st.getLen > 0 && !n.startsWith("_") && !n.startsWith(".")
-        }.flatMap { st =>
-          val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
-          try Option(rd.getFooter.getFileMetaData.getKeyValueMetaData
-              .get("org.apache.spark.sql.parquet.row.metadata"))
-            .map(j => org.apache.spark.sql.types.DataType.fromJson(j)
-              .asInstanceOf[org.apache.spark.sql.types.StructType])
-          finally rd.close()
-        }
-      } catch { case scala.util.control.NonFatal(_) => None }
-    schema.map(s => spark.read.schema(s).parquet(path))
-      .getOrElse(spark.read.parquet(path))
-  }
-
   private def cachedRegimeRow(spark: SparkSession, tablePath: String): Row = {
     import org.apache.hadoop.fs.{Path => HPath}
     val p = new HPath(tablePath)
@@ -300,7 +264,7 @@ object StandingState {
     val cached = regimeRowCache.get(tablePath)
     if (cached != null && cached._1 == key && key.nonEmpty) cached._2
     else {
-      val r = readTable(spark, tablePath).head()
+      val r = Tables.read(spark, tablePath).head()
       if (regimeRowCache.size >= RegimeCacheMax) regimeRowCache.clear()
       regimeRowCache.put(tablePath, (key, r))
       r
@@ -488,7 +452,7 @@ object StandingState {
   /** Lazy scan of the persisted pair edges: (doc_a, doc_b). */
   def loadPairEdges(spark: SparkSession, path: String): DataFrame = {
     heal(spark, path, "pair_edges")
-    spark.read.parquet(s"$path/pair_edges")
+    Tables.read(spark, s"$path/pair_edges")
   }
 
   /** Default cluster_id bucket count for [[writeClusters]]. */
@@ -561,7 +525,7 @@ object StandingState {
           "is live, retry after its commit; if it crashed, verify it is " +
           "gone and run StandingState.breakLease (the next load rolls the " +
           "commit forward).")
-    val df = spark.read.parquet(s"$path/clusters")
+    val df = Tables.read(spark, s"$path/clusters")
     requireClustersMeta(spark, path)
     df.drop("cpart")
   }
@@ -588,7 +552,7 @@ object StandingState {
       if (fs.exists(staged)) fs.delete(staged, true)
     }
     healTable(fs, base, "clusters")
-    val df = spark.read.parquet(s"$path/clusters")
+    val df = Tables.read(spark, s"$path/clusters")
     requireClustersMeta(spark, path)
     (df.drop("cpart"),
       cachedRegimeRow(spark, s"$path/clusters_meta").getAs[Int]("n_parts"))
@@ -658,12 +622,12 @@ object StandingState {
       return withLeaseRetry(spark, statePath, "relabelClusters:exact") {
         val (labels, nParts) = loadClustersLeased(spark, statePath)
         val before = labels.count()
-        val corpusIds = spark.read.parquet(corpusPath)
+        val corpusIds = Tables.read(spark, corpusPath)
           .select("doc_id").distinct()
         // restrict BOTH endpoints to retained docs: expire already
         // subtracts, but the exact pass may run standalone after a
         // manual corpus edit
-        val edges = spark.read.parquet(s"$statePath/pair_edges")
+        val edges = Tables.read(spark, s"$statePath/pair_edges")
           .join(corpusIds.withColumnRenamed("doc_id", "doc_a"),
             Seq("doc_a"), "left_semi")
           .join(corpusIds.withColumnRenamed("doc_id", "doc_b"),
@@ -679,7 +643,7 @@ object StandingState {
     }
     withLeaseRetry(spark, statePath, "relabelClusters") {
       val (labels, nParts) = loadClustersLeased(spark, statePath)
-      val corpusIds = spark.read.parquet(corpusPath)
+      val corpusIds = Tables.read(spark, corpusPath)
         .select("doc_id").distinct()
       // ghost ROWS, not just a count — the touched-partition list is
       // keyed by their cluster_ids. One anti-join scan; the lease is held
@@ -1201,12 +1165,12 @@ object StandingState {
       s"expire${kind.name}")
     // BARRIER + COUNT in one job (round-19 diet): the lazy checkpoint
     // materializes — fully pinned — inside the count's single RDD job
-    val expiredIds = readTable(spark, kind.primary)
+    val expiredIds = Tables.read(spark, kind.primary)
       .filter(coalesce(expired, lit(false)))
       .select(kind.id).distinct().localCheckpoint(false)
     val n =
       if (expiredIds.queryExecution.toRdd.count() == 0L) 0L
-      else readTable(spark, kind.primary)
+      else Tables.read(spark, kind.primary)
         .join(expiredIds, Seq(kind.id), "left_semi").count()
     if (n > 0L) {
       val subtract: DataFrame => DataFrame =
@@ -1242,9 +1206,9 @@ object StandingState {
   private def repairKind(spark: SparkSession, statePath: String, kind: Kind): (Long, Long) = {
     val op = s"repair${kind.name}"
     healKind(spark, statePath, kind, kind.artifacts, op)
-    val primary = readTable(spark, kind.primary)
+    val primary = Tables.read(spark, kind.primary)
     val drift = primary
-      .join(readTable(spark, s"$statePath/${kind.witness}").select(kind.id).distinct(),
+      .join(Tables.read(spark, s"$statePath/${kind.witness}").select(kind.id).distinct(),
         Seq(kind.id), "left_anti")
       .localCheckpoint(true) // consumed by the artifact append AND the count
     val nDrift = drift.count()
@@ -1254,7 +1218,7 @@ object StandingState {
     }
     val ids = primary.select(kind.id).distinct().localCheckpoint(false)
     val nGhosts = kind.ghosts.map { table =>
-      val rows = readTable(spark, s"$statePath/$table")
+      val rows = Tables.read(spark, s"$statePath/$table")
       val ghosts = rows.join(ids, Seq(kind.id), "left_anti").count()
       if (ghosts > 0L) {
         val keep = rows.join(ids, Seq(kind.id), "left_semi").localCheckpoint(true)
@@ -1303,7 +1267,7 @@ object StandingState {
     // any mutation instead of silently leaving unreachable rows
     Seq("digests", "span_hashes")
       .filter(t => tableExists(spark, s"$statePath/$t"))
-      .foreach(t => requireDocKeyed(readTable(spark, s"$statePath/$t"), statePath, t))
+      .foreach(t => requireDocKeyed(Tables.read(spark, s"$statePath/$t"), statePath, t))
     val pairEdges = (ids: DataFrame) => (edges: DataFrame) =>
       edges
         .join(ids.withColumnRenamed("doc_id", "doc_a"), Seq("doc_a"), "left_anti")
@@ -1615,9 +1579,10 @@ object StandingState {
     * java.io.File: the state path may be any Hadoop-addressable URI
     * (hdfs://, s3a://, file:), where a local-File check is always false
     * (which would e.g. silently drop the frozen centroids and re-run a
-    * Lloyd training every ingest). No Spark job: an untyped
-    * `spark.read.parquet` probe paid a schema-inference job per table
-    * that exists. One probe idiom for every optional state table. */
+    * Lloyd training every ingest). No Spark job: an untyped parquet
+    * read runs a schema-inference job, and even a [[Tables.read]] open
+    * would read a footer for a yes/no answer. One probe idiom for every
+    * optional state table. */
   private def tableExists(spark: SparkSession, path: String): Boolean = {
     import org.apache.hadoop.fs.{FileStatus, Path => HPath}
     val p = new HPath(path)
@@ -1701,12 +1666,12 @@ object StandingState {
   def loadMediaState(spark: SparkSession, path: String): (DataFrame, DataFrame, Int) = {
     Seq("media_phashes", "media_bands").foreach(heal(spark, path, _))
     // regime row + schemas fetched driver-side (cachedRegimeRow /
-    // readTable) — the media intake loads this every micro-batch, and
+    // Tables.read) — the media intake loads this every micro-batch, and
     // the uncached form paid one head() job + two schema-inference jobs
     // per batch for write-time constants
     val nBands = cachedRegimeRow(spark, s"$path/media_meta").getAs[Int]("n_bands")
-    (readTable(spark, s"$path/media_phashes"),
-      readTable(spark, s"$path/media_bands"), nBands)
+    (Tables.read(spark, s"$path/media_phashes"),
+      Tables.read(spark, s"$path/media_bands"), nBands)
   }
 
   /** Restore the media-table <-> phash/band-table invariant after a crash
@@ -1748,8 +1713,8 @@ object StandingState {
     * payload-free index (see [[load]]). */
   def loadSpanIndex(spark: SparkSession, path: String): (DataFrame, Int) = {
     heal(spark, path, "span_hashes")
-    val w = spark.read.parquet(s"$path/span_meta").head().getAs[Int]("w")
-    (requireDocKeyed(readTable(spark, s"$path/span_hashes"), path, "span_hashes"), w)
+    val w = Tables.read(spark, s"$path/span_meta").head().getAs[Int]("w")
+    (requireDocKeyed(Tables.read(spark, s"$path/span_hashes"), path, "span_hashes"), w)
   }
 
   /** Close the span-dedup cycle: append the CLEANED admitted batch's
@@ -1762,7 +1727,7 @@ object StandingState {
     // dir would block healDir's rename — the retired rows orphaned
     // (standing hashes silently lost, under-dedup)
     healStranded(spark, path, "span_hashes", "appendSpanHashes:heal")
-    val w = spark.read.parquet(s"$path/span_meta").head().getAs[Int]("w")
+    val w = Tables.read(spark, s"$path/span_meta").head().getAs[Int]("w")
     val rows = TextOps.spanWindowHashesKeyed(cleanedBatch, w)
     withLease(spark, path, "appendSpanHashes") {
       Frames.sizedWrite(rows).write.mode("append").parquet(s"$path/span_hashes")
@@ -1789,14 +1754,14 @@ object StandingState {
     * subtraction would double-count); healing is always a recount. */
   def writeSourceCensus(
       spark: SparkSession, statePath: String, corpusPath: String): Unit =
-    spark.read.parquet(corpusPath)
+    Tables.read(spark, corpusPath)
       .groupBy("source").agg(count(lit(1)).as("n"))
       .coalesce(1).write.mode("overwrite").parquet(s"$statePath/source_census")
 
   /** Lazy scan of the maintained census: (source, n). */
   def loadSourceCensus(spark: SparkSession, statePath: String): DataFrame = {
     heal(spark, statePath, "source_census")
-    spark.read.parquet(s"$statePath/source_census")
+    Tables.read(spark, s"$statePath/source_census")
   }
 
   /** True iff the census artifact exists at this state path (the ingest's
@@ -1811,7 +1776,7 @@ object StandingState {
     * the swap never re-reads the live table it replaces. */
   private[graft] def bumpSourceCensus(
       spark: SparkSession, statePath: String, admitted: DataFrame): Unit = {
-    val merged = spark.read.parquet(s"$statePath/source_census")
+    val merged = Tables.read(spark, s"$statePath/source_census")
       .unionByName(
         admitted.groupBy("source").agg(count(lit(1)).as("n")))
       .groupBy("source").agg(sum("n").as("n"))
@@ -1852,17 +1817,17 @@ object StandingState {
         // (<=>): groupBy counts NULL sources as a group on BOTH sides, so
         // a plain equality join would leave the two NULL rows forever
         // unmatched and flag phantom drift that no recount can heal
-        val cen = spark.read.parquet(s"$statePath/source_census")
+        val cen = Tables.read(spark, s"$statePath/source_census")
           .select(col("source").as("__cs"), col("n").as("__cn"))
-        val rec = spark.read.parquet(corpusPath)
+        val rec = Tables.read(spark, corpusPath)
           .groupBy("source").agg(count(lit(1)).as("__rn"))
         rec.join(cen, col("source") <=> col("__cs"), "full_outer")
           .filter(coalesce(col("__cn"), lit(0L)) =!= coalesce(col("__rn"), lit(0L)))
           .limit(1).count() > 0
       } else {
-        val total = spark.read.parquet(s"$statePath/source_census")
+        val total = Tables.read(spark, s"$statePath/source_census")
           .agg(coalesce(sum("n"), lit(0L))).head().getLong(0)
-        total != spark.read.parquet(corpusPath).count()
+        total != Tables.read(spark, corpusPath).count()
       }
     // unleased fast path: the healthy case never touches the lease
     if (!drifted()) false
@@ -1876,7 +1841,7 @@ object StandingState {
       // one corpus recount is the price of a sound heal.
       if (!drifted()) false
       else {
-        val recount = spark.read.parquet(corpusPath)
+        val recount = Tables.read(spark, corpusPath)
           .groupBy("source").agg(count(lit(1)).as("n"))
           .localCheckpoint(true)
         swapTable(spark, statePath, "source_census") { staged =>
@@ -1949,7 +1914,7 @@ object StandingState {
   def loadDsirRatios(
       spark: SparkSession, path: String, m: Int, lambda: Double): DataFrame = {
     heal(spark, path, "dsir_ratios")
-    val df = spark.read.parquet(s"$path/dsir_ratios")
+    val df = Tables.read(spark, s"$path/dsir_ratios")
     val st = df.agg(
       count(lit(1)).as("rows"),
       countDistinct(col("bucket")).as("nb"),
@@ -2011,7 +1976,7 @@ object StandingState {
     require(m.getAs[Int]("n_planes") == nPlanes && m.getAs[Int]("dim") == dim,
       s"persisted emb buckets use nPlanes=${m.getAs[Int]("n_planes")}, " +
         s"dim=${m.getAs[Int]("dim")}; caller wants nPlanes=$nPlanes, dim=$dim")
-    readTable(spark, s"$path/emb_buckets")
+    Tables.read(spark, s"$path/emb_buckets")
   }
 
   /** Close the embedding cycle: append an ADMITTED batch's bucket rows

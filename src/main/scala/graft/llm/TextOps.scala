@@ -329,9 +329,11 @@ object TextOps {
                       maxBucketSize: Int = DefaultMaxBucketSize,
                       tauPrefilter: Option[Double] = None): DataFrame = {
     // pairs and the candidate doc sets are consumed by multiple joins within
-    // this one returned plan: lazy localCheckpoint, not cache() — storage is
-    // freed when the plan becomes unreachable (GC + ContextCleaner), a plain
-    // cache() with no caller-side handle would leak for the session lifetime.
+    // this one returned plan: non-eager localCheckpoint, not cache() —
+    // storage is freed when the plan becomes unreachable (GC +
+    // ContextCleaner), a plain cache() with no caller-side handle would leak
+    // for the session lifetime. Not lazy: the stages below each checkpoint
+    // run as jobs when it is called (see [[graft.llm.Dedup.exactByHash]]).
     //
     // With `tauPrefilter` (the [[graft.llm.Dedup.dedupNearLsh]] path), the
     // sound size bound J >= tau ⟹ min(na,nb) >= tau * max(na,nb) is
@@ -401,7 +403,7 @@ object TextOps {
     val hsets = sets
       .select(col("doc_id"),
         transform(col("sset"), s => xxhash64(s)).as("hs"))
-      .localCheckpoint(false)
+      .localCheckpoint(false) // not lazy: the stages below run here (see Dedup.exactByHash)
     pairs
       .join(hsets.select(col("doc_id").as("doc_a"), col("hs").as("ha")), Seq("doc_a"))
       .join(hsets.select(col("doc_id").as("doc_b"), col("hs").as("hb")), Seq("doc_b"))

@@ -2590,7 +2590,7 @@ object LlmQueries {
         val statePath = java.nio.file.Files
           .createTempDirectory("q75_state_").toString
         // default regime = q63's (3-shingles, 16 hashes, bands of 2)
-        graft.llm.StandingState.write(s.read.parquet(corpusDir), statePath)
+        graft.llm.StandingState.write(Tables.read(s, corpusDir), statePath)
         Seq((250L, 300L), (300L, 350L), (350L, Long.MaxValue)).foreach {
           case (lo, hi) =>
             graft.streaming.CorpusIntakeJob.ingestTextBatch(
@@ -2598,7 +2598,7 @@ object LlmQueries {
                 .select("doc_id", "source", "text"),
               statePath, corpusDir, tau = 0.5, gate = false, scrub = false)
         }
-        s.read.parquet(corpusDir).filter(col("doc_id") >= 250)
+        Tables.read(s, corpusDir).filter(col("doc_id") >= 250)
           .select("doc_id", "source").orderBy("doc_id")
       },
       Some(shingleCte +
@@ -2998,7 +2998,7 @@ object LlmQueries {
           docs.filter(col("doc_id") < 150).select("doc_id", "text"))
         standing.write.mode("overwrite").parquet(mediaDir)
         graft.llm.StandingState.writeMediaState(
-          graft.llm.Multimodal.imagePhash(s.read.parquet(mediaDir)),
+          graft.llm.Multimodal.imagePhash(Tables.read(s, mediaDir)),
           statePath, nBands = 4)
         val batchDocs = docs.filter(col("doc_id") < 40)
           .select((col("doc_id") + 2000000L).as("doc_id"), col("text"))
@@ -3010,8 +3010,8 @@ object LlmQueries {
         graft.streaming.CorpusIntakeJob.ingestMediaBatch(
           graft.llm.Multimodal.asMedia(batchDocs),
           statePath, mediaDir, maxHamming = 8)
-        s.read.parquet(s"$statePath/media_phashes")
-          .join(s.read.parquet(mediaDir)
+        Tables.read(s, s"$statePath/media_phashes")
+          .join(Tables.read(s, mediaDir)
             .filter(col("media_id") >= 150).select("media_id"),
             Seq("media_id"), "left_semi")
           .orderBy("media_id")
@@ -3323,14 +3323,14 @@ object LlmQueries {
         standing.write.mode("overwrite").parquet(corpusDir)
         val statePath = java.nio.file.Files
           .createTempDirectory("q90_state_").toString
-        graft.llm.StandingState.write(s.read.parquet(corpusDir), statePath)
+        graft.llm.StandingState.write(Tables.read(s, corpusDir), statePath)
         val nExp = graft.llm.StandingState.expire(
           s, statePath, corpusDir, col("doc_id") % 3 === 0)
         require(nExp > 0, s"q90 setup vacuous: nothing expired")
         graft.streaming.CorpusIntakeJob.ingestTextBatch(
           incoming, statePath, corpusDir,
           tau = 0.5, gate = false, scrub = false)
-        s.read.parquet(corpusDir)
+        Tables.read(s, corpusDir)
           .select("doc_id", "source").orderBy("doc_id")
       },
       Some(expireRetentionOracle),
@@ -3675,7 +3675,7 @@ object LlmQueries {
         val statePath = java.nio.file.Files
           .createTempDirectory("q100_state_").toString
         graft.llm.StandingState.writeEmbBuckets(
-          s.read.parquet(vecsDir), statePath, nPlanes = 4, dim = 64)
+          Tables.read(s, vecsDir), statePath, nPlanes = 4, dim = 64)
         val nExp = graft.llm.StandingState.expireEmbeddings(
           s, statePath, vecsDir, col("vec_id") % 3 === 0)
         require(nExp > 0, s"q100 setup vacuous: nothing expired")
@@ -3684,7 +3684,7 @@ object LlmQueries {
         val incoming = emb.filter(col("vec_id") >= 300).unionByName(replicas)
         graft.streaming.CorpusIntakeJob.ingestEmbeddingBatch(
           incoming, statePath, vecsDir, tau = 0.9, nPlanes = 4, dim = 64)
-        s.read.parquet(vecsDir).select("vec_id").orderBy("vec_id")
+        Tables.read(s, vecsDir).select("vec_id").orderBy("vec_id")
       },
       Some(embeddingRetentionOracle),
     ),
@@ -3891,7 +3891,7 @@ object LlmQueries {
           .write.mode("overwrite").parquet(corpusDir)
         val statePath = java.nio.file.Files
           .createTempDirectory("q103_state_").toString
-        graft.llm.StandingState.write(s.read.parquet(corpusDir), statePath)
+        graft.llm.StandingState.write(Tables.read(s, corpusDir), statePath)
         // TWO production cycles (each dedups vs the state the previous
         // one appended) — the gate-in-stream semantics need chained
         // cycles, not volume: the round-16 diet dropped cycle 3 outright
@@ -3906,7 +3906,7 @@ object LlmQueries {
             statePath, corpusDir, tau = 0.5,
             gate = false, scrub = false, gates = gates)
         }
-        s.read.parquet(corpusDir).filter(col("doc_id") >= 250)
+        Tables.read(s, corpusDir).filter(col("doc_id") >= 250)
           .select("doc_id", "source").orderBy("doc_id")
       },
       Some(intakeGatesOracle(m = 1024, steps = 1, lr = 0.5,
@@ -3946,7 +3946,7 @@ object LlmQueries {
           .write.mode("overwrite").parquet(corpusDir)
         val statePath = java.nio.file.Files
           .createTempDirectory("q104_state_").toString
-        graft.llm.StandingState.write(s.read.parquet(corpusDir), statePath)
+        graft.llm.StandingState.write(Tables.read(s, corpusDir), statePath)
         graft.llm.StandingState.writeSourceCensus(s, statePath, corpusDir)
         val admitted = Seq((250L, 310L), (310L, 375L)).map { case (lo, hi) =>
           graft.streaming.CorpusIntakeJob.ingestTextBatch(
@@ -4066,7 +4066,7 @@ object LlmQueries {
           .select("doc_id", "source", "text")
           .write.mode("overwrite").parquet(corpusDir)
         val statePath = s"$tmp/state"
-        graft.llm.StandingState.write(s.read.parquet(corpusDir), statePath)
+        graft.llm.StandingState.write(Tables.read(s, corpusDir), statePath)
         def ingest(lo: Long, hi: Long,
             gates: graft.streaming.CorpusIntakeJob.TrainedGates): Long = {
           val batch = docs.filter(col("doc_id") >= lo && col("doc_id") < hi)
@@ -4097,7 +4097,7 @@ object LlmQueries {
         // call) re-reads the table — batch 2 admits under generation B
         val gatesB = gatesA.reloaded(s)
         ingest(300L, 350L, gatesB)
-        s.read.parquet(corpusDir).filter(col("doc_id") >= 250)
+        Tables.read(s, corpusDir).filter(col("doc_id") >= 250)
           .select("doc_id", "source").orderBy("doc_id")
       },
       Some(intakeRotationOracle(m = 1024, lr = 0.5, thr = 500000L)),

@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Tables
 import graft.ops.Glob
 
 /** In-engine KV materialization (the B1 alternative to an external Redis):
@@ -179,7 +180,7 @@ object KvTable {
     loadLatest(spark, path)
       .filter(col("chain") === chain && col("block_bucket").isin(buckets: _*))
       .write.mode("overwrite").parquet(staging.toString)
-    spark.read.parquet(staging.toString)
+    Tables.read(spark, staging.toString)
       .repartition(col("chain"), col("block_bucket"))
       .sortWithinPartitions("key")
       .write.mode("overwrite")
@@ -191,7 +192,7 @@ object KvTable {
   }
 
   def load(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    Tables.read(spark, path)
 
   /** G7 point GET: equality on key plus derived partition predicates so the
     * scan prunes to a single (chain, bucket) partition. */

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.Tables
 import graft.llm.{Dedup, StandingState, TextOps}
 import graft.sink.KvPubSubSink
 
@@ -650,7 +651,7 @@ object CorpusIntakeJob {
     val spark = batch.sparkSession
     val kind = intake.kind
     var state = intake.load()
-    val standing = StandingState.readTable(spark, kind.primary)
+    val standing = Tables.read(spark, kind.primary)
     // no distinct on the standing id column: ids are unique in the
     // primary, and the distinct cost an aggregation stage per batch
     val marked = intake.prepare(batch).join(
@@ -660,7 +661,7 @@ object CorpusIntakeJob {
     val fresh = marked.filter(col("__in_standing").isNull).drop("__in_standing")
     val replayed = marked.filter(col("__in_standing").isNotNull).drop("__in_standing")
     if (replayed.limit(1).count() > 0) {
-      val witnessIds = StandingState.readTable(spark, s"$statePath/${kind.witness}")
+      val witnessIds = Tables.read(spark, s"$statePath/${kind.witness}")
         .select(kind.id).distinct()
       val drifted = replayed.join(witnessIds, Seq(kind.id), "left_anti")
         .localCheckpoint(true) // consumed by the artifact append AND the count

@@ -1,11 +1,11 @@
 package graft.jobs
 
 import java.nio.file.Files
-import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -45,45 +45,6 @@ class FollowerBatchSpec extends SparkSpec {
 
   private def blocks: DataFrame = spark.read.schema(Model.blockSchema).json(resource("blocks.jsonl"))
   private def vops: DataFrame = spark.read.schema(Model.vopSchema).json(resource("vops.jsonl"))
-
-  private val SpecScope = "graft.spec.scope"
-
-  /** Every listener event posted so far is delivered: the end event of a
-    * marker job queues behind them. */
-  private def drainListenerBus(): Unit = {
-    val sc = spark.sparkContext
-    val done = new CountDownLatch(1)
-    val marker = new SparkListener {
-      @volatile private var jobId = -1
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty(SpecScope) == "drain")) jobId = e.jobId
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        if (e.jobId == jobId) done.countDown()
-    }
-    sc.addSparkListener(marker)
-    try {
-      sc.setLocalProperty(SpecScope, "drain")
-      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(SpecScope, null)
-      assert(done.await(30, TimeUnit.SECONDS), "listener bus did not drain")
-    } finally sc.removeSparkListener(marker)
-  }
-
-  /** Spark jobs `body` submits from this thread. */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val jobs = new ConcurrentLinkedQueue[Int]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty(SpecScope) == "counted")) jobs.add(e.jobId)
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(SpecScope, "counted")
-      try body finally sc.setLocalProperty(SpecScope, null)
-      drainListenerBus()
-    } finally sc.removeSparkListener(listener)
-    jobs.size
-  }
 
   test("checkpoint key: SET ascending at each block publish, no TTL") {
     val key = "hive:meeseeker:last_block_num"
