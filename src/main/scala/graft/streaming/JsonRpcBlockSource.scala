@@ -1,9 +1,12 @@
 package graft.streaming
 
 import java.util
+import java.util.concurrent.{Callable, ExecutionException, Executors, Future}
+import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.types.StructType
@@ -26,12 +29,18 @@ import graft.ops.Policies
   *    ranges (`numPartitions`), so executors pull `get_block` IN PARALLEL —
   *    the ordered-sink sort restores publish order downstream, which is how
   *    the 0.33 blocks/s sequential reference loop becomes cluster-rate;
-  *  - each partition reader retries per-height with the engine backoff curve
+  *  - each partition reader keeps up to `RpcClient.FetchWindow` (8)
+  *    `get_block` calls of its range in flight, capped by the range's
+  *    length, and still yields rows in ascending height order; a node
+  *    therefore sees at most `numPartitions` x 8 concurrent requests
+  *    (32 at the default 4 partitions). The reader reports its calls,
+  *    retries and fetch wall time as DSv2 custom metrics on the scan node;
+  *  - each height retries with the engine backoff curve
   *    (Policies.engineBackoff, A3) and fails over across endpoints with the
-  *    seeded NodePool (A7); a height whose block is still null after
-  *    retries (lagging node) fails the task — Spark retries the partition,
-  *    the offset range is immutable, so delivery stays exactly-once into
-  *    the micro-batch;
+  *    NodePool seeded by the height (A7); a height whose block is still
+  *    null after retries (lagging node) fails the task with the retry
+  *    loop's IOException — Spark retries the partition, the offset range
+  *    is immutable, so delivery stays exactly-once into the micro-batch;
   *  - admission control (`blocksPerTrigger`, B4) bounds catch-up batches;
   *    with Trigger.AvailableNow the end is frozen at start, giving bounded
   *    backfill runs.
@@ -93,6 +102,8 @@ private[streaming] class RpcTable(cfg: RpcConfig) extends Table with SupportsRea
     new ScanBuilder {
       override def build(): Scan = new Scan {
         override def readSchema(): StructType = JsonlReplaySource.schema
+
+        override def supportedCustomMetrics(): Array[CustomMetric] = RpcMetrics.all
 
         override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
           new RpcMicroBatchStream(cfg)
@@ -252,33 +263,109 @@ private[graft] object RpcClient {
       Some(n.asLong())
     }.get
 
+  /** Most `get_block` calls one partition reader keeps in flight. */
+  val FetchWindow = 8
+
+  /** Name prefix of the readers' fetch threads. */
+  val FetchThreadPrefix = "rpc-get-block"
+
   val readerFactory: PartitionReaderFactory = new PartitionReaderFactory {
-    override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-      val p = partition.asInstanceOf[HeightRangePartition]
-      new PartitionReader[InternalRow] {
-        private var height = p.from - 1
-        private var current: String = _
-        override def next(): Boolean = {
-          height += 1
-          if (height >= p.until) return false
-          // A null result (lagging node whose head is behind the offset
-          // range) is RETRYABLE — thrown inside the retry lambda so the
-          // backoff/failover loop gets another node or a later poll, rather
-          // than failing the task on the first lag. Only an exhausted retry
-          // budget fails the task (partition retry re-fetches the immutable
-          // range, so delivery stays exactly-once into the batch).
-          current = withRetry(p.cfg, seed = height) { ep =>
-            val r = rpcCall(ep, p.cfg.rpcMethod, s"[$height]")
-            if (r.isEmpty) throw new java.io.IOException(
-              s"block $height not yet available on $ep")
-            r.map(_.toString)
-          }.get
-          true
-        }
-        override def get(): InternalRow =
-          InternalRow(height, UTF8String.fromString(current))
-        override def close(): Unit = ()
-      }
+    override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+      new HeightRangeReader(partition.asInstanceOf[HeightRangePartition])
+  }
+
+  /** Yields `[from, until)` in ascending height order while up to
+    * [[FetchWindow]] `get_block` calls of the range are in flight, each on
+    * its own fetch thread. The window is filled in height order and never
+    * runs past `until`. */
+  private final class HeightRangeReader(p: HeightRangePartition)
+      extends PartitionReader[InternalRow] {
+    private val window = math.min(FetchWindow.toLong, p.until - p.from).toInt
+    private val pool = Executors.newFixedThreadPool(window, { (r: Runnable) =>
+      val t = new Thread(r, s"$FetchThreadPrefix-${p.from}-${p.until}")
+      t.setDaemon(true)
+      t
+    })
+    private val inFlight = new util.ArrayDeque[Future[String]]()
+    private var nextHeight = p.from
+    private var height = p.from - 1
+    private var current: String = _
+    private val calls, retries = new AtomicLong()
+    /** Wall time the task spent in `next()`, waiting for its blocks. */
+    private var fetchNs = 0L
+
+    /** One height's block. A null result (lagging node whose head is behind
+      * the offset range) is RETRYABLE — thrown inside the retry lambda so
+      * the backoff/failover loop gets another node or a later poll, rather
+      * than failing the task on the first lag. Only an exhausted retry
+      * budget fails the task (partition retry re-fetches the immutable
+      * range, so delivery stays exactly-once into the batch). */
+    private def fetch(h: Long): String = {
+      var tries = 0
+      withRetry(p.cfg, seed = h) { ep =>
+        tries += 1
+        calls.incrementAndGet()
+        if (tries > 1) retries.incrementAndGet()
+        val r = rpcCall(ep, p.cfg.rpcMethod, s"[$h]")
+        if (r.isEmpty) throw new java.io.IOException(s"block $h not yet available on $ep")
+        r.map(_.toString)
+      }.get
     }
+
+    override def next(): Boolean = {
+      val t0 = System.nanoTime()
+      try {
+        while (inFlight.size < window && nextHeight < p.until) {
+          val h = nextHeight
+          inFlight.add(pool.submit((() => fetch(h)): Callable[String]))
+          nextHeight += 1
+        }
+        val head = inFlight.poll()
+        if (head == null) return false
+        // the height's own exception (the retry loop's IOException), not its wrapper
+        current = try head.get() catch { case e: ExecutionException => throw e.getCause }
+        height += 1
+        true
+      } finally fetchNs += System.nanoTime() - t0
+    }
+
+    override def get(): InternalRow =
+      InternalRow(height, UTF8String.fromString(current))
+
+    override def currentMetricsValues(): Array[CustomTaskMetric] = Array(
+      RpcMetrics.task(RpcMetrics.GetBlockCalls, calls.get),
+      RpcMetrics.task(RpcMetrics.GetBlockRetries, retries.get),
+      RpcMetrics.task(RpcMetrics.FetchMs, fetchNs / 1000000L))
+
+    /** Interrupts fetches still in flight (a failed or cancelled task) and
+      * lets the idle threads exit. */
+    override def close(): Unit = pool.shutdownNow()
   }
 }
+
+/** The partition readers' DSv2 custom metrics, summed over tasks into the
+  * scan node's SQL metrics. Spark re-instantiates each class by name on the
+  * driver, so each is a top-level class with a no-arg constructor. */
+private[graft] object RpcMetrics {
+  val GetBlockCalls = "getBlockCalls"
+  val GetBlockRetries = "getBlockRetries"
+  val FetchMs = "getBlockFetchMs"
+
+  def all: Array[CustomMetric] =
+    Array(new GetBlockCallsMetric, new GetBlockRetriesMetric, new GetBlockFetchMsMetric)
+
+  def task(metric: String, v: Long): CustomTaskMetric = new CustomTaskMetric {
+    override def name(): String = metric
+    override def value(): Long = v
+  }
+}
+
+sealed abstract class RpcSumMetric(metric: String, desc: String) extends CustomSumMetric {
+  override def name(): String = metric
+  override def description(): String = desc
+}
+
+class GetBlockCallsMetric extends RpcSumMetric(RpcMetrics.GetBlockCalls, "get_block calls")
+class GetBlockRetriesMetric extends RpcSumMetric(RpcMetrics.GetBlockRetries, "get_block retries")
+class GetBlockFetchMsMetric
+    extends RpcSumMetric(RpcMetrics.FetchMs, "get_block fetch wall time (ms)")
