@@ -43,7 +43,9 @@ object BlockFollowerPipeline {
     * ([[BlockOps.placeSummaries]] over [[BlockOps.drainRows]]), so the
     * batch plans no window, join or aggregate; `RelaxedPerBlock` publishes
     * the relational [[BlockOps.channelMessagesFrom]] form. Either drain SETs
-    * the checkpoint key at each block header. */
+    * each op's record right before its notification, and the checkpoint key
+    * at each block header; a one-partition Strict batch runs one Spark job
+    * ([[FollowerBatch.run]]). */
   def processBatch(
       blocks: DataFrame,
       vops: DataFrame,
@@ -52,23 +54,25 @@ object BlockFollowerPipeline {
       carrySummaries: Boolean = false,
       batchId: Long = 0L,
       publishMode: PublishMode = PublishMode.Strict): Unit = {
-    val checkpoint = Some(KvPubSubSink.Checkpoint(
-      BlockOps.blockChannel(cfg), cfg.chain + Model.LastBlockNumKeySuffix))
-    FollowerBatch.run(blocks, BlockOps.allOps(blocks, vops, cfg), backendName, cfg.ttlSeconds,
-        Option.when(carrySummaries)((id: Long) => pendingSummaryKey(cfg, id)), batchId) { ops =>
+    val checkpoint = KvPubSubSink.Checkpoint(
+      BlockOps.blockChannel(cfg), cfg.chain + Model.LastBlockNumKeySuffix)
+    FollowerBatch.run(blocks, backendName, checkpoint, cfg.ttlSeconds,
+        Option.when(carrySummaries)((id: Long) => pendingSummaryKey(cfg, id)), batchId) {
+        (prev, follower) =>
+      val ops = BlockOps.allOps(blocks, vops, cfg)
       val keyed = BlockOps.keyedOps(ops, cfg)
-      FollowerBatch(keyed, prev => publishMode match {
+      publishMode match {
         case PublishMode.Strict =>
           KvPubSubSink.publishPlaced(BlockOps.drainRows(blocks, keyed, cfg), backendName,
-            BlockOps.messageSortCols, checkpoint, BlockOps.placeSummaries(cfg, prev, carrySummaries))
+            BlockOps.messageSortCols, follower, BlockOps.placeSummaries(cfg, prev, carrySummaries))
         case PublishMode.RelaxedPerBlock =>
           // the carried summary is the one corrected mode places last
           val messageCfg = if (carrySummaries) cfg.copy(strictParity = false) else cfg
           KvPubSubSink.publishCarrying(BlockOps.channelMessagesFrom(blocks, ops, keyed, messageCfg),
             backendName, BlockOps.messageSortCols, publishMode,
             Option.when(carrySummaries)(KvPubSubSink.Carry(prev, _ => s"${cfg.chain}:transaction")),
-            checkpoint)
-      })
+            Some(follower))
+      }
     }
   }
 
@@ -111,14 +115,12 @@ object BlockFollowerPipeline {
     }
 
     FollowerBatch.stream(rawBlocks, checkpointDir, trigger) { (batch, batchId) =>
-      val blocks = parseBlocks(batch).cache()
-      try {
-        val batchVops = allVops.join(
-          blocks.select(col("block_num").as("b_bn")),
-          col("block") === col("b_bn"), "left_semi")
-        processBatch(blocks, batchVops, cfg, backendName,
-          carrySummaries = true, batchId = batchId, publishMode = publishMode)
-      } finally blocks.unpersist()
+      val blocks = parseBlocks(batch)
+      val batchVops = allVops.join(
+        blocks.select(col("block_num").as("b_bn")),
+        col("block") === col("b_bn"), "left_semi")
+      processBatch(blocks, batchVops, cfg, backendName,
+        carrySummaries = true, batchId = batchId, publishMode = publishMode)
     }
   }
 

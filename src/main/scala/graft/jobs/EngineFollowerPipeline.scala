@@ -31,16 +31,17 @@ object EngineFollowerPipeline {
       publishMode: PublishMode = PublishMode.Strict): Unit = {
     // the carried summary is the one corrected mode places last
     val messageCfg = if (carrySummaries) cfg.copy(strictParity = false) else cfg
-    val checkpoint = Some(KvPubSubSink.Checkpoint(
-      cfg.chainKeyPrefix + ":block", cfg.chainKeyPrefix + Model.LastBlockNumKeySuffix))
-    FollowerBatch.run(blocks, EngineOps.explodeEngineTrxs(blocks), backendName, cfg.ttlSeconds,
-        Option.when(carrySummaries)((id: Long) => pendingSummaryKey(cfg, id)), batchId) { trxs =>
-      val keyed = EngineOps.keyedTrxs(trxs, cfg)
-      FollowerBatch(keyed, prev =>
-        KvPubSubSink.publishCarrying(EngineOps.channelMessagesFrom(trxs, keyed, messageCfg),
-          backendName, EngineOps.messageSortCols, publishMode,
-          Option.when(carrySummaries)(KvPubSubSink.Carry(prev, EngineOps.carriedSummaryChannel(cfg))),
-          checkpoint))
+    val checkpoint = KvPubSubSink.Checkpoint(
+      cfg.chainKeyPrefix + ":block", cfg.chainKeyPrefix + Model.LastBlockNumKeySuffix)
+    FollowerBatch.run(blocks, backendName, checkpoint, cfg.ttlSeconds,
+        Option.when(carrySummaries)((id: Long) => pendingSummaryKey(cfg, id)), batchId) {
+        (prev, follower) =>
+      val trxs = EngineOps.explodeEngineTrxs(blocks)
+      KvPubSubSink.publishCarrying(
+        EngineOps.channelMessagesFrom(trxs, EngineOps.keyedTrxs(trxs, cfg), messageCfg),
+        backendName, EngineOps.messageSortCols, publishMode,
+        Option.when(carrySummaries)(KvPubSubSink.Carry(prev, EngineOps.carriedSummaryChannel(cfg))),
+        Some(follower))
     }
   }
 

@@ -5,49 +5,44 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.sink.{KvBackends, KvPubSubSink}
 
-/** One chain's frames for a follower micro-batch, built over its cached
-  * records: the keyed records the KV write stores, and the ordered publish
-  * drain, which publishes the summary carried in first, SETs the checkpoint
-  * key at each block publish, and returns the batch-final summary it
-  * withholds (on the streaming path). */
-private[jobs] final case class FollowerBatch(
-    keyed: DataFrame,
-    drain: Option[String] => Option[String])
-
 /** The micro-batch skeleton both follower chains share: the reference's one
-  * ordered pass per block (block_follower_job.rb:55-56,161-167) as KV
-  * writes, then the ordered publish drain. */
+  * ordered pass per block (block_follower_job.rb:55-56,79-93,161-167) as
+  * one ordered drain that SETs each record right before it publishes the
+  * record's notification ([[KvPubSubSink.FollowerDrain]]). */
 private[jobs] object FollowerBatch {
 
-  /** With `pendingKey` (the streaming path) the drain publishes the summary
-    * parked under `pendingKey(batchId - 1)` first and hands back this
-    * batch's final summary, parked under `pendingKey(batchId)`; a batch
-    * without records carries the parked one forward.
+  /** Run one batch's drain, `drain(prev, follower)`, which publishes `prev`
+    * first and returns the batch-final summary it withholds. With
+    * `pendingKey` (the streaming path) `prev` is the summary parked under
+    * `pendingKey(batchId - 1)`, and the returned one is parked under
+    * `pendingKey(batchId)`; a batch without records carries `prev` forward.
     *
     * `input` is the batch's source frame (a scan or a cached relation, no
-    * exchange): a batch whose input plans zero partitions — a fresh
-    * stream's first batch, or any batch with start == end — is told apart
-    * driver-side, without a Spark job, and runs no cache, frames or KV job. */
+    * exchange). Its partition count is read driver-side, without a Spark
+    * job: a batch over zero partitions — a fresh stream's first batch, or
+    * any batch with start == end — runs no Spark job, only the pending-key
+    * steps. Otherwise `input` is cached for the batch, so the drain's legs
+    * read the source once, and the drain gathers its rows with
+    * `coalesce(1)` over a one-partition input (narrow: the batch is one
+    * task in one job), else with `repartition(1)`, which keeps the input's
+    * partitions fetching in parallel. */
   def run(
       input: DataFrame,
-      records: DataFrame,
       backendName: String,
+      checkpoint: KvPubSubSink.Checkpoint,
       ttlSeconds: Long,
       pendingKey: Option[Long => String],
-      batchId: Long)(frames: DataFrame => FollowerBatch): Unit = {
+      batchId: Long)(drain: (Option[String], KvPubSubSink.FollowerDrain) => Option[String]): Unit = {
     val backend = KvBackends(backendName)
     val prev = pendingKey.flatMap(key => backend.get(key(batchId - 1)))
+    val partitions = input.queryExecution.toRdd.getNumPartitions
     val tail =
-      if (input.queryExecution.toRdd.getNumPartitions == 0) prev
+      if (partitions == 0) prev
       else {
-        val cached = records.cache()
-        try {
-          val batch = frames(cached)
-          // the KV write job counts the records: a batch without any has
-          // no messages, so its drain is not planned or run
-          if (KvPubSubSink.writeKv(batch.keyed, backendName, ttlSeconds) == 0) prev
-          else batch.drain(prev)
-        } finally cached.unpersist()
+        input.cache()
+        try drain(prev, KvPubSubSink.FollowerDrain(checkpoint, ttlSeconds,
+          if (partitions == 1) _.coalesce(1) else _.repartition(1)))
+        finally input.unpersist()
       }
     pendingKey.foreach { key =>
       tail.foreach(t => backend.set(key(batchId), t))

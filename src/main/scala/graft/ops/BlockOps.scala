@@ -39,8 +39,9 @@ final case class FollowerConfig(
   *
   * Every message row carries sort columns (block_num, virt, otrx, oidx,
   * rank) reproducing the reference's exact publish order; the sink sorts a
-  * micro-batch on them before publishing (SURVEY §4.2): the heavy KV-write
-  * path stays fully parallel, only the tiny notify stream is sequenced.
+  * micro-batch on them before publishing (SURVEY §4.2), and the follower's
+  * drain SETs each op's record right before its notification, as the
+  * reference's loop does.
   */
 object BlockOps {
 
@@ -121,8 +122,12 @@ object BlockOps {
     * block is wiped from `block_transactions` by the reset at :59, and the
     * sentinel is never appended).
     *
+    * A prefix is a run of consecutive ops, in publish order, under one
+    * (block, is_virtual, transaction_num, trx_id) — the reference's
+    * run-length loop: vops that alternate trx ids form one prefix per run.
+    *
     * Output: one row per prefix with payload + the sort position it is
-    * published at (the NEXT prefix's first-op position, via lead()); in
+    * published at (the NEXT prefix's first op, via lead()); in
     * strict-parity mode the stream-final prefix emits nothing.
     */
   def trxSummaries(ops: DataFrame, cfg: FollowerConfig): DataFrame = {
@@ -134,9 +139,15 @@ object BlockOps {
     // rank among prefixes (not the raw transactions-array position) is the
     // faithful value when empty transactions exist.
     val wRealRank = Window.partitionBy("block_num", "is_virtual").orderBy("transaction_num")
+    // run id = op rank in its (block, is_virtual, transaction_num) slot -
+    // op rank under its trx id there: constant along a run (C7)
+    val slot = Seq("block_num", "is_virtual", "transaction_num")
+    val wSlot = Window.partitionBy(slot.map(col): _*).orderBy("trx_index")
+    val wRun = Window.partitionBy((slot :+ "trx_id").map(col): _*).orderBy("trx_index")
     val prefixes = ops
-      .groupBy("block_num", "trx_id", "is_virtual", "transaction_num")
-      .agg(count(lit(1)).as("n_ops"))
+      .withColumn("run", row_number().over(wSlot) - row_number().over(wRun))
+      .groupBy("block_num", "trx_id", "is_virtual", "transaction_num", "run")
+      .agg(min("trx_index").as("first_oidx"))
       .join(realCount, col("block_num") === col("rc_block"), "left")
       .withColumn("summary_num",
         when(!col("is_virtual"), row_number().over(wRealRank) - 1)
@@ -144,21 +155,22 @@ object BlockOps {
 
     // lead over the global prefix order, computed per block-range bucket with
     // boundary stitching (Stitch) — no unpartitioned WindowExec in the plan.
-    // trx_id is the tie-break: virtual prefixes share the sentinel
-    // transaction_num, and without it the lead order between them would be
-    // partitioning-dependent.
+    // Virtual prefixes share the sentinel transaction_num; their first op's
+    // trx_index orders them.
     val withNext = Stitch.leadStitched(
         prefixes,
         floor(col("block_num") / Stitch.DefaultRange),
-        Seq(col("block_num"), col("is_virtual"), col("transaction_num"), col("trx_id")),
+        Seq(col("block_num"), col("is_virtual"), col("transaction_num"), col("first_oidx")),
         struct(
           col("block_num").as("b"),
           col("is_virtual").cast("int").as("v"),
-          col("transaction_num").as("t")),
+          col("transaction_num").as("t"),
+          col("first_oidx").as("i")),
         "nxt")
       .withColumn("pub_block", col("nxt.b"))
       .withColumn("pub_virt", col("nxt.v"))
       .withColumn("pub_otrx", col("nxt.t"))
+      .withColumn("pub_oidx", col("nxt.i"))
       .drop("nxt")
 
     // The stream-final prefix has no successor: in strict parity it emits
@@ -173,6 +185,7 @@ object BlockOps {
         .withColumn("pub_block", coalesce(col("pub_block"), lit(Long.MaxValue)))
         .withColumn("pub_virt", coalesce(col("pub_virt"), lit(0)))
         .withColumn("pub_otrx", coalesce(col("pub_otrx"), lit(0)))
+        .withColumn("pub_oidx", coalesce(col("pub_oidx"), lit(0)))
 
     placed.select(
       concat(lit(cfg.chain), lit(":transaction")).as("channel"),
@@ -183,7 +196,7 @@ object BlockOps {
       col("pub_block").as("o_block"),
       col("pub_virt").as("o_virt"),
       col("pub_otrx").as("o_otrx"),
-      lit(0).as("o_oidx"),
+      col("pub_oidx").as("o_oidx"),
       lit(0).as("o_rank"))
   }
 
@@ -221,7 +234,9 @@ object BlockOps {
     * `{chain}:op:{type}:{custom_id}` fan-out (custom* ops with a non-empty
     * value.id — block_follower_job.rb:85-93). Channels are data-derived:
     * built per row, never enumerated. Rows keep the op's `trx_id`, which the
-    * Strict drain keys its prefixes on. */
+    * Strict drain keys its prefixes on; each op's one rank-2 row carries its
+    * record (`kv_key`, `kv_value`), which the follower drain SETs right
+    * before publishing the row. */
   def opMessages(keyed: DataFrame, cfg: FollowerConfig): DataFrame = {
     val base = keyed.select(
       concat(lit(cfg.chain), lit(":op:"), col("op_type")).as("channel"),
@@ -231,7 +246,9 @@ object BlockOps {
       col("transaction_num").as("o_otrx"),
       col("trx_id"),
       col("trx_index").as("o_oidx"),
-      lit(2).as("o_rank"))
+      lit(2).as("o_rank"),
+      col("key").as("kv_key"),
+      col("kv_value"))
     if (!cfg.publishOpCustomId) base
     else {
       val customId = get_json_object(col("value"), "$.id")
@@ -248,7 +265,7 @@ object BlockOps {
           col("trx_id"),
           col("trx_index").as("o_oidx"),
           lit(3).as("o_rank"))
-      base.unionByName(custom)
+      base.unionByName(custom, allowMissingColumns = true)
     }
   }
 
@@ -262,7 +279,7 @@ object BlockOps {
       blocks: DataFrame, ops: DataFrame, keyed: DataFrame, cfg: FollowerConfig): DataFrame =
     trxSummaries(ops, cfg)
       .unionByName(blockMessages(blocks, ops, cfg))
-      .unionByName(opMessages(keyed, cfg).drop("trx_id"))
+      .unionByName(opMessages(keyed, cfg).drop("trx_id"), allowMissingColumns = true)
 
   /** The Strict drain's input, two narrow frames: one header row per block
     * (o_virt = -1, so it sorts ahead of the block's ops) and the op
@@ -278,7 +295,7 @@ object BlockOps {
         lit(null).cast("string").as("trx_id"),
         lit(0).as("o_oidx"),
         lit(1).as("o_rank"))
-      .unionByName(opMessages(keyed, cfg))
+      .unionByName(opMessages(keyed, cfg), allowMissingColumns = true)
 
   /** The Strict drain's pass over [[drainRows]] sorted on
     * [[messageSortCols]]: the reference's one ordered loop
@@ -287,10 +304,10 @@ object BlockOps {
     *
     * When an op row starts a new prefix (block, is_virtual,
     * transaction_num, trx_id) in publish order, the previous prefix's
-    * summary is published; when it also starts a new block, the block's
-    * held header follows (a block without ops publishes none); then the op
-    * row. A real prefix is numbered by its op-producing rank in the block,
-    * a virtual one by max(#real trx - 1, 0).
+    * summary is published; then the row's record is SET; when the row also
+    * starts a new block, the block's held header follows (a block without
+    * ops publishes none); then the op row. A real prefix is numbered by its
+    * op-producing rank in the block, a virtual one by max(#real trx - 1, 0).
     *
     * `prev` is the summary carried in from the previous micro-batch: it is
     * published at the batch's first prefix. The batch-final summary is
@@ -298,12 +315,12 @@ object BlockOps {
     * parity and published last in corrected mode. */
   def placeSummaries(cfg: FollowerConfig, prev: Option[String], withhold: Boolean)(
       schema: org.apache.spark.sql.types.StructType)
-      : (Iterator[Row], (String, String, Long) => Unit) => Option[String] = {
+      : (Iterator[Row], graft.sink.KvPubSubSink.DrainOut) => Option[String] = {
     val Seq(ci, pi, bi, vi, ti, ii) =
       Seq("channel", "payload", "o_block", "o_virt", "o_otrx", "trx_id").map(schema.fieldIndex)
     val trxChannel = s"${cfg.chain}:transaction"
     val strictParity = cfg.strictParity
-    (rows, publish) => {
+    (rows, out) => {
       var pending = prev
       var header: Row = null
       // the current prefix, and the real prefixes seen in its block (a
@@ -317,11 +334,13 @@ object BlockOps {
         else {
           val t = r.getInt(ti)
           val id = r.getString(ii)
-          if (b != block || v != virt || t != otrx || id != trxId) {
-            pending.foreach(publish(trxChannel, _, block))
+          val starts = b != block || v != virt || t != otrx || id != trxId
+          if (starts) pending.foreach(out.publish(trxChannel, _, block))
+          out.store(r)
+          if (starts) {
             if (b != block) {
               if (header != null && header.getLong(bi) == b)
-                publish(header.getString(ci), header.getString(pi), b)
+                out.publish(header.getString(ci), header.getString(pi), b)
               header = null
               realPrefixes = 0
             }
@@ -331,12 +350,12 @@ object BlockOps {
             pending = Some(summaryJson(b, id, num))
             block = b; virt = v; otrx = t; trxId = id
           }
-          publish(r.getString(ci), r.getString(pi), b)
+          out.publish(r.getString(ci), r.getString(pi), b)
         }
       }
       if (withhold) pending
       else {
-        if (!strictParity) pending.foreach(publish(trxChannel, _, block))
+        if (!strictParity) pending.foreach(out.publish(trxChannel, _, block))
         None
       }
     }

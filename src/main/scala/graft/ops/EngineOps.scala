@@ -157,17 +157,20 @@ object EngineOps {
         col("first_ord").as("o_ord"),
         lit(1).as("o_rank"))
 
-  /** Contract/action notifications (follower_job.rb:81-82), ranks 2 and 3. */
+  /** Contract/action notifications (follower_job.rb:81-82), ranks 2 and 3.
+    * The rank-2 row carries the record (`kv_key`, `kv_value`), which the
+    * follower drain SETs right before publishing it. */
   def contractMessages(keyed: DataFrame, cfg: EngineConfig): DataFrame = {
     val contract = keyed.select(
       concat(lit(cfg.chainKeyPrefix + ":"), col("contract")).as("channel"),
       to_json(struct(col("key"))).as("payload"),
-      col("block_num").as("o_block"), col("ord").as("o_ord"), lit(2).as("o_rank"))
+      col("block_num").as("o_block"), col("ord").as("o_ord"), lit(2).as("o_rank"),
+      col("key").as("kv_key"), col("kv_value"))
     val action = keyed.select(
       concat(lit(cfg.chainKeyPrefix + ":"), col("contract"), lit(":"), col("action")).as("channel"),
       to_json(struct(col("key"))).as("payload"),
       col("block_num").as("o_block"), col("ord").as("o_ord"), lit(3).as("o_rank"))
-    contract.unionByName(action)
+    contract.unionByName(action, allowMissingColumns = true)
   }
 
   /** Channel of the summary a micro-batch carries in from its predecessor
@@ -184,7 +187,7 @@ object EngineOps {
   def channelMessagesFrom(trxs: DataFrame, keyed: DataFrame, cfg: EngineConfig): DataFrame =
     trxSummaries(trxs, cfg)
       .unionByName(blockMessages(trxs, cfg))
-      .unionByName(contractMessages(keyed, cfg))
+      .unionByName(contractMessages(keyed, cfg), allowMissingColumns = true)
 
   /** Full ordered notify stream for the sidechain. */
   def channelMessages(blocks: DataFrame, cfg: EngineConfig): DataFrame = {

@@ -6,16 +6,23 @@ import org.apache.spark.sql.types.StructType
 
 /** The materialization + notify sink (B1/B2/B3), designed per SURVEY §4.2:
   *
-  *  - KV writes (SET + EXPIRE) run fully parallel via foreachPartition —
-  *    they are idempotent by key, so order and replay don't matter;
-  *  - channel publishes are tiny (a few rows per block) but order-sensitive,
-  *    so the message frame is sorted on the reference's publish order in one
-  *    partition (no range-sampling job) and drained by a single
-  *    executor-side writer, never collected to the driver. A drain task
-  *    runs a body over its sorted rows: ready-placed messages with an
-  *    optional summary carry ([[KvPubSubSink.Carry]]), or the Hive
-  *    follower's Strict pass that places summaries and block headers
-  *    itself ([[KvPubSubSink.publishPlaced]]);
+  *  - channel publishes are order-sensitive, so the message frame is sorted
+  *    on the reference's publish order in one partition (no range-sampling
+  *    job) and drained by a single executor-side writer, never collected to
+  *    the driver. A drain task runs a body over its sorted rows:
+  *    ready-placed messages with an optional summary carry
+  *    ([[KvPubSubSink.Carry]]), or the Hive follower's Strict pass that
+  *    places summaries and block headers itself
+  *    ([[KvPubSubSink.publishPlaced]]);
+  *  - a follower's KV writes (SET + EXPIRE) ride the same drain
+  *    ([[KvPubSubSink.FollowerDrain]]): each record is SET right before its
+  *    notification is published, as in the reference's one loop
+  *    (block_follower_job.rb:55-56,83), so a batch is one ordered pass.
+  *    The trade-off: under `Strict` they share the drain's one pipelined
+  *    connection with the publishes ([[RedisKvBackend]]), in order, instead
+  *    of fanning out over parallel writers, so a large catch-up batch
+  *    writes at one connection's pipeline rate. They stay idempotent by
+  *    key, so replay is safe;
   *  - the follower's checkpoint key is SET by the ordered drain at each
   *    block-channel publish ([[KvPubSubSink.Checkpoint]]), ascending, so
   *    its final value is the batch's max block.
@@ -47,22 +54,19 @@ object PublishMode {
 
 object KvPubSubSink {
 
-  /** Write one batch of keyed records: (key, kv_value) + TTL policy.
-    * Returns how many were written, counted by the write job itself. */
-  def writeKv(keyed: DataFrame, backendName: String, ttlSeconds: Long): Long = {
+  /** Write one batch of keyed records: (key, kv_value) + TTL policy, fully
+    * parallel (idempotent by key, so order and replay don't matter). */
+  def writeKv(keyed: DataFrame, backendName: String, ttlSeconds: Long): Unit = {
     val ttl = ttlSeconds
-    keyed.select("key", "kv_value").mapPartitions { (rows: Iterator[Row]) =>
+    keyed.select("key", "kv_value").foreachPartition { (rows: Iterator[Row]) =>
       val backend = KvBackends(backendName)
-      var n = 0L
       rows.foreach { r =>
         val key = r.getString(0)
         backend.set(key, r.getString(1))
         if (ttl != -1L) backend.expire(key, ttl)
-        n += 1
       }
       backend.flush()
-      Iterator(n)
-    }(Encoders.scalaLong).collect().sum
+    }
   }
 
   /** The follower's checkpoint: the ordered drain SETs `key` (no TTL) to a
@@ -71,18 +75,36 @@ object KvPubSubSink {
     * max block. */
   final case class Checkpoint(blockChannel: String, key: String)
 
+  /** A follower micro-batch's side of its drain. The drain SETs each
+    * record right before it publishes the record's notification
+    * (block_follower_job.rb:55-56,83): a row with a non-null `kv_key` (a
+    * record's one rank-2 notification) SETs it to its `kv_value`, then
+    * EXPIREs it after `ttlSeconds` unless that is -1. It SETs the
+    * [[Checkpoint]] too. `gather` brings the batch's rows into the ordered
+    * drain's one partition. */
+  final case class FollowerDrain(
+      checkpoint: Checkpoint, ttlSeconds: Long, gather: DataFrame => DataFrame)
+
   /** A follower micro-batch's summary carry, run by the ordered drain:
     * `prev`, handed on by the previous batch, is published first, on the
     * channel `channelOf` picks from the batch's first message (the record
     * that triggers it, follower_job.rb:44-50); the batch-final summary
     * (corrected mode, sorted last at `blockCol = Long.MaxValue`) is
-    * withheld and returned. */
+    * withheld and returned. A batch without messages returns `prev`. */
   final case class Carry(prev: Option[String], channelOf: Row => String)
 
-  /** A drain task's pass: given the sorted frame's schema, it publishes one
-    * partition's rows in order through `publish(channel, payload, block)`
-    * and returns the summary the batch withholds, if any. */
-  type DrainBody = StructType => (Iterator[Row], (String, String, Long) => Unit) => Option[String]
+  /** What a drain body writes through, in call order on its task's backend:
+    * `store(row)` SETs the row's record, if it carries one
+    * ([[FollowerDrain]]); `publish(channel, payload, block)` publishes it. */
+  trait DrainOut {
+    def store(row: Row): Unit
+    def publish(channel: String, payload: String, block: Long): Unit
+  }
+
+  /** A drain task's pass: given the sorted frame's schema, it writes one
+    * partition's rows in order through a [[DrainOut]] and returns the
+    * summary the batch withholds, if any. */
+  type DrainBody = StructType => (Iterator[Row], DrainOut) => Option[String]
 
   /** Publish one batch of (channel, payload) messages in exact order. The
     * input must carry its sort columns; volume per batch is O(messages), not
@@ -94,36 +116,49 @@ object KvPubSubSink {
     * on the one-partition drain, returns what the body withholds. */
   private def drain(
       partitioned: DataFrame, backendName: String, sortCols: Seq[String],
-      checkpoint: Option[Checkpoint])(body: DrainBody): Option[String] = {
+      follower: Option[FollowerDrain])(body: DrainBody): Option[String] = {
     val sorted = partitioned.sortWithinPartitions(sortCols.map(col): _*)
     val pass = body(sorted.schema)
+    val checkpoint = follower.map(_.checkpoint)
+    val records = follower.map(f =>
+      (sorted.schema.fieldIndex("kv_key"), sorted.schema.fieldIndex("kv_value"), f.ttlSeconds))
     sorted.mapPartitions { (rows: Iterator[Row]) =>
       val backend = KvBackends(backendName)
-      val tail = pass(rows, (channel, payload, block) => {
-        for (c <- checkpoint if channel == c.blockChannel) backend.set(c.key, block.toString)
-        backend.publish(channel, payload)
+      val tail = pass(rows, new DrainOut {
+        def store(r: Row): Unit = for ((ki, vi, ttl) <- records if !r.isNullAt(ki)) {
+          val key = r.getString(ki)
+          backend.set(key, r.getString(vi))
+          if (ttl != -1L) backend.expire(key, ttl)
+        }
+        def publish(channel: String, payload: String, block: Long): Unit = {
+          for (c <- checkpoint if channel == c.blockChannel) backend.set(c.key, block.toString)
+          backend.publish(channel, payload)
+        }
       })
       backend.flush()
       tail.iterator
     }(Encoders.STRING).collect().headOption
   }
 
-  /** The body for ready-placed messages: each row as is; with a [[Carry]],
-    * the carried summary first and the `Long.MaxValue` row withheld. The
-    * carry and the checkpoint read `blockCol`; a frame that needs neither
-    * may have none. */
+  /** The body for ready-placed messages: each row as is, its record SET
+    * first; with a [[Carry]], the carried summary first and the
+    * `Long.MaxValue` row withheld. The carry and the checkpoint read
+    * `blockCol`; a frame that needs neither may have none. */
   private def publishRows(carry: Option[Carry], blockCol: Option[String]): DrainBody = schema => {
     val (ci, pi, bi) = (schema.fieldIndex("channel"), schema.fieldIndex("payload"),
       blockCol.fold(-1)(schema.fieldIndex))
-    (rows, publish) => {
+    (rows, out) => {
       val buffered = rows.buffered
       for (c <- carry; p <- c.prev if buffered.hasNext)
-        publish(c.channelOf(buffered.head), p, buffered.head.getLong(bi))
-      var tail = Option.empty[String]
+        out.publish(c.channelOf(buffered.head), p, buffered.head.getLong(bi))
+      var tail = if (buffered.hasNext) None else carry.flatMap(_.prev)
       buffered.foreach { r =>
         val block = if (bi < 0) -1L else r.getLong(bi)
         if (carry.isDefined && block == Long.MaxValue) tail = Some(r.getString(pi))
-        else publish(r.getString(ci), r.getString(pi), block)
+        else {
+          out.store(r)
+          out.publish(r.getString(ci), r.getString(pi), block)
+        }
       }
       tail
     }
@@ -148,17 +183,20 @@ object KvPubSubSink {
       mode: PublishMode, rankCol: String = "o_rank", blockCol: String = "o_block"): Unit =
     publishCarrying(messages, backendName, sortCols, mode, None, None, rankCol, blockCol)
 
-  /** [[publish]] for a follower micro-batch, with a [[Carry]] and the
-    * [[Checkpoint]]; summaries and block headers are control messages, so a
-    * relaxed publish runs both through its ordered drain too. */
+  /** [[publish]] for a follower micro-batch, with a [[Carry]] and its
+    * [[FollowerDrain]]; summaries and block headers are control messages, so
+    * a relaxed publish runs both through its ordered drain too, and SETs the
+    * records in the per-block tasks that publish their notifications. */
   private[graft] def publishCarrying(
       messages: DataFrame, backendName: String, sortCols: Seq[String],
-      mode: PublishMode, carry: Option[Carry], checkpoint: Option[Checkpoint],
+      mode: PublishMode, carry: Option[Carry], follower: Option[FollowerDrain],
       rankCol: String = "o_rank", blockCol: String = "o_block"): Option[String] = {
     val ordered = if (mode == PublishMode.Strict) messages else messages.filter(col(rankCol) <= 1)
-    val tail = drain(ordered.repartition(1), backendName, sortCols, checkpoint)(publishRows(carry, Some(blockCol)))
+    val gather = follower.fold((_: DataFrame).repartition(1))(_.gather)
+    val tail = drain(gather(ordered), backendName, sortCols, follower)(publishRows(carry, Some(blockCol)))
     if (mode == PublishMode.RelaxedPerBlock)
-      publishPerBlock(messages.filter(col(rankCol) >= 2), backendName, sortCols, blockCol)
+      drain(messages.filter(col(rankCol) >= 2).repartition(col(blockCol)), backendName, sortCols,
+        follower)(publishRows(None, None))
     tail
   }
 
@@ -167,6 +205,6 @@ object KvPubSubSink {
     * in its one ordered pass ([[graft.ops.BlockOps.placeSummaries]]). */
   private[graft] def publishPlaced(
       rows: DataFrame, backendName: String, sortCols: Seq[String],
-      checkpoint: Option[Checkpoint], body: DrainBody): Option[String] =
-    drain(rows.repartition(1), backendName, sortCols, checkpoint)(body)
+      follower: FollowerDrain, body: DrainBody): Option[String] =
+    drain(follower.gather(rows), backendName, sortCols, Some(follower))(body)
 }

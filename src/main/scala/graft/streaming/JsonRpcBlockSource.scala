@@ -26,7 +26,8 @@ import graft.ops.Policies
   *    (option `mode`, A4) as the available end — the driver-side poll is one
   *    tiny RPC per trigger;
   *  - `planInputPartitions` fans the height range out as contiguous fetch
-  *    ranges (`numPartitions`), so executors pull `get_block` IN PARALLEL —
+  *    ranges (`numPartitions`, each at least 8 heights long, so a range of
+  *    8 or fewer is one partition), so executors pull `get_block` IN PARALLEL —
   *    the ordered-sink sort restores publish order downstream, which is how
   *    the 0.33 blocks/s sequential reference loop becomes cluster-rate;
   *  - each partition reader keeps up to `RpcClient.FetchWindow` (8)
@@ -128,11 +129,16 @@ private[streaming] case class BlockHeightOffset(next: Long) extends Offset {
 }
 
 private[streaming] object RpcMicroBatchStream {
+  /** `[from, until)` in at most `numPartitions` ranges of at least
+    * [[RpcClient.FetchWindow]] heights: one reader already keeps that many
+    * calls in flight, so a range that short is one partition (a live
+    * micro-batch then runs as one task, see `FollowerBatch.run`). */
   def splitHeights(cfg: RpcConfig, from: Long, until: Long): Array[InputPartition] = {
     val count = until - from
     if (count <= 0) Array.empty
     else {
-      val per = math.max(1L, math.ceil(count.toDouble / cfg.numPartitions).toLong)
+      val per = math.max(RpcClient.FetchWindow.toLong,
+        math.ceil(count.toDouble / cfg.numPartitions).toLong)
       (from until until by per)
         .map(s => HeightRangePartition(cfg, s, math.min(s + per, until)): InputPartition)
         .toArray

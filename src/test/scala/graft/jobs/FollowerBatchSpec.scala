@@ -20,11 +20,12 @@ import graft.SparkSpec
 import graft.model.Model
 import graft.ops.{BlockOps, EngineConfig, FollowerConfig}
 import graft.sink.{InMemoryKvBackend, KvBackends, PublishMode}
-import graft.streaming.StubRpcServer
+import graft.streaming.{ConcurrentStubRpcServer, StubRpcServer}
 
 /** The follower micro-batch skeleton: the checkpoint key the ordered drain
   * SETs, a batch over no input that runs no Spark job yet carries the
-  * parked summary on, and the shape of a Strict Hive batch's plans.
+  * parked summary on, the shape of a Strict Hive batch's plans and its job
+  * count, and each record SET before any publish names it.
   */
 class FollowerBatchSpec extends SparkSpec {
 
@@ -36,6 +37,24 @@ class FollowerBatchSpec extends SparkSpec {
       super.set(key, value)
     }
     def setsOf(key: String): Seq[String] = sets.asScala.filter(_._1 == key).map(_._2).toSeq
+  }
+
+  /** An in-memory backend that logs SET, EXPIRE and PUBLISH in one
+    * sequence, across concurrent tasks. */
+  private final class OpLog extends InMemoryKvBackend {
+    val ops = new ConcurrentLinkedQueue[(String, String)]()
+    override def set(key: String, value: String): Unit = {
+      ops.add("set" -> key)
+      super.set(key, value)
+    }
+    override def expire(key: String, ttlSeconds: Long): Unit = {
+      ops.add("expire" -> key)
+      super.expire(key, ttlSeconds)
+    }
+    override def publish(channel: String, payload: String): Unit = {
+      ops.add("publish" -> payload)
+      super.publish(channel, payload)
+    }
   }
 
   private def register[B <: InMemoryKvBackend](name: String, b: B): B = {
@@ -167,7 +186,7 @@ class FollowerBatchSpec extends SparkSpec {
       drainListenerBus()
     } finally spark.listenerManager.unregister(listener)
 
-    assert(plans.size === 2) // the KV write and the ordered drain
+    assert(plans.size === 1) // the ordered drain, which SETs the records too
     plans.asScala.foreach { p =>
       val relational = operators(p).filter {
         case _: WindowExecBase | _: BaseJoinExec | _: BaseAggregateExec => true
@@ -175,5 +194,86 @@ class FollowerBatchSpec extends SparkSpec {
       }
       assert(relational.isEmpty, p.treeString)
     }
+  }
+
+  test("a Strict Hive batch over a one-partition input runs one Spark job") {
+    val input = blocks
+    assert(input.rdd.getNumPartitions === 1)
+    val backend = register("one-job", new InMemoryKvBackend)
+    val cfg = FollowerConfig(publishOpCustomId = true)
+    val jobs = jobsOf {
+      BlockFollowerPipeline.processBatch(input, BlockFollowerPipeline.emptyVops(spark), cfg,
+        "one-job", carrySummaries = true, batchId = 0L)
+    }
+    assert(jobs === 1)
+    assert(backend.get("hive:100:t0aaa:0:vote").isDefined)
+    assert(backend.publishLog.nonEmpty)
+  }
+
+  test("a Strict Hive batch over four input partitions requests each height once") {
+    val srv = new ConcurrentStubRpcServer(height = 40, delayMs = 1L)
+    try {
+      val raw = spark.read
+        .format("graft.streaming.JsonRpcBlockSource")
+        .option("endpoints", srv.endpoint)
+        .option("startBlock", "1")
+        .option("endBlock", "41")
+        .option("numPartitions", "4")
+        .load()
+      val input = BlockFollowerPipeline.parseBlocks(raw)
+      assert(input.rdd.getNumPartitions === 4)
+      val backend = register("two-jobs", new InMemoryKvBackend)
+      val jobs = jobsOf {
+        BlockFollowerPipeline.processBatch(input, BlockFollowerPipeline.emptyVops(spark),
+          FollowerConfig(), "two-jobs", carrySummaries = true, batchId = 0L)
+      }
+      // the exchange of repartition(1) puts the drain under adaptive
+      // execution, which loads the input cache in one table-cache stage per
+      // drain leg before the shuffle's map and result stages
+      assert(jobs === 4)
+      assert(srv.heightCalls.asScala.map { case (h, n) => h -> n.get }.toMap ===
+        (1L to 40L).map(_ -> 1).toMap)
+    } finally srv.close()
+  }
+
+  /** Every publish whose payload names a record key comes after that key's
+    * SET and EXPIRE; every record is published. */
+  private def assertSetBeforePublish(log: OpLog, recordKey: String => Boolean): Unit = {
+    val ops = log.ops.asScala.toIndexedSeq
+    val Named = """\{"key":"(.*)"\}""".r
+    val firstPublish = ops.zipWithIndex.collect { case (("publish", Named(k)), i) => k -> i }
+      .groupBy(_._1).view.mapValues(_.map(_._2).min).toMap
+    val records = ops.collect { case ("set", k) if recordKey(k) => k }.toSet
+    assert(records.nonEmpty)
+    assert(firstPublish.keySet === records)
+    records.foreach { k =>
+      Seq("set", "expire").foreach { op =>
+        val at = ops.indexOf(op -> k)
+        assert(at >= 0 && at < firstPublish(k), s"$op $k at $at, first publish at ${firstPublish(k)}")
+      }
+    }
+  }
+
+  test("each record is SET and EXPIREd before the first publish that names it") {
+    val cfg = FollowerConfig(publishOpCustomId = true)
+    val hiveRecord = (k: String) => k.startsWith("hive:") && !k.contains(":meeseeker:") && !k.contains(":graft:")
+    Seq(PublishMode.Strict, PublishMode.RelaxedPerBlock).foreach { mode =>
+      val name = s"set-first-hive-$mode"
+      val log = register(name, new OpLog)
+      Seq((100L, 101L), (102L, 103L)).zipWithIndex.foreach { case ((lo, hi), i) =>
+        BlockFollowerPipeline.processBatch(blocks.filter(col("block_num").between(lo, hi)),
+          vops.filter(col("block").between(lo, hi)), cfg, name,
+          carrySummaries = true, batchId = i.toLong, publishMode = mode)
+      }
+      assertSetBeforePublish(log, hiveRecord)
+    }
+
+    val engineBlocks = spark.read.schema(Model.engineBlockSchema).json(resource("engine_blocks.jsonl"))
+    val log = register("set-first-engine", new OpLog)
+    Seq(18000L, 18001L).zipWithIndex.foreach { case (n, i) =>
+      EngineFollowerPipeline.processBatch(engineBlocks.filter(col("blockNumber") === n),
+        EngineConfig(), "set-first-engine", carrySummaries = true, batchId = i.toLong)
+    }
+    assertSetBeforePublish(log, k => !k.contains(":meeseeker:") && !k.contains(":graft:"))
   }
 }
